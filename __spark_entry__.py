@@ -451,7 +451,6 @@ def _q_knn_frechet(spark: SparkSession, sf_dir: str) -> DataFrame:
         curves.filter(F.col("traj_id") % 150 == 0),
         k=5,
         mesh=MESH,
-        eps0=2.0,
     )
 
 

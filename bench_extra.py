@@ -78,7 +78,8 @@ def time_queries(names, trials=3):
 
     spark = _spark()
     qs = entry.queries()
-    # warmup: one untimed pass of the heaviest requested query
+    # no separate warmup pass: trial 0 of each query absorbs JVM/IO
+    # warmup, which the reported min over the trials leaves out
     for name in names:
         best = []
         for i in range(trials):
@@ -155,12 +156,12 @@ def profile_knn():
         spark,
     )
     print("survivors:", surv.count())
-    fin = knn.decide_radius_prune(cc, qq, surv)
-    _t("decide_radius_prune (count)", lambda: fin.count(), spark)
-    fin = knn.decide_radius_prune(cc, qq, surv)
-    pairs = knn._pairs_with_arrays(cc, qq, fin)
-    dists = knn.frechet_distances(pairs)
-    _t("frechet_distances (noop)", lambda: _noop(dists), spark)
+    from frechetrange_spark.operators.range_query import _INLINE
+
+    dists = knn._pairs_with_arrays(cc, qq, surv).mapInArrow(
+        knn._decide_distance_map(*_INLINE), schema=knn._DIST_SCHEMA
+    )
+    _t("fused decide+distance over survivors (noop)", lambda: _noop(dists), spark)
     spark.catalog.clearCache()
     df = entry._q_knn_frechet(spark, SF_DIR)
     _t("END-TO-END cold knn_frechet", lambda: _noop(df), spark)

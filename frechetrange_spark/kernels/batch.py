@@ -539,6 +539,46 @@ def decide_pairs_arrow(
     )
 
 
+def pair_chunks(
+    bq: tuple,
+    bt: tuple,
+    qsel: np.ndarray,
+    tsel: np.ndarray,
+    order: np.ndarray,
+    chunk: int,
+):
+    """The one padded gather loop of every ``*_buffers`` kernel: yield
+    ``(rows, p, t)`` per ``chunk``-row slice of ``order`` (the caller's
+    size-sorted pair indices), where ``p``/``t`` are the last-vertex-padded
+    (B, N, 2)/(B, M, 2) stacks of curves ``qsel[rows]`` of ``bq`` and
+    ``tsel[rows]`` of ``bt``. ``bq``/``bt`` are (flat_x, off_x, flat_y,
+    off_y) curve tables. The padded working set stays O(chunk x
+    longest-curve-in-slice) regardless of how many pairs are decided."""
+    fqx, oqx, fqy, oqy = bq
+    ftx, otx, fty, oty = bt
+    for s in range(0, order.size, chunk):
+        rows = order[s : s + chunk]
+        qr, tr = qsel[rows], tsel[rows]
+        wp = int((oqx[qr + 1] - oqx[qr]).max())
+        wt = int((otx[tr + 1] - otx[tr]).max())
+        p = np.stack(
+            [_padded_gather(fqx, oqx, qr, wp), _padded_gather(fqy, oqy, qr, wp)],
+            axis=-1,
+        )
+        t = np.stack(
+            [_padded_gather(ftx, otx, tr, wt), _padded_gather(fty, oty, tr, wt)],
+            axis=-1,
+        )
+        yield rows, p, t
+
+
+def _size_order(bq: tuple, bt: tuple, qsel: np.ndarray, tsel: np.ndarray):
+    """(len_q, len_t, argsort of len_q + len_t) for the selected pairs."""
+    lens_p = bq[1][qsel + 1] - bq[1][qsel]
+    lens_t = bt[1][tsel + 1] - bt[1][tsel]
+    return lens_p, lens_t, np.argsort(lens_p + lens_t)
+
+
 def decide_pairs_buffers(
     bq: tuple,
     bt: tuple,
@@ -557,40 +597,19 @@ def decide_pairs_buffers(
     indirection: ``bq``/``bt`` are (flat_x, off_x, flat_y, off_y) curve
     TABLES (one list row per curve), and pair i compares curve
     ``qsel[i]`` of bq against curve ``tsel[i]`` of bt. The arrow wrapper
-    passes identity selectors over per-pair columns; the broadcast-attach
-    refine passes id-resolved selectors into a shared curve table, so the
-    pair rows themselves carry no array bytes."""
+    and an inline curve source pass identity selectors over per-pair
+    columns; broadcast and disk curve sources pass id-resolved selectors
+    into a shared curve table, so the pair rows carry no array bytes."""
     from frechetrange_spark.kernels.core import negfilter
 
-    fqx, oqx, fqy, oqy = bq
-    ftx, otx, fty, oty = bt
     B = int(qsel.size)
     out = np.zeros(B, dtype=bool)
     stages = np.zeros(B, dtype=np.int8)
     if B == 0:
         return (out, stages) if return_stages else out
     eps_arr = np.broadcast_to(np.asarray(eps, dtype=np.float64), (B,))
-    lens_p = oqx[qsel + 1] - oqx[qsel]
-    lens_t = otx[tsel + 1] - otx[tsel]
-    order = np.argsort(lens_p + lens_t)
-    for s in range(0, B, chunk):
-        rows = order[s : s + chunk]
-        wp = int(lens_p[rows].max())
-        wt = int(lens_t[rows].max())
-        p = np.stack(
-            [
-                _padded_gather(fqx, oqx, qsel[rows], wp),
-                _padded_gather(fqy, oqy, qsel[rows], wp),
-            ],
-            axis=-1,
-        )
-        t = np.stack(
-            [
-                _padded_gather(ftx, otx, tsel[rows], wt),
-                _padded_gather(fty, oty, tsel[rows], wt),
-            ],
-            axis=-1,
-        )
+    lens_p, lens_t, order = _size_order(bq, bt, qsel, tsel)
+    for rows, p, t in pair_chunks(bq, bt, qsel, tsel, order, chunk):
         e = eps_arr[rows]
         res = np.zeros(rows.size, dtype=bool)
         stg = np.zeros(rows.size, dtype=np.int8)
@@ -646,96 +665,15 @@ def decide_pairs_buffers(
     return (out, stages) if return_stages else out
 
 
-def _gather_pair(fqx, oqx, fqy, oqy, ftx, otx, fty, oty, rows):
-    """Padded (B,N,2)/(B,M,2) stacks for the selected pair rows."""
-    wp = int((oqx[rows + 1] - oqx[rows]).max())
-    wt = int((otx[rows + 1] - otx[rows]).max())
-    p = np.stack(
-        [_padded_gather(fqx, oqx, rows, wp), _padded_gather(fqy, oqy, rows, wp)],
-        axis=-1,
-    )
-    t = np.stack(
-        [_padded_gather(ftx, otx, rows, wt), _padded_gather(fty, oty, rows, wt)],
-        axis=-1,
-    )
-    return p, t
-
-
-def etd_pairs_arrow(qxs, qys, xs, ys, chunk: int = 4096) -> np.ndarray:
-    """Batched equal-time distance (F8) straight from pyarrow list columns,
-    size-bucketed padded gathers — zero per-row Python objects."""
-    fqx, oqx = _list_buffers(qxs)
-    fqy, oqy = _list_buffers(qys)
-    ftx, otx = _list_buffers(xs)
-    fty, oty = _list_buffers(ys)
-    B = len(oqx) - 1
-    out = np.empty(B, dtype=np.float64)
-    if B == 0:
-        return out
-    order = np.argsort(np.diff(oqx) + np.diff(otx))
-    for s in range(0, B, chunk):
-        rows = order[s : s + chunk]
-        p, t = _gather_pair(fqx, oqx, fqy, oqy, ftx, otx, fty, oty, rows)
-        out[rows] = etd_batch(p, t)
-    return out
-
-
-def distance_pairs_arrow(
-    qxs,
-    qys,
-    xs,
-    ys,
-    chunk: int = 2048,
-    rel_tol: float = 1e-9,
-    abs_tol: float = 1e-12,
-) -> np.ndarray:
-    """Batched bisection distance straight from pyarrow list columns —
-    size-bucketed padded gathers feeding the lockstep bisection, same
-    zero-copy path as decide_pairs_arrow."""
-    fqx, oqx = _list_buffers(qxs)
-    fqy, oqy = _list_buffers(qys)
-    ftx, otx = _list_buffers(xs)
-    fty, oty = _list_buffers(ys)
-    B = len(oqx) - 1
-    out = np.empty(B, dtype=np.float64)
-    if B == 0:
-        return out
-    order = np.argsort(np.diff(oqx) + np.diff(otx))
-    for s in range(0, B, chunk):
-        rows = order[s : s + chunk]
-        p, t = _gather_pair(fqx, oqx, fqy, oqy, ftx, otx, fty, oty, rows)
-        out[rows] = _frechet_distance_padded(p, t, rel_tol, abs_tol)
-    return out
-
-
 def etd_pairs_buffers(
     bq: tuple, bt: tuple, qsel: np.ndarray, tsel: np.ndarray, chunk: int = 4096
 ) -> np.ndarray:
-    """``etd_pairs_arrow`` over raw list buffers with per-pair curve
-    indirection (the broadcast-pack attach shape, cf.
-    decide_pairs_buffers): pair i compares curve ``qsel[i]`` of bq
-    against curve ``tsel[i]`` of bt."""
-    fqx, oqx, fqy, oqy = bq
-    ftx, otx, fty, oty = bt
-    B = int(qsel.size)
-    out = np.empty(B, dtype=np.float64)
-    if B == 0:
-        return out
-    lens = (oqx[qsel + 1] - oqx[qsel]) + (otx[tsel + 1] - otx[tsel])
-    order = np.argsort(lens)
-    for s in range(0, B, chunk):
-        rows = order[s : s + chunk]
-        qr, tr = qsel[rows], tsel[rows]
-        wp = int((oqx[qr + 1] - oqx[qr]).max())
-        wt = int((otx[tr + 1] - otx[tr]).max())
-        p = np.stack(
-            [_padded_gather(fqx, oqx, qr, wp), _padded_gather(fqy, oqy, qr, wp)],
-            axis=-1,
-        )
-        t = np.stack(
-            [_padded_gather(ftx, otx, tr, wt), _padded_gather(fty, oty, tr, wt)],
-            axis=-1,
-        )
+    """Batched equal-time distance (F8) per pair, over raw list buffers
+    with per-pair curve indirection (cf. decide_pairs_buffers): pair i
+    compares curve ``qsel[i]`` of bq against curve ``tsel[i]`` of bt."""
+    out = np.empty(int(qsel.size), dtype=np.float64)
+    order = _size_order(bq, bt, qsel, tsel)[2]
+    for rows, p, t in pair_chunks(bq, bt, qsel, tsel, order, chunk):
         out[rows] = etd_batch(p, t)
     return out
 
@@ -749,31 +687,13 @@ def distance_pairs_buffers(
     rel_tol: float = 1e-9,
     abs_tol: float = 1e-12,
 ) -> np.ndarray:
-    """``distance_pairs_arrow`` over raw list buffers with per-pair curve
-    indirection (broadcast-pack attach shape). Per-pair values are
-    independent of batch composition (every bisection step is elementwise
-    per pair), so results equal the arrow-column path exactly."""
-    fqx, oqx, fqy, oqy = bq
-    ftx, otx, fty, oty = bt
-    B = int(qsel.size)
-    out = np.empty(B, dtype=np.float64)
-    if B == 0:
-        return out
-    lens = (oqx[qsel + 1] - oqx[qsel]) + (otx[tsel + 1] - otx[tsel])
-    order = np.argsort(lens)
-    for s in range(0, B, chunk):
-        rows = order[s : s + chunk]
-        qr, tr = qsel[rows], tsel[rows]
-        wp = int((oqx[qr + 1] - oqx[qr]).max())
-        wt = int((otx[tr + 1] - otx[tr]).max())
-        p = np.stack(
-            [_padded_gather(fqx, oqx, qr, wp), _padded_gather(fqy, oqy, qr, wp)],
-            axis=-1,
-        )
-        t = np.stack(
-            [_padded_gather(ftx, otx, tr, wt), _padded_gather(fty, oty, tr, wt)],
-            axis=-1,
-        )
+    """Batched bisection distance per pair, over raw list buffers with
+    per-pair curve indirection (cf. decide_pairs_buffers). Per-pair values
+    are independent of batch composition (every bisection step is
+    elementwise per pair)."""
+    out = np.empty(int(qsel.size), dtype=np.float64)
+    order = _size_order(bq, bt, qsel, tsel)[2]
+    for rows, p, t in pair_chunks(bq, bt, qsel, tsel, order, chunk):
         out[rows] = _frechet_distance_padded(p, t, rel_tol, abs_tol)
     return out
 

@@ -20,12 +20,16 @@ swap ranks; every pruning step below is tolerance-free (sound bounds).
    least k curves have δF <= U_k, so every true k-nearest neighbor has
    δF <= U_k and hence LB <= U_k: pairs with LB > U_k cannot be in the
    answer and are pruned without touching any array data.
-3. **Refine** — join the surviving pairs with both curves' arrays and
-   compute the exact distance (bisection over the free-space decider,
-   K12, already bracketed by endpoint-LB / equal-time-UB inside the
-   kernel), then rank with a window and keep the top k.
+3. **Refine** — an ETD kernel tightens the radius to the k-th smallest
+   equal-time distance (etd_prune), then one fused kernel decides each
+   survivor at that radius and computes the exact distance of the
+   accepted ones (bisection over the free-space decider, K12, bracketed
+   by endpoint-LB / equal-time-UB inside the kernel); a window ranks and
+   keeps the top k. Both kernels read curves through the range_query
+   curve sources: broadcast packs under ids-only pair streams, or inline
+   arrays joined onto the pairs past the broadcast threshold.
 
-Everything is one relational plan + one Arrow kernel pass; there is no
+Everything is one relational plan + two Arrow kernel passes; there is no
 per-round driver loop, so the serial fraction is a single window
 aggregate over scalar rows. The scalar cross join broadcasts the query
 side, so at cluster scale it is a map-only stage over the (partitioned)
@@ -39,39 +43,25 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def _distance_kernel(batches):
-    import pyarrow as pa
-
-    from frechetrange_spark.kernels.batch import distance_pairs_arrow
-
-    for rb in batches:
-        # 1e-6 relative tolerance = the reference's own kNN-style
-        # bisection (benchmark/test.py:96, eps=1E-6); ranks are stable
-        # well above it and it saves ~10 of ~37 decide sweeps per pair
-        dists = distance_pairs_arrow(
-            rb.column("q_xs"),
-            rb.column("q_ys"),
-            rb.column("xs"),
-            rb.column("ys"),
-            rel_tol=1e-6,
-        )
-        yield pa.RecordBatch.from_arrays(
-            [rb.column("query_id"), rb.column("traj_id"), pa.array(dists)],
-            ["query_id", "traj_id", "distance"],
-        )
-
-
 def frechet_distances(pairs: DataFrame) -> DataFrame:
-    """(query_id, traj_id, distance) for pair rows carrying q_xs/q_ys/xs/ys.
+    """(query_id, traj_id, distance) for pair rows carrying q_xs/q_ys/xs/ys
+    — the fused decide+distance kernel over inline curve sources with an
+    infinite radius, so every pair gets its bisection distance.
 
     Round-robin repartition before the kernel: pair rows are cheap in bytes
     but expensive in CPU, so byte-based AQE coalescing must not funnel them
     into few tasks."""
+    from frechetrange_spark.operators.range_query import _INLINE
+
     n_slots = 2 * pairs.sparkSession.sparkContext.defaultParallelism
-    return pairs.repartition(n_slots).mapInArrow(
-        _distance_kernel, schema="query_id long, traj_id long, distance double"
+    return (
+        pairs.withColumn("radius", F.lit(float("inf")))
+        .repartition(n_slots)
+        .mapInArrow(_decide_distance_map(*_INLINE), schema=_DIST_SCHEMA)
     )
 
+
+_DIST_SCHEMA = "query_id long, traj_id long, distance double"
 
 _FEATS = [
     "x_first",
@@ -300,110 +290,27 @@ def knn_candidates_grid(
     return _radius_prune(bounded, k)
 
 
-def _etd_kernel(batches):
-    """Batched ETD + endpoint lower bound per pair — padded-gather path
-    (kernels.batch), no per-row Python objects."""
-    import pyarrow as pa
-
-    from frechetrange_spark.kernels.batch import _list_buffers, etd_pairs_arrow
-
-    for rb in batches:
-        fqx, oqx = _list_buffers(rb.column("q_xs"))
-        fqy, oqy = _list_buffers(rb.column("q_ys"))
-        ftx, otx = _list_buffers(rb.column("xs"))
-        fty, oty = _list_buffers(rb.column("ys"))
-        B = len(oqx) - 1
-        etd = etd_pairs_arrow(
-            rb.column("q_xs"), rb.column("q_ys"), rb.column("xs"), rb.column("ys")
-        )
-        rows = np.arange(B)
-        lbs = np.maximum(
-            np.hypot(
-                fqx[oqx[rows]] - ftx[otx[rows]], fqy[oqy[rows]] - fty[oty[rows]]
-            ),
-            np.hypot(
-                fqx[oqx[rows + 1] - 1] - ftx[otx[rows + 1] - 1],
-                fqy[oqy[rows + 1] - 1] - fty[oty[rows + 1] - 1],
-            ),
-        )
-        yield pa.RecordBatch.from_arrays(
-            [
-                rb.column("query_id"),
-                rb.column("traj_id"),
-                pa.array(lbs),
-                pa.array(etd),
-            ],
-            ["query_id", "traj_id", "lb", "etd"],
-        )
-
-
-def _etd_radius_prune(bounds: DataFrame, k: int) -> DataFrame:
-    """Window-only ETD radius prune over (query_id, traj_id, lb, etd)
-    rows: radius = k-th smallest ETD per query; drop pairs with lb >
-    radius (keep all when a query has <= k pairs). Same shape as
-    ``_radius_prune`` — one exchange, the ETD kernel upstream runs ONCE
-    (the old groupBy + broadcast-join shape evaluated the kernel twice:
-    once under the rank window, once as the join probe)."""
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("etd").asc(), F.col("traj_id").asc()
-    )
-    w_all = Window.partitionBy("query_id")
-    return (
-        bounds.withColumn("_rk", F.row_number().over(w_rank))
-        .withColumn(
-            "radius", F.max(F.when(F.col("_rk") <= k, F.col("etd"))).over(w_all)
-        )
-        .withColumn("_np", F.count(F.lit(1)).over(w_all))
-        .filter((F.col("_np") <= k) | (F.col("lb") <= F.col("radius")))
-        .select("query_id", "traj_id", "radius")
-    )
-
-
-def etd_prune(curves: DataFrame, queries: DataFrame, candidates: DataFrame, k: int) -> DataFrame:
-    """Step 2b: tighten the candidate set with the equal-time distance
-    (F8, detail/bddm/spatial_hash.hpp:253-362 — a linear-time upper bound
-    ~3000x cheaper than the bisection decider). Per query the k-th smallest
-    ETD is a valid radius: >= k curves have δF <= it, so pairs whose
-    endpoint lower bound exceeds it cannot be in the top k.
-
-    Returns (query_id, traj_id, radius) — the radius rides along so the
-    decide-at-radius prune (step 2c) can run without recomputing ETDs."""
-    pairs = _pairs_with_arrays(curves, queries, candidates)
-    n_slots = 2 * pairs.sparkSession.sparkContext.defaultParallelism
-    bounds = pairs.repartition(n_slots).mapInArrow(
-        _etd_kernel, schema="query_id long, traj_id long, lb double, etd double"
-    )
-    return _etd_radius_prune(bounds, k)
-
-
-def _pack_bufs(pack: dict) -> tuple:
-    """(flat_x, off_x, flat_y, off_y) of a broadcast curve pack."""
-    fx, ox = pack["cols"]["xs"]
-    fy, oy = pack["cols"]["ys"]
-    return (fx, ox, fy, oy)
-
-
-def _etd_kernel_pack(qb, tb):
-    """ETD + endpoint lower bound per id pair, arrays gathered from
-    broadcast curve packs (ids-only attach: the candidate stream and the
-    repartition shuffle carry 16 B/pair instead of the array payload —
-    same pattern as range_query's broadcast attach)."""
+def _etd_map(q_spec, t_spec):
+    """ETD + endpoint lower bound per pair, both curves gathered through
+    the curve sources ``q_spec``/``t_spec`` (range_query._curve_source):
+    inline pair-row arrays, or broadcast packs under an ids-only pair
+    stream (the candidate stream and the repartition shuffle then carry
+    16 B/pair instead of the array payload)."""
 
     def kernel(batches):
         import pyarrow as pa
 
         from frechetrange_spark.kernels.batch import etd_pairs_buffers
-        from frechetrange_spark.operators.range_query import _lookup
+        from frechetrange_spark.operators.range_query import _curve_source, _xy
 
-        qpack, tpack = qb.value, tb.value
-        bq, bt = _pack_bufs(qpack), _pack_bufs(tpack)
-        fqx, oqx, fqy, oqy = bq
-        ftx, otx, fty, oty = bt
         for rb in batches:
             qid = rb.column("query_id").to_numpy(zero_copy_only=False)
             tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
-            qsel = _lookup(qpack["ids"], qid)
-            tsel = _lookup(tpack["ids"], tid)
+            qpack, qsel = _curve_source(q_spec, rb, qid, 0)
+            tpack, tsel = _curve_source(t_spec, rb, tid, 0)
+            bq, bt = _xy(qpack), _xy(tpack)
+            fqx, oqx, fqy, oqy = bq
+            ftx, otx, fty, oty = bt
             etd = etd_pairs_buffers(bq, bt, qsel, tsel)
             lbs = np.maximum(
                 np.hypot(
@@ -416,28 +323,96 @@ def _etd_kernel_pack(qb, tb):
                 ),
             )
             yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column("query_id"),
-                    rb.column("traj_id"),
-                    pa.array(lbs),
-                    pa.array(etd),
-                ],
+                [pa.array(qid), pa.array(tid), pa.array(lbs), pa.array(etd)],
                 ["query_id", "traj_id", "lb", "etd"],
             )
 
     return kernel
 
 
-def _decide_distance_map(qb, tb, rel_tol: float = 1e-6):
-    """Fused step 2c + 3 over broadcast curve packs: ONE kernel pass that
-    (a) decides each surviving pair at its per-query radius (the k-th
-    smallest ETD, widened by 1e-12 relative exactly like
-    ``_decide_radius_kernel`` — see that docstring for the boundary
-    analysis) and (b) runs the bisection distance only on the accepted
-    pairs — the old plan shipped the decide survivors through another
-    join + repartition + Arrow pass before the distance kernel. Per-pair
-    results are independent of batch composition, so the distances equal
-    the unfused path bit-for-bit."""
+# Relative widening of a k-th smallest ETD radius wherever it is compared.
+# The radius is sqrt(max d2) and the bounds compared against it are other
+# float expressions of the same distance (a hypot endpoint bound, eps*eps
+# inside the decider), each of which can round a few ulps past it — a pair
+# whose true distance EQUALS the radius (a translated duplicate, whose
+# Fréchet distance is its own ETD) would then be dropped. Widening only
+# keeps more pairs, so both prunes stay sound.
+_RADIUS_WIDEN = 1.0 + 1e-12
+
+
+def _etd_radius_prune(bounds: DataFrame, k: int) -> DataFrame:
+    """Window-only ETD radius prune over (query_id, traj_id, lb, etd)
+    rows: radius = k-th smallest ETD per query; drop pairs with lb >
+    radius, the radius widened by _RADIUS_WIDEN (keep all when a query
+    has <= k pairs). Same shape as ``_radius_prune`` — one exchange, the
+    ETD kernel upstream runs ONCE."""
+    w_rank = Window.partitionBy("query_id").orderBy(
+        F.col("etd").asc(), F.col("traj_id").asc()
+    )
+    w_all = Window.partitionBy("query_id")
+    return (
+        bounds.withColumn("_rk", F.row_number().over(w_rank))
+        .withColumn(
+            "radius", F.max(F.when(F.col("_rk") <= k, F.col("etd"))).over(w_all)
+        )
+        .withColumn("_np", F.count(F.lit(1)).over(w_all))
+        .filter(
+            (F.col("_np") <= k)
+            | (F.col("lb") <= F.col("radius") * F.lit(_RADIUS_WIDEN))
+        )
+        .select("query_id", "traj_id", "radius")
+    )
+
+
+def etd_prune(curves: DataFrame, queries: DataFrame, candidates: DataFrame, k: int) -> DataFrame:
+    """Step 2b: tighten the candidate set with the equal-time distance
+    (F8, detail/bddm/spatial_hash.hpp:253-362 — a linear-time upper bound
+    ~3000x cheaper than the bisection decider). Per query the k-th smallest
+    ETD is a valid radius: >= k curves have δF <= it, so pairs whose
+    endpoint lower bound exceeds it cannot be in the top k.
+
+    Returns (query_id, traj_id, radius) — the radius rides along so the
+    fused decide+distance stage (step 2c + 3) can run without recomputing
+    ETDs. Arrays ride the pair rows (inline curve sources): the plan
+    ``knn_frechet`` runs past the broadcast threshold."""
+    from frechetrange_spark.operators.range_query import _INLINE
+
+    return _etd_survivors(
+        _pairs_with_arrays(curves, queries, candidates), k, _INLINE
+    )
+
+
+def _etd_survivors(pairs: DataFrame, k: int, sources: tuple) -> DataFrame:
+    n_slots = 2 * pairs.sparkSession.sparkContext.defaultParallelism
+    bounds = pairs.repartition(n_slots).mapInArrow(
+        _etd_map(*sources), schema="query_id long, traj_id long, lb double, etd double"
+    )
+    return _etd_radius_prune(bounds, k)
+
+
+def _decide_distance_map(q_spec, t_spec, rel_tol: float = 1e-6):
+    """Fused step 2c + 3, curves gathered through the curve sources
+    ``q_spec``/``t_spec``: ONE kernel pass that (a) decides each surviving
+    pair at its per-query radius (the k-th smallest ETD) and (b) runs the
+    bisection distance only on the accepted pairs. At least k pairs per
+    query have true distance <= radius, so a NO proves the pair is outside
+    the top k — one free-space sweep replaces the ~40-sweep bisection for
+    every eliminated pair.
+
+    The decision runs at radius*_RADIUS_WIDEN (next float up), not at the
+    radius itself: eps*eps can round a few ulps below the radius's d2, and
+    the bare decider then rejects pairs whose true distance EQUALS the
+    radius (translated duplicates: 119/2000 dropped at eps==ETD, 4/2000 at
+    one ulp, 0 at 1e-12 relative — pinned by
+    test_radius_boundary_translated_duplicates). Widening keeps the prune
+    sound AND consistent with the distance kernel: it shares this decider,
+    so a NO at eps' > radius implies its bisection distance >= eps' >
+    radius — never a true top-k member.
+
+    1e-6 relative bisection tolerance = the reference's own kNN-style
+    bisection (benchmark/test.py:96, eps=1E-6); ranks are stable well
+    above it and it saves ~10 of ~37 decide sweeps per pair. Per-pair
+    results are independent of batch composition."""
 
     def kernel(batches):
         import pyarrow as pa
@@ -446,81 +421,27 @@ def _decide_distance_map(qb, tb, rel_tol: float = 1e-6):
             decide_pairs_buffers,
             distance_pairs_buffers,
         )
-        from frechetrange_spark.operators.range_query import _lookup
+        from frechetrange_spark.operators.range_query import _curve_source, _xy
 
-        qpack, tpack = qb.value, tb.value
-        bq, bt = _pack_bufs(qpack), _pack_bufs(tpack)
         for rb in batches:
             qid = rb.column("query_id").to_numpy(zero_copy_only=False)
             tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
-            qsel = _lookup(qpack["ids"], qid)
-            tsel = _lookup(tpack["ids"], tid)
+            qpack, qsel = _curve_source(q_spec, rb, qid, 0)
+            tpack, tsel = _curve_source(t_spec, rb, tid, 0)
+            bq, bt = _xy(qpack), _xy(tpack)
             radius = rb.column("radius").to_numpy(zero_copy_only=False)
-            eps = np.nextafter(radius * (1.0 + 1e-12), np.inf)
+            eps = np.nextafter(radius * _RADIUS_WIDEN, np.inf)
             keep = decide_pairs_buffers(bq, bt, qsel, tsel, eps)
             idx = np.nonzero(keep)[0]
             dists = distance_pairs_buffers(
                 bq, bt, qsel[idx], tsel[idx], rel_tol=rel_tol
             )
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qid[idx]),
-                    pa.array(tid[idx]),
-                    pa.array(dists),
-                ],
+                [pa.array(qid[idx]), pa.array(tid[idx]), pa.array(dists)],
                 ["query_id", "traj_id", "distance"],
             )
 
     return kernel
-
-
-def _decide_radius_kernel(batches):
-    """Batched single decision per pair at its per-row radius column."""
-    import pyarrow as pa
-
-    from frechetrange_spark.kernels.batch import decide_pairs_arrow
-
-    for rb in batches:
-        # Decide at radius*(1+1e-12), not at the radius itself: the radius
-        # is a k-th smallest ETD, i.e. sqrt(max d2), and eps*eps can round
-        # a few ulps below that d2 — the bare decider then rejects pairs
-        # whose true distance EQUALS the radius (translated duplicates:
-        # 119/2000 dropped at eps==ETD, 4/2000 at one ulp, 0 at 1e-12
-        # relative — pinned by test_radius_boundary_translated_duplicates).
-        # Widening keeps the prune sound AND consistent with the distance
-        # kernel: it shares this decider, so a NO at eps' > radius implies
-        # its bisection distance >= eps' > radius — never a true top-k
-        # member. Previously only the ETD pre-accept's bit-reproducibility
-        # rescued these pairs; now the decision itself is safe.
-        radius = rb.column("radius").to_numpy(zero_copy_only=False)
-        radius = np.nextafter(radius * (1.0 + 1e-12), np.inf)
-        keep = decide_pairs_arrow(
-            rb.column("q_xs"),
-            rb.column("q_ys"),
-            rb.column("xs"),
-            rb.column("ys"),
-            radius,
-        )
-        idx = pa.array(np.nonzero(keep)[0])
-        yield pa.RecordBatch.from_arrays(
-            [rb.column("query_id").take(idx), rb.column("traj_id").take(idx)],
-            ["query_id", "traj_id"],
-        )
-
-
-def decide_radius_prune(
-    curves: DataFrame, queries: DataFrame, survivors: DataFrame
-) -> DataFrame:
-    """Step 2c: one batched DECISION per surviving pair at its query's
-    radius (the k-th smallest ETD). At least k pairs per query have true
-    distance <= radius, so a NO here proves the pair is outside the top k
-    — one free-space sweep replaces the ~40-sweep bisection for every
-    eliminated pair; only the accepted few get exact distances."""
-    pairs = _pairs_with_arrays(curves, queries, survivors)
-    n_slots = 2 * pairs.sparkSession.sparkContext.defaultParallelism
-    return pairs.repartition(n_slots).mapInArrow(
-        _decide_radius_kernel, schema="query_id long, traj_id long"
-    )
 
 
 def _pairs_with_arrays(
@@ -545,8 +466,6 @@ def knn_frechet(
     queries: DataFrame,
     k: int,
     mesh: float | None = None,
-    eps0: float | None = None,
-    max_rounds: int | None = None,
 ) -> DataFrame:
     """(query_id, traj_id, distance, rank): the k nearest trajectories per
     query by continuous Fréchet distance (self excluded). Ties break by
@@ -562,19 +481,18 @@ def knn_frechet(
     ``mesh``: home-cell size for the grid-prefiltered candidate stage
     (knn_candidates_grid — expanding Chebyshev ring probes; sublinear
     candidate streams on clustered corpora, identical top-k). ``None``
-    falls back to the all-pairs scalar bound pass. ``eps0``/
-    ``max_rounds`` are accepted for backward compatibility with the
-    earlier eps-doubling implementation and ignored.
+    falls back to the all-pairs scalar bound pass.
 
-    Refine attach (r06): when both curve tables' array payloads fit the
-    broadcast threshold, the ETD prune and the fused decide+distance
-    stage gather arrays from broadcast curve packs (ids-only pair
-    streams — the range_query broadcast-attach pattern) and the decide
-    and distance kernels share one Arrow pass; past the threshold the
-    original per-pair array-join path runs unchanged. Identical results
-    either way (per-pair kernel outputs are batch-composition
-    independent)."""
+    Refine: the ETD kernel, the ETD radius prune, then ONE fused
+    decide+distance kernel pass. When both curve tables' array payloads
+    fit the broadcast threshold, both kernels gather arrays from
+    broadcast curve packs under ids-only pair streams (the range_query
+    broadcast-attach pattern); past it the same plan runs on inline
+    curve sources, with ``_pairs_with_arrays`` attaching the arrays to
+    each kernel's pair stream. Identical results either way (per-pair
+    kernel outputs are batch-composition independent)."""
     from frechetrange_spark.operators.range_query import (
+        _INLINE,
         _broadcast_threshold,
         _pack_broadcast,
         _payload_bytes_gated,
@@ -597,24 +515,20 @@ def knn_frechet(
         and _payload_bytes_gated(curves, thr) <= thr
         and _payload_bytes_gated(queries, thr) <= thr
     )
+    sources = (
+        (("bcast", _pack_broadcast(queries, 0)), ("bcast", _pack_broadcast(curves, 0)))
+        if packed
+        else _INLINE
+    )
+
+    def attach(pair_ids):
+        return pair_ids if packed else _pairs_with_arrays(curves, queries, pair_ids)
+
+    survivors = _etd_survivors(attach(candidates), k, sources)
     n_slots = 2 * spark.sparkContext.defaultParallelism
-    if packed:
-        qb = _pack_broadcast(queries, 0)
-        tb = _pack_broadcast(curves, 0)
-        bounds = candidates.repartition(n_slots).mapInArrow(
-            _etd_kernel_pack(qb, tb),
-            schema="query_id long, traj_id long, lb double, etd double",
-        )
-        survivors = _etd_radius_prune(bounds, k)
-        dists = survivors.repartition(n_slots).mapInArrow(
-            _decide_distance_map(qb, tb),
-            schema="query_id long, traj_id long, distance double",
-        )
-    else:
-        survivors = etd_prune(curves, queries, candidates, k).localCheckpoint()
-        finalists = decide_radius_prune(curves, queries, survivors)
-        pairs = _pairs_with_arrays(curves, queries, finalists)
-        dists = frechet_distances(pairs)
+    dists = attach(survivors).repartition(n_slots).mapInArrow(
+        _decide_distance_map(*sources), schema=_DIST_SCHEMA
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("distance").asc(), F.col("traj_id").asc()
     )

@@ -23,8 +23,6 @@ the only Python, and it sees only survivors of the funnel.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -369,68 +367,6 @@ def grid_candidates(
     return joined.filter(f2 & f1).withColumn("accept_f3", f3)
 
 
-def _simp_funnel_batch(
-    rb, eps: float, simp_levels: int, result, stage=None, chunk: int = 4096
-):
-    """F9 simplification funnel over one Arrow RecordBatch — shared by the
-    K5 and CFDQ refine kernels (the reference's bddm engine runs the same
-    funnel before EITHER full-resolution decider,
-    detail/bddm/spatial_hash.hpp:771-821). Per level i: compare the two
-    stored Agarwal simplifications with ETD and the exact decider at
-    eps -/+ (simpEps_Q + simpEps_T) — YES below the lower bound, NO above
-    the upper bound (exact by the triangle inequality), MAYBE falls
-    through. Accepts are written into ``result`` (and ``stage``); returns
-    the undecided row indices.
-
-    Rows are size-bucketed and processed in ``chunk``-row padded slices
-    (same scheme as decide_pairs_arrow): the padded working set stays
-    O(chunk x longest-curve-in-slice) regardless of the Arrow batch size,
-    so a wide-curve batch cannot balloon the matrices to batch x max-width."""
-    from frechetrange_spark.kernels.batch import (
-        _gather_pair,
-        _list_buffers,
-        decide_frechet_batch,
-        etd_batch,
-    )
-
-    und = np.arange(rb.num_rows, dtype=np.int64)
-    for i in range(simp_levels):
-        if und.size == 0:
-            break
-        q_eps_full = rb.column(f"q_s{i}_eps").to_numpy(zero_copy_only=False)
-        t_eps_full = rb.column(f"s{i}_eps").to_numpy(zero_copy_only=False)
-        fqx, oqx = _list_buffers(rb.column(f"q_s{i}_xs"))
-        fqy, oqy = _list_buffers(rb.column(f"q_s{i}_ys"))
-        ftx, otx = _list_buffers(rb.column(f"s{i}_xs"))
-        fty, oty = _list_buffers(rb.column(f"s{i}_ys"))
-        lens = (oqx[und + 1] - oqx[und]) + (otx[und + 1] - otx[und])
-        order = np.argsort(lens, kind="stable")
-        remaining = []
-        for s in range(0, und.size, chunk):
-            rows = und[order[s : s + chunk]]
-            sq, st = _gather_pair(fqx, oqx, fqy, oqy, ftx, otx, fty, oty, rows)
-            eps_l = eps - q_eps_full[rows] - t_eps_full[rows]
-            eps_u = eps + q_eps_full[rows] + t_eps_full[rows]
-            d = etd_batch(sq, st)
-            yes = d < eps_l  # strict, bddm:792
-            todo = np.nonzero(~yes & (eps_l > 0.0))[0]
-            if todo.size:
-                yes[todo] = decide_frechet_batch(sq[todo], st[todo], eps_l[todo])
-            no = np.zeros(rows.size, dtype=bool)
-            todo = np.nonzero(~yes & (eps_u > 0.0))[0]
-            if todo.size:
-                no[todo] = ~decide_frechet_batch(sq[todo], st[todo], eps_u[todo])
-            result[rows[yes]] = True
-            if stage is not None:
-                stage[rows[yes]] = f"simp{i}_yes"
-                stage[rows[~yes & no]] = f"simp{i}_no"
-            remaining.append(rows[~yes & ~no])
-        und = (
-            np.concatenate(remaining) if remaining else np.empty(0, dtype=np.int64)
-        )
-    return und
-
-
 def _pack_cols(simp_levels: int) -> tuple[list[str], list[str]]:
     """(array columns, eps scalar columns) a curve pack carries."""
     cols = ["xs", "ys"]
@@ -500,13 +436,17 @@ def _pack_broadcast(df: DataFrame, simp_levels: int):
     columns the pack reads), so two DataFrames that differ only in
     pack-irrelevant columns — e.g. a self-join's query side (no cell
     columns) vs its index side — share one collected pack instead of
-    collecting and broadcasting the same curves twice. Each entry pins a
-    reference to its source DataFrame so the id(df) fallback key can
-    never alias a garbage-collected plan (a recycled CPython id would
+    collecting and broadcasting the same curves twice. The key also
+    holds the sorted ``inputFiles()`` of that plan: appending files to a
+    scanned directory (streaming ingest) leaves the semantic hash
+    unchanged, and the listing — which the scan's file index already
+    holds, no Spark job — is what tells the two tables apart. Each entry
+    pins a reference to its source DataFrame so the id(df) fallback key
+    can never alias a garbage-collected plan (a recycled CPython id would
     otherwise serve a stale pack)."""
     cols, scal = _pack_cols(simp_levels)
     proj = df.select("traj_id", *cols, *scal)
-    key = (_plan_key(proj), simp_levels)
+    key = (_plan_key(proj), tuple(sorted(proj.inputFiles())), simp_levels)
     hit = _PACK_CACHE.pop(key, None)
     if hit is not None:
         _PACK_CACHE[key] = hit  # LRU refresh
@@ -543,6 +483,67 @@ def _lookup(ids: np.ndarray, vals: np.ndarray) -> np.ndarray:
     return idx
 
 
+# Curve sources of the two sides of a pair batch (query side, index side):
+# where the refine kernels' arrays come from. Each spec is
+#   ("inline", prefix) - the batch's own list columns ``{prefix}xs`` ...;
+#   ("bcast", broadcast) - a broadcast curve pack (_pack_broadcast);
+#   ("disk", pack_path) - a curve-pack store on disk (sources/pack_store).
+_INLINE = (("inline", "q_"), ("inline", ""))
+
+
+def _inline_cols(prefix: str, simp_levels: int) -> list[str]:
+    """The pair-row columns an ``("inline", prefix)`` source reads."""
+    cols, scal = _pack_cols(simp_levels)
+    return [prefix + c for c in cols + scal]
+
+
+def _curve_source(spec, rb, ids: np.ndarray, simp_levels: int):
+    """(pack, selectors) for one side of the Arrow batch ``rb`` whose
+    curve ids are ``ids``: a pack dict in the _pack_curves shape
+    ({"ids", "cols": {name: (flat, offsets)}, "scal": {name: values}})
+    and, per pair row, the index of its curve in that pack. The one place
+    every range, CFDQ, brute-force and kNN kernel gets curve arrays from.
+
+    - ``("inline", prefix)``: the batch's own list columns, zero-copy via
+      their Arrow buffers (plus the CFDQ portal columns when present);
+      selectors are ``arange(B)``.
+    - ``("bcast", broadcast)``: the broadcast pack of the whole table.
+    - ``("disk", path)``: just the batch's curves, gathered from the
+      mmapped blocks of the on-disk pack store.
+
+    The broadcast and disk selectors resolve ids by sorted lookup, with a
+    loud miss guard (_lookup)."""
+    from frechetrange_spark.kernels.batch import _list_buffers
+
+    kind, v = spec
+    if kind == "inline":
+        names = rb.schema.names
+        cols, scal = _pack_cols(simp_levels)
+        cols += [c for c in PORTAL_COLS if v + c in names]
+        pack = {
+            "ids": ids,
+            "cols": {c: _list_buffers(rb.column(v + c)) for c in cols},
+            "scal": {
+                c: rb.column(v + c).to_numpy(zero_copy_only=False) for c in scal
+            },
+        }
+        return pack, np.arange(rb.num_rows, dtype=np.int64)
+    if kind == "bcast":
+        pack = v.value
+    else:
+        from frechetrange_spark.sources.pack_store import gather_pack
+
+        pack = gather_pack(v, np.unique(ids), simp_levels)
+    return pack, _lookup(pack["ids"], ids)
+
+
+def _xy(pack: dict, level: str = "") -> tuple:
+    """(flat_x, off_x, flat_y, off_y) of a pack's ``{level}xs``/``ys``
+    columns — the curve-table shape of the kernels.batch ``*_buffers``
+    kernels."""
+    return (*pack["cols"][f"{level}xs"], *pack["cols"][f"{level}ys"])
+
+
 def _simp_funnel_pairs(
     qpack: dict,
     tpack: dict,
@@ -554,43 +555,38 @@ def _simp_funnel_pairs(
     stage=None,
     chunk: int = 4096,
 ):
-    """_simp_funnel_batch over broadcast curve packs: identical stage
-    semantics, but the simplification arrays are gathered from the shared
-    per-curve buffers via qsel/tsel instead of riding the pair rows."""
+    """F9 simplification funnel over the pairs (qsel[i], tsel[i]) of two
+    curve packs — shared by the K5 and CFDQ refine kernels (the
+    reference's bddm engine runs the same funnel before EITHER
+    full-resolution decider, detail/bddm/spatial_hash.hpp:771-821). Per
+    level i: compare the two stored Agarwal simplifications with ETD and
+    the exact decider at eps -/+ (simpEps_Q + simpEps_T) — YES below the
+    lower bound, NO above the upper bound (exact by the triangle
+    inequality), MAYBE falls through. Accepts are written into ``result``
+    (and ``stage``); returns the undecided pair indices.
+
+    Pairs are size-bucketed into ``chunk``-pair padded slices
+    (kernels.batch.pair_chunks), so a wide-curve batch cannot balloon the
+    matrices to batch x max-width."""
     from frechetrange_spark.kernels.batch import (
-        _padded_gather,
         decide_frechet_batch,
         etd_batch,
+        pair_chunks,
     )
 
     und = np.arange(qsel.size, dtype=np.int64)
     for i in range(simp_levels):
         if und.size == 0:
             break
-        fqx, oqx = qpack["cols"][f"s{i}_xs"]
-        fqy, oqy = qpack["cols"][f"s{i}_ys"]
-        ftx, otx = tpack["cols"][f"s{i}_xs"]
-        fty, oty = tpack["cols"][f"s{i}_ys"]
+        bq, bt = _xy(qpack, f"s{i}_"), _xy(tpack, f"s{i}_")
+        oq, ot = bq[1], bt[1]
         q_eps_all = qpack["scal"][f"s{i}_eps"]
         t_eps_all = tpack["scal"][f"s{i}_eps"]
-        lens = (oqx[qsel[und] + 1] - oqx[qsel[und]]) + (
-            otx[tsel[und] + 1] - otx[tsel[und]]
-        )
-        order = np.argsort(lens, kind="stable")
+        lens = (oq[qsel[und] + 1] - oq[qsel[und]]) + (ot[tsel[und] + 1] - ot[tsel[und]])
+        order = und[np.argsort(lens, kind="stable")]
         remaining = []
-        for s in range(0, und.size, chunk):
-            rows = und[order[s : s + chunk]]
+        for rows, sq, st in pair_chunks(bq, bt, qsel, tsel, order, chunk):
             qr, tr = qsel[rows], tsel[rows]
-            wq = int((oqx[qr + 1] - oqx[qr]).max())
-            wt = int((otx[tr + 1] - otx[tr]).max())
-            sq = np.stack(
-                [_padded_gather(fqx, oqx, qr, wq), _padded_gather(fqy, oqy, qr, wq)],
-                axis=-1,
-            )
-            st = np.stack(
-                [_padded_gather(ftx, otx, tr, wt), _padded_gather(fty, oty, tr, wt)],
-                axis=-1,
-            )
             eps_l = eps - q_eps_all[qr] - t_eps_all[tr]
             eps_u = eps + q_eps_all[qr] + t_eps_all[tr]
             d = etd_batch(sq, st)
@@ -622,7 +618,7 @@ def _refine_map(
     rev_greedy_accept: bool = False,
     dfd_accept: bool = False,
     stats: bool = False,
-    bcast=None,
+    sources: tuple = _INLINE,
 ):
     """Arrow-native refine: the exact decider (K5) batched over every pair
     in each RecordBatch — list buffers are gathered into padded (B, N, 2)
@@ -645,45 +641,28 @@ def _refine_map(
     (:846-856). The whole funnel is batched per Arrow batch — no shuffles
     between stages.
 
-    ``SPARK_GRAFT_KERNEL_CHUNK`` (read at plan-build time on the driver)
-    overrides the padded-kernel chunk width; the default in
-    kernels.batch.decide_pairs_arrow is cache-size-bound, not
-    throughput-bound, so the knob exists for measurement, not tuning.
-
-    With ``bcast`` (a (query_side, index_side) pair of attach SPECS) the
-    incoming batches carry ONLY (query_id, traj_id) id pairs — every
-    curve array and simplification eps is gathered via sorted-id lookup
-    from per-side packs instead of riding the pair rows, so the
-    candidate join, the repartition shuffle AND the JVM->Python Arrow
-    stream all move ~16 bytes per pair instead of the full
-    ~(4 x n_points x 8)-byte array payload per pair. Each spec is either
-    ``("bcast", broadcast)`` — the whole table packed in one SparkContext
-    broadcast (_pack_curves/_pack_broadcast) — or ``("disk", path)`` — a
-    co-partitioned curve-pack store (sources/pack_store): the worker
-    resolves the batch's unique ids to blocks via the store manifest and
-    gathers just those curves from mmapped npy blocks, so the big side
-    never transits the driver or a broadcast at all (the over-threshold
-    100-TB regime)."""
-    chunk = int(os.environ.get("SPARK_GRAFT_KERNEL_CHUNK", "0"))
+    ``sources`` is the (query side, index side) pair of curve-source
+    specs (see _curve_source) the kernel gathers every curve array and
+    simplification eps from. The default ``("inline", "q_")``/
+    ``("inline", "")`` reads the pair rows' own q_xs/q_ys/xs/ys (and
+    s{i}_*) columns. With ``("bcast", broadcast)`` or ``("disk", path)``
+    sides the incoming batches carry ONLY (query_id, traj_id) id pairs,
+    so the candidate join, the repartition shuffle and the JVM->Python
+    Arrow stream move ~16 bytes per pair instead of the full
+    ~(4 x n_points x 8)-byte array payload: a broadcast pack holds the
+    whole table (_pack_curves/_pack_broadcast); a disk pack store
+    (sources/pack_store) is gathered per batch for just the batch's ids,
+    so the big side never transits the driver or a broadcast at all (the
+    over-threshold 100-TB regime). Every source feeds the same funnel
+    and decider, so stage taxonomy and results are source-independent."""
 
     def fn(batches):
         import pyarrow as pa
 
         from frechetrange_spark.kernels.batch import (
             STAGE_NAMES,
-            decide_pairs_arrow,
             decide_pairs_buffers,
         )
-
-        def _resolve(spec, ids_arr):
-            kind, v = spec
-            if kind == "bcast":
-                pack = v.value
-            else:
-                from frechetrange_spark.sources.pack_store import gather_pack
-
-                pack = gather_pack(v, np.unique(ids_arr), simp_levels)
-            return pack, _lookup(pack["ids"], ids_arr)
 
         for rb in batches:
             B = rb.num_rows
@@ -691,58 +670,28 @@ def _refine_map(
             stage = np.full(B, "", dtype=object) if stats else None
             all_qid = rb.column("query_id").to_numpy(zero_copy_only=False)
             all_tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
-            if bcast is not None:
-                qpack, qsel = _resolve(bcast[0], all_qid)
-                tpack, tsel = _resolve(bcast[1], all_tid)
-                und = _simp_funnel_pairs(
-                    qpack, tpack, qsel, tsel, eps, simp_levels, result, stage,
-                    **({"chunk": chunk} if chunk else {}),
+            qpack, qsel = _curve_source(sources[0], rb, all_qid, simp_levels)
+            tpack, tsel = _curve_source(sources[1], rb, all_tid, simp_levels)
+            und = _simp_funnel_pairs(
+                qpack, tpack, qsel, tsel, eps, simp_levels, result, stage
+            )
+            if und.size:
+                # full-resolution fallback (ETD accept + optional F4/F5)
+                res, codes = decide_pairs_buffers(
+                    _xy(qpack),
+                    _xy(tpack),
+                    qsel[und],
+                    tsel[und],
+                    eps,
+                    greedy_accept=greedy_accept,
+                    neg_reject=neg_reject,
+                    rev_greedy_accept=rev_greedy_accept,
+                    dfd_accept=dfd_accept,
+                    return_stages=True,
                 )
-                if und.size:
-                    fqx, oqx = qpack["cols"]["xs"]
-                    fqy, oqy = qpack["cols"]["ys"]
-                    ftx, otx = tpack["cols"]["xs"]
-                    fty, oty = tpack["cols"]["ys"]
-                    res, codes = decide_pairs_buffers(
-                        (fqx, oqx, fqy, oqy),
-                        (ftx, otx, fty, oty),
-                        qsel[und],
-                        tsel[und],
-                        eps,
-                        greedy_accept=greedy_accept,
-                        neg_reject=neg_reject,
-                        rev_greedy_accept=rev_greedy_accept,
-                        dfd_accept=dfd_accept,
-                        return_stages=True,
-                        **({"chunk": chunk} if chunk else {}),
-                    )
-                    result[und] = res
-                    if stats:
-                        stage[und] = [STAGE_NAMES[c] for c in codes]
-            else:
-                und = _simp_funnel_batch(
-                    rb, eps, simp_levels, result, stage,
-                    **({"chunk": chunk} if chunk else {}),
-                )
-                if und.size:
-                    # full-resolution fallback (ETD accept + optional F4/F5)
-                    sub = rb.take(pa.array(und))
-                    res, codes = decide_pairs_arrow(
-                        sub.column("q_xs"),
-                        sub.column("q_ys"),
-                        sub.column("xs"),
-                        sub.column("ys"),
-                        eps,
-                        greedy_accept=greedy_accept,
-                        neg_reject=neg_reject,
-                        rev_greedy_accept=rev_greedy_accept,
-                        dfd_accept=dfd_accept,
-                        return_stages=True,
-                        **({"chunk": chunk} if chunk else {}),
-                    )
-                    result[und] = res
-                    if stats:
-                        stage[und] = [STAGE_NAMES[c] for c in codes]
+                result[und] = res
+                if stats:
+                    stage[und] = [STAGE_NAMES[c] for c in codes]
             if stats:
                 qid, tid, acc = all_qid, all_tid, result
                 stg = stage
@@ -921,18 +870,20 @@ def range_query_grid(
     after an action; the flagship pipeline persists them in the stage
     manifest (north rule: per-partition lineage + metrics).
 
-    ``attach`` picks how the refine kernel's array inputs travel:
+    ``attach`` picks each side's curve source — where the refine
+    kernel's arrays come from (see _curve_source); every source feeds
+    the same funnel and decider, so results and funnel stages are
+    identical (tested):
 
-    - ``"shuffle"`` — arrays ride the candidate join and the round-robin
-      repartition (~4 KB/pair; always valid, never optimal past small
-      corpora).
+    - ``"shuffle"`` — inline: the arrays ride the candidate join and the
+      round-robin repartition as pair-row columns (~4 KB/pair; always
+      valid, never optimal past small corpora).
     - ``"broadcast"`` — the candidate join and repartition move ONLY
-      (query_id, traj_id) id pairs; both sides' arrays are attached
+      (query_id, traj_id) id pairs; both sides' arrays are gathered
       inside the kernel from broadcast curve packs. Measured 1.4-2.7x
       faster on the reference's real corpus (128-pt curves: the array
-      shuffle was the scaling bottleneck, BENCH.md), identical results
-      (tested). Valid while each curve table's array payload fits the
-      broadcast threshold.
+      shuffle was the scaling bottleneck, BENCH.md). Valid while each
+      curve table's array payload fits the broadcast threshold.
     - ``"pack"`` — ids-only like broadcast, but the dataset side's
       arrays come from the co-partitioned on-disk curve-pack store
       written next to the index (meta['pack_path'], see
@@ -941,8 +892,10 @@ def range_query_grid(
       scale arm for tables PAST the broadcast threshold, where
       "shuffle" would pay ~4 KB/pair and "broadcast" can't hold the
       table. The query side still broadcasts when it fits (the common
-      big-data/bounded-queries shape) and falls back to the same store
-      for the self-join shape.
+      big-data/bounded-queries shape); past the threshold it reads the
+      index's own store only for the self-join shape
+      (``symmetric=True``) or ``meta['query_pack_path']``, and raises
+      otherwise.
     - ``"auto"`` (default) — broadcast when BOTH sides' estimated array
       payload (build-time meta['payload_bytes'] for the index side —
       no per-query scan — with _est_broadcast_bytes/plan-stats gating
@@ -977,35 +930,74 @@ def range_query_grid(
                 attach = "broadcast"
             elif meta.get("pack_path"):
                 attach = "pack"
-    # funnel columns (Agarwal simplifications) ride along when the index
+    # funnel columns (Agarwal simplifications) are refined when the index
     # was enriched on BOTH sides
     simp_levels = 0
-    extra = []
     while (
         f"s{simp_levels}_eps" in index_df.columns
         and f"s{simp_levels}_eps" in queries.columns
     ):
-        extra += [
-            f"q_s{simp_levels}_xs",
-            f"q_s{simp_levels}_ys",
-            f"q_s{simp_levels}_eps",
-            f"s{simp_levels}_xs",
-            f"s{simp_levels}_ys",
-            f"s{simp_levels}_eps",
-        ]
         simp_levels += 1
 
-    ids_only = attach in ("broadcast", "pack")
-    if ids_only:
-        # candidates over scalar features only — no array bytes enter the
-        # join or the repartition
-        drop_d = [c for c in _array_cols(index_df) if not c.endswith("_eps")]
-        drop_q = [c for c in _array_cols(queries) if not c.endswith("_eps")]
-        cand = grid_candidates(
-            index_df.drop(*drop_d), queries.drop(*drop_q), eps, meta
+    if attach == "shuffle":
+        sources = _INLINE
+    elif attach == "broadcast":
+        # broadcast packs are LRU-cached per table (_pack_broadcast):
+        # repeated queries reuse one broadcast, eviction unpersists
+        # executor copies
+        sources = (
+            ("bcast", _pack_broadcast(queries, simp_levels)),
+            ("bcast", _pack_broadcast(index_df, simp_levels)),
         )
+    elif attach == "pack":
+        pack_path = meta.get("pack_path")
+        if not pack_path:
+            raise ValueError(
+                "attach='pack' needs meta['pack_path'] — write the "
+                "index with write_index(..., pack=True) or call "
+                "pack_store.write_pack and set meta['pack_path']"
+            )
+        # query side: broadcast-pack when it fits (the common 100-TB
+        # shape: huge dataset, bounded query set); otherwise gather
+        # from a disk pack — the INDEX's own store only for the
+        # self-join shape (symmetric=True: queries ARE the indexed
+        # curves) or an explicit meta['query_pack_path']. A foreign
+        # over-threshold query table must NOT silently reuse the
+        # index store: overlapping traj_id spaces would gather the
+        # WRONG curves for the query side and return silently wrong
+        # results (only ids absent from the store trip the loud
+        # _lookup KeyError) — raise instead.
+        thr = _broadcast_threshold(spark)
+        if thr > 0 and _payload_bytes_gated(queries, thr) <= thr:
+            q_spec = ("bcast", _pack_broadcast(queries, simp_levels))
+        elif symmetric:
+            q_spec = ("disk", pack_path)
+        elif meta.get("query_pack_path"):
+            q_spec = ("disk", meta["query_pack_path"])
+        else:
+            raise ValueError(
+                "attach='pack' with an over-broadcast-threshold query "
+                "table: reusing the index's pack store is only exact "
+                "for the self-join shape (symmetric=True). Write a "
+                "pack for the query table (pack_store.write_pack) and "
+                "set meta['query_pack_path'], or raise the broadcast "
+                "threshold."
+            )
+        sources = (q_spec, ("disk", pack_path))
     else:
-        cand = grid_candidates(index_df, queries, eps, meta)
+        raise ValueError(f"unknown attach {attach!r}")
+    q_inline, t_inline = (kind == "inline" for kind, _ in sources)
+
+    def candidate_side(df: DataFrame, inline: bool) -> DataFrame:
+        # a side with a pack source joins on scalar features only — no
+        # array bytes enter the candidate join or the repartition
+        if inline:
+            return df
+        return df.drop(*[c for c in _array_cols(df) if not c.endswith("_eps")])
+
+    cand = grid_candidates(
+        candidate_side(index_df, t_inline), candidate_side(queries, q_inline), eps, meta
+    )
     accepted = cand.filter("accept_f3").select(
         F.col("q_traj_id").alias("query_id"), "traj_id"
     )
@@ -1021,96 +1013,26 @@ def range_query_grid(
             F.lit("f3_accept").alias("stage"),
             F.lit(True).alias("accepted"),
         )
-    refine_cols = [
-        "query_id",
+    # the refine input: the id pair plus the columns an inline side reads
+    to_refine = cand.filter(~F.col("accept_f3")).select(
+        F.col("q_traj_id").alias("query_id"),
         "traj_id",
-        F.col("q_xs"),
-        F.col("q_ys"),
-        "xs",
-        "ys",
-        *[F.col(c) for c in extra],
-    ]
+        *(_inline_cols("q_", simp_levels) if q_inline else []),
+        *(_inline_cols("", simp_levels) if t_inline else []),
+    )
+    if symmetric:
+        to_refine = to_refine.filter(F.col("query_id") <= F.col("traj_id"))
+    if observations is not None and not funnel_stats:
+        observations["refine_input"] = Observation()
+        to_refine = to_refine.observe(
+            observations["refine_input"], F.count(F.lit(1)).alias("n")
+        )
     # Round-robin repartition before the Arrow kernel: the refine input is
     # small in BYTES but heavy in per-row CPU (free-space DP), so AQE's
     # byte-based coalescing would funnel it into one task. Explicit
     # repartition(n) is exempt from AQE coalescing and balances pair costs.
     n_slots = 2 * spark.sparkContext.defaultParallelism
-    refine_bcast = None
-    if ids_only:
-        ids = cand.filter(~F.col("accept_f3")).select(
-            F.col("q_traj_id").alias("query_id"), "traj_id"
-        )
-        if symmetric:
-            ids = ids.filter(F.col("query_id") <= F.col("traj_id"))
-        if observations is not None and not funnel_stats:
-            observations["refine_input"] = Observation()
-            ids = ids.observe(
-                observations["refine_input"], F.count(F.lit(1)).alias("n")
-            )
-        # ids-only all the way INTO the kernel: the curve arrays (and
-        # simplification levels) travel once per executor — as a python
-        # broadcast of packed buffers, or gathered from the mmapped
-        # curve-pack store — not once per candidate pair: the join, the
-        # repartition and the JVM->Python Arrow stream each move ~16
-        # bytes/pair instead of the ~4 KB/pair array payload. Broadcast
-        # packs are LRU-cached per table (_pack_broadcast): repeated
-        # queries reuse one broadcast, eviction unpersists executor
-        # copies.
-        if attach == "pack":
-            pack_path = meta.get("pack_path")
-            if not pack_path:
-                raise ValueError(
-                    "attach='pack' needs meta['pack_path'] — write the "
-                    "index with write_index(..., pack=True) or call "
-                    "pack_store.write_pack and set meta['pack_path']"
-                )
-            t_spec = ("disk", pack_path)
-            # query side: broadcast-pack when it fits (the common 100-TB
-            # shape: huge dataset, bounded query set); otherwise gather
-            # from a disk pack — the INDEX's own store only for the
-            # self-join shape (symmetric=True: queries ARE the indexed
-            # curves) or an explicit meta['query_pack_path']. A foreign
-            # over-threshold query table must NOT silently reuse the
-            # index store: overlapping traj_id spaces would gather the
-            # WRONG curves for the query side and return silently wrong
-            # results (only ids absent from the store trip the loud
-            # _lookup KeyError) — raise instead.
-            thr = _broadcast_threshold(spark)
-            if thr > 0 and _payload_bytes_gated(queries, thr) <= thr:
-                q_spec = ("bcast", _pack_broadcast(queries, simp_levels))
-            elif symmetric:
-                q_spec = ("disk", pack_path)
-            elif meta.get("query_pack_path"):
-                q_spec = ("disk", meta["query_pack_path"])
-            else:
-                raise ValueError(
-                    "attach='pack' with an over-broadcast-threshold query "
-                    "table: reusing the index's pack store is only exact "
-                    "for the self-join shape (symmetric=True). Write a "
-                    "pack for the query table (pack_store.write_pack) and "
-                    "set meta['query_pack_path'], or raise the broadcast "
-                    "threshold."
-                )
-            refine_bcast = (q_spec, t_spec)
-        else:
-            refine_bcast = (
-                ("bcast", _pack_broadcast(queries, simp_levels)),
-                ("bcast", _pack_broadcast(index_df, simp_levels)),
-            )
-        to_refine = ids.repartition(n_slots)
-    else:
-        to_refine = cand.filter(~F.col("accept_f3")).select(
-            F.col("q_traj_id").alias("query_id"), "traj_id", *refine_cols[2:]
-        )
-        if symmetric:
-            to_refine = to_refine.filter(F.col("query_id") <= F.col("traj_id"))
-        if observations is not None and not funnel_stats:
-            observations["refine_input"] = Observation()
-            to_refine = to_refine.observe(
-                observations["refine_input"], F.count(F.lit(1)).alias("n")
-            )
-        to_refine = to_refine.repartition(n_slots)
-    refined = to_refine.mapInArrow(
+    refined = to_refine.repartition(n_slots).mapInArrow(
         _refine_map(
             eps,
             simp_levels,
@@ -1120,7 +1042,7 @@ def range_query_grid(
             rev_greedy_accept=rev_greedy_accept,
             dfd_accept=dfd_accept,
             stats=funnel_stats,
-            bcast=refine_bcast,
+            sources=sources,
         ),
         schema=REFINE_STATS_SCHEMA if funnel_stats else "query_id long, traj_id long",
     )
@@ -1139,49 +1061,52 @@ def _cfdq_refine_map(eps: float, simp_levels: int = 0):
     runs the funnel before its full-resolution decide too,
     spatial_hash.hpp:771-856), then the CFDQ sparse decider (K6) with the
     dataset curve's stored portals (K9/O4, columns portal_src/dst/dist)
-    on the few funnel survivors. CFDQ's sparse interval walk is
-    control-flow-heavy and stays scalar per pair, but it now sees only
-    funnel MAYBEs instead of every candidate; the per-survivor portals
-    are passed as flat (srcs, dsts, dists) slices of the Arrow buffers
-    (the columns are written src-sorted, dst-sorted within src — see
-    enrich_with_portals/compile_portals) and the kernel finds each row's
-    group with np.searchsorted — zero per-pair Python object churn."""
+    on the few funnel survivors. Curves and portals come from the pair
+    rows through inline curve sources (_curve_source). CFDQ's sparse
+    interval walk is control-flow-heavy and stays scalar per pair, but it
+    sees only funnel MAYBEs instead of every candidate; the per-survivor
+    portals are passed as flat (srcs, dsts, dists) slices of the Arrow
+    buffers (the columns are written src-sorted, dst-sorted within src —
+    see enrich_with_portals/compile_portals) and the kernel finds each
+    row's group with np.searchsorted — zero per-pair Python object
+    churn."""
 
     def fn(batches):
         import pyarrow as pa
 
-        from frechetrange_spark.kernels.batch import _list_buffers
         from frechetrange_spark.kernels.cfdq import decide_frechet_cfdq
 
         for rb in batches:
-            B = rb.num_rows
-            res = np.zeros(B, dtype=bool)
-            und = _simp_funnel_batch(rb, eps, simp_levels, res)
+            res = np.zeros(rb.num_rows, dtype=bool)
+            qid = rb.column("query_id").to_numpy(zero_copy_only=False)
+            tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
+            qpack, qsel = _curve_source(_INLINE[0], rb, qid, simp_levels)
+            tpack, tsel = _curve_source(_INLINE[1], rb, tid, simp_levels)
+            und = _simp_funnel_pairs(qpack, tpack, qsel, tsel, eps, simp_levels, res)
             if und.size:
-                fqx, oqx = _list_buffers(rb.column("q_xs"))
-                fqy, oqy = _list_buffers(rb.column("q_ys"))
-                ftx, otx = _list_buffers(rb.column("xs"))
-                fty, oty = _list_buffers(rb.column("ys"))
-                fps, ops = _list_buffers(rb.column("portal_src"))
-                fpd, opd = _list_buffers(rb.column("portal_dst"))
-                fpw, opw = _list_buffers(rb.column("portal_dist"))
+                fqx, oqx, fqy, oqy = _xy(qpack)
+                ftx, otx, fty, oty = _xy(tpack)
+                (fps, ops), (fpd, opd), (fpw, opw) = (
+                    tpack["cols"][c] for c in PORTAL_COLS
+                )
                 fps = fps.astype(np.int64, copy=False)
                 fpd = fpd.astype(np.int64, copy=False)
                 for r in und:
+                    a, b = qsel[r], tsel[r]
                     q = np.column_stack(
-                        [fqx[oqx[r] : oqx[r + 1]], fqy[oqy[r] : oqy[r + 1]]]
+                        [fqx[oqx[a] : oqx[a + 1]], fqy[oqy[a] : oqy[a + 1]]]
                     )
                     t = np.column_stack(
-                        [ftx[otx[r] : otx[r + 1]], fty[oty[r] : oty[r + 1]]]
+                        [ftx[otx[b] : otx[b + 1]], fty[oty[b] : oty[b + 1]]]
                     )
                     # the stored columns are src-sorted with dst ascending
                     # inside each src group (compile_portals/O4), exactly
                     # the kernel's flat interface: slice the Arrow buffers
                     # and hand them over — zero per-pair Python objects
                     portals = (
-                        fps[ops[r] : ops[r + 1]],
-                        fpd[opd[r] : opd[r + 1]],
-                        fpw[opw[r] : opw[r + 1]],
+                        fps[ops[b] : ops[b + 1]],
+                        fpd[opd[b] : opd[b + 1]],
+                        fpw[opw[b] : opw[b + 1]],
                     )
                     # portals attach to the dataset curve -> CFDQ's p side
                     res[r] = decide_frechet_cfdq(
@@ -1189,10 +1114,7 @@ def _cfdq_refine_map(eps: float, simp_levels: int = 0):
                     )
             idx = np.nonzero(res)[0]
             yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column("query_id").take(pa.array(idx)),
-                    rb.column("traj_id").take(pa.array(idx)),
-                ],
+                [pa.array(qid[idx]), pa.array(tid[idx])],
                 ["query_id", "traj_id"],
             )
 
@@ -1211,7 +1133,7 @@ def range_query_cfdq(
     must carry the portal columns (enrich_with_portals). Result sets
     equal the K5 funnel's (parity-tested); offered as an alternative
     engine — the batched K5 funnel stays the default."""
-    for c in ("portal_src", "portal_dst", "portal_dist"):
+    for c in PORTAL_COLS:
         if c not in index_df.columns:
             raise ValueError(f"index is missing portal column {c}; "
                              "run enrich_with_portals at build time")
@@ -1220,31 +1142,17 @@ def range_query_cfdq(
         F.col("q_traj_id").alias("query_id"), "traj_id"
     )
     simp_levels = 0
-    extra = []
     while (
         f"s{simp_levels}_eps" in cand.columns
         and f"q_s{simp_levels}_eps" in cand.columns
     ):
-        extra += [
-            f"q_s{simp_levels}_xs",
-            f"q_s{simp_levels}_ys",
-            f"q_s{simp_levels}_eps",
-            f"s{simp_levels}_xs",
-            f"s{simp_levels}_ys",
-            f"s{simp_levels}_eps",
-        ]
         simp_levels += 1
     to_refine = cand.filter(~F.col("accept_f3")).select(
         F.col("q_traj_id").alias("query_id"),
         "traj_id",
-        F.col("q_xs"),
-        F.col("q_ys"),
-        "xs",
-        "ys",
-        "portal_src",
-        "portal_dst",
-        "portal_dist",
-        *[F.col(c) for c in extra],
+        *_inline_cols("q_", simp_levels),
+        *_inline_cols("", simp_levels),
+        *PORTAL_COLS,
     )
     n_slots = 2 * index_df.sparkSession.sparkContext.defaultParallelism
     refined = to_refine.repartition(n_slots).mapInArrow(

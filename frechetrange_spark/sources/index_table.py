@@ -109,13 +109,15 @@ def compact_index(
     the dir is absent — a table-format pointer swap, e.g. an Iceberg
     snapshot commit, closes even that on a real deployment).
 
-    Crash safety: stale ``._compact``/``._old`` siblings from an earlier
-    failed run are removed on entry (a leftover ``._old`` next to a live
-    data dir is a completed swap whose cleanup died — the data dir wins);
-    if the second rename fails, the first is rolled back so the index is
-    never left without a data directory. Manual recovery for a crash
-    BETWEEN the renames (data dir absent): ``mv <data>._old <data>`` (or
-    ``mv <data>._compact <data>`` to adopt the finished rewrite).
+    Crash safety: a re-run recovers from a crash at any point. With the
+    data dir absent and a ``._old`` sibling present (a crash BETWEEN the
+    renames), ``._old`` is the last complete data dir: it is renamed
+    back and the rewrite redone. Stale ``._compact``/``._old`` siblings
+    are removed only while the data dir exists (a leftover ``._old`` next
+    to a live data dir is a completed swap whose cleanup died — the data
+    dir wins; a leftover ``._compact`` is an unfinished rewrite). If the
+    second rename fails, the first is rolled back so the index is never
+    left without a data directory.
     """
     meta_file = os.path.join(path, "_meta.json")
     if os.path.exists(meta_file):
@@ -128,9 +130,12 @@ def compact_index(
         data_dir = path
     tmp = data_dir.rstrip("/") + "._compact"
     old = data_dir.rstrip("/") + "._old"
-    for stale in (tmp, old):
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
+    if not os.path.exists(data_dir) and os.path.exists(old):
+        os.rename(old, data_dir)
+    if os.path.exists(data_dir):
+        for stale in (tmp, old):
+            if os.path.exists(stale):
+                shutil.rmtree(stale)
     try:
         _o1_sorted(spark.read.parquet(data_dir), corner).write.mode(
             "overwrite"

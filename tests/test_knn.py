@@ -23,14 +23,14 @@ def corpus(spark):
 
 def test_radius_boundary_translated_duplicates():
     """A pair whose true distance EQUALS the prune radius must survive
-    decide_radius_prune *without* relying on the ETD pre-accept.
+    the radius decision *without* relying on the ETD pre-accept.
 
     Translated duplicates are the adversarial case: their Fréchet distance
     is their own ETD, so when the k-th smallest ETD is the pair's ETD the
     radius decision runs exactly at the boundary, where eps*eps =
     sqrt(d2)^2 rounds below d2 (empirically 119/2000 false rejects with
     the bare decider at eps==ETD, 4/2000 at one ulp). Pins the
-    1e-12-relative widening in _decide_radius_kernel so a future
+    1e-12-relative widening in _decide_distance_map so a future
     etd_accept / chunk-layout change can't silently drop true top-k
     members."""
     import numpy as np
@@ -51,7 +51,7 @@ def test_radius_boundary_translated_duplicates():
         return pa.array([row.tolist() for row in a], pa.list_(pa.float64()))
 
     args = (col(P[:, :, 0]), col(P[:, :, 1]), col(Q[:, :, 0]), col(Q[:, :, 1]))
-    # the exact widening _decide_radius_kernel applies, bare decider
+    # the exact widening _decide_distance_map applies, bare decider
     widened = np.nextafter(radius * (1.0 + 1e-12), np.inf)
     keep = decide_pairs_arrow(*args, widened, etd_accept=False)
     assert keep.all(), f"{int((~keep).sum())}/{n} boundary pairs dropped"
@@ -59,8 +59,10 @@ def test_radius_boundary_translated_duplicates():
     reject = decide_pairs_arrow(*args, radius * 0.999, etd_accept=False)
     assert not reject.any()
 
-    # drive the actual kernel too (it applies the widening internally)
-    from frechetrange_spark.operators.knn import _decide_radius_kernel
+    # drive the actual kernel too (it applies the widening internally),
+    # on inline curve sources: the arrays ride the pair rows
+    from frechetrange_spark.operators.knn import _decide_distance_map
+    from frechetrange_spark.operators.range_query import _INLINE
 
     rb = pa.RecordBatch.from_arrays(
         [
@@ -71,7 +73,7 @@ def test_radius_boundary_translated_duplicates():
         ],
         ["query_id", "traj_id", "q_xs", "q_ys", "xs", "ys", "radius"],
     )
-    out = list(_decide_radius_kernel(iter([rb])))
+    out = list(_decide_distance_map(*_INLINE)(iter([rb])))
     assert sum(b.num_rows for b in out) == n
 
 
@@ -112,7 +114,7 @@ def test_grid_prefilter_identical_and_sublinear(spark):
 
 def test_knn_exact(spark, corpus):
     queries = corpus.filter(F.col("traj_id") % 150 == 0)
-    got = knn_frechet(corpus, queries, k=K, mesh=15.0, eps0=2.0).toPandas()
+    got = knn_frechet(corpus, queries, k=K, mesh=15.0).toPandas()
 
     # brute force: all-pairs distances, top-k in pandas
     all_pairs = (
@@ -139,3 +141,44 @@ def test_knn_exact(spark, corpus):
         r["traj_id"] for r in queries.select("traj_id").collect()
     }
     assert (got.groupby("query_id").size() == K).all()
+
+
+def test_etd_radius_prune_keeps_boundary_pair(spark):
+    """A pair whose ETD sets the radius (the k-th smallest ETD) and whose
+    hypot endpoint lower bound rounds one ulp above that ETD must survive
+    the ETD prune: its Fréchet distance can equal the radius (a
+    translated duplicate's distance is its own ETD), so dropping it loses
+    a true k-th neighbour. Clearly-outside pairs are still pruned."""
+    import numpy as np
+
+    from frechetrange_spark.operators.knn import _etd_radius_prune
+
+    etd = 11.930339
+    lb = float(np.nextafter(etd, np.inf))
+    bounds = spark.createDataFrame(
+        [(1, 10, 0.5, 1.0), (1, 11, lb, etd), (1, 12, etd + 5.0, etd + 6.0)],
+        "query_id long, traj_id long, lb double, etd double",
+    )
+    kept = {r["traj_id"] for r in _etd_radius_prune(bounds, 2).collect()}
+    assert kept == {10, 11}
+
+
+def test_knn_arms_agree(spark, corpus):
+    """Past the broadcast threshold knn_frechet runs the same plan on
+    inline curve sources (arrays joined onto the pair rows) instead of
+    broadcast packs: same (query_id, traj_id, rank) rows, same distances."""
+    queries = corpus.filter(F.col("traj_id") % 150 == 0)
+    key = ["query_id", "rank"]
+    packed = knn_frechet(corpus, queries, k=K, mesh=15.0).toPandas()
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
+        inline = knn_frechet(corpus, queries, k=K, mesh=15.0).toPandas()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    packed = packed.sort_values(key).reset_index(drop=True)
+    inline = inline.sort_values(key).reset_index(drop=True)
+    assert len(packed) > 0
+    cols = ["query_id", "traj_id", "rank"]
+    assert inline[cols].values.tolist() == packed[cols].values.tolist()
+    assert list(inline["distance"]) == pytest.approx(list(packed["distance"]))

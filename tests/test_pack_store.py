@@ -87,6 +87,24 @@ def test_pack_attach_parity(spark, enriched, tmp_path):
     }
     assert res["pack"] == res["shuffle"] == res["broadcast"]
     assert len(res["pack"]) > 0
+    # funnel_stats rows (one (query_id, traj_id, stage, accepted) row per
+    # candidate) are identical too: one funnel driver, one stage taxonomy,
+    # simplification stages included
+    stats = {
+        a: sorted(
+            map(
+                tuple,
+                range_query_grid(
+                    idx, queries, 15.0, meta2, attach=a, funnel_stats=True
+                ).collect(),
+            )
+        )
+        for a in ("shuffle", "broadcast", "pack")
+    }
+    assert stats["pack"] == stats["shuffle"] == stats["broadcast"]
+    stages = {r[2] for r in stats["pack"]}
+    assert "f3_accept" in stages
+    assert any(s.startswith("simp") for s in stages)
 
 
 def test_pack_self_join_disk_query_side(spark, enriched, tmp_path):
