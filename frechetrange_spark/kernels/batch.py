@@ -15,6 +15,16 @@ take the reference's a==0 branch of the line–circle interval solve
 kernel (and hence the reference semantics) is property-tested in
 tests/test_kernels.py.
 
+Padding still costs: every padded cell is swept. The ``*_buffers``
+kernels gather their padded stacks per row group (``pair_chunks``). The
+O(N+M) stages (ETD, greedy walks, distance bisection) take ``CHUNK``-pair
+slices of the pairs sorted by len_p + len_t (``chunks``); the O(N*M) DP
+stages of the refine funnel (discrete-Fréchet accept, exact decider)
+take 2-D length ``tiles`` of the pairs left undecided by all chunks,
+padded only to each tile's own longest curve per side. On the sf0.1
+self-join's refine pairs this lifts the share of useful cells the DP
+stages sweep from ~0.36-0.39 to ~0.53-0.66 (scripts/bench_kernel.py).
+
 Decisions use per-pair eps, which also gives a batched bisection for the
 distance value (K12, samples/plain.cpp:47-60): all pairs bisect in
 lockstep on their own brackets.
@@ -25,6 +35,13 @@ from __future__ import annotations
 import numpy as np
 
 _INF = np.inf
+
+# pairs per padded chunk of the O(N+M) stages (ETD, greedy walks)
+CHUNK = 4096
+# pairs per padded chunk of the bisection distance kernel
+DIST_CHUNK = 2048
+# target pairs per length tile of the O(N*M) DP stages (see ``tiles``)
+TILE = 512
 
 
 def size_buckets(
@@ -332,7 +349,15 @@ def greedy_ub_batch(
     (detail/bb/spatial_index.hpp:251-278) in lockstep over B padded pairs —
     every pair advances its own (i, j) pointers, each step one vectorized
     gather. Bit-identical to core.greedy_upper_bound per pair (tested):
-    diagonal wins ties, then the i-step (the scalar's min()/== order)."""
+    diagonal wins ties, then the i-step (the scalar's min()/== order).
+
+    With the true ``lens_p``/``lens_q`` the walk never reads padding, so
+    its bound does not depend on the padded width. The reversed walk of
+    decide_pairs_buffers passes the padded widths instead: its curves
+    START with the padding copies of the last vertex, and while one
+    pointer steps through its copies (zero-length steps) the other may
+    advance, so the bound — still a sound upper bound — depends on the
+    width each side is padded to."""
     B = p.shape[0]
     rows = np.arange(B)
     n = np.asarray(lens_p, dtype=np.int64)
@@ -397,20 +422,21 @@ def dfd_leq_batch(p: np.ndarray, q: np.ndarray, eps2: np.ndarray) -> np.ndarray:
     d_F <= d_dF always (Eiter & Mannila 1994) — and last-vertex padding
     only duplicates vertices, which min-max DP ignores.
 
-    Vectorized over the batch: the classic DP row recurrence
-    ``dp[j] = max(D[j], min(dp_prev[j], dp_prev[j-1], dp[j-1]))`` has a
-    sequential dp[j-1] dependency, but x -> max(c, min(a, x)) is a clamp
-    and clamps compose into clamps ((c1,a1) then (c2,a2) ->
-    (max(c2, min(a2, c1)), min(a1, a2))), so each row is a Hillis-Steele
-    prefix composition: O(log M) min/max passes, no quadratic solves, no
-    sqrt/division — ~2-3x cheaper per cell than the free-space sweep.
-    All ops are exact (min/max/compare), so the result is deterministic
-    and batch-composition independent.
+    Swept by anti-diagonals, vectorized over the batch: cell (i, j) of
+    the DP ``dp = max(D, min(dp[i-1, j], dp[i, j-1], dp[i-1, j-1]))``
+    reads two cells of diagonal k-1 = i+j-1 and one of diagonal k-2, so
+    each diagonal is ONE elementwise max/min pass over (B, diagonal
+    length) — no sequential dependency inside it, N+M-1 passes per
+    batch. D is the squared vertex distance ``dx*dx + dy*dy``; all DP ops
+    are exact (min/max/compare), so the accept set is deterministic and
+    independent of batch composition and padding width.
 
-    Early exit: the DP row minimum is monotone non-decreasing in i, so a
-    pair whose row min exceeds eps2 can never accept — such pairs are
-    compacted out mid-sweep (they are handed to the exact decider by the
-    caller anyway)."""
+    Early exit: every monotone path crosses diagonal k or k+1 and dp
+    never decreases along a path, so the min over two consecutive
+    diagonals is a non-decreasing lower bound of the result. Pairs whose
+    bound exceeds eps2 can never accept; they are compacted out
+    mid-sweep once at most half the batch is alive (they are handed to
+    the exact decider by the caller anyway)."""
     p = np.asarray(p, dtype=np.float64)
     q = np.asarray(q, dtype=np.float64)
     B, N = p.shape[0], p.shape[1]
@@ -420,42 +446,50 @@ def dfd_leq_batch(p: np.ndarray, q: np.ndarray, eps2: np.ndarray) -> np.ndarray:
         return out
     eps2 = np.broadcast_to(np.asarray(eps2, dtype=np.float64), (B,)).copy()
     orig = np.arange(B)
+    # x/y planes; q reversed so diagonal k's q vertices j = k - i, for
+    # ascending i, are one ascending slice (index M-1-j)
+    px, py = np.ascontiguousarray(p[..., 0]), np.ascontiguousarray(p[..., 1])
+    rx = np.ascontiguousarray(q[:, ::-1, 0])
+    ry = np.ascontiguousarray(q[:, ::-1, 1])
 
-    def drow(pp, qq, i):
-        dd = pp[:, i, None, :] - qq
-        return dd[..., 0] * dd[..., 0] + dd[..., 1] * dd[..., 1]
+    def diag_d(k: int, lo: int, hi: int) -> np.ndarray:
+        s = M - 1 - k
+        dx = px[:, lo : hi + 1] - rx[:, s + lo : s + hi + 1]
+        dy = py[:, lo : hi + 1] - ry[:, s + lo : s + hi + 1]
+        return dx * dx + dy * dy
 
-    dp = np.maximum.accumulate(drow(p, q, 0), axis=1)
-    for i in range(1, N):
-        alive = dp.min(axis=1) <= eps2
+    # diagonal k holds dp(i, k-i) for i in [lo_k, hi_k] at column
+    # 1 + i - lo_k; columns 0 and -1 are +inf (the off-grid neighbours)
+    cur = np.full((B, 3), _INF)
+    cur[:, 1] = diag_d(0, 0, 0)[:, 0]
+    lo_c = 0
+    prev, lo_p = None, 0
+    mn_c = cur[:, 1]
+    for k in range(1, N + M - 1):
+        lo, hi = max(0, k - M + 1), min(k, N - 1)
+        L = hi - lo + 1
+        s1 = lo - lo_c  # column of dp(lo-1, k-lo) in diagonal k-1
+        best = np.minimum(cur[:, s1 : s1 + L], cur[:, s1 + 1 : s1 + 1 + L])
+        if prev is not None:
+            s2 = lo - lo_p  # column of dp(lo-1, k-1-lo) in diagonal k-2
+            np.minimum(best, prev[:, s2 : s2 + L], out=best)
+        nxt = np.empty((cur.shape[0], L + 2))
+        nxt[:, 0] = _INF
+        nxt[:, -1] = _INF
+        np.maximum(diag_d(k, lo, hi), best, out=nxt[:, 1:-1])
+        mn_n = nxt[:, 1:-1].min(axis=1)
+        prev, lo_p, cur, lo_c = cur, lo_c, nxt, lo
+        alive = np.minimum(mn_c, mn_n) <= eps2
+        mn_c = mn_n
         n_alive = int(alive.sum())
         if n_alive == 0:
             return out
-        if n_alive <= dp.shape[0] // 2 and dp.shape[0] > 64:
+        if n_alive <= cur.shape[0] // 2 and cur.shape[0] > 64:
             keep = np.nonzero(alive)[0]
-            orig, p, q, dp, eps2 = orig[keep], p[keep], q[keep], dp[keep], eps2[keep]
-        D = drow(p, q, i)
-        a = dp.copy()
-        a[:, 1:] = np.minimum(dp[:, 1:], dp[:, :-1])
-        C, A = D, a
-        shift = 1
-        while shift < M:
-            C2 = np.empty_like(C)
-            A2 = np.empty_like(A)
-            C2[:, :shift] = C[:, :shift]
-            A2[:, :shift] = A[:, :shift]
-            np.maximum(
-                C[:, shift:],
-                np.minimum(A[:, shift:], C[:, :-shift]),
-                out=C2[:, shift:],
-            )
-            np.minimum(A[:, :-shift], A[:, shift:], out=A2[:, shift:])
-            C, A = C2, A2
-            shift *= 2
-        x0 = np.maximum(D[:, 0], dp[:, 0])
-        dp = np.maximum(C, np.minimum(A, x0[:, None]))
-        dp[:, 0] = x0
-    out[orig] = dp[:, -1] <= eps2
+            orig, eps2, mn_c = orig[keep], eps2[keep], mn_c[keep]
+            cur, prev = cur[keep], prev[keep]
+            px, py, rx, ry = px[keep], py[keep], rx[keep], ry[keep]
+    out[orig] = cur[:, 1] <= eps2
     return out
 
 
@@ -485,7 +519,6 @@ def decide_pairs_arrow(
     xs,
     ys,
     eps,
-    chunk: int = 4096,
     etd_accept: bool = True,
     greedy_accept: bool = False,
     neg_reject: bool = False,
@@ -529,7 +562,6 @@ def decide_pairs_arrow(
         sel,
         sel,
         eps,
-        chunk=chunk,
         etd_accept=etd_accept,
         greedy_accept=greedy_accept,
         neg_reject=neg_reject,
@@ -544,20 +576,20 @@ def pair_chunks(
     bt: tuple,
     qsel: np.ndarray,
     tsel: np.ndarray,
-    order: np.ndarray,
-    chunk: int,
+    groups,
 ):
     """The one padded gather loop of every ``*_buffers`` kernel: yield
-    ``(rows, p, t)`` per ``chunk``-row slice of ``order`` (the caller's
-    size-sorted pair indices), where ``p``/``t`` are the last-vertex-padded
-    (B, N, 2)/(B, M, 2) stacks of curves ``qsel[rows]`` of ``bq`` and
-    ``tsel[rows]`` of ``bt``. ``bq``/``bt`` are (flat_x, off_x, flat_y,
-    off_y) curve tables. The padded working set stays O(chunk x
-    longest-curve-in-slice) regardless of how many pairs are decided."""
+    ``(rows, p, t)`` per row group ``rows`` of ``groups`` (pair-index
+    arrays — size-sorted chunks from ``chunks`` or length tiles from
+    ``tiles``), where ``p``/``t`` are the last-vertex-padded (B, N, 2)/
+    (B, M, 2) stacks of curves ``qsel[rows]`` of ``bq`` and ``tsel[rows]``
+    of ``bt``, each side padded only to the longest curve of that side in
+    the group. ``bq``/``bt`` are (flat_x, off_x, flat_y, off_y) curve
+    tables. The padded working set stays O(group size x longest curve in
+    the group) regardless of how many pairs are decided."""
     fqx, oqx, fqy, oqy = bq
     ftx, otx, fty, oty = bt
-    for s in range(0, order.size, chunk):
-        rows = order[s : s + chunk]
+    for rows in groups:
         qr, tr = qsel[rows], tsel[rows]
         wp = int((oqx[qr + 1] - oqx[qr]).max())
         wt = int((otx[tr + 1] - otx[tr]).max())
@@ -570,6 +602,30 @@ def pair_chunks(
             axis=-1,
         )
         yield rows, p, t
+
+
+def chunks(order: np.ndarray, size: int = CHUNK) -> list[np.ndarray]:
+    """Consecutive ``size``-row slices of ``order`` (a size-sorted pair
+    order): the row groups of the walk stages and of ETD/distance."""
+    return [order[s : s + size] for s in range(0, order.size, size)]
+
+
+def tiles(rows: np.ndarray, lens_p: np.ndarray, lens_t: np.ndarray) -> list[np.ndarray]:
+    """2-D length tiles of the pairs ``rows`` for the DP stages: split
+    into b = ceil(sqrt(n / TILE)) equal-count quantile bands on
+    ``lens_p[rows]``, then each band into b bands on ``lens_t``, so every
+    tile holds <= ~TILE pairs of similar (len_p, len_t) and pads little
+    on EITHER side (a 1-D sort on len_p + len_t pairs long-short with
+    short-long, padding both sides to the long length). n <= TILE is one
+    tile."""
+    b = int(np.ceil(np.sqrt(rows.size / TILE)))
+    if b <= 1:
+        return [rows] if rows.size else []
+    out = []
+    for band in np.array_split(rows[np.argsort(lens_p[rows], kind="stable")], b):
+        band = band[np.argsort(lens_t[band], kind="stable")]
+        out.extend(g for g in np.array_split(band, b) if g.size)
+    return out
 
 
 def _size_order(bq: tuple, bt: tuple, qsel: np.ndarray, tsel: np.ndarray):
@@ -585,7 +641,6 @@ def decide_pairs_buffers(
     qsel: np.ndarray,
     tsel: np.ndarray,
     eps,
-    chunk: int = 4096,
     etd_accept: bool = True,
     greedy_accept: bool = False,
     neg_reject: bool = False,
@@ -599,7 +654,43 @@ def decide_pairs_buffers(
     ``qsel[i]`` of bq against curve ``tsel[i]`` of bt. The arrow wrapper
     and an inline curve source pass identity selectors over per-pair
     columns; broadcast and disk curve sources pass id-resolved selectors
-    into a shared curve table, so the pair rows carry no array bytes."""
+    into a shared curve table, so the pair rows carry no array bytes.
+
+    Two phases. The cheap O(N+M) stages (ETD, greedy, reversed greedy)
+    run chunk by chunk over ``CHUNK``-pair slices of the pairs sorted by
+    len_p + len_t. The undecided pairs of ALL chunks then run the
+    O(N*M) DP stages (discrete-Fréchet accept, F5 reject, exact decider)
+    stage by stage, each stage on its own ``tiles`` — padded only to the
+    tile's own longest curve per side, which cuts the padded cells those
+    sweeps pay for roughly in half on mixed-length batches.
+
+    How pairs are grouped, and so how wide they are padded, is not
+    guaranteed to leave a pair's stage unchanged:
+
+    - exact: the forward greedy walk never reads padding, and the
+      discrete-Fréchet DP (min/max of squared distances) ignores
+      duplicated vertices, so their answers do not depend on the group;
+    - up to float rounding: ETD and the free-space decider are
+      padding-invariant in real arithmetic only. Padding adds exact
+      zeros to ETD's arc lengths, but its t = 1 sample is interpolated
+      on another segment; the decider reaches the last corner through
+      the padded cells' degenerate intervals instead of the real last
+      cell's quadratic solve. Either can move by a few ulps, so a pair
+      whose eps is within rounding of a critical distance (e.g. eps
+      equal to its endpoint distance) can flip with the padded widths.
+      The parent layout had the same property, since a pair's chunk
+      depends on the rest of its batch; on the 361,507 refine pairs of
+      the sf0.1 self-join no stage code differs between chunk and tile
+      padding (scripts/bench_kernel.py --check);
+    - by design: the reversed greedy walk starts at the padded last
+      vertex, and the leading copies of that vertex let one pointer sit
+      still while the other advances, so its bound (still sound)
+      depends on the chunk's padded widths at any eps. The walk stages
+      therefore keep their chunks.
+
+    With ``rev_greedy_accept`` off, one call, a permuted call and a
+    split call give the same stage codes on a seeded mixed-length batch
+    without rounding ties (tested)."""
     from frechetrange_spark.kernels.core import negfilter
 
     B = int(qsel.size)
@@ -609,23 +700,23 @@ def decide_pairs_buffers(
         return (out, stages) if return_stages else out
     eps_arr = np.broadcast_to(np.asarray(eps, dtype=np.float64), (B,))
     lens_p, lens_t, order = _size_order(bq, bt, qsel, tsel)
-    for rows, p, t in pair_chunks(bq, bt, qsel, tsel, order, chunk):
+
+    def mark(rows: np.ndarray, acc: np.ndarray, code: int) -> None:
+        out[rows[acc]] = True
+        stages[rows[acc]] = code
+
+    rest = []
+    for rows, p, t in pair_chunks(bq, bt, qsel, tsel, chunks(order)):
         e = eps_arr[rows]
-        res = np.zeros(rows.size, dtype=bool)
-        stg = np.zeros(rows.size, dtype=np.int8)
         todo = np.arange(rows.size)
         if etd_accept:
             acc = etd_batch(p, t) <= e
-            res |= acc
-            stg[acc] = STAGE_ETD_ACCEPT
-            todo = np.nonzero(~res)[0]
+            mark(rows, acc, STAGE_ETD_ACCEPT)
+            todo = todo[~acc]
         if greedy_accept and todo.size:
-            ub = greedy_ub_batch(
-                p[todo], t[todo], lens_p[rows][todo], lens_t[rows][todo]
-            )
-            acc = ub <= e[todo]
-            res[todo[acc]] = True
-            stg[todo[acc]] = STAGE_GREEDY_ACCEPT
+            r = rows[todo]
+            acc = greedy_ub_batch(p[todo], t[todo], lens_p[r], lens_t[r]) <= e[todo]
+            mark(r, acc, STAGE_GREEDY_ACCEPT)
             todo = todo[~acc]
         if rev_greedy_accept and todo.size:
             # reversed padded curves: leading duplicate vertices are
@@ -640,40 +731,56 @@ def decide_pairs_buffers(
                 np.full(todo.size, t.shape[1], dtype=np.int64),
             )
             acc = ub <= e[todo]
-            res[todo[acc]] = True
-            stg[todo[acc]] = STAGE_GREEDY_REV_ACCEPT
+            mark(rows[todo], acc, STAGE_GREEDY_REV_ACCEPT)
             todo = todo[~acc]
-        if dfd_accept and todo.size:
-            acc = dfd_leq_batch(p[todo], t[todo], e[todo] * e[todo])
-            res[todo[acc]] = True
-            stg[todo[acc]] = STAGE_DFD_ACCEPT
-            todo = todo[~acc]
-        if neg_reject and todo.size:
-            lp = lens_p[rows]
-            lt = lens_t[rows]
-            drop = np.zeros(todo.size, dtype=bool)
-            for ii, k in enumerate(todo):
-                drop[ii] = negfilter(p[k, : lp[k]], t[k, : lt[k]], float(e[k]))
-            stg[todo[drop]] = STAGE_NEG_REJECT
-            todo = todo[~drop]
-        if todo.size:
-            dec = decide_frechet_batch(p[todo], t[todo], e[todo])
-            res[todo] = dec
-            stg[todo] = np.where(dec, STAGE_DECIDER_YES, STAGE_DECIDER_NO)
-        out[rows] = res
-        stages[rows] = stg
+        rest.append(rows[todo])
+    todo = np.concatenate(rest)
+
+    def tiled(stage) -> np.ndarray:
+        """``stage(p, t, rows)`` over the length tiles of ``todo``; its
+        bool answer per ``todo`` pair."""
+        hit = np.zeros(B, dtype=bool)
+        for rows, p, t in pair_chunks(bq, bt, qsel, tsel, tiles(todo, lens_p, lens_t)):
+            hit[rows] = stage(p, t, rows)
+        return hit[todo]
+
+    if dfd_accept and todo.size:
+        acc = tiled(lambda p, t, r: dfd_leq_batch(p, t, eps_arr[r] * eps_arr[r]))
+        mark(todo, acc, STAGE_DFD_ACCEPT)
+        todo = todo[~acc]
+    if neg_reject and todo.size:
+        drop = np.fromiter(
+            (
+                negfilter(_curve(bq, qsel[k]), _curve(bt, tsel[k]), float(eps_arr[k]))
+                for k in todo
+            ),
+            dtype=bool,
+            count=todo.size,
+        )
+        stages[todo[drop]] = STAGE_NEG_REJECT
+        todo = todo[~drop]
+    if todo.size:
+        dec = tiled(lambda p, t, r: decide_frechet_batch(p, t, eps_arr[r]))
+        out[todo] = dec
+        stages[todo] = np.where(dec, STAGE_DECIDER_YES, STAGE_DECIDER_NO)
     return (out, stages) if return_stages else out
 
 
+def _curve(b: tuple, c: int) -> np.ndarray:
+    """Curve ``c`` of the curve table ``b`` as an unpadded (n, 2) array."""
+    fx, ox, fy, oy = b
+    return np.column_stack([fx[ox[c] : ox[c + 1]], fy[oy[c] : oy[c + 1]]])
+
+
 def etd_pairs_buffers(
-    bq: tuple, bt: tuple, qsel: np.ndarray, tsel: np.ndarray, chunk: int = 4096
+    bq: tuple, bt: tuple, qsel: np.ndarray, tsel: np.ndarray
 ) -> np.ndarray:
     """Batched equal-time distance (F8) per pair, over raw list buffers
     with per-pair curve indirection (cf. decide_pairs_buffers): pair i
     compares curve ``qsel[i]`` of bq against curve ``tsel[i]`` of bt."""
     out = np.empty(int(qsel.size), dtype=np.float64)
     order = _size_order(bq, bt, qsel, tsel)[2]
-    for rows, p, t in pair_chunks(bq, bt, qsel, tsel, order, chunk):
+    for rows, p, t in pair_chunks(bq, bt, qsel, tsel, chunks(order)):
         out[rows] = etd_batch(p, t)
     return out
 
@@ -683,7 +790,6 @@ def distance_pairs_buffers(
     bt: tuple,
     qsel: np.ndarray,
     tsel: np.ndarray,
-    chunk: int = 2048,
     rel_tol: float = 1e-9,
     abs_tol: float = 1e-12,
 ) -> np.ndarray:
@@ -693,7 +799,7 @@ def distance_pairs_buffers(
     elementwise per pair)."""
     out = np.empty(int(qsel.size), dtype=np.float64)
     order = _size_order(bq, bt, qsel, tsel)[2]
-    for rows, p, t in pair_chunks(bq, bt, qsel, tsel, order, chunk):
+    for rows, p, t in pair_chunks(bq, bt, qsel, tsel, chunks(order, DIST_CHUNK)):
         out[rows] = _frechet_distance_padded(p, t, rel_tol, abs_tol)
     return out
 

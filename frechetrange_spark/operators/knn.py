@@ -208,7 +208,11 @@ def knn_candidates_grid(
     # 1 aggregate, and the DATA-scale work (the two homed probes and the
     # scalar radius prune) stays relational and map-only. Every float
     # expression is replicated exactly (same IEEE ops), so the candidate
-    # set is identical (pinned by the grid==all-pairs parity test).
+    # set is identical (pinned by the grid==all-pairs parity test). The
+    # per-(query, cell) numpy work runs over query blocks
+    # (_ring_radii/_ring_pairs), so planning never holds a dense Q x C
+    # matrix; each probe side is still as large as the (query, cell)
+    # pairs it selects, up to Q x C when g_max reaches every cell.
     cell_rows = (
         homed.groupBy("cell_x", "cell_y").agg(F.count("*").alias("cnt")).collect()
     )
@@ -224,23 +228,13 @@ def knn_candidates_grid(
     qfe = {c: np.array([r[c] for r in q_rows], dtype=np.float64) for c in _FEATS}
     qcx = np.floor(qfe["min_x"] / float(mesh)).astype(np.int64)
     qcy = np.floor(qfe["min_y"] / float(mesh)).astype(np.int64)
-    # per (query, occupied cell): Chebyshev ring distance g; rq = smallest
-    # g whose cumulative count reaches k+1 (fallback: the farthest ring)
-    g = np.maximum(
-        np.abs(qcx[:, None] - ccx[None, :]), np.abs(qcy[:, None] - ccy[None, :])
-    )  # (Q, C)
-    order = np.argsort(g, axis=1, kind="stable")
-    g_sorted = np.take_along_axis(g, order, axis=1)
-    cum = np.cumsum(np.take_along_axis(np.broadcast_to(ccnt, g.shape), order, axis=1), axis=1)
-    reach = cum >= k + 1
-    first = np.argmax(reach, axis=1)
-    g_all = g_sorted[:, -1]
-    rq = np.where(reach.any(axis=1), g_sorted[np.arange(len(qid)), first], g_all)
+    rq, g_all = _ring_radii(qcx, qcy, ccx, ccy, ccnt, k)
 
-    def _probe_df(mask: np.ndarray):
-        """(query_id, q-features, cell_x, cell_y) rows for the masked
-        (query, cell) pairs — the tiny broadcast probe side."""
-        qi, ci = np.nonzero(mask)
+    def _probe_df(bound: np.ndarray):
+        """(query_id, q-features, cell_x, cell_y) rows for the (query,
+        cell) pairs within ring distance ``bound[query]`` — the tiny
+        broadcast probe side."""
+        qi, ci = _ring_pairs(qcx, qcy, ccx, ccy, bound)
         data = {"query_id": qid[qi]}
         for c in _FEATS:
             data[f"q_{c}"] = qfe[c][qi]
@@ -258,7 +252,7 @@ def knn_candidates_grid(
     # join is a map-only hash probe over the curves — never a shuffle
     # keyed by (hot) cells.
     ring = (
-        homed.join(F.broadcast(_probe_df(g <= rq[:, None])), ["cell_x", "cell_y"])
+        homed.join(F.broadcast(_probe_df(rq)), ["cell_x", "cell_y"])
         .filter(F.col("traj_id") != F.col("query_id"))
         .select("query_id", "traj_id", _ub_col().alias("ub"))
     )
@@ -282,12 +276,67 @@ def knn_candidates_grid(
                 np.floor(float(r["uprime"]) / float(mesh)) + 2
             )
     cand = homed.join(
-        F.broadcast(_probe_df(g <= g_max[:, None])), ["cell_x", "cell_y"]
+        F.broadcast(_probe_df(g_max)), ["cell_x", "cell_y"]
     ).filter(F.col("traj_id") != F.col("query_id"))
     bounded = cand.select(
         "query_id", "traj_id", _lb_col().alias("lb"), _ub_col().alias("ub")
     )
     return _radius_prune(bounded, k)
+
+
+# (query, occupied cell) entries per block of the ring planner: its
+# dense (block, C) int64 work arrays stay ~4 MB each whatever Q is
+_PLAN_CELLS = 1 << 19
+
+
+def _plan_blocks(n_q: int, n_c: int) -> list[slice]:
+    """Query-row blocks of the ring planner, sized from the cell count."""
+    step = max(1, _PLAN_CELLS // max(n_c, 1))
+    return [slice(s, s + step) for s in range(0, n_q, step)]
+
+
+def _ring_dist(qcx, qcy, ccx, ccy, blk: slice) -> np.ndarray:
+    """(block, C) Chebyshev cell distance of the block's queries' home
+    cells to every occupied cell."""
+    return np.maximum(
+        np.abs(qcx[blk, None] - ccx[None, :]), np.abs(qcy[blk, None] - ccy[None, :])
+    )
+
+
+def _ring_radii(qcx, qcy, ccx, ccy, ccnt, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Per query: r_q, the smallest ring distance g whose cumulative
+    occupied-cell count reaches k+1 (the farthest ring when none does),
+    and g_all, the farthest ring. Runs over query blocks, so driver
+    memory is O(_PLAN_CELLS), not O(Q x C)."""
+    n_q = qcx.size
+    rq = np.empty(n_q, dtype=np.int64)
+    g_all = np.empty(n_q, dtype=np.int64)
+    for blk in _plan_blocks(n_q, ccx.size):
+        g = _ring_dist(qcx, qcy, ccx, ccy, blk)
+        order = np.argsort(g, axis=1, kind="stable")
+        g_sorted = np.take_along_axis(g, order, axis=1)
+        del g
+        cum = np.cumsum(ccnt[order], axis=1)
+        del order
+        reach = cum >= k + 1
+        del cum
+        first = np.argmax(reach, axis=1)
+        g_all[blk] = g_sorted[:, -1]
+        rq[blk] = np.where(
+            reach.any(axis=1), g_sorted[np.arange(first.size), first], g_sorted[:, -1]
+        )
+    return rq, g_all
+
+
+def _ring_pairs(qcx, qcy, ccx, ccy, bound: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(query index, cell index) of every pair with ring distance <=
+    ``bound[query]``, in row-major order, block by block."""
+    qis, cis = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
+    for blk in _plan_blocks(qcx.size, ccx.size):
+        qi, ci = np.nonzero(_ring_dist(qcx, qcy, ccx, ccy, blk) <= bound[blk, None])
+        qis.append(qi + blk.start)
+        cis.append(ci)
+    return np.concatenate(qis), np.concatenate(cis)
 
 
 def _etd_map(q_spec, t_spec):

@@ -553,7 +553,6 @@ def _simp_funnel_pairs(
     simp_levels: int,
     result,
     stage=None,
-    chunk: int = 4096,
 ):
     """F9 simplification funnel over the pairs (qsel[i], tsel[i]) of two
     curve packs — shared by the K5 and CFDQ refine kernels (the
@@ -565,10 +564,11 @@ def _simp_funnel_pairs(
     inequality), MAYBE falls through. Accepts are written into ``result``
     (and ``stage``); returns the undecided pair indices.
 
-    Pairs are size-bucketed into ``chunk``-pair padded slices
-    (kernels.batch.pair_chunks), so a wide-curve batch cannot balloon the
-    matrices to batch x max-width."""
+    Pairs are size-bucketed into ``kernels.batch.CHUNK``-pair padded
+    slices (kernels.batch.pair_chunks), so a wide-curve batch cannot
+    balloon the matrices to batch x max-width."""
     from frechetrange_spark.kernels.batch import (
+        chunks,
         decide_frechet_batch,
         etd_batch,
         pair_chunks,
@@ -585,7 +585,7 @@ def _simp_funnel_pairs(
         lens = (oq[qsel[und] + 1] - oq[qsel[und]]) + (ot[tsel[und] + 1] - ot[tsel[und]])
         order = und[np.argsort(lens, kind="stable")]
         remaining = []
-        for rows, sq, st in pair_chunks(bq, bt, qsel, tsel, order, chunk):
+        for rows, sq, st in pair_chunks(bq, bt, qsel, tsel, chunks(order)):
             qr, tr = qsel[rows], tsel[rows]
             eps_l = eps - q_eps_all[qr] - t_eps_all[tr]
             eps_u = eps + q_eps_all[qr] + t_eps_all[tr]

@@ -24,6 +24,30 @@ T1 = np.array([[1.0, 0.0], [2.0, 0.0], [4.0, 0.0], [5.0, 0.0]])
 T2 = np.array([[1.0, 0.0], [3.0, 3.0], [5.0, 0.0]])
 
 
+def discrete_frechet_sq(a, b):
+    """Squared discrete Fréchet distance of (n, 2) and (m, 2) vertex
+    arrays: the O(nm) coupling DP (Eiter & Mannila 1994) over squared
+    vertex distances ``dx*dx + dy*dy`` — the same float expression the
+    batched kernel uses, so ties compare exactly."""
+    dx = a[:, None, 0] - b[None, :, 0]
+    dy = a[:, None, 1] - b[None, :, 1]
+    d = dx * dx + dy * dy
+    n, m = d.shape
+    ca = np.full((n, m), np.inf)
+    ca[0, 0] = d[0, 0]
+    for i in range(n):
+        for j in range(m):
+            if i == 0 and j == 0:
+                continue
+            prev = min(
+                ca[i - 1, j] if i else np.inf,
+                ca[i, j - 1] if j else np.inf,
+                ca[i - 1, j - 1] if i and j else np.inf,
+            )
+            ca[i, j] = max(prev, d[i, j])
+    return ca[-1, -1]
+
+
 class TestKnownAnswers:
     def test_gis_cup_pair_decisions(self):
         assert decide_frechet(T1, T2, 3.01)
@@ -132,23 +156,7 @@ class TestProperties:
         # continuous dF <= discrete dF; discrete dF on densified curves
         # approaches continuous. Independent O(nm) DP oracle.
         def discrete(a, b):
-            n, m = len(a), len(b)
-            d = np.sqrt(
-                ((a[:, None, :] - b[None, :, :]) ** 2).sum(-1)
-            )
-            ca = np.full((n, m), np.inf)
-            ca[0, 0] = d[0, 0]
-            for i in range(n):
-                for j in range(m):
-                    if i == 0 and j == 0:
-                        continue
-                    prev = min(
-                        ca[i - 1, j] if i else np.inf,
-                        ca[i, j - 1] if j else np.inf,
-                        ca[i - 1, j - 1] if i and j else np.inf,
-                    )
-                    ca[i, j] = max(prev, d[i, j])
-            return ca[-1, -1]
+            return np.sqrt(discrete_frechet_sq(a, b))
 
         def densify(c, k=8):
             out = [c[0]]
@@ -451,6 +459,115 @@ class TestUpperBoundAcceptFilters:
         q = T2[None]
         assert dfd_leq_batch(p, q, np.array([10.001]))[0]  # sqrt(10)^2
         assert not dfd_leq_batch(p, q, np.array([9.99]))[0]
+
+    def test_dfd_matches_oracle(self):
+        """dfd_leq_batch equals the O(nm) oracle exactly: N != M, each
+        side padded to its own batch width by last-vertex copies,
+        consecutive duplicate vertices, single-vertex curves on either
+        side, and eps2 exactly at a pair's squared discrete distance (the
+        <= tie) or one ulp below it."""
+        from frechetrange_spark.kernels.batch import dfd_leq_batch, pad_curves
+
+        rng = np.random.default_rng(29)
+
+        def curve(n):
+            c = np.cumsum(rng.uniform(-1, 1, (n, 2)), axis=0)
+            if n > 1 and rng.random() < 0.4:
+                c = np.repeat(c, rng.integers(1, 3, n), axis=0)  # duplicates
+            return c
+
+        for trial in range(40):
+            B = int(rng.integers(1, 130))
+            hi_p, hi_q = int(rng.integers(1, 20)), int(rng.integers(1, 20))
+            if trial % 10 == 0:
+                hi_p = 1  # every p is one vertex: N == 1
+            if trial % 10 == 1:
+                hi_q = 1  # M == 1
+            ps = [curve(int(rng.integers(1, hi_p + 1))) for _ in range(B)]
+            qs = [curve(int(rng.integers(1, hi_q + 1))) + rng.uniform(-2, 2, 2) for _ in range(B)]
+            truth = np.array([discrete_frechet_sq(a, b) for a, b in zip(ps, qs)])
+            kind = rng.integers(0, 3, B)
+            eps2 = np.where(
+                kind == 0,
+                truth,
+                np.where(kind == 1, np.nextafter(truth, -np.inf), truth * rng.uniform(0.5, 1.5, B)),
+            )
+            P, _ = pad_curves(ps)
+            Q, _ = pad_curves(qs)
+            got = dfd_leq_batch(P, Q, eps2)
+            assert (got == (truth <= eps2)).all(), f"trial {trial}"
+            assert got[kind == 0].all() and not got[kind == 1].any()
+
+    def test_stage_codes_independent_of_batch_composition(self):
+        """With the reversed greedy off (the one padding-dependent
+        stage), a pair's stage code is the same whether it is decided in
+        one call, a permuted call, or a call split in two by curve length
+        (so each part pads to other widths) — across mixed
+        curve lengths and a DP tail of several length tiles.
+
+        Equality is empirical for this seed, not a guarantee: ETD and the
+        free-space decider are padding-invariant only up to float
+        rounding (see decide_pairs_buffers), and no pair here has its eps
+        within rounding of a critical distance."""
+        from frechetrange_spark.kernels.batch import (
+            STAGE_DFD_ACCEPT,
+            STAGE_DECIDER_NO,
+            STAGE_DECIDER_YES,
+            STAGE_NEG_REJECT,
+            TILE,
+            decide_pairs_buffers,
+        )
+
+        rng = np.random.default_rng(41)
+        # curves resampled from 60 shared walks to 5..60 vertices plus
+        # noise: same-walk pairs are near, so every stage gets work
+        walks = [np.cumsum(rng.uniform(-1, 1, (40, 2)), axis=0) for _ in range(60)]
+        curves, base = [], []
+        for w in range(60):
+            for _ in range(5):
+                n = int(rng.integers(5, 61))
+                u = np.sort(np.concatenate([[0.0, 39.0], rng.uniform(0, 39, n - 2)]))
+                c = np.column_stack([np.interp(u, np.arange(40), walks[w][:, d]) for d in (0, 1)])
+                curves.append(c + rng.normal(0, 0.15, c.shape))
+                base.append(w)
+        fx = np.concatenate([c[:, 0] for c in curves])
+        fy = np.concatenate([c[:, 1] for c in curves])
+        off = np.concatenate([[0], np.cumsum([len(c) for c in curves])]).astype(np.int64)
+        tab = (fx, off, fy, off)
+        base = np.array(base)
+        n = 2400
+        qi = rng.integers(0, len(curves), n).astype(np.int64)
+        same = rng.random(n) < 0.7
+        ti = np.where(
+            same,
+            5 * base[qi] + rng.integers(0, 5, n),
+            rng.integers(0, len(curves), n),
+        ).astype(np.int64)
+        eps = rng.uniform(0.3, 1.5, n)
+        flags = dict(
+            etd_accept=True, greedy_accept=True, neg_reject=True,
+            dfd_accept=True, rev_greedy_accept=False, return_stages=True,
+        )
+
+        def codes(sel):
+            return decide_pairs_buffers(tab, tab, qi[sel], ti[sel], eps[sel], **flags)[1]
+
+        whole = codes(np.arange(n))
+        tail = np.isin(
+            whole, [STAGE_DFD_ACCEPT, STAGE_NEG_REJECT, STAGE_DECIDER_YES, STAGE_DECIDER_NO]
+        )
+        assert tail.sum() > 2 * TILE  # the DP stages run on several tiles
+        assert len(np.unique(whole)) >= 5
+        perm = rng.permutation(n)
+        assert (codes(perm) == whole[perm]).all()
+        # split so the first call holds only curves of <= 30 vertices:
+        # both calls pad (and tile) to other widths than the whole call
+        lens = np.diff(off)
+        short = np.maximum(lens[qi], lens[ti]) <= 30
+        split = np.empty_like(whole)
+        split[short] = codes(np.nonzero(short)[0])
+        split[~short] = codes(np.nonzero(~short)[0])
+        assert (split == whole).all()
 
     def test_filters_do_not_change_results(self):
         import pyarrow as pa

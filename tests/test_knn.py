@@ -182,3 +182,71 @@ def test_knn_arms_agree(spark, corpus):
     cols = ["query_id", "traj_id", "rank"]
     assert inline[cols].values.tolist() == packed[cols].values.tolist()
     assert list(inline["distance"]) == pytest.approx(list(packed["distance"]))
+
+
+def _dense_ring_plan(qcx, qcy, ccx, ccy, ccnt, k):
+    """The ring planner on the full (Q, C) matrix — the reference the
+    blocked planner must reproduce."""
+    import numpy as np
+
+    g = np.maximum(np.abs(qcx[:, None] - ccx[None, :]), np.abs(qcy[:, None] - ccy[None, :]))
+    order = np.argsort(g, axis=1, kind="stable")
+    g_sorted = np.take_along_axis(g, order, axis=1)
+    reach = np.cumsum(ccnt[order], axis=1) >= k + 1
+    first = np.argmax(reach, axis=1)
+    rq = np.where(reach.any(axis=1), g_sorted[np.arange(len(qcx)), first], g_sorted[:, -1])
+    return g, rq, g_sorted[:, -1]
+
+
+def _histogram(rng, n_q, n_c):
+    import numpy as np
+
+    cells = rng.choice(400 * 400, n_c, replace=False)
+    ccx, ccy = cells // 400 - 200, cells % 400 - 200
+    ccnt = rng.integers(1, 4, n_c)
+    qcx, qcy = rng.integers(-200, 200, n_q), rng.integers(-200, 200, n_q)
+    return qcx, qcy, ccx, ccy, ccnt
+
+
+def test_ring_planner_blocks_match_dense(monkeypatch):
+    """The query-blocked ring planner returns the dense planner's r_q,
+    farthest ring and (query, cell) probe pairs, in the same order."""
+    import numpy as np
+
+    from frechetrange_spark.operators import knn
+
+    rng = np.random.default_rng(3)
+    qcx, qcy, ccx, ccy, ccnt = _histogram(rng, 97, 300)
+    g, rq_d, gall_d = _dense_ring_plan(qcx, qcy, ccx, ccy, ccnt, K)
+    monkeypatch.setattr(knn, "_PLAN_CELLS", 1000)  # 3 queries per block
+    assert len(knn._plan_blocks(97, 300)) == 33
+    for kk in (1, K, 200, 10_000):  # 10_000: no ring reaches k+1
+        _, rq_k, gall_k = _dense_ring_plan(qcx, qcy, ccx, ccy, ccnt, kk)
+        rq, g_all = knn._ring_radii(qcx, qcy, ccx, ccy, ccnt, kk)
+        assert (rq == rq_k).all() and (g_all == gall_k).all()
+    for bound in (rq_d, gall_d, rq_d + 0.5):
+        qi, ci = knn._ring_pairs(qcx, qcy, ccx, ccy, bound)
+        dqi, dci = np.nonzero(g <= bound[:, None])
+        assert (qi == dqi).all() and (ci == dci).all()
+
+
+def test_ring_planner_driver_memory_bounded():
+    """Ring planning for Q=500 queries over a C=20,000-cell histogram
+    peaks under 40 MB of traced numpy memory. The dense (Q, C) planner
+    holds several 80 MB int64 matrices at once (~380 MB peak)."""
+    import tracemalloc
+
+    import numpy as np
+
+    from frechetrange_spark.operators.knn import _ring_pairs, _ring_radii
+
+    qcx, qcy, ccx, ccy, ccnt = _histogram(np.random.default_rng(5), 500, 20_000)
+    tracemalloc.start()
+    try:
+        rq, g_all = _ring_radii(qcx, qcy, ccx, ccy, ccnt, K)
+        qi, _ = _ring_pairs(qcx, qcy, ccx, ccy, rq)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert qi.size >= 500 * (K + 1) // 3  # each query probes >= 1 ring
+    assert peak < 40 * 2**20, f"ring planner peaked at {peak / 2**20:.0f} MB"
