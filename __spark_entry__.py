@@ -202,7 +202,10 @@ def _q_decide_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sampled pairs exercising the SQL UDF surface) and guarded so the
     # pattern cannot silently scale into an all-pairs join — production
     # pair generation goes through the grid/signature candidate joins.
-    n_a, n_b = a.count(), b.count()
+    n_a, n_b = curves.agg(
+        F.count_if(F.col("traj_id") % QUERY_MOD == 0),
+        F.count_if(F.col("traj_id") % 25 == 0),
+    ).first()
     if n_a * n_b > 1_000_000:
         raise ValueError(
             f"decide_udf demo crossJoin would produce {n_a * n_b} pairs; "

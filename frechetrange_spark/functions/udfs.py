@@ -2,11 +2,14 @@
 reference's Python binding (python-package/frechet.cpp:406-432 registers
 ``FrechetDecider.decide/decide_dv/decide_bb``; index classes expose
 add/build/query). Per the input hint, everything is a vectorized
-pandas/Arrow UDF — no per-row Python registered anywhere.
+Arrow/pandas UDF — no per-row Python registered anywhere.
 
 Curves are passed as paired array<double> columns (xs, ys), the engine's
-native layout. ``register_all(spark)`` makes every function callable from
-SQL, e.g.::
+native layout. The Fréchet UDFs are ``arrow_udf``s: their list columns
+arrive as pyarrow ListArrays whose buffers go straight into the engine's
+curve-table kernels (``kernels.batch.pair_tables`` and the ``*_buffers``
+kernels), the same entry every range/kNN kernel uses.
+``register_all(spark)`` makes every function callable from SQL, e.g.::
 
     SELECT frechet_decide(a.xs, a.ys, b.xs, b.ys, 15.0) FROM ...
 """
@@ -15,66 +18,55 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import ArrayType, BooleanType, DoubleType, LongType
 
 
-def _pairs(xs1, ys1, xs2, ys2):
-    ps = [np.column_stack([np.asarray(a), np.asarray(b)]) for a, b in zip(xs1, ys1)]
-    ts = [np.column_stack([np.asarray(a), np.asarray(b)]) for a, b in zip(xs2, ys2)]
-    return ps, ts
-
-
-@pandas_udf(BooleanType())
+@arrow_udf(BooleanType())
 def frechet_decide(
-    xs1: pd.Series, ys1: pd.Series, xs2: pd.Series, ys2: pd.Series, eps: pd.Series
-) -> pd.Series:
+    xs1: pa.Array, ys1: pa.Array, xs2: pa.Array, ys2: pa.Array, eps: pa.Array
+) -> pa.Array:
     """True iff continuous Fréchet distance <= eps (exact decision, K5).
     Reference: FrechetDecider.decide, python-package/frechet.cpp:86-111."""
-    from frechetrange_spark.kernels.batch import decide_frechet_pairs
+    from frechetrange_spark.kernels.batch import decide_pairs_arrow
 
-    ps, ts = _pairs(xs1, ys1, xs2, ys2)
-    return pd.Series(decide_frechet_pairs(ps, ts, eps.to_numpy(dtype=np.float64)))
+    e = eps.cast(pa.float64()).to_numpy(zero_copy_only=False)
+    return pa.array(decide_pairs_arrow(xs1, ys1, xs2, ys2, e, etd_accept=False))
 
 
-@pandas_udf(DoubleType())
-def frechet_dist(
-    xs1: pd.Series, ys1: pd.Series, xs2: pd.Series, ys2: pd.Series
-) -> pd.Series:
+@arrow_udf(DoubleType())
+def frechet_dist(xs1: pa.Array, ys1: pa.Array, xs2: pa.Array, ys2: pa.Array) -> pa.Array:
     """Fréchet distance value via batched bisection over the decider (K12,
     samples/plain.cpp:47-60)."""
-    from frechetrange_spark.kernels.batch import frechet_distance_pairs
+    from frechetrange_spark.kernels.batch import distance_pairs_buffers, pair_tables
 
-    ps, ts = _pairs(xs1, ys1, xs2, ys2)
-    return pd.Series(frechet_distance_pairs(ps, ts))
+    return pa.array(distance_pairs_buffers(*pair_tables(xs1, ys1, xs2, ys2)))
 
 
-@pandas_udf(DoubleType())
-def frechet_etd(
-    xs1: pd.Series, ys1: pd.Series, xs2: pd.Series, ys2: pd.Series
-) -> pd.Series:
+@arrow_udf(DoubleType())
+def frechet_etd(xs1: pa.Array, ys1: pa.Array, xs2: pa.Array, ys2: pa.Array) -> pa.Array:
     """Equal-time distance — upper bound on the Fréchet distance (F8,
     detail/bddm/spatial_hash.hpp:253-362)."""
-    from frechetrange_spark.kernels.batch import etd_batch, pad_curves
+    from frechetrange_spark.kernels.batch import etd_pairs_buffers, pair_tables
 
-    ps, ts = _pairs(xs1, ys1, xs2, ys2)
-    if not ps:
-        return pd.Series(np.empty(0, dtype=np.float64))
-    p, _ = pad_curves(ps)
-    t, _ = pad_curves(ts)
-    return pd.Series(etd_batch(p, t))
+    return pa.array(etd_pairs_buffers(*pair_tables(xs1, ys1, xs2, ys2)))
 
 
-@pandas_udf(DoubleType())
+@arrow_udf(DoubleType())
 def frechet_greedy_ub(
-    xs1: pd.Series, ys1: pd.Series, xs2: pd.Series, ys2: pd.Series
-) -> pd.Series:
+    xs1: pa.Array, ys1: pa.Array, xs2: pa.Array, ys2: pa.Array
+) -> pa.Array:
     """Greedy monotone-alignment upper bound (F4,
     detail/bb/spatial_index.hpp:251-278)."""
+    from frechetrange_spark.kernels.batch import _curve, pair_tables
     from frechetrange_spark.kernels.core import greedy_upper_bound
 
-    ps, ts = _pairs(xs1, ys1, xs2, ys2)
-    return pd.Series([greedy_upper_bound(p, t) for p, t in zip(ps, ts)])
+    bq, bt, sel, _ = pair_tables(xs1, ys1, xs2, ys2)
+    return pa.array(
+        [greedy_upper_bound(_curve(bq, i), _curve(bt, i)) for i in sel],
+        type=pa.float64(),
+    )
 
 
 @pandas_udf(ArrayType(LongType()))

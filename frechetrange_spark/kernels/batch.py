@@ -15,6 +15,12 @@ take the reference's a==0 branch of the line–circle interval solve
 kernel (and hence the reference semantics) is property-tested in
 tests/test_kernels.py.
 
+One entry family: every engine kernel and every SQL UDF hands its pairs
+to the ``*_buffers`` kernels as two (flat_x, off_x, flat_y, off_y) curve
+tables plus per-pair selectors (``pair_tables`` builds them from four
+Arrow list columns). ``pad_curves``/``frechet_distance_batch`` stay as a
+ragged-list convenience for out-of-engine checks.
+
 Padding still costs: every padded cell is swept. The ``*_buffers``
 kernels gather their padded stacks per row group (``pair_chunks``). The
 O(N+M) stages (ETD, greedy walks, distance bisection) take ``CHUNK``-pair
@@ -42,17 +48,6 @@ CHUNK = 4096
 DIST_CHUNK = 2048
 # target pairs per length tile of the O(N*M) DP stages (see ``tiles``)
 TILE = 512
-
-
-def size_buckets(
-    ps: list[np.ndarray], qs: list[np.ndarray], chunk: int = 2048
-) -> list[np.ndarray]:
-    """Index groups sorted by (len(p)+len(q)) and chunked, so each padded
-    sub-batch wastes little on length variance."""
-    order = np.argsort(
-        np.fromiter((p.shape[0] + q.shape[0] for p, q in zip(ps, qs)), dtype=np.int64)
-    )
-    return [order[i : i + chunk] for i in range(0, len(order), chunk)]
 
 
 def pad_curves(curves: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
@@ -399,6 +394,16 @@ def _list_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
     return arr.values.to_numpy(), arr.offsets.to_numpy().astype(np.int64)
 
 
+def pair_tables(qxs, qys, xs, ys) -> tuple:
+    """(bq, bt, qsel, tsel) of B pair rows given as four pyarrow list
+    columns: each side's curve table (one curve per row, zero-copy) and
+    the identity selectors ``arange(B)`` — the ``*_buffers`` arguments."""
+    bq = (*_list_buffers(qxs), *_list_buffers(qys))
+    bt = (*_list_buffers(xs), *_list_buffers(ys))
+    sel = np.arange(len(bq[1]) - 1, dtype=np.int64)
+    return bq, bt, sel, sel
+
+
 def _padded_gather(
     flat: np.ndarray, off: np.ndarray, rows: np.ndarray, width: int
 ) -> np.ndarray:
@@ -526,9 +531,9 @@ def decide_pairs_arrow(
     dfd_accept: bool = False,
     return_stages: bool = False,
 ) -> np.ndarray:
-    """Batched decision straight from pyarrow list columns (B rows), with
-    size-bucketed padding. Returns bool (B,), or (bool, stage int8) with
-    ``return_stages``.
+    """Batched decision straight from pyarrow list columns (B rows):
+    ``decide_pairs_buffers`` over their ``pair_tables``. Returns bool
+    (B,), or (bool, stage int8) with ``return_stages``.
 
     Filter pack in the reference bb order (F4 accept -> F5 reject ->
     decider, detail/bb/spatial_index.hpp:198-209), plus the bddm ETD
@@ -550,17 +555,8 @@ def decide_pairs_arrow(
       than the free-space sweep, catches nearly all remaining true
       matches so the exact decider mostly sees rejects (which its
       early-exit compaction handles cheaply)."""
-    fqx, oqx = _list_buffers(qxs)
-    fqy, oqy = _list_buffers(qys)
-    ftx, otx = _list_buffers(xs)
-    fty, oty = _list_buffers(ys)
-    B = len(oqx) - 1
-    sel = np.arange(B, dtype=np.int64)
     return decide_pairs_buffers(
-        (fqx, oqx, fqy, oqy),
-        (ftx, otx, fty, oty),
-        sel,
-        sel,
+        *pair_tables(qxs, qys, xs, ys),
         eps,
         etd_accept=etd_accept,
         greedy_accept=greedy_accept,
@@ -705,8 +701,10 @@ def decide_pairs_buffers(
         out[rows[acc]] = True
         stages[rows[acc]] = code
 
+    # no walk stage on (the exact-decider-only calls): skip the gathers
+    walks = etd_accept or greedy_accept or rev_greedy_accept
     rest = []
-    for rows, p, t in pair_chunks(bq, bt, qsel, tsel, chunks(order)):
+    for rows, p, t in pair_chunks(bq, bt, qsel, tsel, chunks(order) if walks else []):
         e = eps_arr[rows]
         todo = np.arange(rows.size)
         if etd_accept:
@@ -734,7 +732,7 @@ def decide_pairs_buffers(
             mark(rows[todo], acc, STAGE_GREEDY_REV_ACCEPT)
             todo = todo[~acc]
         rest.append(rows[todo])
-    todo = np.concatenate(rest)
+    todo = np.concatenate(rest) if rest else order
 
     def tiled(stage) -> np.ndarray:
         """``stage(p, t, rows)`` over the length tiles of ``todo``; its
@@ -801,41 +799,6 @@ def distance_pairs_buffers(
     order = _size_order(bq, bt, qsel, tsel)[2]
     for rows, p, t in pair_chunks(bq, bt, qsel, tsel, chunks(order, DIST_CHUNK)):
         out[rows] = _frechet_distance_padded(p, t, rel_tol, abs_tol)
-    return out
-
-
-def decide_frechet_pairs(
-    ps: list[np.ndarray], qs: list[np.ndarray], eps: np.ndarray | float
-) -> np.ndarray:
-    """Convenience driver over ragged pair lists: size-bucket, pad, decide.
-    Returns bool (B,)."""
-    B = len(ps)
-    out = np.zeros(B, dtype=bool)
-    if B == 0:
-        return out
-    eps_arr = np.broadcast_to(np.asarray(eps, dtype=np.float64), (B,))
-    for idx in size_buckets(ps, qs):
-        p, _ = pad_curves([ps[i] for i in idx])
-        q, _ = pad_curves([qs[i] for i in idx])
-        out[idx] = decide_frechet_batch(p, q, eps_arr[idx])
-    return out
-
-
-def frechet_distance_pairs(
-    ps: list[np.ndarray],
-    qs: list[np.ndarray],
-    rel_tol: float = 1e-9,
-    abs_tol: float = 1e-12,
-) -> np.ndarray:
-    """Size-bucketed batched distance values over ragged pair lists."""
-    B = len(ps)
-    out = np.empty(B, dtype=np.float64)
-    if B == 0:
-        return out
-    for idx in size_buckets(ps, qs):
-        out[idx] = frechet_distance_batch(
-            [ps[i] for i in idx], [qs[i] for i in idx], rel_tol, abs_tol
-        )
     return out
 
 

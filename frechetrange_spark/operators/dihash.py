@@ -65,17 +65,10 @@ def dihash_range_query(
     measure-zero boundary inputs this engine can return fewer rows than
     dv/bb. Real corpora never hit it (N-version-tested on the shipped
     San Francisco data)."""
-    from frechetrange_spark.operators.range_query import _refine_map
+    from frechetrange_spark.operators.range_query import _pairs_with_arrays, _refine_map
 
-    cand = endpoint_candidates(curves, queries, eps, mesh)
-    q = queries.select(
-        F.col("traj_id").alias("query_id"),
-        F.col("xs").alias("q_xs"),
-        F.col("ys").alias("q_ys"),
-    )
-    t = curves.select("traj_id", "xs", "ys")
-    pairs = cand.join(q, "query_id").join(t, "traj_id").select(
-        "query_id", "traj_id", "q_xs", "q_ys", "xs", "ys"
+    pairs = _pairs_with_arrays(
+        curves, queries, endpoint_candidates(curves, queries, eps, mesh)
     )
     n_slots = 2 * curves.sparkSession.sparkContext.defaultParallelism
     return pairs.repartition(n_slots).mapInArrow(

@@ -42,6 +42,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from frechetrange_spark.operators.range_query import (
+    _INLINE,
+    _curve_source,
+    _pairs_with_arrays,
+    _sources,
+    _xy,
+)
+
 
 def frechet_distances(pairs: DataFrame) -> DataFrame:
     """(query_id, traj_id, distance) for pair rows carrying q_xs/q_ys/xs/ys
@@ -51,8 +59,6 @@ def frechet_distances(pairs: DataFrame) -> DataFrame:
     Round-robin repartition before the kernel: pair rows are cheap in bytes
     but expensive in CPU, so byte-based AQE coalescing must not funnel them
     into few tasks."""
-    from frechetrange_spark.operators.range_query import _INLINE
-
     n_slots = 2 * pairs.sparkSession.sparkContext.defaultParallelism
     return (
         pairs.withColumn("radius", F.lit(float("inf")))
@@ -350,7 +356,6 @@ def _etd_map(q_spec, t_spec):
         import pyarrow as pa
 
         from frechetrange_spark.kernels.batch import etd_pairs_buffers
-        from frechetrange_spark.operators.range_query import _curve_source, _xy
 
         for rb in batches:
             qid = rb.column("query_id").to_numpy(zero_copy_only=False)
@@ -424,8 +429,6 @@ def etd_prune(curves: DataFrame, queries: DataFrame, candidates: DataFrame, k: i
     fused decide+distance stage (step 2c + 3) can run without recomputing
     ETDs. Arrays ride the pair rows (inline curve sources): the plan
     ``knn_frechet`` runs past the broadcast threshold."""
-    from frechetrange_spark.operators.range_query import _INLINE
-
     return _etd_survivors(
         _pairs_with_arrays(curves, queries, candidates), k, _INLINE
     )
@@ -470,7 +473,6 @@ def _decide_distance_map(q_spec, t_spec, rel_tol: float = 1e-6):
             decide_pairs_buffers,
             distance_pairs_buffers,
         )
-        from frechetrange_spark.operators.range_query import _curve_source, _xy
 
         for rb in batches:
             qid = rb.column("query_id").to_numpy(zero_copy_only=False)
@@ -491,23 +493,6 @@ def _decide_distance_map(q_spec, t_spec, rel_tol: float = 1e-6):
             )
 
     return kernel
-
-
-def _pairs_with_arrays(
-    curves: DataFrame, queries: DataFrame, pair_ids: DataFrame
-) -> DataFrame:
-    """Attach both curves' arrays to the pair list; extra ``pair_ids``
-    columns (e.g. a per-pair radius) ride through."""
-    extra = [c for c in pair_ids.columns if c not in ("query_id", "traj_id")]
-    q = queries.select(
-        F.col("traj_id").alias("query_id"),
-        F.col("xs").alias("q_xs"),
-        F.col("ys").alias("q_ys"),
-    )
-    t = curves.select("traj_id", "xs", "ys")
-    return pair_ids.join(F.broadcast(q), "query_id").join(t, "traj_id").select(
-        "query_id", "traj_id", "q_xs", "q_ys", "xs", "ys", *extra
-    )
 
 
 def knn_frechet(
@@ -533,20 +518,14 @@ def knn_frechet(
     falls back to the all-pairs scalar bound pass.
 
     Refine: the ETD kernel, the ETD radius prune, then ONE fused
-    decide+distance kernel pass. When both curve tables' array payloads
-    fit the broadcast threshold, both kernels gather arrays from
-    broadcast curve packs under ids-only pair streams (the range_query
-    broadcast-attach pattern); past it the same plan runs on inline
-    curve sources, with ``_pairs_with_arrays`` attaching the arrays to
-    each kernel's pair stream. Identical results either way (per-pair
-    kernel outputs are batch-composition independent)."""
-    from frechetrange_spark.operators.range_query import (
-        _INLINE,
-        _broadcast_threshold,
-        _pack_broadcast,
-        _payload_bytes_gated,
-    )
-
+    decide+distance kernel pass. Both kernels read curves through the
+    curve sources range_query._sources picks for ``attach="auto"``:
+    broadcast curve packs under ids-only pair streams when both curve
+    tables' array payloads fit the broadcast threshold; past it the same
+    plan runs on inline curve sources, with ``_pairs_with_arrays``
+    attaching the arrays to each kernel's pair stream. Identical results
+    either way (per-pair kernel outputs are batch-composition
+    independent)."""
     # curves feed three plan branches (scalar features, ETD arrays, final
     # arrays); eager localCheckpoint materializes the assembly lineage once
     # and its blocks are GC-cleaned with the DataFrame — nothing left for
@@ -557,24 +536,15 @@ def knn_frechet(
         candidates = knn_candidates_grid(curves, queries, k, float(mesh))
     else:
         candidates = knn_candidates(curves, queries, k)
-    spark = curves.sparkSession
-    thr = _broadcast_threshold(spark)
-    packed = (
-        thr > 0
-        and _payload_bytes_gated(curves, thr) <= thr
-        and _payload_bytes_gated(queries, thr) <= thr
-    )
-    sources = (
-        (("bcast", _pack_broadcast(queries, 0)), ("bcast", _pack_broadcast(curves, 0)))
-        if packed
-        else _INLINE
-    )
+    sources = _sources(curves, queries, {}, 0, False, "auto")
 
     def attach(pair_ids):
-        return pair_ids if packed else _pairs_with_arrays(curves, queries, pair_ids)
+        if sources == _INLINE:
+            return _pairs_with_arrays(curves, queries, pair_ids)
+        return pair_ids
 
     survivors = _etd_survivors(attach(candidates), k, sources)
-    n_slots = 2 * spark.sparkContext.defaultParallelism
+    n_slots = 2 * curves.sparkSession.sparkContext.defaultParallelism
     dists = attach(survivors).repartition(n_slots).mapInArrow(
         _decide_distance_map(*sources), schema=_DIST_SCHEMA
     )

@@ -491,6 +491,24 @@ def _lookup(ids: np.ndarray, vals: np.ndarray) -> np.ndarray:
 _INLINE = (("inline", "q_"), ("inline", ""))
 
 
+def _pairs_with_arrays(
+    curves: DataFrame, queries: DataFrame, pair_ids: DataFrame
+) -> DataFrame:
+    """Attach both curves' arrays to the pair list — the pair rows an
+    ``_INLINE`` source reads; extra ``pair_ids`` columns (e.g. a per-pair
+    radius) ride through."""
+    extra = [c for c in pair_ids.columns if c not in ("query_id", "traj_id")]
+    q = queries.select(
+        F.col("traj_id").alias("query_id"),
+        F.col("xs").alias("q_xs"),
+        F.col("ys").alias("q_ys"),
+    )
+    t = curves.select("traj_id", "xs", "ys")
+    return pair_ids.join(F.broadcast(q), "query_id").join(t, "traj_id").select(
+        "query_id", "traj_id", "q_xs", "q_ys", "xs", "ys", *extra
+    )
+
+
 def _inline_cols(prefix: str, simp_levels: int) -> list[str]:
     """The pair-row columns an ``("inline", prefix)`` source reads."""
     cols, scal = _pack_cols(simp_levels)
@@ -564,14 +582,13 @@ def _simp_funnel_pairs(
     inequality), MAYBE falls through. Accepts are written into ``result``
     (and ``stage``); returns the undecided pair indices.
 
-    Pairs are size-bucketed into ``kernels.batch.CHUNK``-pair padded
-    slices (kernels.batch.pair_chunks), so a wide-curve batch cannot
-    balloon the matrices to batch x max-width."""
+    Each level is one ``etd_pairs_buffers`` call over the level's
+    undecided pairs plus two ``decide_pairs_buffers`` calls (exact
+    decider only, per-pair eps_l and eps_u), so the level's curves are
+    padded by the kernels' own size-sorted chunks and length tiles."""
     from frechetrange_spark.kernels.batch import (
-        chunks,
-        decide_frechet_batch,
-        etd_batch,
-        pair_chunks,
+        decide_pairs_buffers,
+        etd_pairs_buffers,
     )
 
     und = np.arange(qsel.size, dtype=np.int64)
@@ -579,33 +596,24 @@ def _simp_funnel_pairs(
         if und.size == 0:
             break
         bq, bt = _xy(qpack, f"s{i}_"), _xy(tpack, f"s{i}_")
-        oq, ot = bq[1], bt[1]
-        q_eps_all = qpack["scal"][f"s{i}_eps"]
-        t_eps_all = tpack["scal"][f"s{i}_eps"]
-        lens = (oq[qsel[und] + 1] - oq[qsel[und]]) + (ot[tsel[und] + 1] - ot[tsel[und]])
-        order = und[np.argsort(lens, kind="stable")]
-        remaining = []
-        for rows, sq, st in pair_chunks(bq, bt, qsel, tsel, chunks(order)):
-            qr, tr = qsel[rows], tsel[rows]
-            eps_l = eps - q_eps_all[qr] - t_eps_all[tr]
-            eps_u = eps + q_eps_all[qr] + t_eps_all[tr]
-            d = etd_batch(sq, st)
-            yes = d < eps_l  # strict, bddm:792
-            todo = np.nonzero(~yes & (eps_l > 0.0))[0]
-            if todo.size:
-                yes[todo] = decide_frechet_batch(sq[todo], st[todo], eps_l[todo])
-            no = np.zeros(rows.size, dtype=bool)
-            todo = np.nonzero(~yes & (eps_u > 0.0))[0]
-            if todo.size:
-                no[todo] = ~decide_frechet_batch(sq[todo], st[todo], eps_u[todo])
-            result[rows[yes]] = True
-            if stage is not None:
-                stage[rows[yes]] = f"simp{i}_yes"
-                stage[rows[~yes & no]] = f"simp{i}_no"
-            remaining.append(rows[~yes & ~no])
-        und = (
-            np.concatenate(remaining) if remaining else np.empty(0, dtype=np.int64)
+        qs, ts = qsel[und], tsel[und]
+        simp_eps = qpack["scal"][f"s{i}_eps"][qs] + tpack["scal"][f"s{i}_eps"][ts]
+        eps_l, eps_u = eps - simp_eps, eps + simp_eps
+        yes = etd_pairs_buffers(bq, bt, qs, ts) < eps_l  # strict, bddm:792
+        todo = np.nonzero(~yes & (eps_l > 0.0))[0]
+        yes[todo] = decide_pairs_buffers(
+            bq, bt, qs[todo], ts[todo], eps_l[todo], etd_accept=False
         )
+        no = np.zeros(und.size, dtype=bool)
+        todo = np.nonzero(~yes & (eps_u > 0.0))[0]
+        no[todo] = ~decide_pairs_buffers(
+            bq, bt, qs[todo], ts[todo], eps_u[todo], etd_accept=False
+        )
+        result[und[yes]] = True
+        if stage is not None:
+            stage[und[yes]] = f"simp{i}_yes"
+            stage[und[~yes & no]] = f"simp{i}_no"
+        und = und[~yes & ~no]
     return und
 
 
@@ -829,6 +837,81 @@ def _broadcast_threshold(spark) -> int:
         return 32 * 1024 * 1024
 
 
+def _sources(
+    index_df: DataFrame,
+    queries: DataFrame,
+    meta: dict,
+    simp_levels: int,
+    symmetric: bool,
+    attach: str,
+) -> tuple:
+    """The (query side, index side) curve-source specs (see _curve_source)
+    of a refine plan — the one attach decision of range_query_grid and
+    knn_frechet; ``attach`` is documented on range_query_grid. kNN passes
+    ``meta={}``: no build-time payload estimate, no pack store."""
+    spark = index_df.sparkSession
+    if attach == "auto":
+        thr = _broadcast_threshold(spark)
+        attach = "shuffle"
+        if thr > 0:
+            # the index side's payload estimate is computed ONCE at build
+            # time and carried in meta (like salt) — the auto gate must
+            # not re-scan the array columns of a 100-TB table per query
+            d_bytes = meta.get("payload_bytes")
+            if d_bytes is None:
+                d_bytes = _payload_bytes_gated(index_df, thr)
+            if d_bytes <= thr and _payload_bytes_gated(queries, thr) <= thr:
+                attach = "broadcast"
+            elif meta.get("pack_path"):
+                attach = "pack"
+    if attach == "shuffle":
+        return _INLINE
+    if attach == "broadcast":
+        # broadcast packs are LRU-cached per table (_pack_broadcast):
+        # repeated queries reuse one broadcast, eviction unpersists
+        # executor copies
+        return (
+            ("bcast", _pack_broadcast(queries, simp_levels)),
+            ("bcast", _pack_broadcast(index_df, simp_levels)),
+        )
+    if attach == "pack":
+        pack_path = meta.get("pack_path")
+        if not pack_path:
+            raise ValueError(
+                "attach='pack' needs meta['pack_path'] — write the "
+                "index with write_index(..., pack=True) or call "
+                "pack_store.write_pack and set meta['pack_path']"
+            )
+        # query side: broadcast-pack when it fits (the common 100-TB
+        # shape: huge dataset, bounded query set); otherwise gather
+        # from a disk pack — the INDEX's own store only for the
+        # self-join shape (symmetric=True: queries ARE the indexed
+        # curves) or an explicit meta['query_pack_path']. A foreign
+        # over-threshold query table must NOT silently reuse the
+        # index store: overlapping traj_id spaces would gather the
+        # WRONG curves for the query side and return silently wrong
+        # results (only ids absent from the store trip the loud
+        # _lookup KeyError) — raise instead.
+        thr = _broadcast_threshold(spark)
+        if thr > 0 and _payload_bytes_gated(queries, thr) <= thr:
+            q_spec = ("bcast", _pack_broadcast(queries, simp_levels))
+        elif symmetric:
+            q_spec = ("disk", pack_path)
+        elif meta.get("query_pack_path"):
+            q_spec = ("disk", meta["query_pack_path"])
+        else:
+            raise ValueError(
+                "attach='pack' with an over-broadcast-threshold query "
+                "table: reusing the index's pack store is only exact "
+                "for the self-join shape (symmetric=True). Write a "
+                "pack for the query table (pack_store.write_pack) and "
+                "set meta['query_pack_path'], or raise the broadcast "
+                "threshold."
+            )
+        return q_spec, ("disk", pack_path)
+    raise ValueError(f"unknown attach {attach!r}")
+
+
 def range_query_grid(
     index_df: DataFrame,
     queries: DataFrame,
@@ -916,20 +999,6 @@ def range_query_grid(
         dfd_accept = not funnel_stats
 
     spark = index_df.sparkSession
-    if attach == "auto":
-        thr = _broadcast_threshold(spark)
-        attach = "shuffle"
-        if thr > 0:
-            # the index side's payload estimate is computed ONCE at build
-            # time and carried in meta (like salt) — the auto gate must
-            # not re-scan the array columns of a 100-TB table per query
-            d_bytes = meta.get("payload_bytes")
-            if d_bytes is None:
-                d_bytes = _payload_bytes_gated(index_df, thr)
-            if d_bytes <= thr and _payload_bytes_gated(queries, thr) <= thr:
-                attach = "broadcast"
-            elif meta.get("pack_path"):
-                attach = "pack"
     # funnel columns (Agarwal simplifications) are refined when the index
     # was enriched on BOTH sides
     simp_levels = 0
@@ -939,53 +1008,7 @@ def range_query_grid(
     ):
         simp_levels += 1
 
-    if attach == "shuffle":
-        sources = _INLINE
-    elif attach == "broadcast":
-        # broadcast packs are LRU-cached per table (_pack_broadcast):
-        # repeated queries reuse one broadcast, eviction unpersists
-        # executor copies
-        sources = (
-            ("bcast", _pack_broadcast(queries, simp_levels)),
-            ("bcast", _pack_broadcast(index_df, simp_levels)),
-        )
-    elif attach == "pack":
-        pack_path = meta.get("pack_path")
-        if not pack_path:
-            raise ValueError(
-                "attach='pack' needs meta['pack_path'] — write the "
-                "index with write_index(..., pack=True) or call "
-                "pack_store.write_pack and set meta['pack_path']"
-            )
-        # query side: broadcast-pack when it fits (the common 100-TB
-        # shape: huge dataset, bounded query set); otherwise gather
-        # from a disk pack — the INDEX's own store only for the
-        # self-join shape (symmetric=True: queries ARE the indexed
-        # curves) or an explicit meta['query_pack_path']. A foreign
-        # over-threshold query table must NOT silently reuse the
-        # index store: overlapping traj_id spaces would gather the
-        # WRONG curves for the query side and return silently wrong
-        # results (only ids absent from the store trip the loud
-        # _lookup KeyError) — raise instead.
-        thr = _broadcast_threshold(spark)
-        if thr > 0 and _payload_bytes_gated(queries, thr) <= thr:
-            q_spec = ("bcast", _pack_broadcast(queries, simp_levels))
-        elif symmetric:
-            q_spec = ("disk", pack_path)
-        elif meta.get("query_pack_path"):
-            q_spec = ("disk", meta["query_pack_path"])
-        else:
-            raise ValueError(
-                "attach='pack' with an over-broadcast-threshold query "
-                "table: reusing the index's pack store is only exact "
-                "for the self-join shape (symmetric=True). Write a "
-                "pack for the query table (pack_store.write_pack) and "
-                "set meta['query_pack_path'], or raise the broadcast "
-                "threshold."
-            )
-        sources = (q_spec, ("disk", pack_path))
-    else:
-        raise ValueError(f"unknown attach {attach!r}")
+    sources = _sources(index_df, queries, meta, simp_levels, symmetric, attach)
     q_inline, t_inline = (kind == "inline" for kind, _ in sources)
 
     def candidate_side(df: DataFrame, inline: bool) -> DataFrame:
@@ -1074,6 +1097,7 @@ def _cfdq_refine_map(eps: float, simp_levels: int = 0):
     def fn(batches):
         import pyarrow as pa
 
+        from frechetrange_spark.kernels.batch import _curve
         from frechetrange_spark.kernels.cfdq import decide_frechet_cfdq
 
         for rb in batches:
@@ -1084,21 +1108,14 @@ def _cfdq_refine_map(eps: float, simp_levels: int = 0):
             tpack, tsel = _curve_source(_INLINE[1], rb, tid, simp_levels)
             und = _simp_funnel_pairs(qpack, tpack, qsel, tsel, eps, simp_levels, res)
             if und.size:
-                fqx, oqx, fqy, oqy = _xy(qpack)
-                ftx, otx, fty, oty = _xy(tpack)
+                bq, bt = _xy(qpack), _xy(tpack)
                 (fps, ops), (fpd, opd), (fpw, opw) = (
                     tpack["cols"][c] for c in PORTAL_COLS
                 )
                 fps = fps.astype(np.int64, copy=False)
                 fpd = fpd.astype(np.int64, copy=False)
                 for r in und:
-                    a, b = qsel[r], tsel[r]
-                    q = np.column_stack(
-                        [fqx[oqx[a] : oqx[a + 1]], fqy[oqy[a] : oqy[a + 1]]]
-                    )
-                    t = np.column_stack(
-                        [ftx[otx[b] : otx[b + 1]], fty[oty[b] : oty[b + 1]]]
-                    )
+                    b = tsel[r]
                     # the stored columns are src-sorted with dst ascending
                     # inside each src group (compile_portals/O4), exactly
                     # the kernel's flat interface: slice the Arrow buffers
@@ -1110,7 +1127,11 @@ def _cfdq_refine_map(eps: float, simp_levels: int = 0):
                     )
                     # portals attach to the dataset curve -> CFDQ's p side
                     res[r] = decide_frechet_cfdq(
-                        t, q, eps, base_query_delta=eps, portals=portals
+                        _curve(bt, b),
+                        _curve(bq, qsel[r]),
+                        eps,
+                        base_query_delta=eps,
+                        portals=portals,
                     )
             idx = np.nonzero(res)[0]
             yield pa.RecordBatch.from_arrays(

@@ -63,15 +63,13 @@ def bb_range_query(
     queries: DataFrame,
     eps: float,
     mesh: float,
-    greedy_accept: bool = True,
-    neg_reject: bool = True,
 ) -> DataFrame:
     """Exact range query via the signature join (bb lifecycle, SURVEY
     §3.3 footnote): J2 candidates -> the bb filter pack (F4 greedy accept,
     F5 negative filter — the reference's decide_frechet order,
     detail/bb/spatial_index.hpp:198-209) -> batched exact decider. Result
     sets equal the dv-grid engine's (both exact; the filters are
-    result-set invariant and on by default here for engine parity)."""
+    result-set invariant and always on here for engine parity)."""
     cand = signature_candidates(curves, queries, eps, mesh).select(
         F.col("q_traj_id").alias("query_id"),
         "traj_id",
@@ -84,8 +82,8 @@ def bb_range_query(
     return cand.repartition(n_slots).mapInArrow(
         _refine_map(
             eps,
-            greedy_accept=greedy_accept,
-            neg_reject=neg_reject,
+            greedy_accept=True,
+            neg_reject=True,
             # r06 result-invariant UB accepts (see range_query_grid)
             rev_greedy_accept=True,
             dfd_accept=True,

@@ -5,6 +5,9 @@ counterpart, run the Spark query and the DuckDB oracle at the same
 scale factor and compare row count, column set, and a value hash over
 the column-name-sorted, row-sorted result (the driver's protocol).
 Queries without an oracle get a rows-only check (runs, >= 0 rows).
+Every query that runs also prints a ``hash <name> <rows> <value hash>``
+line, so two checkouts' result rows can be compared with
+``diff <(grep ^hash a.log) <(grep ^hash b.log)``.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 Default sf_dir is /root/testdata/sf0.01; no query names = all.
@@ -77,6 +80,7 @@ def main() -> int:
             n_fail += 1
             continue
         el = time.perf_counter() - t0
+        print(f"hash {name} {len(sdf)} {_canon(sdf)}")
         if name not in oracles:
             print(f"ok   {name}: rows-only {len(sdf)} rows ({el:.1f}s)")
             continue

@@ -208,12 +208,29 @@ def test_hypothesis_decide_consistent_with_value(pa, pb):
         assert not decide_frechet(a, b, d * 0.999 - 1e-9)
 
 
+def _curve_table(curves):
+    """(flat_x, off_x, flat_y, off_y) curve table of (n, 2) curves."""
+    flat_x = np.concatenate([c[:, 0] for c in curves])
+    flat_y = np.concatenate([c[:, 1] for c in curves])
+    off = np.concatenate(
+        [[0], np.cumsum([len(c) for c in curves])]
+    ).astype(np.int64)
+    return flat_x, off, flat_y, off
+
+
+def _tables(ps, qs):
+    """Ragged (n, 2) curve lists -> the ``*_buffers`` kernels' arguments:
+    one curve table per side and identity selectors."""
+    sel = np.arange(len(ps), dtype=np.int64)
+    return _curve_table(ps), _curve_table(qs), sel, sel
+
+
 class TestBatchKernels:
     """Pair-batched kernels must agree exactly with the scalar ones
     (the scalar ones carry the reference-parity semantics)."""
 
     def test_decide_batch_agrees_with_scalar(self):
-        from frechetrange_spark.kernels.batch import decide_frechet_pairs
+        from frechetrange_spark.kernels.batch import decide_pairs_buffers
 
         rng = np.random.default_rng(11)
         ps, qs, eps = [], [], []
@@ -227,38 +244,42 @@ class TestBatchKernels:
             qs.append(q)
             eps.append(rng.uniform(0.3, 12.0))
         eps = np.array(eps)
-        got = decide_frechet_pairs(ps, qs, eps)
+        got = decide_pairs_buffers(*_tables(ps, qs), eps, etd_accept=False)
         exp = np.array([decide_frechet(p, q, e) for p, q, e in zip(ps, qs, eps)])
         assert (got == exp).all()
 
     def test_decide_batch_near_critical_eps(self):
-        from frechetrange_spark.kernels.batch import decide_frechet_pairs
+        from frechetrange_spark.kernels.batch import decide_pairs_buffers
 
         rng = np.random.default_rng(12)
         ps = [np.cumsum(rng.normal(size=(rng.integers(2, 40), 2)), axis=0) for _ in range(80)]
         qs = [np.cumsum(rng.normal(size=(rng.integers(2, 40), 2)), axis=0) for _ in range(80)]
         d = np.array([frechet_distance(p, q) for p, q in zip(ps, qs)])
-        assert decide_frechet_pairs(ps, qs, d * 1.0001 + 1e-9).all()
-        assert not decide_frechet_pairs(ps, qs, np.maximum(d * 0.999 - 1e-9, 0.0)).any()
+        args = _tables(ps, qs)
+        assert decide_pairs_buffers(*args, d * 1.0001 + 1e-9, etd_accept=False).all()
+        assert not decide_pairs_buffers(
+            *args, np.maximum(d * 0.999 - 1e-9, 0.0), etd_accept=False
+        ).any()
 
     def test_distance_batch_agrees_with_scalar(self):
-        from frechetrange_spark.kernels.batch import frechet_distance_pairs
+        from frechetrange_spark.kernels.batch import distance_pairs_buffers
 
         rng = np.random.default_rng(13)
         ps = [np.cumsum(rng.normal(size=(rng.integers(2, 50), 2)), axis=0) for _ in range(60)]
         qs = [np.cumsum(rng.normal(size=(rng.integers(2, 50), 2)), axis=0) for _ in range(60)]
-        got = frechet_distance_pairs(ps, qs)
+        got = distance_pairs_buffers(*_tables(ps, qs))
         exp = np.array([frechet_distance(p, q) for p, q in zip(ps, qs)])
         np.testing.assert_allclose(got, exp, rtol=1e-7, atol=1e-9)
 
     def test_known_answer_through_batch(self):
-        from frechetrange_spark.kernels.batch import decide_frechet_pairs
+        from frechetrange_spark.kernels.batch import decide_pairs_buffers
 
         # python-package/test.py:11-19 — delta_F = 3
         t1 = np.array([[1.0, 0.0], [2.0, 0.0], [4.0, 0.0], [5.0, 0.0]])
         t2 = np.array([[1.0, 0.0], [3.0, 3.0], [5.0, 0.0]])
-        assert decide_frechet_pairs([t1], [t2], np.array([3.01]))[0]
-        assert not decide_frechet_pairs([t1], [t2], np.array([2.99]))[0]
+        args = _tables([t1], [t2])
+        assert decide_pairs_buffers(*args, np.array([3.01]), etd_accept=False)[0]
+        assert not decide_pairs_buffers(*args, np.array([2.99]), etd_accept=False)[0]
 
 
 def test_f6_monotone_matching_never_contradicts():
@@ -370,14 +391,6 @@ class TestDecidePairsBuffers:
     per-pair (qsel, tsel) indirection — the broadcast-attach refine's
     kernel entry. Must agree with the arrow per-pair wrapper bit-for-bit."""
 
-    def _curve_table(self, curves):
-        flat_x = np.concatenate([c[:, 0] for c in curves])
-        flat_y = np.concatenate([c[:, 1] for c in curves])
-        off = np.concatenate(
-            [[0], np.cumsum([len(c) for c in curves])]
-        ).astype(np.int64)
-        return flat_x, off, flat_y, off
-
     def test_agrees_with_arrow_wrapper(self):
         import pyarrow as pa
 
@@ -403,7 +416,7 @@ class TestDecidePairsBuffers:
                 cols(qi, 0), cols(qi, 1), cols(ti, 0), cols(ti, 1),
                 5.0, return_stages=True, **flags,
             )
-            fx, ox, fy, oy = self._curve_table(curves)
+            fx, ox, fy, oy = _curve_table(curves)
             b, sb = decide_pairs_buffers(
                 (fx, ox, fy, oy), (fx, ox, fy, oy), qi, ti,
                 5.0, return_stages=True, **flags,

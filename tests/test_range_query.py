@@ -57,6 +57,16 @@ def test_candidates_superset_and_filters_sound(spark, corpus):
     assert f3 <= truth  # F3 is a sufficient condition
 
 
+def test_dihash_matches_bruteforce(spark, corpus):
+    """The di-hash engine (J3 endpoint candidates -> exact decider) returns
+    exactly the brute-force result set on the synthetic corpus."""
+    from frechetrange_spark.operators.dihash import dihash_range_query
+
+    queries = corpus.filter(F.col("traj_id") % 50 == 0)
+    truth = _pairs(range_query_bruteforce(corpus, queries, 15.0))
+    assert _pairs(dihash_range_query(corpus, queries, 15.0, 15.0)) == truth
+
+
 def test_choose_corner_is_deterministic(spark, corpus):
     c1 = choose_corner(corpus, 15.0)
     c2 = choose_corner(corpus, 15.0)

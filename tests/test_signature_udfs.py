@@ -4,7 +4,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from frechetrange_spark.kernels.core import decide_frechet, frechet_distance, negfilter
+from frechetrange_spark.kernels.core import (
+    decide_frechet,
+    equal_time_distance,
+    frechet_distance,
+    greedy_upper_bound,
+    negfilter,
+)
 
 
 class TestNegfilter:
@@ -119,7 +125,12 @@ class TestUdfSurface:
         assert row["simp"][0] == 0 and row["simp"][-1] == 3
 
     def test_udf_distance_matches_kernel(self, spark):
-        from frechetrange_spark.functions import frechet_dist
+        from frechetrange_spark.functions import (
+            frechet_decide,
+            frechet_dist,
+            frechet_etd,
+            frechet_greedy_ub,
+        )
 
         rng = np.random.default_rng(33)
         rows = []
@@ -143,3 +154,34 @@ class TestUdfSurface:
         ]
         exp = [frechet_distance(p, q) for p, q in curves]
         np.testing.assert_allclose(got, exp, rtol=1e-7)
+
+        # a frame spanning several kernel chunks and length tiles: the
+        # decide, greedy and ETD UDFs against the scalar kernels
+        rows, curves = [], []
+        for _ in range(600):
+            p = np.cumsum(rng.normal(size=(rng.integers(1, 31), 2)), axis=0)
+            q = np.cumsum(rng.normal(size=(rng.integers(1, 31), 2)), axis=0)
+            e = float(rng.uniform(0.5, 10.0))
+            curves.append((p, q, e))
+            rows.append(
+                (p[:, 0].tolist(), p[:, 1].tolist(), q[:, 0].tolist(), q[:, 1].tolist(), e)
+            )
+        df = spark.createDataFrame(
+            rows,
+            "xs1 array<double>, ys1 array<double>, xs2 array<double>, "
+            "ys2 array<double>, eps double",
+        ).coalesce(1)
+        args = ("xs1", "ys1", "xs2", "ys2")
+        got = df.select(
+            F.monotonically_increasing_id().alias("i"),
+            frechet_decide(*args, "eps").alias("yes"),
+            frechet_greedy_ub(*args).alias("gub"),
+            frechet_etd(*args).alias("etd"),
+        ).orderBy("i").collect()
+        assert [r["yes"] for r in got] == [decide_frechet(p, q, e) for p, q, e in curves]
+        assert [r["gub"] for r in got] == [greedy_upper_bound(p, q) for p, q, _ in curves]
+        np.testing.assert_allclose(
+            [r["etd"] for r in got],
+            [equal_time_distance(p, q) for p, q, _ in curves],
+            rtol=1e-12,
+        )
