@@ -1,11 +1,12 @@
 """Pair-batched Fréchet kernels: decide and distance over B pairs at once.
 
 The scalar decider (`core.decide_frechet`) mirrors the reference's dv
-column sweep (detail/dv/frechet_distance.hpp:221-373) and costs ~n*m
-Python-level loop steps per pair. Here the SAME sweep runs once per batch
-with every step vectorized over the batch axis, so the Python-loop cost is
-amortized over all pairs in an Arrow batch (~50-100x per-pair speedup on
-55-point curves).
+column sweep (detail/dv/frechet_distance.hpp:221-373). The batched one
+(`decide_frechet_batch`) runs the same cell recurrence as an
+anti-diagonal wavefront: each of the N+M-3 diagonals is one elementwise
+pass over (pairs, diagonal length), so the Python-loop cost is paid once
+per diagonal for all pairs of an Arrow batch, and a pair leaves the sweep
+as soon as one diagonal is unreachable.
 
 Padding trick: a polyline is unchanged by repeating its last vertex, so
 curves are padded to the batch max length with copies of their final
@@ -64,107 +65,95 @@ def pad_curves(curves: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
     return out, lens
 
 
-def _solve_quadratic_interval_2d(
-    a: np.ndarray, b: np.ndarray, c: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Elementwise a*t^2 + b*t + c <= 0 clipped to [0,1] over (B, K) arrays;
-    empty -> (+inf, -inf). Same semantics as core._solve_quadratic_interval,
-    branch-free (no boolean fancy indexing — every path is a flat where)."""
-    # nd/den on the ORIGINAL (possibly (B,1)) shape: the segment-vs-points
-    # caller passes a constant `a` per row, so the comparison and the
-    # division run on B elements instead of B*M — numpy broadcasting in
-    # the arithmetic below yields bit-identical element values.
+def _seg_terms(x: np.ndarray, y: np.ndarray) -> tuple:
+    """Per-segment terms of the line–circle interval solve for the (K, B)
+    vertex planes x, y, one row per segment: (dx, dy, 4*a, a == 0, 0.5/a)
+    with d = x[s] - x[s+1] and a = |d|^2. 0.5/a is NaN where a == 0, so a
+    degenerate segment's roots are NaN and fail every compare; it takes
+    the a == 0 branch of ``_free_interval`` instead."""
+    dx = x[:-1] - x[1:]
+    dy = y[:-1] - y[1:]
+    a = dx * dx + dy * dy
     nd = a > 0.0
-    den = 0.5 / np.where(nd, a, 1.0)
-    nd = np.broadcast_to(nd, c.shape)
-    disc = b * b - 4.0 * a * c
-    sq = np.sqrt(np.maximum(disc, 0.0))
-    t1 = (-b - sq) * den
-    t2 = (-b + sq) * den
-    okr = nd & (disc >= 0.0) & (t1 <= 1.0) & (t2 >= 0.0)
-    degen_free = ~nd & (c <= 0.0)
-    lo = np.where(okr, np.minimum(np.maximum(t1, 0.0), 1.0), np.where(degen_free, 0.0, _INF))
-    hi = np.where(okr, np.minimum(np.maximum(t2, 0.0), 1.0), np.where(degen_free, 1.0, -_INF))
-    return lo, hi
+    den = np.where(nd, 0.5 / np.where(nd, a, 1.0), np.nan)
+    return dx, dy, 4.0 * a, ~nd, den
 
 
-def _free_point_vs_segments(
-    point: np.ndarray, q: np.ndarray, eps2: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """point (B,2) vs segments q[:, j]->q[:, j+1]: (B, M-1) intervals."""
-    s0 = q[:, :-1, :]
-    d = q[:, 1:, :] - s0
-    f = s0 - point[:, None, :]
-    a = d[..., 0] * d[..., 0] + d[..., 1] * d[..., 1]
-    b = 2.0 * (f[..., 0] * d[..., 0] + f[..., 1] * d[..., 1])
-    c = f[..., 0] * f[..., 0] + f[..., 1] * f[..., 1] - eps2[:, None]
-    return _solve_quadratic_interval_2d(a, b, c)
+def _free_interval(fx, fy, c, free, dx, dy, a4, deg, den) -> tuple:
+    """Elementwise free interval of the t in [0, 1] with
+    a*t^2 + b*t + c <= 0, b = 2 f.d, for the segment terms of
+    ``_seg_terms``, the offsets f and c = |f|^2 - eps2, and ``free`` =
+    c <= 0. Returns (lo, hi, ok): the interval is [lo, hi] where ok, and
+    empty elsewhere (lo, hi are then unspecified). Same semantics and
+    float operations as core._solve_quadratic_interval, except that 0.5/a
+    multiplies where core divides by 2a; a negative discriminant or a
+    degenerate segment gives NaN roots (callers silence the warning),
+    which fail the root compares."""
+    b = fx * dx
+    b += fy * dy
+    b *= 2.0
+    sq = b * b
+    sq -= a4 * c
+    np.sqrt(sq, out=sq)
+    np.negative(b, out=b)
+    t1 = b - sq
+    t1 *= den
+    t2 = np.add(b, sq, out=b)
+    t2 *= den
+    ok = t1 <= 1.0
+    ok &= t2 >= 0.0
+    ok |= deg & free
+    # fmax/fmin: a degenerate segment's NaN roots become [0, 1]
+    return np.fmax(t1, 0.0, out=t1), np.fmin(t2, 1.0, out=t2), ok
 
 
-def _free_segment_vs_points(
-    s0: np.ndarray, s1: np.ndarray, q: np.ndarray, eps2: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """segment s0->s1 ((B,2) each) vs all points of q (B,M,2): (B,M)."""
-    d = s1 - s0  # (B,2)
-    f = s0[:, None, :] - q  # (B,M,2)
-    a = (d[:, 0] * d[:, 0] + d[:, 1] * d[:, 1])[:, None]
-    b = 2.0 * (f[..., 0] * d[:, None, 0] + f[..., 1] * d[:, None, 1])
-    c = f[..., 0] * f[..., 0] + f[..., 1] * f[..., 1] - eps2[:, None]
-    return _solve_quadratic_interval_2d(a, b, c)
-
-
-def _br_chain_batch(
-    a: np.ndarray, b: np.ndarray, reset: np.ndarray, blo: np.ndarray
-) -> np.ndarray:
-    """Vectorized bottom-reachability chain of one free-space column.
-
-    Sequential semantics (the scalar loop in core.decide_frechet):
-
-        s[0] = blo
-        s[t] = a[t]                             if reset[t]
-             = max(a[t], s[t-1]) if <= b[t]     else INF   (INF propagates)
-
-    where a/b are the horizontal free-interval bounds (each a[t] is in
-    [0,1] or INF) and reset[t] marks cells enterable from the left
-    boundary. Evaluated as a SEGMENTED running max with cap violations:
-    resets open segments; within a segment s[t] is the running max of a
-    unless any position since the reset overflowed its cap (then INF).
-    Prefix-doubling gives O(log M) numpy passes instead of an M-step
-    Python loop — the former O(N*M) interpreter cost of the whole sweep
-    drops to O(N*log M)."""
-    B, M = a.shape
-    tidx = np.arange(M)
-    rv = reset.copy()
-    rv[:, 0] = True  # t=0 is the injected bottom entry
-    av = a.copy()
-    av[:, 0] = blo
-    bv = np.where(rv, _INF, b)  # reset values are not capped
-    # last reset position <= t
-    seg = np.maximum.accumulate(np.where(rv, tidx[None, :], 0), axis=1)
-    # segmented running max of av via Hillis-Steele doubling
-    rm = av
-    shift = 1
-    while shift < M:
-        shifted = np.empty_like(rm)
-        shifted[:, :shift] = -_INF
-        shifted[:, shift:] = rm[:, :-shift]
-        valid = seg <= (tidx - shift)[None, :]
-        rm = np.maximum(rm, np.where(valid, shifted, -_INF))
-        shift *= 2
-    # violation anywhere in the current segment poisons the chain
-    viol = rm > bv
-    last_viol = np.maximum.accumulate(
-        np.where(viol, tidx[None, :], -1), axis=1
-    )
-    return np.where(last_viol >= seg, _INF, rm)
+def _edge_chain(lo: np.ndarray, hi: np.ndarray, ok: np.ndarray) -> np.ndarray:
+    """Reachable prefix length of a free-space edge from the origin: the
+    count of leading intervals entered at 0 (lo <= 0) with all earlier
+    ones fully free. (K, B) intervals -> (B,) counts."""
+    reach = ok & (lo <= 0.0)
+    full = reach & (hi >= 1.0)
+    reach[1:] &= np.logical_and.accumulate(full[:-1], axis=0)
+    return reach.sum(axis=0)
 
 
 def decide_frechet_batch(
     p: np.ndarray, q: np.ndarray, eps: np.ndarray
 ) -> np.ndarray:
     """Vectorized decision for B pairs: p (B,N,2), q (B,M,2) last-vertex
-    padded, eps (B,). Returns bool (B,). Exact same accept/reject semantics
-    as core.decide_frechet (strict > endpoint reject, <=-free intervals)."""
+    padded, eps (B,). Returns bool (B,). Same accept/reject semantics as
+    core.decide_frechet (strict > endpoint reject, <=-free intervals); the
+    two can differ only where a free-interval root lands within rounding
+    of a compare (0.5/a multiplies here where core divides by 2a), e.g. at
+    eps exactly equal to an endpoint distance.
+
+    The free space (cell (i, j) = segment p_i p_i+1 x segment q_j q_j+1)
+    is swept by anti-diagonals k = i + j, vectorized over the pairs and
+    the diagonal's cells. Each cell maps two reachable-interval lower
+    bounds (inf = unreachable; reachable <=> <= 1) to two:
+
+        L: its left edge (from cell (i-1, j), or the left-edge chain)
+        B: its bottom edge (from cell (i, j-1), or the bottom-edge chain)
+        R = m if m <= v_hi else inf,   m = max(v_lo, 0 if B <= 1 else L)
+        T = t if t <= h_hi else inf,   t = max(h_lo, 0 if L <= 1 else B)
+
+    where [v_lo, v_hi] is the free interval of p_i+1 on segment q_j q_j+1
+    (the right edge) and [h_lo, h_hi] that of q_j+1 on p_i p_i+1 (the top
+    edge); an empty interval makes its output inf. Both inputs come from
+    diagonal k-1, so a diagonal is one elementwise pass over (diagonal
+    length, B), with the vertex planes stored (vertex, pair) and q
+    reversed so that every diagonal reads contiguous slices. The two
+    intervals of a cell share their vertex pair's offset and c = |f|^2 -
+    eps2 with the neighbouring cell on the same diagonal, computed once
+    per diagonal; the per-segment terms of both curves (deltas, 4a,
+    a == 0, 0.5/a) are computed once per call. The corner (N-1, M-1) is
+    reached through the last cell's top or right edge.
+
+    Early exit: every monotone path crosses every diagonal, so a pair
+    with no reachable output on diagonal k whose edge chains do not reach
+    diagonal k+1 is rejected — a blocked row stops the sweep as early as
+    a blocked column. Rejected pairs are compacted out once at most half
+    the batch is alive."""
     p = np.asarray(p, dtype=np.float64)
     q = np.asarray(q, dtype=np.float64)
     eps = np.asarray(eps, dtype=np.float64)
@@ -192,82 +181,88 @@ def decide_frechet_batch(
     # Compact away endpoint-rejected pairs (cheap, and in bisection the
     # low-eps probes reject most of the batch right here).
     out = np.zeros(B, dtype=bool)
-    orig_idx = np.nonzero(alive)[0]
-    if orig_idx.size == 0:
+    orig = np.nonzero(alive)[0]
+    if orig.size == 0:
         return out
-    if orig_idx.size < B:
-        p, q, eps2 = p[orig_idx], q[orig_idx], eps2[orig_idx]
-        B = orig_idx.size
-    alive = np.ones(B, dtype=bool)
+    e2 = eps2[orig]
+    # (vertex, pair) planes: every diagonal slice is one contiguous block;
+    # q reversed so the vertices q_j, j = k - i, of a diagonal are one
+    # ascending slice (row M-1-j) for ascending i
+    px = np.ascontiguousarray(p[orig, :, 0].T)
+    py = np.ascontiguousarray(p[orig, :, 1].T)
+    qx = np.ascontiguousarray(q[orig, ::-1, 0].T)
+    qy = np.ascontiguousarray(q[orig, ::-1, 1].T)
+    # Both interval kinds take f = q_b - p_a. The right edge of cell
+    # (i, j) is p_i+1 on q_j q_j+1, d = q_j+1 - q_j (reversed row M-2-j);
+    # the top edge is q_j+1 on p_i p_i+1, whose f and d are core's with
+    # both signs flipped (d = p_i - p_i+1, row i), so b = 2 f.d and c are
+    # bit-identical.
+    tp, tq = _seg_terms(px, py), _seg_terms(qx, qy)
 
-    # Column-0 left boundary: chain up the left edge from the origin.
-    fl_lo, fl_hi = _free_point_vs_segments(p[:, 0], q, eps2)  # (B, M-1)
-    full = (fl_lo <= 0.0) & (fl_hi >= 1.0)
-    prefix_ok = np.ones((B, M - 1), dtype=bool)
-    if M > 2:
-        prefix_ok[:, 1:] = np.cumprod(full[:, :-1], axis=1).astype(bool)
-    reach = prefix_ok & (fl_lo <= 0.0)
-    lr_lo = np.where(reach, 0.0, _INF)
-    lr_hi = np.where(reach, fl_hi, -_INF)
+    def offsets(xs, ys):  # reads the planes as rebound by compaction
+        fx, fy = qx[xs] - px[ys], qy[xs] - py[ys]
+        c = fx * fx
+        c += fy * fy
+        c -= e2
+        return fx, fy, c, c <= 0.0
 
-    bottom_prefix_ok = np.ones(B, dtype=bool)
-    br_lo = np.full((B, M), _INF)
-    fh_hi_top = np.full(B, -_INF)
+    with np.errstate(invalid="ignore"):
+        # edge chains: p_0 on the segments of q (left edge), q_0 on the
+        # segments of p (bottom edge); each reaches diagonal k iff k is
+        # below its reachable prefix length
+        f = offsets(slice(1, None), slice(0, 1))
+        left_reach = _edge_chain(*(v[::-1] for v in _free_interval(*f, *tq)))
+        f = offsets(slice(M - 1, M), slice(0, N - 1))
+        bottom_reach = _edge_chain(*_free_interval(*f, *tp))
+        # left_in[i] / bottom_in[i]: the L / B input of column i on the
+        # current diagonal (left_in[0] is the left-edge chain, bottom_in[k]
+        # the bottom-edge chain)
+        left_in = np.full((N, orig.size), _INF)
+        bottom_in = np.full((N - 1, orig.size), _INF)
+        last = N + M - 4
+        for k in range(last + 1):
+            lo, hi = max(0, k - M + 2), min(k, N - 2)
+            if lo == 0:
+                left_in[0] = np.where(k < left_reach, 0.0, _INF)
+            if hi == k:
+                bottom_in[k] = np.where(k < bottom_reach, 0.0, _INF)
+            # vertex pairs (a, k+1-a), a = lo..hi+1: the right edge of
+            # cell i is pair (i+1, j), its top edge pair (i, j+1)
+            s = M - 2 - k  # reversed row of q_(k+1-a) at a = 0
+            fx, fy, c, free = offsets(slice(s + lo, s + hi + 2), slice(lo, hi + 2))
+            v_lo, v_hi, v_ok = _free_interval(
+                fx[1:], fy[1:], c[1:], free[1:], *(t[s + lo : s + hi + 1] for t in tq)
+            )
+            h_lo, h_hi, h_ok = _free_interval(
+                fx[:-1], fy[:-1], c[:-1], free[:-1], *(t[lo : hi + 1] for t in tp)
+            )
+            L, Bv = left_in[lo : hi + 1], bottom_in[lo : hi + 1]
+            # B*0 is 0 where B is reachable and NaN (inf*0) where not, and
+            # fmin skips NaN: the entry bound is 0 from below, else L
+            e_r, e_t = np.fmin(L, Bv * 0.0), np.fmin(Bv, L * 0.0)
+            R = np.maximum(v_lo, e_r, out=left_in[lo + 1 : hi + 2])
+            T = np.maximum(h_lo, e_t, out=bottom_in[lo : hi + 1])
+            v_ok &= R <= v_hi
+            h_ok &= T <= h_hi
+            np.copyto(R, _INF, where=~v_ok)
+            np.copyto(T, _INF, where=~h_ok)
+            if k == last:
+                break
+            live = (v_ok | h_ok).any(axis=0) | (k + 1 < left_reach) | (k + 1 < bottom_reach)
+            n_alive = int(live.sum())
+            if n_alive == 0:
+                return out
+            if n_alive <= live.size // 2 and live.size > 64:
+                keep = np.nonzero(live)[0]
+                orig, e2 = orig[keep], e2[keep]
+                left_reach, bottom_reach = left_reach[keep], bottom_reach[keep]
+                left_in, bottom_in = left_in[:, keep], bottom_in[:, keep]
+                px, py, qx, qy = px[:, keep], py[:, keep], qx[:, keep], qy[:, keep]
+                tp = tuple(t[:, keep] for t in tp)
+                tq = tuple(t[:, keep] for t in tq)
 
-    for i in range(N - 1):
-        fh_lo, fh_hi = _free_segment_vs_points(p[:, i], p[:, i + 1], q, eps2)
-
-        blo = np.where(bottom_prefix_ok & (fh_lo[:, 0] <= 0.0), 0.0, _INF)
-        bottom_prefix_ok &= (fh_lo[:, 0] <= 0.0) & (fh_hi[:, 0] >= 1.0)
-
-        left_ok = lr_lo <= lr_hi  # (B, M-1)
-        reset = np.zeros((B, M), dtype=bool)
-        reset[:, 1:] = left_ok
-        br_lo = _br_chain_batch(fh_lo, fh_hi, reset, blo)
-
-        fh_hi_top = fh_hi[:, M - 1]
-
-        if i == N - 2:
-            break
-
-        fv_lo, fv_hi = _free_point_vs_segments(p[:, i + 1], q, eps2)
-        bottom_ok = br_lo[:, :-1] <= 1.0
-        entry_lo = np.where(bottom_ok, 0.0, np.where(left_ok, lr_lo, _INF))
-        new_lo = np.maximum(fv_lo, entry_lo)
-        dead = new_lo > fv_hi
-        lr_lo = np.where(dead, _INF, new_lo)
-        lr_hi = np.where(dead, -_INF, fv_hi)
-
-        # Early exit (dv:334-337): a pair whose next column has no live
-        # left boundary and whose bottom chain is blocked can never recover.
-        alive &= bottom_prefix_ok | ~dead.all(axis=1)
-        n_alive = int(alive.sum())
-        if n_alive == 0:
-            break
-        # Compact the batch when enough pairs are definitively rejected —
-        # the remaining sweep then runs on the survivors only.
-        if n_alive <= B // 2 and B > 64:
-            keep = np.nonzero(alive)[0]
-            orig_idx = orig_idx[keep]
-            p, q, eps2 = p[keep], q[keep], eps2[keep]
-            lr_lo, lr_hi = lr_lo[keep], lr_hi[keep]
-            br_lo = br_lo[keep]
-            bottom_prefix_ok = bottom_prefix_ok[keep]
-            fh_hi_top = fh_hi_top[keep]
-            alive = np.ones(keep.size, dtype=bool)
-            B = keep.size
-
-    # Accept via the top boundary of the last cell...
-    accept = (br_lo[:, M - 1] <= 1.0) & (fh_hi_top >= 1.0)
-    # ...or via the right boundary of the top-right cell.
-    fv_lo, fv_hi = _free_point_vs_segments(p[:, N - 1], q, eps2)
-    j = M - 2
-    left_ok_last = lr_lo[:, j] <= lr_hi[:, j]
-    bottom_ok_last = br_lo[:, j] <= 1.0
-    entry = np.where(bottom_ok_last, 0.0, np.where(left_ok_last, lr_lo[:, j], _INF))
-    rlo = np.maximum(fv_lo[:, j], entry)
-    accept |= (rlo <= fv_hi[:, j]) & (fv_hi[:, j] >= 1.0) & (rlo <= 1.0)
-    out[orig_idx] = alive & accept
+    # the corner is reached via the last cell's top or right edge
+    out[orig] = ((T[0] <= 1.0) & (h_hi[0] >= 1.0)) | ((R[0] <= 1.0) & (v_hi[0] >= 1.0))
     return out
 
 
@@ -832,9 +827,11 @@ def _frechet_distance_padded(
     hi = np.maximum(etd_batch(p, q), lo)
 
     out = np.where(hi <= lo, lo, np.nan)
-    # pairs already decided at their lower bound collapse to lo
-    at_lo = decide_frechet_batch(p, q, lo)
-    out = np.where(np.isnan(out) & at_lo, lo, out)
+    # pairs already decided at their lower bound collapse to lo (probed
+    # only where the bracket has not already closed)
+    idx = np.nonzero(np.isnan(out))[0]
+    at_lo = idx[decide_frechet_batch(p[idx], q[idx], lo[idx])]
+    out[at_lo] = lo[at_lo]
 
     # bisect only the still-active pairs each round (compaction): pairs
     # converge after different iteration counts, and a converged pair in

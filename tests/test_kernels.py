@@ -282,6 +282,147 @@ class TestBatchKernels:
         assert not decide_pairs_buffers(*args, np.array([2.99]), etd_accept=False)[0]
 
 
+def _solve_like_batch(a, b, c):
+    """core._solve_quadratic_interval with the batched kernel's root
+    arithmetic: (-b -/+ sqrt(disc)) * (0.5/a) where core divides by 2a.
+    The two round differently, which can flip a decision when a root
+    lands within an ulp of 0 or 1 (eps exactly at an endpoint distance),
+    so the tie cases below compare against core's sweep on these roots."""
+    lo = np.full_like(c, np.inf)
+    hi = np.full_like(c, -np.inf)
+    nd = a > 0.0
+    free = ~nd & (c <= 0.0)
+    lo[free], hi[free] = 0.0, 1.0
+    disc = b * b - 4.0 * a * c
+    sq = np.sqrt(np.maximum(disc, 0.0))
+    den = 0.5 / np.where(nd, a, 1.0)
+    t1, t2 = (-b - sq) * den, (-b + sq) * den
+    ok = nd & (disc >= 0.0) & (t1 <= 1.0) & (t2 >= 0.0)
+    lo[ok], hi[ok] = np.maximum(t1[ok], 0.0), np.minimum(t2[ok], 1.0)
+    return lo, hi
+
+
+class TestWavefrontDecider:
+    """decide_frechet_batch (the anti-diagonal free-space sweep) pair by
+    pair against core.decide_frechet, on the shapes its sweep and its
+    early exit treat specially. Core runs on the batch's root arithmetic
+    (``_solve_like_batch``) and, in ``_check``, on the same padded rows,
+    so every answer must match exactly; at a generic eps the unpadded
+    curves must give the same answer too."""
+
+    @pytest.fixture(autouse=True)
+    def _batch_roots(self, monkeypatch):
+        from frechetrange_spark.kernels import core
+
+        monkeypatch.setattr(core, "_solve_quadratic_interval", _solve_like_batch)
+
+    # straight p against a q whose interior vertex (5, 4) is 4 away from
+    # p: every p vertex lies on q, so only that q row blocks (d_F = 4)
+    LINE = np.array([[0.0, 0.0], [5.0, 0.0], [10.0, 0.0]])
+    SPIKE = np.array([[0.0, 0.0], [5.0, 0.0], [5.0, 4.0], [5.0, 0.0], [10.0, 0.0]])
+    # q starts on the unit circle around p_0: the left-edge chain reaches
+    # the vertex at distance 1.0000000000000002 through a root rounded to
+    # 0, while the cell on that diagonal stays blocked; only the chain
+    # term of the exit rule keeps this pair (decided yes at eps = 1) alive
+    CHAIN_P = np.array(
+        [[0.0, 0.0], [1.41429694438873, -0.49171762370346045], [2.116777042105697, -0.07317137054924439]]
+    )
+    CHAIN_Q = np.array(
+        [
+            [0.46502729175307167, 0.47171285633861426],
+            [0.8878276117316082, -0.4601761965236226],
+            [-0.7108173568177161, 0.7033766311491125],
+            [-0.66614983087902, -0.7458179421412793],
+            [-0.10374740567451649, 0.9946036777610504],
+            [0.9284771521676711, -0.371389523145998],
+            [1.7273846883141766, 0.02700153550851453],
+            [1.2902440056801137, 0.45869709325691216],
+            [1.9935580533820492, -0.2506908514615224],
+        ]
+    )
+
+    @staticmethod
+    def _check(ps, qs, eps):
+        """Batch answers == scalar answers on the same padded rows, for the
+        whole batch and for one call per pair (a lone pair's exit returns
+        at once, so a wrong exit cannot hide behind live batch mates)."""
+        from frechetrange_spark.kernels.batch import decide_frechet_batch, pad_curves
+
+        P, _ = pad_curves(ps)
+        Q, _ = pad_curves(qs)
+        got = decide_frechet_batch(P, Q, eps)
+        alone = np.array(
+            [decide_frechet_batch(P[k : k + 1], Q[k : k + 1], eps[k : k + 1])[0] for k in range(len(P))]
+        )
+        exp = np.array([decide_frechet(p, q, e) for p, q, e in zip(P, Q, eps)])
+        assert (got == exp).all(), np.nonzero(got != exp)[0]
+        assert (alone == exp).all(), np.nonzero(alone != exp)[0]
+        return got
+
+    def test_known_answers(self):
+        for p, q in ((self.LINE, self.SPIKE), (self.SPIKE, self.LINE)):
+            # blocked by an interior row of q, then by an interior column of p
+            assert list(self._check([p, p], [q, q], np.array([2.0, 4.0]))) == [False, True]
+        assert self._check([self.CHAIN_P], [self.CHAIN_Q], np.array([1.0]))[0]
+        # one column (row) of cells whose first diagonals reach only the
+        # top (right) edge: p_1 is far from q's first segment (d_F = 1)
+        seg = np.array([[0.0, 0.0], [10.0, 0.0]])
+        tent = np.array([[0.0, 0.0], [5.0, 1.0], [10.0, 0.0]])
+        assert self._check([seg, tent], [tent, seg], np.array([1.5, 1.5])).all()
+        assert not self._check([seg, tent], [tent, seg], np.array([0.9, 0.9])).any()
+
+    def test_padding_duplicates_and_endpoint_ties(self):
+        """Random batches: N == 2 or M == 2 (one column or row of cells),
+        N != M, each side padded to its own width with last-vertex copies
+        (degenerate segments), consecutive duplicate vertices, and eps at
+        the larger endpoint distance, one ulp below it, or generic. At a
+        generic eps the answer is also the unpadded curves' one."""
+        rng = np.random.default_rng(31)
+
+        def curve(n):
+            c = np.cumsum(rng.uniform(-1, 1, (n, 2)), axis=0)
+            if n > 2 and rng.random() < 0.4:
+                c = np.repeat(c, rng.integers(1, 3, n), axis=0)  # duplicates
+            return c
+
+        for trial in range(60):
+            B = int(rng.integers(1, 100))
+            hi_p, hi_q = int(rng.integers(2, 16)), int(rng.integers(2, 16))
+            if trial % 6 == 0:
+                hi_p = 2  # N == 2
+            if trial % 6 == 1:
+                hi_q = 2  # M == 2
+            ps = [curve(int(rng.integers(2, hi_p + 1))) for _ in range(B)]
+            qs = [curve(int(rng.integers(2, hi_q + 1))) * 0.5 + rng.uniform(-1, 1, 2) for _ in range(B)]
+            end = np.array(
+                [max(np.hypot(*(p[0] - q[0])), np.hypot(*(p[-1] - q[-1]))) for p, q in zip(ps, qs)]
+            )
+            kind = rng.integers(0, 3, B)
+            eps = np.where(
+                kind == 0, end, np.where(kind == 1, np.nextafter(end, 0.0), end * rng.uniform(1.0, 3.0, B))
+            )
+            got = self._check(ps, qs, eps)
+            generic = np.nonzero(kind == 2)[0]
+            assert all(got[k] == decide_frechet(ps[k], qs[k], eps[k]) for k in generic), trial
+
+    def test_compaction_mid_sweep(self):
+        """150 pairs, 100 of them rejected mid-sweep by the blocked row:
+        the sweep compacts the batch and must keep the survivors' state
+        aligned."""
+        rng = np.random.default_rng(5)
+        kind = rng.permutation(np.repeat([0, 1, 2, 3], [100, 25, 24, 1]))
+        pairs = {
+            0: (self.LINE, self.SPIKE, 2.0),  # dies at the q row
+            1: (self.LINE, self.SPIKE, 4.5),
+            2: (self.SPIKE, self.LINE, 4.5),
+            3: (self.CHAIN_P, self.CHAIN_Q, 1.0),
+        }
+        ps = [pairs[k][0] for k in kind]
+        qs = [pairs[k][1] for k in kind]
+        got = self._check(ps, qs, np.array([pairs[k][2] for k in kind]))
+        assert (got == (kind != 0)).all()
+
+
 def test_f6_monotone_matching_never_contradicts():
     """F6 is a NO-prover: whenever it rejects (either direction), the
     exact decider must also reject (dv/frechet_distance.hpp:60-66)."""
