@@ -23,14 +23,10 @@ Arrow list columns). ``pad_curves``/``frechet_distance_batch`` stay as a
 ragged-list convenience for out-of-engine checks.
 
 Padding still costs: every padded cell is swept. The ``*_buffers``
-kernels gather their padded stacks per row group (``pair_chunks``). The
-O(N+M) stages (ETD, greedy walks, distance bisection) take ``CHUNK``-pair
-slices of the pairs sorted by len_p + len_t (``chunks``); the O(N*M) DP
-stages of the refine funnel (discrete-Fréchet accept, exact decider)
-take 2-D length ``tiles`` of the pairs left undecided by all chunks,
-padded only to each tile's own longest curve per side. On the sf0.1
-self-join's refine pairs this lifts the share of useful cells the DP
-stages sweep from ~0.36-0.39 to ~0.53-0.66 (scripts/bench_kernel.py).
+kernels therefore gather their padded stacks per 2-D length tile
+(``tiles``, ``tile_map``): every stage of the refine funnel, ETD and the
+distance bisection run on tiles of <= ~TILE pairs of similar (len_p,
+len_t), padded to one vertex past each tile's own longest curve per side.
 
 Decisions use per-pair eps, which also gives a batched bisection for the
 distance value (K12, samples/plain.cpp:47-60): all pairs bisect in
@@ -43,11 +39,7 @@ import numpy as np
 
 _INF = np.inf
 
-# pairs per padded chunk of the O(N+M) stages (ETD, greedy walks)
-CHUNK = 4096
-# pairs per padded chunk of the bisection distance kernel
-DIST_CHUNK = 2048
-# target pairs per length tile of the O(N*M) DP stages (see ``tiles``)
+# target pairs per length tile of every ``*_buffers`` kernel (see ``tiles``)
 TILE = 512
 
 
@@ -341,13 +333,10 @@ def greedy_ub_batch(
     gather. Bit-identical to core.greedy_upper_bound per pair (tested):
     diagonal wins ties, then the i-step (the scalar's min()/== order).
 
-    With the true ``lens_p``/``lens_q`` the walk never reads padding, so
-    its bound does not depend on the padded width. The reversed walk of
-    decide_pairs_buffers passes the padded widths instead: its curves
-    START with the padding copies of the last vertex, and while one
-    pointer steps through its copies (zero-length steps) the other may
-    advance, so the bound — still a sound upper bound — depends on the
-    width each side is padded to."""
+    The walk stops at the true ``lens_p``/``lens_q`` and never reads
+    padding, so its bound does not depend on the padded width. The
+    reversed walk of decide_pairs_buffers is this same call on
+    ``reversed_table`` curves."""
     B = p.shape[0]
     rows = np.arange(B)
     n = np.asarray(lens_p, dtype=np.int64)
@@ -562,28 +551,38 @@ def decide_pairs_arrow(
     )
 
 
-def pair_chunks(
+def tile_map(
+    stage,
     bq: tuple,
     bt: tuple,
     qsel: np.ndarray,
     tsel: np.ndarray,
-    groups,
-):
-    """The one padded gather loop of every ``*_buffers`` kernel: yield
-    ``(rows, p, t)`` per row group ``rows`` of ``groups`` (pair-index
-    arrays — size-sorted chunks from ``chunks`` or length tiles from
-    ``tiles``), where ``p``/``t`` are the last-vertex-padded (B, N, 2)/
-    (B, M, 2) stacks of curves ``qsel[rows]`` of ``bq`` and ``tsel[rows]``
-    of ``bt``, each side padded only to the longest curve of that side in
-    the group. ``bq``/``bt`` are (flat_x, off_x, flat_y, off_y) curve
-    tables. The padded working set stays O(group size x longest curve in
-    the group) regardless of how many pairs are decided."""
+    rows: np.ndarray,
+    dtype=bool,
+) -> np.ndarray:
+    """The one padded gather loop of every ``*_buffers`` kernel: call
+    ``stage(p, t, r)`` on each length tile ``r`` of the pairs ``rows``
+    (see ``tiles``), where ``p``/``t`` are the last-vertex-padded
+    (B, N, 2)/(B, M, 2) stacks of curves ``qsel[r]`` of ``bq`` and
+    ``tsel[r]`` of ``bt``; returns its answers, one per pair of ``rows``.
+    ``bq``/``bt`` are (flat_x, off_x, flat_y, off_y) curve tables.
+
+    Each side is padded to one vertex past the tile's longest curve, so
+    every curve ends in at least one copy of its last vertex. ETD then
+    takes its t = 1 sample on a padded segment and the decider reaches
+    the last corner through padded cells for every pair, whatever the
+    tile's width; more copies repeat the same float operations, so the
+    answers do not depend on how the pairs are grouped. The padded
+    working set stays O(TILE x longest curve in the tile) regardless of
+    how many pairs are decided."""
     fqx, oqx, fqy, oqy = bq
     ftx, otx, fty, oty = bt
-    for rows in groups:
-        qr, tr = qsel[rows], tsel[rows]
-        wp = int((oqx[qr + 1] - oqx[qr]).max())
-        wt = int((otx[tr + 1] - otx[tr]).max())
+    qs, ts = qsel[rows], tsel[rows]
+    lens_p, lens_t = _lengths(bq, qs), _lengths(bt, ts)
+    out = np.empty(rows.size, dtype=dtype)
+    for k in tiles(np.arange(rows.size), lens_p, lens_t):
+        qr, tr = qs[k], ts[k]
+        wp, wt = int(lens_p[k].max()) + 1, int(lens_t[k].max()) + 1
         p = np.stack(
             [_padded_gather(fqx, oqx, qr, wp), _padded_gather(fqy, oqy, qr, wp)],
             axis=-1,
@@ -592,23 +591,18 @@ def pair_chunks(
             [_padded_gather(ftx, otx, tr, wt), _padded_gather(fty, oty, tr, wt)],
             axis=-1,
         )
-        yield rows, p, t
-
-
-def chunks(order: np.ndarray, size: int = CHUNK) -> list[np.ndarray]:
-    """Consecutive ``size``-row slices of ``order`` (a size-sorted pair
-    order): the row groups of the walk stages and of ETD/distance."""
-    return [order[s : s + size] for s in range(0, order.size, size)]
+        out[k] = stage(p, t, rows[k])
+    return out
 
 
 def tiles(rows: np.ndarray, lens_p: np.ndarray, lens_t: np.ndarray) -> list[np.ndarray]:
-    """2-D length tiles of the pairs ``rows`` for the DP stages: split
-    into b = ceil(sqrt(n / TILE)) equal-count quantile bands on
-    ``lens_p[rows]``, then each band into b bands on ``lens_t``, so every
-    tile holds <= ~TILE pairs of similar (len_p, len_t) and pads little
-    on EITHER side (a 1-D sort on len_p + len_t pairs long-short with
-    short-long, padding both sides to the long length). n <= TILE is one
-    tile."""
+    """2-D length tiles of the pairs ``rows``, the one row grouping of the
+    ``*_buffers`` kernels: split into b = ceil(sqrt(n / TILE)) equal-count
+    quantile bands on ``lens_p[rows]``, then each band into b bands on
+    ``lens_t``, so every tile holds <= ~TILE pairs of similar (len_p,
+    len_t) and pads little on EITHER side (a 1-D sort on len_p + len_t
+    pairs long-short with short-long, padding both sides to the long
+    length). n <= TILE is one tile."""
     b = int(np.ceil(np.sqrt(rows.size / TILE)))
     if b <= 1:
         return [rows] if rows.size else []
@@ -619,11 +613,18 @@ def tiles(rows: np.ndarray, lens_p: np.ndarray, lens_t: np.ndarray) -> list[np.n
     return out
 
 
-def _size_order(bq: tuple, bt: tuple, qsel: np.ndarray, tsel: np.ndarray):
-    """(len_q, len_t, argsort of len_q + len_t) for the selected pairs."""
-    lens_p = bq[1][qsel + 1] - bq[1][qsel]
-    lens_t = bt[1][tsel + 1] - bt[1][tsel]
-    return lens_p, lens_t, np.argsort(lens_p + lens_t)
+def _lengths(b: tuple, sel: np.ndarray) -> np.ndarray:
+    """Lengths of the curves ``sel`` of the curve table ``b``."""
+    return b[1][sel + 1] - b[1][sel]
+
+
+def reversed_table(b: tuple) -> tuple:
+    """The curve table ``b`` with every curve reversed: both flat buffers
+    reversed, so curve c of ``b`` is curve C-1-c of the result (C curves),
+    with offsets ``flat.size - off[::-1]`` — exact also for Arrow offsets
+    that do not start at 0. Zero-copy views of the flat buffers."""
+    fx, ox, fy, oy = b
+    return fx[::-1], fx.size - ox[::-1], fy[::-1], fy.size - oy[::-1]
 
 
 def decide_pairs_buffers(
@@ -647,41 +648,19 @@ def decide_pairs_buffers(
     columns; broadcast and disk curve sources pass id-resolved selectors
     into a shared curve table, so the pair rows carry no array bytes.
 
-    Two phases. The cheap O(N+M) stages (ETD, greedy, reversed greedy)
-    run chunk by chunk over ``CHUNK``-pair slices of the pairs sorted by
-    len_p + len_t. The undecided pairs of ALL chunks then run the
-    O(N*M) DP stages (discrete-Fréchet accept, F5 reject, exact decider)
-    stage by stage, each stage on its own ``tiles`` — padded only to the
-    tile's own longest curve per side, which cuts the padded cells those
-    sweeps pay for roughly in half on mixed-length batches.
+    The stages (ETD, greedy, reversed greedy, discrete-Fréchet accept,
+    F5 reject, exact decider) run in turn, each on the length tiles of
+    the pairs still undecided (``tile_map``). The reversed greedy is the
+    forward walk on ``reversed_table`` views of both curve tables, with
+    the same true lengths.
 
-    How pairs are grouped, and so how wide they are padded, is not
-    guaranteed to leave a pair's stage unchanged:
-
-    - exact: the forward greedy walk never reads padding, and the
-      discrete-Fréchet DP (min/max of squared distances) ignores
-      duplicated vertices, so their answers do not depend on the group;
-    - up to float rounding: ETD and the free-space decider are
-      padding-invariant in real arithmetic only. Padding adds exact
-      zeros to ETD's arc lengths, but its t = 1 sample is interpolated
-      on another segment; the decider reaches the last corner through
-      the padded cells' degenerate intervals instead of the real last
-      cell's quadratic solve. Either can move by a few ulps, so a pair
-      whose eps is within rounding of a critical distance (e.g. eps
-      equal to its endpoint distance) can flip with the padded widths.
-      The parent layout had the same property, since a pair's chunk
-      depends on the rest of its batch; on the 361,507 refine pairs of
-      the sf0.1 self-join no stage code differs between chunk and tile
-      padding (scripts/bench_kernel.py --check);
-    - by design: the reversed greedy walk starts at the padded last
-      vertex, and the leading copies of that vertex let one pointer sit
-      still while the other advances, so its bound (still sound)
-      depends on the chunk's padded widths at any eps. The walk stages
-      therefore keep their chunks.
-
-    With ``rev_greedy_accept`` off, one call, a permuted call and a
-    split call give the same stage codes on a seeded mixed-length batch
-    without rounding ties (tested)."""
+    A pair's stage does not depend on how the pairs are grouped: both
+    greedy walks stop at the true lengths and never read padding, the
+    discrete-Fréchet DP (min/max of squared distances) ignores
+    duplicated vertices, and ETD and the free-space decider see every
+    curve end in at least one padding copy whatever the tile's width
+    (``tile_map``). One call, a permuted call and a split call give the
+    same stage codes (tested)."""
     from frechetrange_spark.kernels.core import negfilter
 
     B = int(qsel.size)
@@ -690,57 +669,31 @@ def decide_pairs_buffers(
     if B == 0:
         return (out, stages) if return_stages else out
     eps_arr = np.broadcast_to(np.asarray(eps, dtype=np.float64), (B,))
-    lens_p, lens_t, order = _size_order(bq, bt, qsel, tsel)
+    lens_p, lens_t = _lengths(bq, qsel), _lengths(bt, tsel)
+    todo = np.arange(B)
 
-    def mark(rows: np.ndarray, acc: np.ndarray, code: int) -> None:
-        out[rows[acc]] = True
-        stages[rows[acc]] = code
-
-    # no walk stage on (the exact-decider-only calls): skip the gathers
-    walks = etd_accept or greedy_accept or rev_greedy_accept
-    rest = []
-    for rows, p, t in pair_chunks(bq, bt, qsel, tsel, chunks(order) if walks else []):
-        e = eps_arr[rows]
-        todo = np.arange(rows.size)
-        if etd_accept:
-            acc = etd_batch(p, t) <= e
-            mark(rows, acc, STAGE_ETD_ACCEPT)
+    def accept(stage, code: int, tables=(bq, bt, qsel, tsel)) -> None:
+        """Mark the ``todo`` pairs ``stage`` accepts with ``code``."""
+        nonlocal todo
+        if todo.size:
+            acc = tile_map(stage, *tables, todo)
+            out[todo[acc]] = True
+            stages[todo[acc]] = code
             todo = todo[~acc]
-        if greedy_accept and todo.size:
-            r = rows[todo]
-            acc = greedy_ub_batch(p[todo], t[todo], lens_p[r], lens_t[r]) <= e[todo]
-            mark(r, acc, STAGE_GREEDY_ACCEPT)
-            todo = todo[~acc]
-        if rev_greedy_accept and todo.size:
-            # reversed padded curves: leading duplicate vertices are
-            # harmless for the greedy bound (zero-length steps), so the
-            # full padded width serves as the length
-            pr = p[todo, ::-1].copy()
-            tr = t[todo, ::-1].copy()
-            ub = greedy_ub_batch(
-                pr,
-                tr,
-                np.full(todo.size, p.shape[1], dtype=np.int64),
-                np.full(todo.size, t.shape[1], dtype=np.int64),
-            )
-            acc = ub <= e[todo]
-            mark(rows[todo], acc, STAGE_GREEDY_REV_ACCEPT)
-            todo = todo[~acc]
-        rest.append(rows[todo])
-    todo = np.concatenate(rest) if rest else order
 
-    def tiled(stage) -> np.ndarray:
-        """``stage(p, t, rows)`` over the length tiles of ``todo``; its
-        bool answer per ``todo`` pair."""
-        hit = np.zeros(B, dtype=bool)
-        for rows, p, t in pair_chunks(bq, bt, qsel, tsel, tiles(todo, lens_p, lens_t)):
-            hit[rows] = stage(p, t, rows)
-        return hit[todo]
+    def greedy(p, t, r):
+        return greedy_ub_batch(p, t, lens_p[r], lens_t[r]) <= eps_arr[r]
 
-    if dfd_accept and todo.size:
-        acc = tiled(lambda p, t, r: dfd_leq_batch(p, t, eps_arr[r] * eps_arr[r]))
-        mark(todo, acc, STAGE_DFD_ACCEPT)
-        todo = todo[~acc]
+    if etd_accept:
+        accept(lambda p, t, r: etd_batch(p, t) <= eps_arr[r], STAGE_ETD_ACCEPT)
+    if greedy_accept:
+        accept(greedy, STAGE_GREEDY_ACCEPT)
+    if rev_greedy_accept and todo.size:
+        rq, rt = reversed_table(bq), reversed_table(bt)
+        rev = (rq, rt, len(rq[1]) - 2 - qsel, len(rt[1]) - 2 - tsel)
+        accept(greedy, STAGE_GREEDY_REV_ACCEPT, rev)
+    if dfd_accept:
+        accept(lambda p, t, r: dfd_leq_batch(p, t, eps_arr[r] * eps_arr[r]), STAGE_DFD_ACCEPT)
     if neg_reject and todo.size:
         drop = np.fromiter(
             (
@@ -753,7 +706,10 @@ def decide_pairs_buffers(
         stages[todo[drop]] = STAGE_NEG_REJECT
         todo = todo[~drop]
     if todo.size:
-        dec = tiled(lambda p, t, r: decide_frechet_batch(p, t, eps_arr[r]))
+        dec = tile_map(
+            lambda p, t, r: decide_frechet_batch(p, t, eps_arr[r]),
+            bq, bt, qsel, tsel, todo,
+        )
         out[todo] = dec
         stages[todo] = np.where(dec, STAGE_DECIDER_YES, STAGE_DECIDER_NO)
     return (out, stages) if return_stages else out
@@ -771,11 +727,9 @@ def etd_pairs_buffers(
     """Batched equal-time distance (F8) per pair, over raw list buffers
     with per-pair curve indirection (cf. decide_pairs_buffers): pair i
     compares curve ``qsel[i]`` of bq against curve ``tsel[i]`` of bt."""
-    out = np.empty(int(qsel.size), dtype=np.float64)
-    order = _size_order(bq, bt, qsel, tsel)[2]
-    for rows, p, t in pair_chunks(bq, bt, qsel, tsel, chunks(order)):
-        out[rows] = etd_batch(p, t)
-    return out
+    return tile_map(
+        lambda p, t, r: etd_batch(p, t), bq, bt, qsel, tsel, np.arange(qsel.size), np.float64
+    )
 
 
 def distance_pairs_buffers(
@@ -788,13 +742,13 @@ def distance_pairs_buffers(
 ) -> np.ndarray:
     """Batched bisection distance per pair, over raw list buffers with
     per-pair curve indirection (cf. decide_pairs_buffers). Per-pair values
-    are independent of batch composition (every bisection step is
-    elementwise per pair)."""
-    out = np.empty(int(qsel.size), dtype=np.float64)
-    order = _size_order(bq, bt, qsel, tsel)[2]
-    for rows, p, t in pair_chunks(bq, bt, qsel, tsel, chunks(order, DIST_CHUNK)):
-        out[rows] = _frechet_distance_padded(p, t, rel_tol, abs_tol)
-    return out
+    are independent of batch composition: every bisection step is
+    elementwise per pair, and ``tile_map``'s padding copy makes the ETD
+    bracket and the decider independent of the tile's width."""
+    return tile_map(
+        lambda p, t, r: _frechet_distance_padded(p, t, rel_tol, abs_tol),
+        bq, bt, qsel, tsel, np.arange(qsel.size), np.float64,
+    )
 
 
 def frechet_distance_batch(

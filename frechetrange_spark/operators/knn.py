@@ -464,7 +464,8 @@ def _decide_distance_map(q_spec, t_spec, rel_tol: float = 1e-6):
     1e-6 relative bisection tolerance = the reference's own kNN-style
     bisection (benchmark/test.py:96, eps=1E-6); ranks are stable well
     above it and it saves ~10 of ~37 decide sweeps per pair. Per-pair
-    results are independent of batch composition."""
+    results are independent of batch composition (see
+    ``kernels.batch.distance_pairs_buffers``)."""
 
     def kernel(batches):
         import pyarrow as pa

@@ -287,7 +287,7 @@ def build_grid_index(
             index_df.sparkSession.sparkContext.defaultParallelism,
         )
     pts = sum(int(row[f"_p{j}"] or 0) for j in range(len(size_cols)))
-    meta["payload_bytes"] = pts * 16 * 3 + int(row["n"] or 0) * 64
+    meta["payload_bytes"] = _payload_estimate(pts, int(row["n"] or 0))
     return index_df, meta
 
 
@@ -585,7 +585,7 @@ def _simp_funnel_pairs(
     Each level is one ``etd_pairs_buffers`` call over the level's
     undecided pairs plus two ``decide_pairs_buffers`` calls (exact
     decider only, per-pair eps_l and eps_u), so the level's curves are
-    padded by the kernels' own size-sorted chunks and length tiles."""
+    padded by the kernels' own length tiles."""
     from frechetrange_spark.kernels.batch import (
         decide_pairs_buffers,
         etd_pairs_buffers,
@@ -764,11 +764,17 @@ def _array_cols(df: DataFrame) -> list[str]:
     return out
 
 
+def _payload_estimate(pts: int, n: int) -> int:
+    """Estimated in-memory broadcast size of ``n`` curves holding ``pts``
+    (x, y) points in all: 16 bytes per point times a 3x HashedRelation
+    overhead factor, plus per-row slack."""
+    return pts * 16 * 3 + n * 64
+
+
 def _est_broadcast_bytes(df: DataFrame) -> int:
-    """Estimated in-memory broadcast size of a curve table's array payload:
-    16 bytes per (x, y) point across the full-resolution arrays and every
-    stored simplification level (exact: sums the list sizes), times a 3x
-    HashedRelation overhead factor, plus per-row slack."""
+    """``_payload_estimate`` of a curve table's array payload: its points
+    across the full-resolution arrays and every stored simplification
+    level (exact: sums the list sizes)."""
     aggs = [F.sum(F.size("xs")).alias("p")]
     i = 0
     while f"s{i}_xs" in df.columns:
@@ -777,7 +783,7 @@ def _est_broadcast_bytes(df: DataFrame) -> int:
     aggs.append(F.count("*").alias("n"))
     row = df.agg(*aggs).collect()[0]
     pts = sum(int(row[k] or 0) for k in row.asDict() if k != "n")
-    return pts * 16 * 3 + int(row["n"] or 0) * 64
+    return _payload_estimate(pts, int(row["n"] or 0))
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
@@ -806,35 +812,10 @@ def _payload_bytes_gated(df: DataFrame, thr: int) -> int:
     return _est_broadcast_bytes(df)
 
 
-_BYTE_SUFFIXES = {
-    "k": 1024,
-    "m": 1024**2,
-    "g": 1024**3,
-    "t": 1024**4,
-    "p": 1024**5,
-}
-
-
-def _parse_byte_string(raw: str) -> int:
-    """Spark-style byte string: bare bytes or a k/m/g/t/p suffix with an
-    optional trailing 'b' (JavaUtils.byteStringAsBytes semantics: '10m',
-    '64K', '1gb'), case-insensitive."""
-    s = raw.strip().lower()
-    mult = 1
-    if s.endswith("b") and len(s) > 1 and s[-2] in _BYTE_SUFFIXES:
-        s = s[:-1]
-    if s and s[-1] in _BYTE_SUFFIXES:
-        mult = _BYTE_SUFFIXES[s[-1]]
-        s = s[:-1]
-    return int(s) * mult
-
-
 def _broadcast_threshold(spark) -> int:
-    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "33554432")
-    try:
-        return max(_parse_byte_string(raw), 0)
-    except ValueError:
-        return 32 * 1024 * 1024
+    """spark.sql.autoBroadcastJoinThreshold in bytes as Spark itself
+    parses it; a negative (disabled) threshold is 0."""
+    return max(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold(), 0)
 
 
 def _sources(
@@ -850,8 +831,9 @@ def _sources(
     knn_frechet; ``attach`` is documented on range_query_grid. kNN passes
     ``meta={}``: no build-time payload estimate, no pack store."""
     spark = index_df.sparkSession
+    thr = _broadcast_threshold(spark)
+    q_fits = None  # the query side's payload fits the threshold
     if attach == "auto":
-        thr = _broadcast_threshold(spark)
         attach = "shuffle"
         if thr > 0:
             # the index side's payload estimate is computed ONCE at build
@@ -860,9 +842,14 @@ def _sources(
             d_bytes = meta.get("payload_bytes")
             if d_bytes is None:
                 d_bytes = _payload_bytes_gated(index_df, thr)
-            if d_bytes <= thr and _payload_bytes_gated(queries, thr) <= thr:
+            if d_bytes <= thr or meta.get("pack_path"):
+                q_fits = _payload_bytes_gated(queries, thr) <= thr
+            if d_bytes <= thr and q_fits:
                 attach = "broadcast"
-            elif meta.get("pack_path"):
+            elif meta.get("pack_path") and (
+                q_fits or symmetric or meta.get("query_pack_path")
+            ):
+                # pack only where its query side can be served (below)
                 attach = "pack"
     if attach == "shuffle":
         return _INLINE
@@ -892,8 +879,9 @@ def _sources(
         # WRONG curves for the query side and return silently wrong
         # results (only ids absent from the store trip the loud
         # _lookup KeyError) — raise instead.
-        thr = _broadcast_threshold(spark)
-        if thr > 0 and _payload_bytes_gated(queries, thr) <= thr:
+        if q_fits is None:
+            q_fits = thr > 0 and _payload_bytes_gated(queries, thr) <= thr
+        if q_fits:
             q_spec = ("bcast", _pack_broadcast(queries, simp_levels))
         elif symmetric:
             q_spec = ("disk", pack_path)
@@ -983,7 +971,9 @@ def range_query_grid(
       payload (build-time meta['payload_bytes'] for the index side —
       no per-query scan — with _est_broadcast_bytes/plan-stats gating
       for the query side) fits spark.sql.autoBroadcastJoinThreshold;
-      else pack when the index carries a pack store; else shuffle."""
+      else pack when the index carries a pack store and the pack arm can
+      serve the query side (it fits the threshold, ``symmetric=True`` or
+      ``meta['query_pack_path']``); else shuffle."""
     from pyspark.sql import Observation
 
     # r06 upper-bound accept filters (reversed greedy + discrete-Fréchet,

@@ -19,13 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from frechetrange_spark.operators.range_query import range_query_grid
+from frechetrange_spark.operators.range_query import _CORNERS, range_query_grid
 from frechetrange_spark.operators.simplifications import enrich_with_simplifications
 from frechetrange_spark.operators.tiling import cell_coord
 from frechetrange_spark.plans.checkpoints import CheckpointedPipeline
 from frechetrange_spark.sources.trajectories import assemble_curves, trajectory_points
-
-_CORNERS = {"min_min": ("min_x", "min_y")}
 
 
 def flagship_pipeline(

@@ -20,12 +20,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_CORNERS = {
-    "min_min": ("min_x", "min_y"),
-    "min_max": ("min_x", "max_y"),
-    "max_min": ("max_x", "min_y"),
-    "max_max": ("max_x", "max_y"),
-}
+from frechetrange_spark.operators.range_query import _CORNERS
 
 
 def _o1_sorted(index_df: DataFrame, corner: str) -> DataFrame:

@@ -21,10 +21,13 @@ prints one JSON line:
 - ``stages``: per funnel stage, the pairs it saw, its seconds and
   µs/pair, and its padded-cell efficiency — useful cells / swept cells,
   where a pair's cells are len_p + len_t for the O(N+M) walk stages and
-  len_p x len_t for the O(N*M) DP stages.
+  len_p x len_t for the O(N*M) DP stages. Only for a kernel that runs
+  its stages in turn (one with ``kernels.batch.reversed_table``); an
+  older checkout reports its codes and whole cost only.
 
 ``--record`` stores the stage code of every pair in the cache;
-``--check`` compares this run's codes with the stored ones and exits 1 on
+``--check`` compares this run's codes with the stored ones, counts the
+differing pairs per (recorded stage -> new stage) move and exits 1 on
 any difference. To compare two versions of the engine, record with one
 (``--engine DIR`` points the import at another checkout) and check with
 the other:
@@ -102,19 +105,24 @@ def load(path: str):
 def stage_timers(kb, stats: dict) -> None:
     """Wrap the stage kernels of the module ``kb`` (kernels.batch) so each
     call adds its seconds, pairs and swept cells into ``stats[stage]``;
-    ``decide_pairs_buffers`` looks them up at call time. The two
-    ``greedy_ub_batch`` calls of a chunk are told apart by order: the
-    first after an ``etd_batch`` call is the forward walk, the second the
-    reversed one."""
-    greedy_calls = [0]
+    ``decide_pairs_buffers`` looks them up at call time. The kernel runs
+    its stages in turn, and the reversed greedy walk is the forward walk
+    on reversed curve tables, so ``greedy_ub_batch`` calls count as the
+    forward walk until the kernel builds those tables (``reversed_table``)
+    and as the reversed walk from then on, up to the next ``etd_batch``
+    call (the first stage of the next ``decide_pairs_buffers`` call)."""
+    walk = ["greedy"]
 
     def etd():
-        greedy_calls[0] = 0
+        walk[0] = "greedy"
         return "etd"
 
-    def greedy():
-        greedy_calls[0] += 1
-        return STAGES[greedy_calls[0]]
+    def reversed_table(b):
+        walk[0] = "greedy_rev"
+        return table(b)
+
+    table = kb.reversed_table
+    kb.reversed_table = reversed_table
 
     def wrap(name, stage_of):
         fn = getattr(kb, name)
@@ -133,7 +141,7 @@ def stage_timers(kb, stats: dict) -> None:
         setattr(kb, name, timed)
 
     wrap("etd_batch", etd)
-    wrap("greedy_ub_batch", greedy)
+    wrap("greedy_ub_batch", lambda: walk[0])
     wrap("dfd_leq_batch", lambda: "dfd")
     wrap("decide_frechet_batch", lambda: "decider")
 
@@ -162,7 +170,11 @@ def main() -> None:
     n = int(qsel.size)
 
     stats = {s: dict(pairs=0, secs=0.0, swept=0) for s in STAGES}
-    stage_timers(kb, stats)
+    # the stage timers need the stage-by-stage kernel (``reversed_table``);
+    # an older checkout is replayed for its codes and whole cost only
+    staged = hasattr(kb, "reversed_table")
+    if staged:
+        stage_timers(kb, stats)
     codes = np.zeros(n, dtype=np.int8)
     t0 = time.perf_counter()
     for s in range(0, n, BATCH):
@@ -183,7 +195,7 @@ def main() -> None:
         kb.STAGE_DFD_ACCEPT,
     )
     stages = {}
-    for i, name in enumerate(STAGES):
+    for i, name in enumerate(STAGES if staged else ()):
         reach = ~np.isin(codes, accepts[:i])
         s = stats[name]
         if int(reach.sum()) != s["pairs"]:
@@ -212,6 +224,11 @@ def main() -> None:
         ref = np.load(codes_path)
         diff = int((ref != codes).sum()) if ref.shape == codes.shape else -1
         out["check"] = {"against": codes_path, "differing_pairs": diff}
+        if diff > 0:
+            moved, k = np.unique(np.stack([ref, codes])[:, ref != codes], axis=1, return_counts=True)
+            out["check"]["moved"] = {
+                f"{kb.STAGE_NAMES[a]}->{kb.STAGE_NAMES[b]}": int(c) for (a, b), c in zip(moved.T, k)
+            }
     print(json.dumps(out))
     if args.check and out["check"]["differing_pairs"] != 0:
         sys.exit(1)

@@ -577,6 +577,44 @@ class TestDecidePairsBuffers:
         with pytest.raises(KeyError):
             _lookup(np.empty(0, dtype=np.int64), np.array([1]))
 
+    def test_answers_independent_of_tile_width(self):
+        """A pair's ETD value, decider answer and distance value are the
+        same in one call over a mixed-length batch (padded to its tile's
+        widths) and in a call of its own — at eps equal to the larger
+        endpoint distance, a rounding tie for the decider's last corner.
+        ``tile_map`` ends every curve in at least one padding copy;
+        without it a pair alone is padded nothing and reaches the last
+        corner through other cells than in the batch, which flips a few
+        percent of these answers."""
+        from frechetrange_spark.kernels.batch import (
+            decide_pairs_buffers,
+            distance_pairs_buffers,
+            etd_pairs_buffers,
+        )
+
+        rng = np.random.default_rng(47)
+        n = 600
+        ps = [np.cumsum(rng.uniform(-1, 1, (rng.integers(1, 12), 2)), axis=0) for _ in range(n)]
+        qs = [
+            np.cumsum(rng.uniform(-1, 1, (rng.integers(1, 12), 2)), axis=0) + rng.uniform(-1, 1, 2)
+            for _ in range(n)
+        ]
+        eps = np.array(
+            [max(np.hypot(*(p[0] - q[0])), np.hypot(*(p[-1] - q[-1]))) for p, q in zip(ps, qs)]
+        )
+        bq, bt, sel, _ = _tables(ps, qs)
+
+        def alone(kernel, args=lambda i: ()):
+            return np.array([kernel(bq, bt, sel[i : i + 1], sel[i : i + 1], *args(i))[0] for i in sel])
+
+        whole = decide_pairs_buffers(bq, bt, sel, sel, eps, etd_accept=False)
+        assert whole.any() and not whole.all()
+        assert (alone(decide_pairs_buffers, lambda i: (eps[i : i + 1], False)) == whole).all()
+        etd = etd_pairs_buffers(bq, bt, sel, sel)
+        assert (alone(etd_pairs_buffers) == etd).all()
+        d = distance_pairs_buffers(bq, bt, sel, sel)
+        assert (alone(distance_pairs_buffers) == d).all()
+
 
 class TestUpperBoundAcceptFilters:
     """r06 filter pack additions: reversed-greedy (F4 on the reversed
@@ -653,16 +691,10 @@ class TestUpperBoundAcceptFilters:
             assert got[kind == 0].all() and not got[kind == 1].any()
 
     def test_stage_codes_independent_of_batch_composition(self):
-        """With the reversed greedy off (the one padding-dependent
-        stage), a pair's stage code is the same whether it is decided in
-        one call, a permuted call, or a call split in two by curve length
-        (so each part pads to other widths) — across mixed
-        curve lengths and a DP tail of several length tiles.
-
-        Equality is empirical for this seed, not a guarantee: ETD and the
-        free-space decider are padding-invariant only up to float
-        rounding (see decide_pairs_buffers), and no pair here has its eps
-        within rounding of a critical distance."""
+        """With every filter on, a pair's stage code is the same whether
+        it is decided in one call, a permuted call, or a call split in
+        two by curve length (so each part pads to other widths) — across
+        mixed curve lengths and a DP tail of several length tiles."""
         from frechetrange_spark.kernels.batch import (
             STAGE_DFD_ACCEPT,
             STAGE_DECIDER_NO,
@@ -700,7 +732,7 @@ class TestUpperBoundAcceptFilters:
         eps = rng.uniform(0.3, 1.5, n)
         flags = dict(
             etd_accept=True, greedy_accept=True, neg_reject=True,
-            dfd_accept=True, rev_greedy_accept=False, return_stages=True,
+            dfd_accept=True, rev_greedy_accept=True, return_stages=True,
         )
 
         def codes(sel):
@@ -722,6 +754,80 @@ class TestUpperBoundAcceptFilters:
         split[short] = codes(np.nonzero(short)[0])
         split[~short] = codes(np.nonzero(~short)[0])
         assert (split == whole).all()
+        # alone, a pair gets one padding copy per side. Next to a pair of
+        # 5-vertex curves that is still undecided at the reversed walk
+        # (eps 0), both sides pad to 6, so p (3 vertices) gets one copy
+        # more than q (4): the reversed walk's bound is sqrt(13) on the
+        # curves but would be 2 with that copy, so at eps 2.5 a walk
+        # that read padding would move its stage
+        hook = [
+            np.array([[1.0, 0.0], [1.0, 3.0], [0.0, 2.0]]),
+            np.array([[1.0, 2.0], [3.0, 3.0], [0.0, 0.0], [2.0, 2.0]]),
+            curves[0][:5],
+            curves[1][:5],
+        ]
+        tab2 = _curve_table(hook)
+        q2, t2, e2 = np.array([0, 2]), np.array([1, 3]), np.array([2.5, 0.0])
+        both = decide_pairs_buffers(tab2, tab2, q2, t2, e2, **flags)[1]
+        alone = decide_pairs_buffers(tab2, tab2, q2[:1], t2[:1], e2[:1], **flags)[1]
+        assert both[0] == alone[0]
+
+    def test_reversed_greedy_is_greedy_on_reversed_curves(self):
+        """The reversed walk's bound for each pair equals the scalar
+        greedy bound of the two unpadded curves reversed, and it accepts
+        exactly the pairs whose bound is <= eps — with mixed curve
+        lengths over several length tiles, and curve tables from sliced
+        Arrow list columns whose offsets do not start at 0 (and differ
+        between the x and y columns)."""
+        import pyarrow as pa
+
+        from frechetrange_spark.kernels.batch import (
+            STAGE_GREEDY_REV_ACCEPT,
+            TILE,
+            _lengths,
+            decide_pairs_buffers,
+            greedy_ub_batch,
+            pair_tables,
+            reversed_table,
+            tile_map,
+        )
+
+        rng = np.random.default_rng(43)
+        n = 3 * TILE
+        ps = [np.cumsum(rng.uniform(-1, 1, (rng.integers(1, 50), 2)), axis=0) for _ in range(n)]
+        qs = [
+            np.cumsum(rng.uniform(-1, 1, (rng.integers(1, 50), 2)), axis=0) + rng.uniform(-2, 2, 2)
+            for _ in range(n)
+        ]
+
+        def col(curves, d, head, tail):
+            # ``head``/``tail`` junk rows, sliced away: the offsets of the
+            # remaining rows start at the head's size
+            junk = [rng.uniform(-9, 9, rng.integers(1, 6)).tolist() for _ in range(head + tail)]
+            rows = junk[:head] + [c[:, d].tolist() for c in curves] + junk[head:]
+            return pa.array(rows, pa.list_(pa.float64())).slice(head, len(curves))
+
+        bq, bt, qsel, tsel = pair_tables(
+            col(ps, 0, 3, 2), col(ps, 1, 7, 1), col(qs, 0, 2, 4), col(qs, 1, 5, 3)
+        )
+        assert bq[1][0] > 0 and bq[1][0] != bq[3][0]
+        want = np.array([greedy_upper_bound(p[::-1], q[::-1]) for p, q in zip(ps, qs)])
+
+        lp, lt = _lengths(bq, qsel), _lengths(bt, tsel)
+        rq, rt = reversed_table(bq), reversed_table(bt)
+        got = tile_map(
+            lambda p, t, r: greedy_ub_batch(p, t, lp[r], lt[r]),
+            rq, rt, n - 1 - qsel, n - 1 - tsel, np.arange(n), np.float64,
+        )
+        assert (got == want).all()
+
+        # eps at the bound (accept) or one ulp below it (reject)
+        eps = np.where(rng.random(n) < 0.5, want, np.nextafter(want, -np.inf))
+        codes = decide_pairs_buffers(
+            bq, bt, qsel, tsel, eps, etd_accept=False,
+            rev_greedy_accept=True, return_stages=True,
+        )[1]
+        assert ((codes == STAGE_GREEDY_REV_ACCEPT) == (want <= eps)).all()
 
     def test_filters_do_not_change_results(self):
         import pyarrow as pa

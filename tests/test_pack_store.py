@@ -188,3 +188,28 @@ def test_pack_foreign_over_threshold_query_raises(spark, enriched, tmp_path):
         assert got == want
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_auto_attach_foreign_over_threshold_query_uses_shuffle(spark, enriched, tmp_path):
+    """attach='auto' with a pack store on the index and a query table past
+    the broadcast threshold that is not the index itself: the pack arm
+    cannot serve that query side, so auto takes the inline arm and
+    returns the attach='shuffle' rows instead of raising."""
+    from frechetrange_spark.sources.index_table import read_index, write_index
+
+    index_df, meta = build_grid_index(enriched, 15.0, corner="min_min")
+    path = str(tmp_path / "idx")
+    write_index(index_df, path, meta, pack=True)
+    idx, meta2 = read_index(spark, path)
+    queries = idx.filter(F.col("traj_id") % 3 == 0)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
+        got = set(map(tuple, range_query_grid(idx, queries, 15.0, meta2).collect()))
+        want = set(
+            map(tuple, range_query_grid(idx, queries, 15.0, meta2, attach="shuffle").collect())
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert got == want
+    assert len(got) > 0

@@ -155,7 +155,7 @@ class TestUdfSurface:
         exp = [frechet_distance(p, q) for p, q in curves]
         np.testing.assert_allclose(got, exp, rtol=1e-7)
 
-        # a frame spanning several kernel chunks and length tiles: the
+        # a frame spanning several kernel length tiles: the
         # decide, greedy and ETD UDFs against the scalar kernels
         rows, curves = [], []
         for _ in range(600):
