@@ -58,15 +58,10 @@ def frechet_greedy_ub(
     xs1: pa.Array, ys1: pa.Array, xs2: pa.Array, ys2: pa.Array
 ) -> pa.Array:
     """Greedy monotone-alignment upper bound (F4,
-    detail/bb/spatial_index.hpp:251-278)."""
-    from frechetrange_spark.kernels.batch import _curve, pair_tables
-    from frechetrange_spark.kernels.core import greedy_upper_bound
+    detail/bb/spatial_index.hpp:251-278): one flat walk over all rows."""
+    from frechetrange_spark.kernels.batch import greedy_pairs_buffers, pair_tables
 
-    bq, bt, sel, _ = pair_tables(xs1, ys1, xs2, ys2)
-    return pa.array(
-        [greedy_upper_bound(_curve(bq, i), _curve(bt, i)) for i in sel],
-        type=pa.float64(),
-    )
+    return pa.array(greedy_pairs_buffers(*pair_tables(xs1, ys1, xs2, ys2)))
 
 
 @pandas_udf(ArrayType(LongType()))

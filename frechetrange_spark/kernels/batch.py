@@ -24,9 +24,16 @@ ragged-list convenience for out-of-engine checks.
 
 Padding still costs: every padded cell is swept. The ``*_buffers``
 kernels therefore gather their padded stacks per 2-D length tile
-(``tiles``, ``tile_map``): every stage of the refine funnel, ETD and the
-distance bisection run on tiles of <= ~TILE pairs of similar (len_p,
-len_t), padded to one vertex past each tile's own longest curve per side.
+(``tiles``, ``tile_map``): ETD, the discrete-Fréchet and free-space DP
+stages and the distance bisection run on tiles of <= ~TILE pairs of
+similar (len_p, len_t), padded to one vertex past each tile's own longest
+curve per side. The two O(N+M) greedy walks pad nothing:
+``greedy_pairs_buffers`` walks all of a call's pairs in lockstep, reading
+each pair's next vertices straight from the flat curve buffers, so its
+Python step loop runs once per step for the whole call. The padded stages
+likewise gain from large calls (fuller tiles, fewer loop passes), which
+is why the refine maps merge a partition's Arrow batches into a few
+calls.
 
 Decisions use per-pair eps, which also gives a batched bisection for the
 distance value (K12, samples/plain.cpp:47-60): all pairs bisect in
@@ -324,49 +331,117 @@ def etd_batch(p: np.ndarray, q: np.ndarray) -> np.ndarray:
     return np.sqrt(d2.max(axis=1))
 
 
+def greedy_pairs_buffers(
+    bq: tuple, bt: tuple, qsel: np.ndarray, tsel: np.ndarray, reverse: bool = False
+) -> np.ndarray:
+    """F4: the greedy monotone alignment upper bound
+    (detail/bb/spatial_index.hpp:251-278) of every pair, curve
+    ``qsel[i]`` of the curve table ``bq`` against curve ``tsel[i]`` of
+    ``bt`` (cf. decide_pairs_buffers), as ONE lockstep walk over all
+    pairs: every pair advances its own (i, j) pointers, and a step is a
+    few elementwise passes plus a gather of each pair's next vertices
+    straight from the flat buffers. Nothing is padded or tiled, so the
+    Python step loop runs once per step of the longest walk for the
+    whole call, and finished pairs are compacted out of the loop.
+
+    Vertex k of curve c is read at ``off[c] + k``; with ``reverse`` at
+    ``off[c+1] - 1 - k``, which walks both curves reversed (the reversed
+    pair's bound, another sound upper bound since d_F is invariant under
+    joint reversal). Bit-identical to core.greedy_upper_bound on the
+    (reversed) curves (tested): ``d = p - q``, ``dx*dx + dy*dy``, the
+    diagonal wins ties, then the i-step (the scalar's min()/== order)."""
+    fqx, oqx, fqy, oqy = bq
+    ftx, otx, fty, oty = bt
+    qsel = np.asarray(qsel, dtype=np.int64)
+    tsel = np.asarray(tsel, dtype=np.int64)
+    # each pair's flat index of vertex 0 per buffer; vertex k of the walk
+    # is at at(b, k)
+    if reverse:
+        at = np.subtract
+        bpx, bpy, btx, bty = oqx[qsel + 1] - 1, oqy[qsel + 1] - 1, otx[tsel + 1] - 1, oty[tsel + 1] - 1
+    else:
+        at = np.add
+        bpx, bpy, btx, bty = oqx[qsel], oqy[qsel], otx[tsel], oty[tsel]
+    last_i = oqx[qsel + 1] - oqx[qsel] - 1
+    last_j = otx[tsel + 1] - otx[tsel] - 1
+    # the current vertices p_i, q_j, carried between steps
+    px, py, tx, ty = fqx[bpx], fqy[bpy], ftx[btx], fty[bty]
+    dx, dy = px - tx, py - ty
+    best = dx * dx + dy * dy
+    out = best.copy()
+    orig = np.arange(qsel.size)
+    i = np.zeros(qsel.size, dtype=np.int64)
+    j = np.zeros(qsel.size, dtype=np.int64)
+    while orig.size:
+        can_i, can_j = i < last_i, j < last_j
+        live = can_i | can_j
+        n_live = int(np.count_nonzero(live))
+        # finished pairs stay put (below); compact them out once a
+        # quarter of the rows has finished
+        if n_live <= 0.75 * orig.size:
+            out[orig[~live]] = best[~live]
+            if n_live == 0:
+                break
+            keep = np.flatnonzero(live)
+            orig, i, j, last_i, last_j, best = (
+                v[keep] for v in (orig, i, j, last_i, last_j, best)
+            )
+            bpx, bpy, btx, bty, px, py, tx, ty = (
+                v[keep] for v in (bpx, bpy, btx, bty, px, py, tx, ty)
+            )
+            can_i, can_j = can_i[keep], can_j[keep]
+        i1, j1 = i + can_i, j + can_j
+        pnx, pny = fqx[at(bpx, i1)], fqy[at(bpy, i1)]
+        tnx, tny = ftx[at(btx, j1)], fty[at(bty, j1)]
+        dx, dy = pnx - tx, pny - ty
+        a = dx * dx + dy * dy
+        dx, dy = px - tnx, py - tny
+        b = dx * dx + dy * dy
+        dx, dy = pnx - tnx, pny - tny
+        c = dx * dx + dy * dy
+        # an impossible step is inf. A finished pair (no step possible)
+        # keeps real values: all three are d2(p_i, q_j) <= best, so it
+        # takes the diagonal "step" to i1 = i, j1 = j and stays put.
+        np.copyto(a, _INF, where=can_j > can_i)
+        np.copyto(b, _INF, where=can_i > can_j)
+        np.copyto(c, _INF, where=can_i ^ can_j)
+        step = np.minimum(a, b)
+        np.minimum(step, c, out=step)
+        diag = step == c
+        move_i = diag | (step == a)
+        move_j = diag | ~move_i
+        i = np.where(move_i, i1, i)
+        j = np.where(move_j, j1, j)
+        px, py = np.where(move_i, pnx, px), np.where(move_i, pny, py)
+        tx, ty = np.where(move_j, tnx, tx), np.where(move_j, tny, ty)
+        best = np.where(step > best, step, best)
+    return np.sqrt(out)
+
+
 def greedy_ub_batch(
     p: np.ndarray, q: np.ndarray, lens_p: np.ndarray, lens_q: np.ndarray
 ) -> np.ndarray:
-    """F4 batched: greedy monotone alignment upper bound
-    (detail/bb/spatial_index.hpp:251-278) in lockstep over B padded pairs —
-    every pair advances its own (i, j) pointers, each step one vectorized
-    gather. Bit-identical to core.greedy_upper_bound per pair (tested):
-    diagonal wins ties, then the i-step (the scalar's min()/== order).
+    """F4 over B padded pairs: ``greedy_pairs_buffers`` on the padded
+    stacks p (B, N, 2), q (B, M, 2) read as flat curve tables, walking
+    the first ``lens_p``/``lens_q`` vertices of each row (the walk never
+    reads past them, so the bound does not depend on the padded width).
+    Bit-identical to core.greedy_upper_bound per pair (tested)."""
+    sel = 2 * np.arange(p.shape[0], dtype=np.int64)
+    return greedy_pairs_buffers(
+        _stack_table(p, lens_p), _stack_table(q, lens_q), sel, sel
+    )
 
-    The walk stops at the true ``lens_p``/``lens_q`` and never reads
-    padding, so its bound does not depend on the padded width. The
-    reversed walk of decide_pairs_buffers is this same call on
-    ``reversed_table`` curves."""
-    B = p.shape[0]
-    rows = np.arange(B)
-    n = np.asarray(lens_p, dtype=np.int64)
-    m = np.asarray(lens_q, dtype=np.int64)
-    i = np.zeros(B, dtype=np.int64)
-    j = np.zeros(B, dtype=np.int64)
 
-    def d2_at(ii: np.ndarray, jj: np.ndarray) -> np.ndarray:
-        d = p[rows, ii] - q[rows, jj]
-        return d[:, 0] * d[:, 0] + d[:, 1] * d[:, 1]
-
-    best = d2_at(i, j)
-    active = (i < n - 1) | (j < m - 1)
-    while active.any():
-        can_i = i < n - 1
-        can_j = j < m - 1
-        i1 = np.minimum(i + 1, n - 1)
-        j1 = np.minimum(j + 1, m - 1)
-        a = np.where(can_i, d2_at(i1, j), _INF)
-        b = np.where(can_j, d2_at(i, j1), _INF)
-        c = np.where(can_i & can_j, d2_at(i1, j1), _INF)
-        step = np.minimum(np.minimum(a, b), c)
-        diag = active & (step == c)
-        ai = active & ~diag & (step == a)
-        bj = active & ~diag & ~ai
-        i = np.where(diag | ai, i1, i)
-        j = np.where(diag | bj, j1, j)
-        best = np.where(active & (step > best), step, best)
-        active = (i < n - 1) | (j < m - 1)
-    return np.sqrt(best)
+def _stack_table(p: np.ndarray, lens: np.ndarray) -> tuple:
+    """A padded (B, N, 2) stack as a curve table of 2B curves: curve 2r is
+    the first ``lens[r]`` vertices of row r, curve 2r+1 the rest of the
+    row."""
+    B, N = p.shape[0], p.shape[1]
+    start = N * np.arange(B + 1, dtype=np.int64)
+    off = np.empty(2 * B + 1, dtype=np.int64)
+    off[0::2] = start
+    off[1::2] = start[:-1] + np.asarray(lens, dtype=np.int64)
+    return np.ascontiguousarray(p[..., 0]).ravel(), off, np.ascontiguousarray(p[..., 1]).ravel(), off
 
 
 def _list_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
@@ -560,8 +635,10 @@ def tile_map(
     rows: np.ndarray,
     dtype=bool,
 ) -> np.ndarray:
-    """The one padded gather loop of every ``*_buffers`` kernel: call
-    ``stage(p, t, r)`` on each length tile ``r`` of the pairs ``rows``
+    """The one padded gather loop of the ``*_buffers`` kernels (ETD, the
+    DP stages, the distance bisection; the greedy walks read the curve
+    tables directly): call ``stage(p, t, r)`` on each length tile ``r`` of
+    the pairs ``rows``
     (see ``tiles``), where ``p``/``t`` are the last-vertex-padded
     (B, N, 2)/(B, M, 2) stacks of curves ``qsel[r]`` of ``bq`` and
     ``tsel[r]`` of ``bt``; returns its answers, one per pair of ``rows``.
@@ -618,15 +695,6 @@ def _lengths(b: tuple, sel: np.ndarray) -> np.ndarray:
     return b[1][sel + 1] - b[1][sel]
 
 
-def reversed_table(b: tuple) -> tuple:
-    """The curve table ``b`` with every curve reversed: both flat buffers
-    reversed, so curve c of ``b`` is curve C-1-c of the result (C curves),
-    with offsets ``flat.size - off[::-1]`` — exact also for Arrow offsets
-    that do not start at 0. Zero-copy views of the flat buffers."""
-    fx, ox, fy, oy = b
-    return fx[::-1], fx.size - ox[::-1], fy[::-1], fy.size - oy[::-1]
-
-
 def decide_pairs_buffers(
     bq: tuple,
     bt: tuple,
@@ -649,18 +717,19 @@ def decide_pairs_buffers(
     into a shared curve table, so the pair rows carry no array bytes.
 
     The stages (ETD, greedy, reversed greedy, discrete-Fréchet accept,
-    F5 reject, exact decider) run in turn, each on the length tiles of
-    the pairs still undecided (``tile_map``). The reversed greedy is the
-    forward walk on ``reversed_table`` views of both curve tables, with
-    the same true lengths.
+    F5 reject, exact decider) run in turn, each on the pairs still
+    undecided: the two greedy walks as one flat walk each over all of
+    them (``greedy_pairs_buffers``, forward and ``reverse``), the ETD and
+    DP stages on their length tiles (``tile_map``).
 
     A pair's stage does not depend on how the pairs are grouped: both
-    greedy walks stop at the true lengths and never read padding, the
+    greedy walks read only the pair's own curves and never padding, the
     discrete-Fréchet DP (min/max of squared distances) ignores
     duplicated vertices, and ETD and the free-space decider see every
     curve end in at least one padding copy whatever the tile's width
     (``tile_map``). One call, a permuted call and a split call give the
-    same stage codes (tested)."""
+    same stage codes (tested), so callers may cut their pairs into calls
+    of any size."""
     from frechetrange_spark.kernels.core import negfilter
 
     B = int(qsel.size)
@@ -669,31 +738,36 @@ def decide_pairs_buffers(
     if B == 0:
         return (out, stages) if return_stages else out
     eps_arr = np.broadcast_to(np.asarray(eps, dtype=np.float64), (B,))
-    lens_p, lens_t = _lengths(bq, qsel), _lengths(bt, tsel)
     todo = np.arange(B)
 
-    def accept(stage, code: int, tables=(bq, bt, qsel, tsel)) -> None:
-        """Mark the ``todo`` pairs ``stage`` accepts with ``code``."""
+    def accept(test, code: int) -> None:
+        """Mark the ``todo`` pairs ``test(todo)`` accepts with ``code``."""
         nonlocal todo
         if todo.size:
-            acc = tile_map(stage, *tables, todo)
+            acc = test(todo)
             out[todo[acc]] = True
             stages[todo[acc]] = code
             todo = todo[~acc]
 
-    def greedy(p, t, r):
-        return greedy_ub_batch(p, t, lens_p[r], lens_t[r]) <= eps_arr[r]
+    def tiled(stage):
+        return lambda rows: tile_map(stage, bq, bt, qsel, tsel, rows)
+
+    def walk(reverse: bool):
+        return lambda rows: (
+            greedy_pairs_buffers(bq, bt, qsel[rows], tsel[rows], reverse) <= eps_arr[rows]
+        )
 
     if etd_accept:
-        accept(lambda p, t, r: etd_batch(p, t) <= eps_arr[r], STAGE_ETD_ACCEPT)
+        accept(tiled(lambda p, t, r: etd_batch(p, t) <= eps_arr[r]), STAGE_ETD_ACCEPT)
     if greedy_accept:
-        accept(greedy, STAGE_GREEDY_ACCEPT)
-    if rev_greedy_accept and todo.size:
-        rq, rt = reversed_table(bq), reversed_table(bt)
-        rev = (rq, rt, len(rq[1]) - 2 - qsel, len(rt[1]) - 2 - tsel)
-        accept(greedy, STAGE_GREEDY_REV_ACCEPT, rev)
+        accept(walk(False), STAGE_GREEDY_ACCEPT)
+    if rev_greedy_accept:
+        accept(walk(True), STAGE_GREEDY_REV_ACCEPT)
     if dfd_accept:
-        accept(lambda p, t, r: dfd_leq_batch(p, t, eps_arr[r] * eps_arr[r]), STAGE_DFD_ACCEPT)
+        accept(
+            tiled(lambda p, t, r: dfd_leq_batch(p, t, eps_arr[r] * eps_arr[r])),
+            STAGE_DFD_ACCEPT,
+        )
     if neg_reject and todo.size:
         drop = np.fromiter(
             (

@@ -45,6 +45,7 @@ from pyspark.sql.window import Window
 from frechetrange_spark.operators.range_query import (
     _INLINE,
     _curve_source,
+    _kernel_calls,
     _pairs_with_arrays,
     _sources,
     _xy,
@@ -350,14 +351,16 @@ def _etd_map(q_spec, t_spec):
     the curve sources ``q_spec``/``t_spec`` (range_query._curve_source):
     inline pair-row arrays, or broadcast packs under an ids-only pair
     stream (the candidate stream and the repartition shuffle then carry
-    16 B/pair instead of the array payload)."""
+    16 B/pair instead of the array payload). One kernel call per
+    ``range_query._kernel_calls`` group of a partition's Arrow batches;
+    per-pair values do not depend on the grouping."""
 
     def kernel(batches):
         import pyarrow as pa
 
         from frechetrange_spark.kernels.batch import etd_pairs_buffers
 
-        for rb in batches:
+        for rb in _kernel_calls(batches):
             qid = rb.column("query_id").to_numpy(zero_copy_only=False)
             tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
             qpack, qsel = _curve_source(q_spec, rb, qid, 0)
@@ -463,8 +466,9 @@ def _decide_distance_map(q_spec, t_spec, rel_tol: float = 1e-6):
 
     1e-6 relative bisection tolerance = the reference's own kNN-style
     bisection (benchmark/test.py:96, eps=1E-6); ranks are stable well
-    above it and it saves ~10 of ~37 decide sweeps per pair. Per-pair
-    results are independent of batch composition (see
+    above it and it saves ~10 of ~37 decide sweeps per pair. One kernel
+    call per ``range_query._kernel_calls`` group of a partition's Arrow
+    batches; per-pair results are independent of batch composition (see
     ``kernels.batch.distance_pairs_buffers``)."""
 
     def kernel(batches):
@@ -475,7 +479,7 @@ def _decide_distance_map(q_spec, t_spec, rel_tol: float = 1e-6):
             distance_pairs_buffers,
         )
 
-        for rb in batches:
+        for rb in _kernel_calls(batches):
             qid = rb.column("query_id").to_numpy(zero_copy_only=False)
             tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
             qpack, qsel = _curve_source(q_spec, rb, qid, 0)

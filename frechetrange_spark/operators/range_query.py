@@ -555,6 +555,41 @@ def _curve_source(spec, rb, ids: np.ndarray, simp_levels: int):
     return pack, _lookup(pack["ids"], ids)
 
 
+# Arrow bytes per refine kernel call: bounds the memory of a call over
+# inline sources (~4 x curve length x 8 B per pair row) while a call over
+# id-only sources (16 B per pair) takes a whole partition
+CALL_BYTES = 32 << 20
+
+
+def _kernel_calls(batches):
+    """The Arrow batches of one ``mapInArrow`` partition merged into
+    kernel calls: consecutive batches are concatenated while their total
+    stays within ``CALL_BYTES`` (a larger batch is a call of its own).
+    Every stage of the refine funnel then runs once per call instead of
+    once per Arrow batch (Spark cuts a partition every
+    ``maxRecordsPerBatch`` rows), and the DP stages' length tiles fill
+    from all of the call's pairs. The kernels' per-pair answers do not
+    depend on how pairs are grouped, so the rows are the same."""
+    group, size = [], 0
+    for rb in batches:
+        if group and size + rb.nbytes > CALL_BYTES:
+            yield _concat(group)
+            group, size = [], 0
+        group.append(rb)
+        size += rb.nbytes
+    if group:
+        yield _concat(group)
+
+
+def _concat(group: list):
+    """One RecordBatch holding the rows of the batches ``group``."""
+    import pyarrow as pa
+
+    if len(group) == 1:
+        return group[0]
+    return (pa.Table.from_batches(group).combine_chunks().to_batches() or group)[0]
+
+
 def _xy(pack: dict, level: str = "") -> tuple:
     """(flat_x, off_x, flat_y, off_y) of a pack's ``{level}xs``/``ys``
     columns — the curve-table shape of the kernels.batch ``*_buffers``
@@ -629,8 +664,10 @@ def _refine_map(
     sources: tuple = _INLINE,
 ):
     """Arrow-native refine: the exact decider (K5) batched over every pair
-    in each RecordBatch — list buffers are gathered into padded (B, N, 2)
-    matrices with zero per-row Python objects (see kernels.batch).
+    of a kernel call — a partition's consecutive Arrow batches merged up
+    to ``CALL_BYTES`` (``_kernel_calls``) — with zero per-row Python
+    objects: the greedy walks read the list buffers directly, the other
+    stages gather them into padded tiles (see kernels.batch).
 
     ``greedy_accept``/``neg_reject`` wire the bb filter pack (F4/F5,
     reference order detail/bb/spatial_index.hpp:198-209) into the
@@ -646,7 +683,7 @@ def _refine_map(
     the upper bound (exact by the triangle inequality since
     frechet(simp, orig) <= simpEps), MAYBE falls through to the next level
     and finally to the full-resolution ETD accept (F8, :828-840) + decider
-    (:846-856). The whole funnel is batched per Arrow batch — no shuffles
+    (:846-856). The whole funnel is batched per kernel call — no shuffles
     between stages.
 
     ``sources`` is the (query side, index side) pair of curve-source
@@ -659,7 +696,7 @@ def _refine_map(
     Arrow stream move ~16 bytes per pair instead of the full
     ~(4 x n_points x 8)-byte array payload: a broadcast pack holds the
     whole table (_pack_curves/_pack_broadcast); a disk pack store
-    (sources/pack_store) is gathered per batch for just the batch's ids,
+    (sources/pack_store) is gathered per call for just the call's ids,
     so the big side never transits the driver or a broadcast at all (the
     over-threshold 100-TB regime). Every source feeds the same funnel
     and decider, so stage taxonomy and results are source-independent."""
@@ -672,7 +709,7 @@ def _refine_map(
             decide_pairs_buffers,
         )
 
-        for rb in batches:
+        for rb in _kernel_calls(batches):
             B = rb.num_rows
             result = np.zeros(B, dtype=bool)
             stage = np.full(B, "", dtype=object) if stats else None
@@ -832,18 +869,27 @@ def _sources(
     ``meta={}``: no build-time payload estimate, no pack store."""
     spark = index_df.sparkSession
     thr = _broadcast_threshold(spark)
+    # the index side's payload estimate is computed ONCE at build time and
+    # carried in meta (like salt) — the auto gate must not re-scan the
+    # array columns of a 100-TB table per query. A self-join's queries ARE
+    # the indexed curves, so the same estimate serves the query side.
+    d_bytes = meta.get("payload_bytes")
+
+    def fits(df: DataFrame) -> bool:
+        if thr <= 0:
+            return False
+        if symmetric and d_bytes is not None:
+            return d_bytes <= thr
+        return _payload_bytes_gated(df, thr) <= thr
+
     q_fits = None  # the query side's payload fits the threshold
     if attach == "auto":
         attach = "shuffle"
         if thr > 0:
-            # the index side's payload estimate is computed ONCE at build
-            # time and carried in meta (like salt) — the auto gate must
-            # not re-scan the array columns of a 100-TB table per query
-            d_bytes = meta.get("payload_bytes")
             if d_bytes is None:
                 d_bytes = _payload_bytes_gated(index_df, thr)
             if d_bytes <= thr or meta.get("pack_path"):
-                q_fits = _payload_bytes_gated(queries, thr) <= thr
+                q_fits = fits(queries)
             if d_bytes <= thr and q_fits:
                 attach = "broadcast"
             elif meta.get("pack_path") and (
@@ -880,7 +926,7 @@ def _sources(
         # results (only ids absent from the store trip the loud
         # _lookup KeyError) — raise instead.
         if q_fits is None:
-            q_fits = thr > 0 and _payload_bytes_gated(queries, thr) <= thr
+            q_fits = fits(queries)
         if q_fits:
             q_spec = ("bcast", _pack_broadcast(queries, simp_levels))
         elif symmetric:
@@ -1075,7 +1121,8 @@ def _cfdq_refine_map(eps: float, simp_levels: int = 0):
     spatial_hash.hpp:771-856), then the CFDQ sparse decider (K6) with the
     dataset curve's stored portals (K9/O4, columns portal_src/dst/dist)
     on the few funnel survivors. Curves and portals come from the pair
-    rows through inline curve sources (_curve_source). CFDQ's sparse
+    rows through inline curve sources (_curve_source), one kernel call per
+    ``_kernel_calls`` group of Arrow batches. CFDQ's sparse
     interval walk is control-flow-heavy and stays scalar per pair, but it
     sees only funnel MAYBEs instead of every candidate; the per-survivor
     portals are passed as flat (srcs, dsts, dists) slices of the Arrow
@@ -1090,7 +1137,7 @@ def _cfdq_refine_map(eps: float, simp_levels: int = 0):
         from frechetrange_spark.kernels.batch import _curve
         from frechetrange_spark.kernels.cfdq import decide_frechet_cfdq
 
-        for rb in batches:
+        for rb in _kernel_calls(batches):
             res = np.zeros(rb.num_rows, dtype=bool)
             qid = rb.column("query_id").to_numpy(zero_copy_only=False)
             tid = rb.column("traj_id").to_numpy(zero_copy_only=False)

@@ -10,20 +10,23 @@ They are collected once with Spark into ``--cache`` (a directory under
 runs need no Spark.
 
 The replay shuffles the pairs with a fixed seed (the shape the
-round-robin repartition hands the kernel), cuts them into BATCH-pair
-batches and runs ``decide_pairs_buffers`` with ``range_query_grid``'s
-default refine flags on each, single-threaded. The kernel's stage
-functions are wrapped with timers (``stage_timers``), so the per-stage
-figures are those of the real kernel, not of a copy of its funnel. It
-prints one JSON line:
+round-robin repartition hands the kernel), cuts them into calls of
+``--batch`` pairs and runs ``decide_pairs_buffers`` with
+``range_query_grid``'s default refine flags on each, single-threaded.
+The default, 10,000, is one Arrow batch; the refine map merges a
+partition's batches into larger calls (``range_query._kernel_calls``),
+~45,000 pairs per call on this self-join at ``local[4]``. The kernel's
+stage functions are wrapped with timers (``stage_timers``), so the
+per-stage figures are those of the real kernel, not of a copy of its
+funnel. It prints one JSON line:
 
 - ``whole_us_per_pair``: the kernel's own cost per pair;
 - ``stages``: per funnel stage, the pairs it saw, its seconds and
   µs/pair, and its padded-cell efficiency — useful cells / swept cells,
   where a pair's cells are len_p + len_t for the O(N+M) walk stages and
-  len_p x len_t for the O(N*M) DP stages. Only for a kernel that runs
-  its stages in turn (one with ``kernels.batch.reversed_table``); an
-  older checkout reports its codes and whole cost only.
+  len_p x len_t for the O(N*M) DP stages. Only for a kernel whose greedy
+  stages are flat walks (one with ``kernels.batch.greedy_pairs_buffers``);
+  an older checkout reports its codes and whole cost only.
 
 ``--record`` stores the stage code of every pair in the cache;
 ``--check`` compares this run's codes with the stored ones, counts the
@@ -51,7 +54,6 @@ sys.path.append(REPO)
 
 from bench import EPS, MESH, SF_DIR  # noqa: E402  (bench.py's sf0.1 self-join)
 
-BATCH = 10_000  # pairs per replayed batch
 SEED = 0  # pair shuffle seed
 CPUS = 4  # Spark cores of the one-time collection
 # range_query_grid's default refine flags (funnel_stats off)
@@ -105,30 +107,15 @@ def load(path: str):
 def stage_timers(kb, stats: dict) -> None:
     """Wrap the stage kernels of the module ``kb`` (kernels.batch) so each
     call adds its seconds, pairs and swept cells into ``stats[stage]``;
-    ``decide_pairs_buffers`` looks them up at call time. The kernel runs
-    its stages in turn, and the reversed greedy walk is the forward walk
-    on reversed curve tables, so ``greedy_ub_batch`` calls count as the
-    forward walk until the kernel builds those tables (``reversed_table``)
-    and as the reversed walk from then on, up to the next ``etd_batch``
-    call (the first stage of the next ``decide_pairs_buffers`` call)."""
-    walk = ["greedy"]
+    ``decide_pairs_buffers`` looks them up at call time. The two greedy
+    walks are one entry point (``greedy_pairs_buffers``), told apart by
+    its ``reverse`` flag; they pad nothing, so they sweep exactly the
+    pairs' own vertices. The other stages run on padded tiles."""
 
-    def etd():
-        walk[0] = "greedy"
-        return "etd"
-
-    def reversed_table(b):
-        walk[0] = "greedy_rev"
-        return table(b)
-
-    table = kb.reversed_table
-    kb.reversed_table = reversed_table
-
-    def wrap(name, stage_of):
+    def wrap(name, stage):
         fn = getattr(kb, name)
 
         def timed(p, t, *args, **kwargs):
-            stage = stage_of()
             t0 = time.perf_counter()
             res = fn(p, t, *args, **kwargs)
             s = stats[stage]
@@ -140,10 +127,21 @@ def stage_timers(kb, stats: dict) -> None:
 
         setattr(kb, name, timed)
 
-    wrap("etd_batch", etd)
-    wrap("greedy_ub_batch", lambda: walk[0])
-    wrap("dfd_leq_batch", lambda: "dfd")
-    wrap("decide_frechet_batch", lambda: "decider")
+    walk = kb.greedy_pairs_buffers
+
+    def walk_timed(bq, bt, qsel, tsel, reverse=False):
+        t0 = time.perf_counter()
+        res = walk(bq, bt, qsel, tsel, reverse)
+        s = stats["greedy_rev" if reverse else "greedy"]
+        s["secs"] += time.perf_counter() - t0
+        s["pairs"] += qsel.size
+        s["swept"] += int(kb._lengths(bq, qsel).sum() + kb._lengths(bt, tsel).sum())
+        return res
+
+    kb.greedy_pairs_buffers = walk_timed
+    wrap("etd_batch", "etd")
+    wrap("dfd_leq_batch", "dfd")
+    wrap("decide_frechet_batch", "decider")
 
 
 def main() -> None:
@@ -151,6 +149,7 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=SF_DIR)
     ap.add_argument("--cache", default="/tmp/frechet_kernel_pairs")
     ap.add_argument("--engine", default=REPO, help="checkout whose frechetrange_spark is replayed")
+    ap.add_argument("--batch", type=int, default=10_000, help="pairs per kernel call")
     mode = ap.add_mutually_exclusive_group()
     mode.add_argument("--record", action="store_true", help="store this run's stage codes")
     mode.add_argument(
@@ -170,15 +169,15 @@ def main() -> None:
     n = int(qsel.size)
 
     stats = {s: dict(pairs=0, secs=0.0, swept=0) for s in STAGES}
-    # the stage timers need the stage-by-stage kernel (``reversed_table``);
+    # the stage timers need the flat-walk kernel (``greedy_pairs_buffers``);
     # an older checkout is replayed for its codes and whole cost only
-    staged = hasattr(kb, "reversed_table")
+    staged = hasattr(kb, "greedy_pairs_buffers")
     if staged:
         stage_timers(kb, stats)
     codes = np.zeros(n, dtype=np.int8)
     t0 = time.perf_counter()
-    for s in range(0, n, BATCH):
-        b = slice(s, s + BATCH)
+    for s in range(0, n, args.batch):
+        b = slice(s, s + args.batch)
         codes[b] = kb.decide_pairs_buffers(
             buf, buf, qsel[b], tsel[b], EPS, return_stages=True, **FLAGS
         )[1]
@@ -211,6 +210,7 @@ def main() -> None:
         }
     out = {
         "pairs": n,
+        "batch": args.batch,
         "engine": os.path.abspath(args.engine),
         "whole_s": round(whole, 3),
         "whole_us_per_pair": round(1e6 * whole / max(n, 1), 2),

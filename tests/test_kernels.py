@@ -784,12 +784,9 @@ class TestUpperBoundAcceptFilters:
         from frechetrange_spark.kernels.batch import (
             STAGE_GREEDY_REV_ACCEPT,
             TILE,
-            _lengths,
             decide_pairs_buffers,
-            greedy_ub_batch,
+            greedy_pairs_buffers,
             pair_tables,
-            reversed_table,
-            tile_map,
         )
 
         rng = np.random.default_rng(43)
@@ -813,12 +810,7 @@ class TestUpperBoundAcceptFilters:
         assert bq[1][0] > 0 and bq[1][0] != bq[3][0]
         want = np.array([greedy_upper_bound(p[::-1], q[::-1]) for p, q in zip(ps, qs)])
 
-        lp, lt = _lengths(bq, qsel), _lengths(bt, tsel)
-        rq, rt = reversed_table(bq), reversed_table(bt)
-        got = tile_map(
-            lambda p, t, r: greedy_ub_batch(p, t, lp[r], lt[r]),
-            rq, rt, n - 1 - qsel, n - 1 - tsel, np.arange(n), np.float64,
-        )
+        got = greedy_pairs_buffers(bq, bt, qsel, tsel, reverse=True)
         assert (got == want).all()
 
         # eps at the bound (accept) or one ulp below it (reject)
@@ -828,6 +820,60 @@ class TestUpperBoundAcceptFilters:
             rev_greedy_accept=True, return_stages=True,
         )[1]
         assert ((codes == STAGE_GREEDY_REV_ACCEPT) == (want <= eps)).all()
+
+    def test_flat_walk_equals_scalar_greedy(self):
+        """``greedy_pairs_buffers`` forward equals core.greedy_upper_bound
+        of each pair and ``reverse=True`` equals it on both curves
+        reversed, bit for bit: ragged pairs with 1- and 2-vertex curves,
+        duplicate vertices and integer coordinates (exact step ties, so
+        the diagonal-then-i tie order matters), over curve tables from
+        sliced Arrow list columns whose x and y offsets differ and do not
+        start at 0. ``greedy_ub_batch`` on padded stacks, forward and
+        reversed, equals the flat walk."""
+        import pyarrow as pa
+
+        from frechetrange_spark.kernels.batch import (
+            greedy_pairs_buffers,
+            greedy_ub_batch,
+            pad_curves,
+            pair_tables,
+        )
+
+        rng = np.random.default_rng(53)
+
+        def curve(k):
+            c = np.cumsum(rng.integers(-1, 2, (k, 2)), axis=0).astype(np.float64)
+            if rng.random() < 0.5:
+                c += rng.uniform(-0.5, 0.5, c.shape)
+            if k > 1 and rng.random() < 0.3:
+                c = np.repeat(c, rng.integers(1, 3, k), axis=0)  # duplicates
+            return c
+
+        # every pairing of 1- and 2-vertex curves first, then ragged ones
+        small = [(a, b) for a in (1, 2) for b in (1, 2)] * 3
+        sizes = small + [tuple(rng.integers(1, 40, 2)) for _ in range(700)]
+        ps = [curve(int(a)) for a, _ in sizes]
+        qs = [curve(int(b)) + rng.integers(-2, 3, 2) for _, b in sizes]
+
+        def col(curves, d, head, tail):
+            junk = [rng.uniform(-9, 9, rng.integers(1, 6)).tolist() for _ in range(head + tail)]
+            rows = junk[:head] + [c[:, d].tolist() for c in curves] + junk[head:]
+            return pa.array(rows, pa.list_(pa.float64())).slice(head, len(curves))
+
+        bq, bt, qsel, tsel = pair_tables(
+            col(ps, 0, 4, 2), col(ps, 1, 1, 3), col(qs, 0, 6, 1), col(qs, 1, 2, 5)
+        )
+        assert bq[1][0] > 0 and bq[1][0] != bq[3][0] and bt[1][0] != bt[3][0]
+        fwd = greedy_pairs_buffers(bq, bt, qsel, tsel)
+        rev = greedy_pairs_buffers(bq, bt, qsel, tsel, reverse=True)
+        assert (fwd == [greedy_upper_bound(p, q) for p, q in zip(ps, qs)]).all()
+        assert (rev == [greedy_upper_bound(p[::-1], q[::-1]) for p, q in zip(ps, qs)]).all()
+        assert (fwd != rev).any()
+
+        for curves_p, curves_q, want in ((ps, qs, fwd), ([p[::-1] for p in ps], [q[::-1] for q in qs], rev)):
+            P, lp = pad_curves(curves_p)
+            Q, lq = pad_curves(curves_q)
+            assert (greedy_ub_batch(P, Q, lp, lq) == want).all()
 
     def test_filters_do_not_change_results(self):
         import pyarrow as pa

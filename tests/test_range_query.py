@@ -387,3 +387,172 @@ class TestAutoMesh:
 
         with pytest.raises(ValueError):
             build_grid_index(corpus, mesh=None)
+
+
+def test_self_join_attach_uses_build_payload(spark, corpus, monkeypatch):
+    """A self-join's attach decision (``symmetric=True``: the queries are
+    the indexed curves) reads the query side's payload from the index's
+    build-time ``payload_bytes`` and runs no payload job of its own."""
+    from frechetrange_spark.operators import range_query as rq
+
+    index_df, meta = build_grid_index(corpus, 15.0)
+
+    def no_scan(df, thr):
+        raise AssertionError("payload job on a self-join")
+
+    monkeypatch.setattr(rq, "_payload_bytes_gated", no_scan)
+    q, t = rq._sources(index_df, corpus, meta, 0, True, "auto")
+    assert q[0] == t[0] == "bcast"
+    with pytest.raises(AssertionError, match="payload job"):
+        rq._sources(index_df, corpus, meta, 0, False, "auto")
+
+
+class TestKernelCalls:
+    """The refine and kNN maps hand a partition's Arrow batches to the
+    kernels as a few large calls (``_kernel_calls``): the rows must not
+    depend on how Spark cut the partition into batches, nor on how the
+    batches are merged into calls."""
+
+    @staticmethod
+    def _pairs(n=1500, seed=61):
+        """(curves, qi, ti): 90 curves resampled from 30 walks, and pairs
+        of curves that are mostly from the same walk, so every refine
+        stage decides some of them at eps 1."""
+        import numpy as np
+
+        rng = np.random.default_rng(seed)
+        walks = [np.cumsum(rng.uniform(-1, 1, (30, 2)), axis=0) for _ in range(30)]
+        curves = []
+        for w in walks:
+            for _ in range(3):
+                k = int(rng.integers(2, 40))
+                u = np.sort(np.concatenate([[0.0, 29.0], rng.uniform(0, 29, k - 2)]))
+                c = np.column_stack([np.interp(u, np.arange(30), w[:, d]) for d in (0, 1)])
+                curves.append(c + rng.normal(0, 0.2, c.shape))
+        qi = rng.integers(0, 90, n)
+        ti = np.where(rng.random(n) < 0.7, 3 * (qi // 3) + rng.integers(0, 3, n), rng.integers(0, 90, n))
+        return curves, qi.astype(np.int64), ti.astype(np.int64)
+
+    @staticmethod
+    def _batches(cols: dict, sizes) -> list:
+        """The rows of ``cols`` cut into consecutive batches of ``sizes``."""
+        import pyarrow as pa
+
+        rb = pa.RecordBatch.from_pydict(cols)
+        out, s = [], 0
+        for k in sizes:
+            out.append(rb.slice(s, k))
+            s += k
+        assert s == rb.num_rows
+        return out
+
+    @staticmethod
+    def _rows(fn, batches) -> list:
+        import pyarrow as pa
+
+        rows = pa.Table.from_batches(list(fn(iter(batches)))).to_pylist()
+        return sorted(tuple(r.values()) for r in rows)
+
+    def _same_rows(self, fn, cols, n, monkeypatch):
+        """``fn``'s rows on one batch equal its rows on 60 small batches,
+        merged into one call or, with a small byte budget, into several."""
+        import numpy as np
+
+        from frechetrange_spark.operators import range_query as rq
+
+        rng = np.random.default_rng(5)
+        cuts = np.sort(rng.choice(np.arange(1, n), 59, replace=False))
+        sizes = np.diff(np.concatenate([[0], cuts, [n]])).tolist()
+        whole = self._rows(fn, self._batches(cols, [n]))
+        assert len(whole) > 0
+        assert self._rows(fn, self._batches(cols, sizes)) == whole
+        small = self._batches(cols, sizes)
+        monkeypatch.setattr(rq, "CALL_BYTES", sum(b.nbytes for b in small) // 7)
+        assert len(list(rq._kernel_calls(iter(small)))) > 1
+        assert self._rows(fn, small) == whole
+        return whole
+
+    def test_refine_map_rows_independent_of_batches(self, monkeypatch):
+        from types import SimpleNamespace
+
+        import numpy as np
+
+        from frechetrange_spark.operators.range_query import _refine_map
+
+        curves, qi, ti = self._pairs()
+        n = qi.size
+        ids = np.arange(len(curves), dtype=np.int64) * 10 + 3
+        inline = {
+            "query_id": ids[qi],
+            "traj_id": ids[ti],
+            "q_xs": [curves[i][:, 0] for i in qi],
+            "q_ys": [curves[i][:, 1] for i in qi],
+            "xs": [curves[i][:, 0] for i in ti],
+            "ys": [curves[i][:, 1] for i in ti],
+        }
+        off = np.concatenate([[0], np.cumsum([len(c) for c in curves])]).astype(np.int64)
+        pack = {
+            "ids": ids,
+            "cols": {
+                "xs": (np.concatenate([c[:, 0] for c in curves]), off),
+                "ys": (np.concatenate([c[:, 1] for c in curves]), off),
+            },
+            "scal": {},
+        }
+        bcast = ("bcast", SimpleNamespace(value=pack))
+        flags = dict(greedy_accept=True, rev_greedy_accept=True, dfd_accept=True)
+        for stats in (False, True):
+            fn = _refine_map(1.0, mirror=True, stats=stats, **flags)
+            rows = self._same_rows(fn, inline, n, monkeypatch)
+            ids_only = {"query_id": inline["query_id"], "traj_id": inline["traj_id"]}
+            fb = _refine_map(1.0, mirror=True, stats=stats, sources=(bcast, bcast), **flags)
+            assert self._same_rows(fb, ids_only, n, monkeypatch) == rows
+            if stats:
+                stages = {r[2] for r in rows}
+                assert {"etd_accept", "greedy_accept", "decider_no"} <= stages
+
+    def test_knn_maps_rows_independent_of_batches(self, monkeypatch):
+        import numpy as np
+
+        from frechetrange_spark.operators.knn import _decide_distance_map, _etd_map
+        from frechetrange_spark.operators.range_query import _INLINE
+
+        curves, qi, ti = self._pairs(n=600, seed=67)
+        cols = {
+            "query_id": qi,
+            "traj_id": ti,
+            "q_xs": [curves[i][:, 0] for i in qi],
+            "q_ys": [curves[i][:, 1] for i in qi],
+            "xs": [curves[i][:, 0] for i in ti],
+            "ys": [curves[i][:, 1] for i in ti],
+        }
+        etd = self._same_rows(_etd_map(*_INLINE), cols, qi.size, monkeypatch)
+        assert len(etd) == qi.size
+        cols["radius"] = np.full(qi.size, 1.5)
+        dist = self._same_rows(_decide_distance_map(*_INLINE), cols, qi.size, monkeypatch)
+        assert 0 < len(dist) < qi.size
+
+    def test_over_budget_input_is_split_into_calls(self, monkeypatch):
+        import numpy as np
+        import pyarrow as pa
+
+        from frechetrange_spark.operators import range_query as rq
+
+        batches = [
+            pa.RecordBatch.from_pydict({"query_id": np.arange(s, s + 100)})
+            for s in range(0, 1000, 100)
+        ]
+        per = batches[0].nbytes
+
+        def calls():
+            out = list(rq._kernel_calls(iter(batches)))
+            ids = np.concatenate([c.column("query_id").to_numpy() for c in out])
+            assert (ids == np.arange(1000)).all()
+            return [c.num_rows for c in out]
+
+        assert calls() == [1000]
+        monkeypatch.setattr(rq, "CALL_BYTES", 3 * per)
+        assert calls() == [300, 300, 300, 100]
+        # a batch over the budget is a call of its own
+        monkeypatch.setattr(rq, "CALL_BYTES", per // 2)
+        assert calls() == [100] * 10
