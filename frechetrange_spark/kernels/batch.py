@@ -35,6 +35,13 @@ likewise gain from large calls (fuller tiles, fewer loop passes), which
 is why the refine maps merge a partition's Arrow batches into a few
 calls.
 
+The ETD stage (``etd_pairs_buffers``, the one ETD entry of the engine)
+computes each referenced curve's arc-length knots once per call, not
+once per pair, and ``etd_batch`` interpolates only the other curve at
+each curve's own knot events. Both DP stages (``dfd_leq_batch``,
+``decide_frechet_batch``) store their vertex planes (vertex, pair) with
+q reversed, so each anti-diagonal reads contiguous row slices.
+
 Decisions use per-pair eps, which also gives a batched bisection for the
 distance value (K12, samples/plain.cpp:47-60): all pairs bisect in
 lockstep on their own brackets.
@@ -265,70 +272,109 @@ def decide_frechet_batch(
     return out
 
 
-def etd_batch(p: np.ndarray, q: np.ndarray) -> np.ndarray:
+def _knots(p: np.ndarray) -> np.ndarray:
+    """Relative arc-length knots (B, N) of the last-vertex-padded stack p
+    (B, N, 2): the prefix lengths divided by the total length, the last
+    knot exactly 1 (0 for a zero-length curve). A padded vertex adds a
+    zero-length segment, so its knot repeats the curve's last one."""
+    t = np.zeros(p.shape[:2])
+    np.cumsum(np.sqrt(np.sum(np.diff(p, axis=1) ** 2, axis=2)), axis=1, out=t[:, 1:])
+    total = t[:, -1:]
+    r = np.divide(t, total, out=np.zeros_like(t), where=total > 0.0)
+    r[:, -1] = np.where(total[:, 0] > 0.0, 1.0, 0.0)
+    return r
+
+
+def _sample(knots: np.ndarray, xy: np.ndarray, j: np.ndarray, times: np.ndarray) -> np.ndarray:
+    """Points (B, E, 2) of the curves xy (B, K, 2) at the relative times
+    ``times`` (B, E), each on segment ``j`` (B, E) (0 <= j <= max(K-2, 0))
+    of its curve's knots (B, K): ``v0 + frac * (v1 - v0)`` with frac the
+    clipped position of the time between the segment's knots, 0 on a
+    zero-length segment. Flat ``take`` gathers."""
+    B, K = knots.shape
+    i0 = j + K * np.arange(B)[:, None]
+    i1 = i0 + 1 if K > 1 else i0
+    kf = knots.reshape(-1)
+    k0, k1 = kf.take(i0), kf.take(i1)
+    den = k1 - k0
+    # Full-speed SIMD divide + select: a `where=`-masked divide falls back
+    # to buffered iteration, and with padded curves many knot gaps are
+    # exact ties (den == 0). Divide unconditionally (0/0 and x/0
+    # suppressed), then select.
+    with np.errstate(divide="ignore", invalid="ignore"):
+        frac = (times - k0) / den
+    frac = np.where(den > 0.0, frac, 0.0)
+    np.clip(frac, 0.0, 1.0, out=frac)
+    xy = xy.reshape(-1, 2)
+    v0 = xy.take(i0, axis=0)
+    v1 = xy.take(i1, axis=0)
+    v1 -= v0
+    v1 *= frac[..., None]
+    v1 += v0
+    return v1
+
+
+def etd_batch(
+    p: np.ndarray, q: np.ndarray, kp: np.ndarray | None = None, kq: np.ndarray | None = None
+) -> np.ndarray:
     """Batched equal-time distance (F8 upper bound, bddm:253-362) over
     last-vertex-padded stacks p (B,N,2), q (B,M,2). Returns (B,) floats.
+    ``kp``/``kq`` are the stacks' relative arc-length knots (B,N)/(B,M)
+    as ``_knots`` gives them, e.g. gathered from ``etd_pairs_buffers``'s
+    per-curve knot tables; computed here when omitted.
 
     Both curves are traversed at equal relative arc-length speed; the
     pairwise distance is convex between knot events, so the max over the
     union of both knot sets is exact. Padding adds zero-length segments,
-    i.e. duplicate knots — harmless under max."""
+    i.e. duplicate knots — harmless under max.
+
+    The events are the merged knots of both curves, as by a stable sort
+    of their concatenation (a p knot before an equal q knot); at each
+    event both curves are sampled on the segment of their last knot at
+    or before it. The two event sets are evaluated apart, with the same
+    float operations as sampling both curves at every merged event:
+
+    - at its own knot i <= N-2 a curve sits exactly on vertex i (frac 0),
+      so only the other curve is interpolated;
+    - its last knot i = N-1 lies on segment N-2, where ``v0 + frac * (v1
+      - v0)`` need not round to v1, so it keeps that formula;
+    - the other curve's segment is its count of knots before the event,
+      read off the merged rank (the inverse of the stable argsort
+      permutation) minus the event's own index."""
+    p = np.asarray(p, dtype=np.float64)
+    q = np.asarray(q, dtype=np.float64)
     B, N = p.shape[0], p.shape[1]
     M = q.shape[1]
-    tp = np.zeros((B, N))
-    np.cumsum(
-        np.sqrt(np.sum(np.diff(p, axis=1) ** 2, axis=2)), axis=1, out=tp[:, 1:]
-    )
-    tq = np.zeros((B, M))
-    np.cumsum(
-        np.sqrt(np.sum(np.diff(q, axis=1) ** 2, axis=2)), axis=1, out=tq[:, 1:]
-    )
-    lp = tp[:, -1:]
-    lq = tq[:, -1:]
-    rp = np.divide(tp, lp, out=np.zeros_like(tp), where=lp > 0.0)
-    rq = np.divide(tq, lq, out=np.zeros_like(tq), where=lq > 0.0)
-    rp[:, -1] = np.where(lp[:, 0] > 0.0, 1.0, 0.0)
-    rq[:, -1] = np.where(lq[:, 0] > 0.0, 1.0, 0.0)
+    rp = _knots(p) if kp is None else kp
+    rq = _knots(q) if kq is None else kq
+    order = np.argsort(np.concatenate([rp, rq], axis=1), axis=1, kind="stable")
+    rank = np.empty_like(order)
+    rank.reshape(-1)[order + (N + M) * np.arange(B)[:, None]] = np.arange(N + M)
+    # p knot i has rank - i q knots before it, q knot m rank - m p knots
+    jq = np.clip(rank[:, :N] - np.arange(1, N + 1), 0, max(M - 2, 0))
+    jp = np.clip(rank[:, N:] - np.arange(1, M + 1), 0, max(N - 2, 0))
 
-    # Merge both knot sets: stable argsort over the concatenation puts
-    # rp-knots before equal rq-knots, so running counts give, per merged
-    # event time, the index of the last knot <= t on each curve — a
-    # vectorized merge, no per-pair searchsorted.
-    both = np.concatenate([rp, rq], axis=1)  # (B, N+M)
-    order = np.argsort(both, axis=1, kind="stable")
-    times = np.take_along_axis(both, order, axis=1)
-    from_p = order < N
-    jp = np.clip(np.cumsum(from_p, axis=1) - 1, 0, max(N - 2, 0))
-    jq = np.clip(np.cumsum(~from_p, axis=1) - 1, 0, max(M - 2, 0))
+    def last(k: np.ndarray, xy: np.ndarray) -> np.ndarray:
+        """(B, 2): each curve at its own last knot, on its last segment."""
+        j = np.full((B, 1), max(k.shape[1] - 2, 0))
+        return _sample(k, xy, j, k[:, -1:])[:, 0]
 
-    def sample(knots: np.ndarray, xy: np.ndarray, j: np.ndarray) -> np.ndarray:
-        j1 = np.minimum(j + 1, knots.shape[1] - 1)
-        k0 = np.take_along_axis(knots, j, axis=1)
-        k1 = np.take_along_axis(knots, j1, axis=1)
-        den = k1 - k0
-        # Full-speed SIMD divide + select: a `where=`-masked divide falls
-        # back to buffered iteration, and with padded curves ~half the
-        # knot gaps are exact ties (den == 0), making the masked path the
-        # kernel's warm-time hot spot. Dividing unconditionally (0/0 and
-        # x/0 suppressed) then selecting is ~4x faster at 50% ties.
-        with np.errstate(divide="ignore", invalid="ignore"):
-            frac = (times - k0) / den
-        frac = np.where(den > 0.0, frac, 0.0)
-        np.clip(frac, 0.0, 1.0, out=frac)
-        out = np.empty((knots.shape[0], times.shape[1], 2))
-        for d in range(2):
-            # gather from a contiguous copy: xy[:, :, d] is a stride-2
-            # view and take_along_axis on it is markedly slower
-            coord = np.ascontiguousarray(xy[:, :, d])
-            v0 = np.take_along_axis(coord, j, axis=1)
-            v1 = np.take_along_axis(coord, j1, axis=1)
-            out[:, :, d] = v0 + frac * (v1 - v0)
-        return out
+    def max_d2(d: np.ndarray) -> np.ndarray:
+        np.square(d, out=d)
+        return (d[..., 0] + d[..., 1]).max(axis=1)
 
-    pe = sample(rp, p, jp)
-    qe = sample(rq, q, jq)
-    d2 = np.sum((pe - qe) ** 2, axis=2)
-    return np.sqrt(d2.max(axis=1))
+    # p's events: d = p - q(t), p at its own knots
+    d = _sample(rq, q, jq, rp)
+    d_last = last(rp, p) - d[:, -1]
+    np.subtract(p, d, out=d)
+    d[:, -1] = d_last
+    d2 = max_d2(d)
+    # q's events: d = p(t) - q, q at its own knots
+    d = _sample(rp, p, jp, rq)
+    d_last = d[:, -1] - last(rq, q)
+    d -= q
+    d[:, -1] = d_last
+    return np.sqrt(np.maximum(d2, max_d2(d)))
 
 
 def greedy_pairs_buffers(
@@ -489,18 +535,21 @@ def dfd_leq_batch(p: np.ndarray, q: np.ndarray, eps2: np.ndarray) -> np.ndarray:
     Swept by anti-diagonals, vectorized over the batch: cell (i, j) of
     the DP ``dp = max(D, min(dp[i-1, j], dp[i, j-1], dp[i-1, j-1]))``
     reads two cells of diagonal k-1 = i+j-1 and one of diagonal k-2, so
-    each diagonal is ONE elementwise max/min pass over (B, diagonal
-    length) — no sequential dependency inside it, N+M-1 passes per
-    batch. D is the squared vertex distance ``dx*dx + dy*dy``; all DP ops
-    are exact (min/max/compare), so the accept set is deterministic and
-    independent of batch composition and padding width.
+    each diagonal is ONE elementwise max/min pass over (diagonal length,
+    B) — no sequential dependency inside it, N+M-1 passes per batch. As
+    in ``decide_frechet_batch``, the vertex planes and the diagonals are
+    stored (vertex, pair) with q reversed, so every diagonal reads
+    contiguous row slices. D is the squared vertex distance
+    ``dx*dx + dy*dy``; all DP ops are exact (min/max/compare), so the
+    accept set is deterministic and independent of batch composition and
+    padding width.
 
     Early exit: every monotone path crosses diagonal k or k+1 and dp
     never decreases along a path, so the min over two consecutive
     diagonals is a non-decreasing lower bound of the result. Pairs whose
     bound exceeds eps2 can never accept; they are compacted out
-    mid-sweep once at most half the batch is alive (they are handed to
-    the exact decider by the caller anyway)."""
+    mid-sweep (``[:, keep]``) once at most half the batch is alive (they
+    are handed to the exact decider by the caller anyway)."""
     p = np.asarray(p, dtype=np.float64)
     q = np.asarray(q, dtype=np.float64)
     B, N = p.shape[0], p.shape[1]
@@ -510,50 +559,53 @@ def dfd_leq_batch(p: np.ndarray, q: np.ndarray, eps2: np.ndarray) -> np.ndarray:
         return out
     eps2 = np.broadcast_to(np.asarray(eps2, dtype=np.float64), (B,)).copy()
     orig = np.arange(B)
-    # x/y planes; q reversed so diagonal k's q vertices j = k - i, for
-    # ascending i, are one ascending slice (index M-1-j)
-    px, py = np.ascontiguousarray(p[..., 0]), np.ascontiguousarray(p[..., 1])
-    rx = np.ascontiguousarray(q[:, ::-1, 0])
-    ry = np.ascontiguousarray(q[:, ::-1, 1])
+    # (vertex, pair) planes; q reversed so diagonal k's q vertices
+    # j = k - i, for ascending i, are one ascending row slice (M-1-j)
+    px, py = np.ascontiguousarray(p[..., 0].T), np.ascontiguousarray(p[..., 1].T)
+    rx = np.ascontiguousarray(q[:, ::-1, 0].T)
+    ry = np.ascontiguousarray(q[:, ::-1, 1].T)
 
     def diag_d(k: int, lo: int, hi: int) -> np.ndarray:
         s = M - 1 - k
-        dx = px[:, lo : hi + 1] - rx[:, s + lo : s + hi + 1]
-        dy = py[:, lo : hi + 1] - ry[:, s + lo : s + hi + 1]
-        return dx * dx + dy * dy
+        dx = px[lo : hi + 1] - rx[s + lo : s + hi + 1]
+        dy = py[lo : hi + 1] - ry[s + lo : s + hi + 1]
+        dx *= dx
+        dy *= dy
+        dx += dy
+        return dx
 
-    # diagonal k holds dp(i, k-i) for i in [lo_k, hi_k] at column
-    # 1 + i - lo_k; columns 0 and -1 are +inf (the off-grid neighbours)
-    cur = np.full((B, 3), _INF)
-    cur[:, 1] = diag_d(0, 0, 0)[:, 0]
+    # diagonal k holds dp(i, k-i) for i in [lo_k, hi_k] at row
+    # 1 + i - lo_k; rows 0 and -1 are +inf (the off-grid neighbours)
+    cur = np.full((3, B), _INF)
+    cur[1] = diag_d(0, 0, 0)[0]
     lo_c = 0
     prev, lo_p = None, 0
-    mn_c = cur[:, 1]
+    mn_c = cur[1]
     for k in range(1, N + M - 1):
         lo, hi = max(0, k - M + 1), min(k, N - 1)
         L = hi - lo + 1
-        s1 = lo - lo_c  # column of dp(lo-1, k-lo) in diagonal k-1
-        best = np.minimum(cur[:, s1 : s1 + L], cur[:, s1 + 1 : s1 + 1 + L])
+        s1 = lo - lo_c  # row of dp(lo-1, k-lo) in diagonal k-1
+        best = np.minimum(cur[s1 : s1 + L], cur[s1 + 1 : s1 + 1 + L])
         if prev is not None:
-            s2 = lo - lo_p  # column of dp(lo-1, k-1-lo) in diagonal k-2
-            np.minimum(best, prev[:, s2 : s2 + L], out=best)
-        nxt = np.empty((cur.shape[0], L + 2))
-        nxt[:, 0] = _INF
-        nxt[:, -1] = _INF
-        np.maximum(diag_d(k, lo, hi), best, out=nxt[:, 1:-1])
-        mn_n = nxt[:, 1:-1].min(axis=1)
+            s2 = lo - lo_p  # row of dp(lo-1, k-1-lo) in diagonal k-2
+            np.minimum(best, prev[s2 : s2 + L], out=best)
+        nxt = np.empty((L + 2, cur.shape[1]))
+        nxt[0] = _INF
+        nxt[-1] = _INF
+        np.maximum(diag_d(k, lo, hi), best, out=nxt[1:-1])
+        mn_n = nxt[1:-1].min(axis=0)
         prev, lo_p, cur, lo_c = cur, lo_c, nxt, lo
         alive = np.minimum(mn_c, mn_n) <= eps2
         mn_c = mn_n
         n_alive = int(alive.sum())
         if n_alive == 0:
             return out
-        if n_alive <= cur.shape[0] // 2 and cur.shape[0] > 64:
+        if n_alive <= alive.size // 2 and alive.size > 64:
             keep = np.nonzero(alive)[0]
             orig, eps2, mn_c = orig[keep], eps2[keep], mn_c[keep]
-            cur, prev = cur[keep], prev[keep]
-            px, py, rx, ry = px[keep], py[keep], rx[keep], ry[keep]
-    out[orig] = cur[:, 1] <= eps2
+            cur, prev = cur[:, keep], prev[:, keep]
+            px, py, rx, ry = px[:, keep], py[:, keep], rx[:, keep], ry[:, keep]
+    out[orig] = cur[1] <= eps2
     return out
 
 
@@ -718,9 +770,10 @@ def decide_pairs_buffers(
 
     The stages (ETD, greedy, reversed greedy, discrete-Fréchet accept,
     F5 reject, exact decider) run in turn, each on the pairs still
-    undecided: the two greedy walks as one flat walk each over all of
-    them (``greedy_pairs_buffers``, forward and ``reverse``), the ETD and
-    DP stages on their length tiles (``tile_map``).
+    undecided: ETD as one ``etd_pairs_buffers`` call (per-curve knot
+    tables, then length tiles), the two greedy walks as one flat walk
+    each over all of them (``greedy_pairs_buffers``, forward and
+    ``reverse``), the DP stages on their length tiles (``tile_map``).
 
     A pair's stage does not depend on how the pairs are grouped: both
     greedy walks read only the pair's own curves and never padding, the
@@ -749,23 +802,26 @@ def decide_pairs_buffers(
             stages[todo[acc]] = code
             todo = todo[~acc]
 
-    def tiled(stage):
-        return lambda rows: tile_map(stage, bq, bt, qsel, tsel, rows)
-
     def walk(reverse: bool):
         return lambda rows: (
             greedy_pairs_buffers(bq, bt, qsel[rows], tsel[rows], reverse) <= eps_arr[rows]
         )
 
     if etd_accept:
-        accept(tiled(lambda p, t, r: etd_batch(p, t) <= eps_arr[r]), STAGE_ETD_ACCEPT)
+        accept(
+            lambda rows: etd_pairs_buffers(bq, bt, qsel[rows], tsel[rows]) <= eps_arr[rows],
+            STAGE_ETD_ACCEPT,
+        )
     if greedy_accept:
         accept(walk(False), STAGE_GREEDY_ACCEPT)
     if rev_greedy_accept:
         accept(walk(True), STAGE_GREEDY_REV_ACCEPT)
     if dfd_accept:
         accept(
-            tiled(lambda p, t, r: dfd_leq_batch(p, t, eps_arr[r] * eps_arr[r])),
+            lambda rows: tile_map(
+                lambda p, t, r: dfd_leq_batch(p, t, eps_arr[r] * eps_arr[r]),
+                bq, bt, qsel, tsel, rows,
+            ),
             STAGE_DFD_ACCEPT,
         )
     if neg_reject and todo.size:
@@ -800,10 +856,59 @@ def etd_pairs_buffers(
 ) -> np.ndarray:
     """Batched equal-time distance (F8) per pair, over raw list buffers
     with per-pair curve indirection (cf. decide_pairs_buffers): pair i
-    compares curve ``qsel[i]`` of bq against curve ``tsel[i]`` of bt."""
-    return tile_map(
-        lambda p, t, r: etd_batch(p, t), bq, bt, qsel, tsel, np.arange(qsel.size), np.float64
-    )
+    compares curve ``qsel[i]`` of bq against curve ``tsel[i]`` of bt.
+
+    The relative arc-length knots are computed once per call for each
+    distinct curve the pairs reference (``_knot_table``; one table when
+    ``bq is bt``), not once per pair; each length tile gathers its knot
+    rows, padded like its vertex stacks, and hands them to ``etd_batch``.
+    The values are bit-identical to ``etd_batch`` computing the knots on
+    the tile itself (tested)."""
+    qsel = np.asarray(qsel, dtype=np.int64)
+    tsel = np.asarray(tsel, dtype=np.int64)
+    if bq is bt:
+        kf, ko, idx = _knot_table(bq, np.concatenate([qsel, tsel]))
+        kq, kt = (kf, ko, idx[: qsel.size]), (kf, ko, idx[qsel.size :])
+    else:
+        kq, kt = _knot_table(bq, qsel), _knot_table(bt, tsel)
+
+    def stage(p, t, r):
+        return etd_batch(
+            p,
+            t,
+            _padded_gather(kq[0], kq[1], kq[2][r], p.shape[1]),
+            _padded_gather(kt[0], kt[1], kt[2][r], t.shape[1]),
+        )
+
+    return tile_map(stage, bq, bt, qsel, tsel, np.arange(qsel.size), np.float64)
+
+
+def _knot_table(b: tuple, sel: np.ndarray) -> tuple:
+    """(flat, off, idx): the relative arc-length knots (``_knots``) of the
+    distinct curves ``sel`` references in the curve table ``b``, as a
+    flat table of its own (compact curve r's knots are ``flat[off[r] :
+    off[r+1]]``), and ``idx[i]``, the compact row of curve ``sel[i]``.
+    Its size is the referenced curves' vertex count, whatever the size
+    of ``b``. The compact rows are in length order, and the knots are
+    computed on length tiles of TILE curves, each padded to its longest
+    curve: a padded vertex only repeats the last knot, so every curve's
+    knots are those of any padded stack holding it."""
+    fx, ox, fy, oy = b
+    ids, inv = np.unique(sel, return_inverse=True)
+    lens = _lengths(b, ids)
+    order = np.argsort(lens, kind="stable")
+    ids, lens = ids[order], lens[order]
+    row = np.empty_like(order)
+    row[order] = np.arange(order.size)
+    off = np.zeros(ids.size + 1, dtype=np.int64)
+    np.cumsum(lens, out=off[1:])
+    flat = np.empty(int(off[-1]))
+    for s in range(0, ids.size, TILE):
+        c, n = ids[s : s + TILE], lens[s : s + TILE]
+        w = int(n.max())
+        k = _knots(np.stack([_padded_gather(fx, ox, c, w), _padded_gather(fy, oy, c, w)], axis=-1))
+        flat[off[s] : off[s + c.size]] = k[np.arange(w) < n[:, None]]
+    return flat, off, row[inv]
 
 
 def distance_pairs_buffers(

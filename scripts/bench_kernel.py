@@ -107,41 +107,58 @@ def load(path: str):
 def stage_timers(kb, stats: dict) -> None:
     """Wrap the stage kernels of the module ``kb`` (kernels.batch) so each
     call adds its seconds, pairs and swept cells into ``stats[stage]``;
-    ``decide_pairs_buffers`` looks them up at call time. The two greedy
-    walks are one entry point (``greedy_pairs_buffers``), told apart by
-    its ``reverse`` flag; they pad nothing, so they sweep exactly the
-    pairs' own vertices. The other stages run on padded tiles."""
+    ``decide_pairs_buffers`` looks them up at call time.
 
-    def wrap(name, stage):
+    - ETD is timed at its per-call entry ``etd_pairs_buffers``, so its
+      seconds include the per-curve knot tables; its swept cells are
+      counted per padded tile in ``etd_batch``. (A kernel whose ETD stage
+      calls ``etd_batch`` per tile directly is timed there: its tile
+      figures go to ``stats["etd_tiles"]`` and ``main`` uses them.)
+    - The two greedy walks are one entry point (``greedy_pairs_buffers``),
+      told apart by its ``reverse`` flag; they pad nothing, so they sweep
+      exactly the pairs' own vertices.
+    - The DP stages run on padded tiles."""
+
+    def wrap(name, account):
         fn = getattr(kb, name)
 
-        def timed(p, t, *args, **kwargs):
+        def timed(*args, **kwargs):
             t0 = time.perf_counter()
-            res = fn(p, t, *args, **kwargs)
-            s = stats[stage]
-            s["secs"] += time.perf_counter() - t0
-            b, wp, wt = p.shape[0], p.shape[1], t.shape[1]
-            s["pairs"] += b
-            s["swept"] += b * (wp * wt if stage in DP_STAGES else wp + wt)
+            res = fn(*args, **kwargs)
+            account(time.perf_counter() - t0, *args, **kwargs)
             return res
 
         setattr(kb, name, timed)
 
-    walk = kb.greedy_pairs_buffers
+    def tiles(stage, timed_as=None):
+        def account(secs, p, t, *args, **kwargs):
+            b, wp, wt = p.shape[0], p.shape[1], t.shape[1]
+            stats[stage]["swept"] += b * (wp * wt if stage in DP_STAGES else wp + wt)
+            s = stats[timed_as or stage]
+            s["secs"] += secs
+            s["pairs"] += b
 
-    def walk_timed(bq, bt, qsel, tsel, reverse=False):
-        t0 = time.perf_counter()
-        res = walk(bq, bt, qsel, tsel, reverse)
-        s = stats["greedy_rev" if reverse else "greedy"]
-        s["secs"] += time.perf_counter() - t0
-        s["pairs"] += qsel.size
-        s["swept"] += int(kb._lengths(bq, qsel).sum() + kb._lengths(bt, tsel).sum())
-        return res
+        return account
 
-    kb.greedy_pairs_buffers = walk_timed
-    wrap("etd_batch", "etd")
-    wrap("dfd_leq_batch", "dfd")
-    wrap("decide_frechet_batch", "decider")
+    def pairs(stage_of, swept=False):
+        def account(secs, bq, bt, qsel, tsel, *args, **kwargs):
+            s = stats[stage_of(*args, **kwargs)]
+            s["secs"] += secs
+            s["pairs"] += qsel.size
+            if swept:
+                s["swept"] += int(kb._lengths(bq, qsel).sum() + kb._lengths(bt, tsel).sum())
+
+        return account
+
+    stats["etd_tiles"] = dict(pairs=0, secs=0.0, swept=0)
+    wrap("etd_pairs_buffers", pairs(lambda: "etd"))
+    wrap("etd_batch", tiles("etd", timed_as="etd_tiles"))
+    wrap(
+        "greedy_pairs_buffers",
+        pairs(lambda reverse=False: "greedy_rev" if reverse else "greedy", swept=True),
+    )
+    wrap("dfd_leq_batch", tiles("dfd"))
+    wrap("decide_frechet_batch", tiles("decider"))
 
 
 def main() -> None:
@@ -182,6 +199,8 @@ def main() -> None:
             buf, buf, qsel[b], tsel[b], EPS, return_stages=True, **FLAGS
         )[1]
     whole = time.perf_counter() - t0
+    if staged and stats["etd"]["pairs"] == 0:  # ETD stage without etd_pairs_buffers
+        stats["etd"].update(pairs=stats["etd_tiles"]["pairs"], secs=stats["etd_tiles"]["secs"])
 
     # useful cells per stage: the real curve lengths of the pairs that
     # reach it, i.e. that no earlier stage accepted

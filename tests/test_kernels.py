@@ -690,6 +690,43 @@ class TestUpperBoundAcceptFilters:
             assert (got == (truth <= eps2)).all(), f"trial {trial}"
             assert got[kind == 0].all() and not got[kind == 1].any()
 
+    def test_dfd_compaction_matches_oracle_and_single_calls(self):
+        """dfd_leq_batch on batches of more than 64 pairs whose pairs are
+        rejected early, at many different diagonals, so that the sweep
+        compacts its (vertex, pair) planes mid-sweep, several times:
+        equal to the O(nm) oracle and to one call per pair. Three in five
+        pairs start farther apart than eps (rejected on the first
+        diagonal, more than half the batch); the rest are noisy copies of
+        one walk that drift off it at a random vertex."""
+        from frechetrange_spark.kernels.batch import dfd_leq_batch, pad_curves
+
+        rng = np.random.default_rng(31)
+        for trial in range(6):
+            B = int(rng.integers(150, 400))
+            ps, qs = [], []
+            for b in range(B):
+                n, m = int(rng.integers(2, 40)), int(rng.integers(2, 40))
+                walk = np.cumsum(rng.uniform(-1, 1, (max(n, m), 2)), axis=0)
+                p = walk[:n] + rng.normal(0, 0.05, (n, 2))
+                q = walk[:m] + rng.normal(0, 0.05, (m, 2))
+                q[int(rng.integers(0, m)) :] += rng.uniform(-3, 3, 2)  # drift off
+                if b % 5 < 3:
+                    q += 10.0  # first vertices far apart
+                ps.append(p)
+                qs.append(q)
+            truth = np.array([discrete_frechet_sq(a, b) for a, b in zip(ps, qs)])
+            far = np.arange(B) % 5 < 3
+            eps2 = np.where(~far & (rng.random(B) < 0.3), truth, rng.uniform(0.05, 4.0, B))
+            P, _ = pad_curves(ps)
+            Q, _ = pad_curves(qs)
+            d00 = ((P[:, 0] - Q[:, 0]) ** 2).sum(axis=1)
+            assert (d00 > eps2).sum() > B // 2  # compacted on the first diagonal
+            got = dfd_leq_batch(P, Q, eps2)
+            assert (got == (truth <= eps2)).all(), f"trial {trial}"
+            assert got.any() and (~got & (d00 <= eps2)).any()
+            alone = [dfd_leq_batch(P[i : i + 1], Q[i : i + 1], eps2[i : i + 1])[0] for i in range(B)]
+            assert (got == alone).all(), f"trial {trial}"
+
     def test_stage_codes_independent_of_batch_composition(self):
         """With every filter on, a pair's stage code is the same whether
         it is decided in one call, a permuted call, or a call split in
@@ -893,3 +930,175 @@ class TestUpperBoundAcceptFilters:
                 rev_greedy_accept=True, dfd_accept=True,
             )
             assert (base == fast).all(), f"result drift at eps={e}"
+
+
+def _etd_merged_argsort(p, q):
+    """Reference ETD over last-vertex-padded stacks: both curves sampled
+    at every event of the merged knot sequence (stable argsort of the
+    concatenated knots, running counts as segment indices), as the
+    kernel computed it before it evaluated the two event sets apart."""
+    B, N = p.shape[0], p.shape[1]
+    M = q.shape[1]
+
+    def knots(c):
+        t = np.zeros(c.shape[:2])
+        np.cumsum(np.sqrt(np.sum(np.diff(c, axis=1) ** 2, axis=2)), axis=1, out=t[:, 1:])
+        total = t[:, -1:]
+        r = np.divide(t, total, out=np.zeros_like(t), where=total > 0.0)
+        r[:, -1] = np.where(total[:, 0] > 0.0, 1.0, 0.0)
+        return r
+
+    rp, rq = knots(p), knots(q)
+    both = np.concatenate([rp, rq], axis=1)
+    order = np.argsort(both, axis=1, kind="stable")
+    times = np.take_along_axis(both, order, axis=1)
+    from_p = order < N
+    jp = np.clip(np.cumsum(from_p, axis=1) - 1, 0, max(N - 2, 0))
+    jq = np.clip(np.cumsum(~from_p, axis=1) - 1, 0, max(M - 2, 0))
+
+    def sample(k, xy, j):
+        j1 = np.minimum(j + 1, k.shape[1] - 1)
+        k0, k1 = np.take_along_axis(k, j, axis=1), np.take_along_axis(k, j1, axis=1)
+        den = k1 - k0
+        with np.errstate(divide="ignore", invalid="ignore"):
+            frac = np.where(den > 0.0, (times - k0) / den, 0.0)
+        frac = np.clip(frac, 0.0, 1.0)
+        out = np.empty(times.shape + (2,))
+        for d in range(2):
+            v0 = np.take_along_axis(xy[:, :, d], j, axis=1)
+            v1 = np.take_along_axis(xy[:, :, d], j1, axis=1)
+            out[:, :, d] = v0 + frac * (v1 - v0)
+        return out
+
+    d2 = np.sum((sample(rp, p, jp) - sample(rq, q, jq)) ** 2, axis=2)
+    return np.sqrt(d2.max(axis=1))
+
+
+class TestEqualTimeDistance:
+    """``etd_batch`` evaluates each curve's knot events apart (a curve at
+    its own knot is its vertex, the other curve is interpolated) and
+    ``etd_pairs_buffers`` computes each referenced curve's knots once per
+    call. Both must be bit-identical to the merged-event reference."""
+
+    @staticmethod
+    def _curves(rng, n):
+        """n curves of every awkward kind: 1 and 2 vertices, evenly spaced
+        vertices (exact cross-curve knot ties), duplicate vertices,
+        zero-length curves, integer grids and random walks far apart at
+        the end (so the last knot often sets the maximum)."""
+        out = []
+        for i in range(n):
+            k = int(rng.integers(1, 3)) if i % 7 == 0 else int(rng.integers(1, 25))
+            kind = i % 5
+            if kind == 0:  # evenly spaced on a line: knots j / (k-1)
+                c = np.column_stack([np.arange(k) * 0.5, np.full(k, rng.integers(-2, 3))])
+            elif kind == 1:  # zero length
+                c = np.repeat(rng.uniform(-3, 3, (1, 2)), k, axis=0)
+            elif kind == 2:  # integer grid with duplicate vertices
+                c = np.cumsum(rng.integers(-1, 2, (k, 2)), axis=0).astype(np.float64)
+                c = np.repeat(c, rng.integers(1, 3, k), axis=0)
+            else:
+                c = np.cumsum(rng.uniform(-1, 1, (k, 2)), axis=0)
+                c[-1] += rng.uniform(-6, 6, 2)
+            out.append(c.astype(np.float64))
+        return out
+
+    @staticmethod
+    def _bits(a):
+        return np.asarray(a, dtype=np.float64).view(np.int64)
+
+    def test_padded_stacks_match_merged_reference(self):
+        """Two-argument ``etd_batch`` on ``pad_curves`` stacks (no padding
+        copy on each side's longest curve, whose last knot then lies on a
+        segment of positive length, where ``v0 + frac * (v1 - v0)`` need
+        not round to the last vertex) and with its knots passed in. Every
+        third trial has curves of one length, so no curve is padded."""
+        from frechetrange_spark.kernels.batch import _knots, etd_batch, pad_curves
+
+        rng = np.random.default_rng(61)
+        for trial in range(30):
+            B = int(rng.integers(1, 60))
+            ps, qs = self._curves(rng, B), self._curves(rng, B)
+            rng.shuffle(qs)
+            if trial % 6 == 0:  # zero-length curves on both sides
+                ps = [np.repeat(c[:1], len(c), axis=0) for c in ps]
+                qs = [np.repeat(c[:1], len(c), axis=0) for c in qs]
+            if trial % 3 == 1:  # one length, far-apart ends
+                n, m = (int(v) for v in rng.integers(2, 20, 2))
+                ps = list(np.cumsum(rng.uniform(-1, 1, (B, n, 2)), axis=1))
+                qs = list(np.cumsum(rng.uniform(-1, 1, (B, m, 2)), axis=1))
+                for c in ps + qs:
+                    c[-1] += rng.uniform(-6, 6, 2)
+            P, _ = pad_curves(ps)
+            Q, _ = pad_curves(qs)
+            want = self._bits(_etd_merged_argsort(P, Q))
+            assert (self._bits(etd_batch(P, Q)) == want).all(), f"trial {trial}"
+            got = etd_batch(P, Q, _knots(P), _knots(Q))
+            assert (self._bits(got) == want).all(), f"trial {trial}"
+
+    def test_pairs_buffers_match_merged_reference(self):
+        """``etd_pairs_buffers`` over sliced Arrow list columns whose x and
+        y offsets differ and do not start at 0, once with two curve tables
+        and once with one shared table (``bq is bt``): each pair's value
+        equals the reference on the pair alone, each curve padded by one
+        copy of its last vertex as ``tile_map`` pads it."""
+        import pyarrow as pa
+
+        from frechetrange_spark.kernels.batch import _list_buffers, etd_pairs_buffers, pair_tables
+
+        rng = np.random.default_rng(67)
+        n = 900
+        ps, qs = self._curves(rng, n), self._curves(rng, n)
+        rng.shuffle(qs)
+
+        def alone(p, q):
+            return _etd_merged_argsort(np.vstack([p, p[-1:]])[None], np.vstack([q, q[-1:]])[None])[0]
+
+        want = np.array([alone(p, q) for p, q in zip(ps, qs)])
+
+        def col(curves, d, head, tail):
+            junk = [rng.uniform(-9, 9, rng.integers(1, 6)).tolist() for _ in range(head + tail)]
+            rows = junk[:head] + [c[:, d].tolist() for c in curves] + junk[head:]
+            return pa.array(rows, pa.list_(pa.float64())).slice(head, len(curves))
+
+        bq, bt, qsel, tsel = pair_tables(
+            col(ps, 0, 4, 2), col(ps, 1, 1, 3), col(qs, 0, 6, 1), col(qs, 1, 2, 5)
+        )
+        assert bq[1][0] > 0 and bq[1][0] != bq[3][0] and bt[1][0] != bt[3][0]
+        assert (self._bits(etd_pairs_buffers(bq, bt, qsel, tsel)) == self._bits(want)).all()
+
+        both = ps + qs
+        shared = (*_list_buffers(col(both, 0, 3, 1)), *_list_buffers(col(both, 1, 5, 2)))
+        assert shared[1][0] != shared[3][0]
+        # every curve twice, in shuffled pairs over the one table
+        perm = rng.permutation(n)
+        qsel = np.concatenate([perm, n + perm])
+        tsel = np.concatenate([n + perm, perm])
+        got = etd_pairs_buffers(shared, shared, qsel, tsel)
+        assert (self._bits(got[:n]) == self._bits(want[perm])).all()
+        rev = np.array([alone(q, p) for p, q in zip(ps, qs)])
+        assert (self._bits(got[n:]) == self._bits(rev[perm])).all()
+
+    def test_knot_table_memory_bounded_by_referenced_curves(self):
+        """The per-call knot table holds the knots of the curves the pairs
+        reference, not of the whole curve table: over a 2M-vertex table
+        (a knot per vertex would be 16 MB) three pairs peak far below."""
+        import tracemalloc
+
+        from frechetrange_spark.kernels.batch import etd_pairs_buffers
+
+        rng = np.random.default_rng(71)
+        n_curves, k = 20_000, 100
+        fx = np.cumsum(rng.uniform(-1, 1, n_curves * k))
+        fy = np.cumsum(rng.uniform(-1, 1, n_curves * k))
+        off = k * np.arange(n_curves + 1, dtype=np.int64)
+        table = (fx, off, fy, off)
+        qsel = np.array([5, 17_000, 9_999], dtype=np.int64)
+        tsel = np.array([6, 123, 19_999], dtype=np.int64)
+        tracemalloc.start()
+        try:
+            etd_pairs_buffers(table, table, qsel, tsel)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 2 * 1024 * 1024, f"peak {peak / 2**20:.1f} MiB"
