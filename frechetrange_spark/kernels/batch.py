@@ -36,11 +36,11 @@ is why the refine maps merge a partition's Arrow batches into a few
 calls.
 
 The ETD stage (``etd_pairs_buffers``, the one ETD entry of the engine)
-computes each referenced curve's arc-length knots once per call, not
-once per pair, and ``etd_batch`` interpolates only the other curve at
-each curve's own knot events. Both DP stages (``dfd_leq_batch``,
-``decide_frechet_batch``) store their vertex planes (vertex, pair) with
-q reversed, so each anti-diagonal reads contiguous row slices.
+runs ``etd_batch`` on its length tiles; ``etd_batch`` interpolates only
+the other curve at each curve's own knot events. Both DP stages
+(``dfd_leq_batch``, ``decide_frechet_batch``) store their vertex planes
+(vertex, pair) with q reversed, so each anti-diagonal reads contiguous
+row slices.
 
 Decisions use per-pair eps, which also gives a batched bisection for the
 distance value (K12, samples/plain.cpp:47-60): all pairs bisect in
@@ -276,9 +276,13 @@ def _knots(p: np.ndarray) -> np.ndarray:
     """Relative arc-length knots (B, N) of the last-vertex-padded stack p
     (B, N, 2): the prefix lengths divided by the total length, the last
     knot exactly 1 (0 for a zero-length curve). A padded vertex adds a
-    zero-length segment, so its knot repeats the curve's last one."""
+    zero-length segment, so its knot repeats the curve's last one.
+    Segment lengths are sqrt(dx*dx + dy*dy), the float operations of
+    ``np.sum(d ** 2, axis=2)`` without its slow length-2 reduction."""
     t = np.zeros(p.shape[:2])
-    np.cumsum(np.sqrt(np.sum(np.diff(p, axis=1) ** 2, axis=2)), axis=1, out=t[:, 1:])
+    d = np.diff(p, axis=1)
+    d *= d
+    np.cumsum(np.sqrt(d[..., 0] + d[..., 1]), axis=1, out=t[:, 1:])
     total = t[:, -1:]
     r = np.divide(t, total, out=np.zeros_like(t), where=total > 0.0)
     r[:, -1] = np.where(total[:, 0] > 0.0, 1.0, 0.0)
@@ -314,14 +318,9 @@ def _sample(knots: np.ndarray, xy: np.ndarray, j: np.ndarray, times: np.ndarray)
     return v1
 
 
-def etd_batch(
-    p: np.ndarray, q: np.ndarray, kp: np.ndarray | None = None, kq: np.ndarray | None = None
-) -> np.ndarray:
+def etd_batch(p: np.ndarray, q: np.ndarray) -> np.ndarray:
     """Batched equal-time distance (F8 upper bound, bddm:253-362) over
     last-vertex-padded stacks p (B,N,2), q (B,M,2). Returns (B,) floats.
-    ``kp``/``kq`` are the stacks' relative arc-length knots (B,N)/(B,M)
-    as ``_knots`` gives them, e.g. gathered from ``etd_pairs_buffers``'s
-    per-curve knot tables; computed here when omitted.
 
     Both curves are traversed at equal relative arc-length speed; the
     pairwise distance is convex between knot events, so the max over the
@@ -345,8 +344,7 @@ def etd_batch(
     q = np.asarray(q, dtype=np.float64)
     B, N = p.shape[0], p.shape[1]
     M = q.shape[1]
-    rp = _knots(p) if kp is None else kp
-    rq = _knots(q) if kq is None else kq
+    rp, rq = _knots(p), _knots(q)
     order = np.argsort(np.concatenate([rp, rq], axis=1), axis=1, kind="stable")
     rank = np.empty_like(order)
     rank.reshape(-1)[order + (N + M) * np.arange(B)[:, None]] = np.arange(N + M)
@@ -770,10 +768,10 @@ def decide_pairs_buffers(
 
     The stages (ETD, greedy, reversed greedy, discrete-Fréchet accept,
     F5 reject, exact decider) run in turn, each on the pairs still
-    undecided: ETD as one ``etd_pairs_buffers`` call (per-curve knot
-    tables, then length tiles), the two greedy walks as one flat walk
-    each over all of them (``greedy_pairs_buffers``, forward and
-    ``reverse``), the DP stages on their length tiles (``tile_map``).
+    undecided: ETD as one ``etd_pairs_buffers`` call, the two greedy
+    walks as one flat walk each over all of them
+    (``greedy_pairs_buffers``, forward and ``reverse``), ETD and the DP
+    stages on their length tiles (``tile_map``).
 
     A pair's stage does not depend on how the pairs are grouped: both
     greedy walks read only the pair's own curves and never padding, the
@@ -858,57 +856,16 @@ def etd_pairs_buffers(
     with per-pair curve indirection (cf. decide_pairs_buffers): pair i
     compares curve ``qsel[i]`` of bq against curve ``tsel[i]`` of bt.
 
-    The relative arc-length knots are computed once per call for each
-    distinct curve the pairs reference (``_knot_table``; one table when
-    ``bq is bt``), not once per pair; each length tile gathers its knot
-    rows, padded like its vertex stacks, and hands them to ``etd_batch``.
-    The values are bit-identical to ``etd_batch`` computing the knots on
-    the tile itself (tested)."""
-    qsel = np.asarray(qsel, dtype=np.int64)
-    tsel = np.asarray(tsel, dtype=np.int64)
-    if bq is bt:
-        kf, ko, idx = _knot_table(bq, np.concatenate([qsel, tsel]))
-        kq, kt = (kf, ko, idx[: qsel.size]), (kf, ko, idx[qsel.size :])
-    else:
-        kq, kt = _knot_table(bq, qsel), _knot_table(bt, tsel)
-
-    def stage(p, t, r):
-        return etd_batch(
-            p,
-            t,
-            _padded_gather(kq[0], kq[1], kq[2][r], p.shape[1]),
-            _padded_gather(kt[0], kt[1], kt[2][r], t.shape[1]),
-        )
-
-    return tile_map(stage, bq, bt, qsel, tsel, np.arange(qsel.size), np.float64)
-
-
-def _knot_table(b: tuple, sel: np.ndarray) -> tuple:
-    """(flat, off, idx): the relative arc-length knots (``_knots``) of the
-    distinct curves ``sel`` references in the curve table ``b``, as a
-    flat table of its own (compact curve r's knots are ``flat[off[r] :
-    off[r+1]]``), and ``idx[i]``, the compact row of curve ``sel[i]``.
-    Its size is the referenced curves' vertex count, whatever the size
-    of ``b``. The compact rows are in length order, and the knots are
-    computed on length tiles of TILE curves, each padded to its longest
-    curve: a padded vertex only repeats the last knot, so every curve's
-    knots are those of any padded stack holding it."""
-    fx, ox, fy, oy = b
-    ids, inv = np.unique(sel, return_inverse=True)
-    lens = _lengths(b, ids)
-    order = np.argsort(lens, kind="stable")
-    ids, lens = ids[order], lens[order]
-    row = np.empty_like(order)
-    row[order] = np.arange(order.size)
-    off = np.zeros(ids.size + 1, dtype=np.int64)
-    np.cumsum(lens, out=off[1:])
-    flat = np.empty(int(off[-1]))
-    for s in range(0, ids.size, TILE):
-        c, n = ids[s : s + TILE], lens[s : s + TILE]
-        w = int(n.max())
-        k = _knots(np.stack([_padded_gather(fx, ox, c, w), _padded_gather(fy, oy, c, w)], axis=-1))
-        flat[off[s] : off[s + c.size]] = k[np.arange(w) < n[:, None]]
-    return flat, off, row[inv]
+    Each length tile (``tile_map``) computes its curves' arc-length
+    knots itself. Knots kept per distinct curve of a call would be
+    computed once per curve rather than once per pair reference, but do
+    not pay: over a shared curve table (each curve in ~10 pairs) they
+    save ~4% of ETD time, within the replay's run-to-run spread, and over
+    inline sources (each curve in one pair) they cost ~30% (BENCH.md)."""
+    return tile_map(
+        lambda p, t, r: etd_batch(p, t),
+        bq, bt, qsel, tsel, np.arange(qsel.size), np.float64,
+    )
 
 
 def distance_pairs_buffers(

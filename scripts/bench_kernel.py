@@ -25,8 +25,9 @@ funnel. It prints one JSON line:
   µs/pair, and its padded-cell efficiency — useful cells / swept cells,
   where a pair's cells are len_p + len_t for the O(N+M) walk stages and
   len_p x len_t for the O(N*M) DP stages. Only for a kernel whose greedy
-  stages are flat walks (one with ``kernels.batch.greedy_pairs_buffers``);
-  an older checkout reports its codes and whole cost only.
+  stages are flat walks (``kernels.batch.greedy_pairs_buffers``) and whose
+  ETD stage is one ``etd_pairs_buffers`` call; an older checkout reports
+  its codes and whole cost only.
 
 ``--record`` stores the stage code of every pair in the cache;
 ``--check`` compares this run's codes with the stored ones, counts the
@@ -110,10 +111,8 @@ def stage_timers(kb, stats: dict) -> None:
     ``decide_pairs_buffers`` looks them up at call time.
 
     - ETD is timed at its per-call entry ``etd_pairs_buffers``, so its
-      seconds include the per-curve knot tables; its swept cells are
-      counted per padded tile in ``etd_batch``. (A kernel whose ETD stage
-      calls ``etd_batch`` per tile directly is timed there: its tile
-      figures go to ``stats["etd_tiles"]`` and ``main`` uses them.)
+      seconds include everything the stage does per call; its swept
+      cells are counted per padded tile in ``etd_batch``.
     - The two greedy walks are one entry point (``greedy_pairs_buffers``),
       told apart by its ``reverse`` flag; they pad nothing, so they sweep
       exactly the pairs' own vertices.
@@ -130,13 +129,14 @@ def stage_timers(kb, stats: dict) -> None:
 
         setattr(kb, name, timed)
 
-    def tiles(stage, timed_as=None):
+    def tiles(stage, timed=True):
         def account(secs, p, t, *args, **kwargs):
             b, wp, wt = p.shape[0], p.shape[1], t.shape[1]
-            stats[stage]["swept"] += b * (wp * wt if stage in DP_STAGES else wp + wt)
-            s = stats[timed_as or stage]
-            s["secs"] += secs
-            s["pairs"] += b
+            s = stats[stage]
+            s["swept"] += b * (wp * wt if stage in DP_STAGES else wp + wt)
+            if timed:
+                s["secs"] += secs
+                s["pairs"] += b
 
         return account
 
@@ -150,9 +150,8 @@ def stage_timers(kb, stats: dict) -> None:
 
         return account
 
-    stats["etd_tiles"] = dict(pairs=0, secs=0.0, swept=0)
     wrap("etd_pairs_buffers", pairs(lambda: "etd"))
-    wrap("etd_batch", tiles("etd", timed_as="etd_tiles"))
+    wrap("etd_batch", tiles("etd", timed=False))
     wrap(
         "greedy_pairs_buffers",
         pairs(lambda reverse=False: "greedy_rev" if reverse else "greedy", swept=True),
@@ -199,8 +198,9 @@ def main() -> None:
             buf, buf, qsel[b], tsel[b], EPS, return_stages=True, **FLAGS
         )[1]
     whole = time.perf_counter() - t0
-    if staged and stats["etd"]["pairs"] == 0:  # ETD stage without etd_pairs_buffers
-        stats["etd"].update(pairs=stats["etd_tiles"]["pairs"], secs=stats["etd_tiles"]["secs"])
+    # a kernel whose ETD stage does not go through etd_pairs_buffers
+    # (before it was the stage's entry) reports its codes and whole cost only
+    staged = staged and stats["etd"]["pairs"] > 0
 
     # useful cells per stage: the real curve lengths of the pairs that
     # reach it, i.e. that no earlier stage accepted

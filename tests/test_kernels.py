@@ -976,9 +976,10 @@ def _etd_merged_argsort(p, q):
 
 class TestEqualTimeDistance:
     """``etd_batch`` evaluates each curve's knot events apart (a curve at
-    its own knot is its vertex, the other curve is interpolated) and
-    ``etd_pairs_buffers`` computes each referenced curve's knots once per
-    call. Both must be bit-identical to the merged-event reference."""
+    its own knot is its vertex, the other curve is interpolated), and
+    ``_knots`` skips ``np.sum``'s length-2 reduction. Both it and
+    ``etd_pairs_buffers`` must be bit-identical to the merged-event
+    reference."""
 
     @staticmethod
     def _curves(rng, n):
@@ -1008,12 +1009,12 @@ class TestEqualTimeDistance:
         return np.asarray(a, dtype=np.float64).view(np.int64)
 
     def test_padded_stacks_match_merged_reference(self):
-        """Two-argument ``etd_batch`` on ``pad_curves`` stacks (no padding
-        copy on each side's longest curve, whose last knot then lies on a
-        segment of positive length, where ``v0 + frac * (v1 - v0)`` need
-        not round to the last vertex) and with its knots passed in. Every
-        third trial has curves of one length, so no curve is padded."""
-        from frechetrange_spark.kernels.batch import _knots, etd_batch, pad_curves
+        """``etd_batch`` on ``pad_curves`` stacks (no padding copy on each
+        side's longest curve, whose last knot then lies on a segment of
+        positive length, where ``v0 + frac * (v1 - v0)`` need not round to
+        the last vertex). Every third trial has curves of one length, so
+        no curve is padded."""
+        from frechetrange_spark.kernels.batch import etd_batch, pad_curves
 
         rng = np.random.default_rng(61)
         for trial in range(30):
@@ -1033,15 +1034,14 @@ class TestEqualTimeDistance:
             Q, _ = pad_curves(qs)
             want = self._bits(_etd_merged_argsort(P, Q))
             assert (self._bits(etd_batch(P, Q)) == want).all(), f"trial {trial}"
-            got = etd_batch(P, Q, _knots(P), _knots(Q))
-            assert (self._bits(got) == want).all(), f"trial {trial}"
 
     def test_pairs_buffers_match_merged_reference(self):
         """``etd_pairs_buffers`` over sliced Arrow list columns whose x and
         y offsets differ and do not start at 0, once with two curve tables
-        and once with one shared table (``bq is bt``): each pair's value
-        equals the reference on the pair alone, each curve padded by one
-        copy of its last vertex as ``tile_map`` pads it."""
+        and once with one table on both sides, every curve referenced
+        twice: each pair's value equals the reference on the pair alone,
+        each curve padded by one copy of its last vertex as ``tile_map``
+        pads it."""
         import pyarrow as pa
 
         from frechetrange_spark.kernels.batch import _list_buffers, etd_pairs_buffers, pair_tables
@@ -1079,10 +1079,10 @@ class TestEqualTimeDistance:
         rev = np.array([alone(q, p) for p, q in zip(ps, qs)])
         assert (self._bits(got[n:]) == self._bits(rev[perm])).all()
 
-    def test_knot_table_memory_bounded_by_referenced_curves(self):
-        """The per-call knot table holds the knots of the curves the pairs
-        reference, not of the whole curve table: over a 2M-vertex table
-        (a knot per vertex would be 16 MB) three pairs peak far below."""
+    def test_memory_bounded_by_referenced_curves(self):
+        """ETD allocates for the curves the pairs reference, not for the
+        whole curve table: over a 2M-vertex table (a knot per vertex
+        would be 16 MB) three pairs peak far below."""
         import tracemalloc
 
         from frechetrange_spark.kernels.batch import etd_pairs_buffers
