@@ -446,8 +446,8 @@ def _q_range_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_knn_frechet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN by Fréchet: ONE persisted curve assembly shared between the
     dataset and the query side (the query side is a filter over it), so
-    the SSV-shaped enrichment isn't paid twice before knn's own
-    localCheckpoint."""
+    the SSV-shaped enrichment isn't paid twice; knn_frechet leaves the
+    materialization of its inputs to the caller."""
     curves = _persist(_curves(spark, sf_dir))
     return knn_frechet(
         curves,

@@ -145,21 +145,21 @@ def profile_knn():
     curves = entry._curves(spark, SF_DIR).persist()
     _t("assembly+persist materialize", lambda: _noop(curves), spark)
     queries = curves.filter(F.col("traj_id") % 150 == 0)
-    cc, _ = _t("localCheckpoint curves", lambda: curves.localCheckpoint(), spark)
-    qq, _ = _t("localCheckpoint queries", lambda: queries.localCheckpoint(), spark)
-    cand = knn.knn_candidates_grid(cc, qq, 5, float(entry.MESH))
+    cand = knn.knn_candidates_grid(curves, queries, 5, float(entry.MESH))
     _t("candidates_grid (count)", lambda: cand.count(), spark)
-    cand = knn.knn_candidates_grid(cc, qq, 5, float(entry.MESH))
+    cand = knn.knn_candidates_grid(curves, queries, 5, float(entry.MESH))
     surv, _ = _t(
         "etd_prune (localCheckpoint)",
-        lambda: knn.etd_prune(cc, qq, cand, 5).localCheckpoint(),
+        lambda: knn.etd_prune(curves, queries, cand, 5).localCheckpoint(),
         spark,
     )
     print("survivors:", surv.count())
-    from frechetrange_spark.operators.range_query import _INLINE
+    from frechetrange_spark.operators.range_query import _INLINE, _pair_stage
 
-    dists = knn._pairs_with_arrays(cc, qq, surv).mapInArrow(
-        knn._decide_distance_map(*_INLINE), schema=knn._DIST_SCHEMA
+    dists = _pair_stage(
+        knn._pairs_with_arrays(curves, queries, surv),
+        knn._decide_distance_map(*_INLINE),
+        knn._DIST_SCHEMA,
     )
     _t("fused decide+distance over survivors (noop)", lambda: _noop(dists), spark)
     spark.catalog.clearCache()

@@ -65,12 +65,13 @@ def dihash_range_query(
     measure-zero boundary inputs this engine can return fewer rows than
     dv/bb. Real corpora never hit it (N-version-tested on the shipped
     San Francisco data)."""
-    from frechetrange_spark.operators.range_query import _pairs_with_arrays, _refine_map
+    from frechetrange_spark.operators.range_query import (
+        _pair_stage,
+        _pairs_with_arrays,
+        _refine_map,
+    )
 
     pairs = _pairs_with_arrays(
         curves, queries, endpoint_candidates(curves, queries, eps, mesh)
     )
-    n_slots = 2 * curves.sparkSession.sparkContext.defaultParallelism
-    return pairs.repartition(n_slots).mapInArrow(
-        _refine_map(eps), schema="query_id long, traj_id long"
-    )
+    return _pair_stage(pairs, _refine_map(eps), "query_id long, traj_id long")

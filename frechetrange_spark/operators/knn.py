@@ -25,15 +25,18 @@ swap ranks; every pruning step below is tolerance-free (sound bounds).
    survivor at that radius and computes the exact distance of the
    accepted ones (bisection over the free-space decider, K12, bracketed
    by endpoint-LB / equal-time-UB inside the kernel); a window ranks and
-   keeps the top k. Both kernels read curves through the range_query
-   curve sources: broadcast packs under ids-only pair streams, or inline
-   arrays joined onto the pairs past the broadcast threshold.
+   keeps the top k. Both kernels are range_query pair stages
+   (``_pair_stage``) and read curves through its curve sources:
+   broadcast packs under ids-only pair streams, or inline arrays joined
+   onto the pairs past the broadcast threshold.
 
 Everything is one relational plan + two Arrow kernel passes; there is no
 per-round driver loop, so the serial fraction is a single window
 aggregate over scalar rows. The scalar cross join broadcasts the query
 side, so at cluster scale it is a map-only stage over the (partitioned)
-dataset features."""
+dataset features. The plan reads its inputs several times and
+materializes none of them: callers pass persisted, checkpointed or
+file-scanned tables."""
 
 from __future__ import annotations
 
@@ -44,8 +47,8 @@ from pyspark.sql.window import Window
 
 from frechetrange_spark.operators.range_query import (
     _INLINE,
-    _curve_source,
-    _kernel_calls,
+    _pair_kernel,
+    _pair_stage,
     _pairs_with_arrays,
     _sources,
     _xy,
@@ -55,16 +58,11 @@ from frechetrange_spark.operators.range_query import (
 def frechet_distances(pairs: DataFrame) -> DataFrame:
     """(query_id, traj_id, distance) for pair rows carrying q_xs/q_ys/xs/ys
     — the fused decide+distance kernel over inline curve sources with an
-    infinite radius, so every pair gets its bisection distance.
-
-    Round-robin repartition before the kernel: pair rows are cheap in bytes
-    but expensive in CPU, so byte-based AQE coalescing must not funnel them
-    into few tasks."""
-    n_slots = 2 * pairs.sparkSession.sparkContext.defaultParallelism
-    return (
-        pairs.withColumn("radius", F.lit(float("inf")))
-        .repartition(n_slots)
-        .mapInArrow(_decide_distance_map(*_INLINE), schema=_DIST_SCHEMA)
+    infinite radius, so every pair gets its bisection distance."""
+    return _pair_stage(
+        pairs.withColumn("radius", F.lit(float("inf"))),
+        _decide_distance_map(*_INLINE),
+        _DIST_SCHEMA,
     )
 
 
@@ -210,7 +208,7 @@ def knn_candidates_grid(
     # the per-query scalar features (the bounded query workload, which
     # the refine stage collects into a broadcast pack anyway). The old
     # all-relational planning DAG (crossJoin + window + three
-    # localCheckpoints + five broadcast builds) cost 18 Spark jobs of
+    # checkpoints + five broadcast builds) cost 18 Spark jobs of
     # sub-second tiny-data work per call; this shape costs 2 collects +
     # 1 aggregate, and the DATA-scale work (the two homed probes and the
     # scalar radius prune) stays relational and map-only. Every float
@@ -347,44 +345,39 @@ def _ring_pairs(qcx, qcy, ccx, ccy, bound: np.ndarray) -> tuple[np.ndarray, np.n
 
 
 def _etd_map(q_spec, t_spec):
-    """ETD + endpoint lower bound per pair, both curves gathered through
-    the curve sources ``q_spec``/``t_spec`` (range_query._curve_source):
-    inline pair-row arrays, or broadcast packs under an ids-only pair
-    stream (the candidate stream and the repartition shuffle then carry
-    16 B/pair instead of the array payload). One kernel call per
-    ``range_query._kernel_calls`` group of a partition's Arrow batches;
-    per-pair values do not depend on the grouping."""
+    """ETD + endpoint lower bound per pair (a ``_pair_kernel`` map), both
+    curves gathered through the curve sources ``q_spec``/``t_spec``
+    (range_query._curve_source): inline pair-row arrays, or broadcast
+    packs under an ids-only pair stream (the candidate stream and the
+    repartition shuffle then carry 16 B/pair instead of the array
+    payload)."""
 
-    def kernel(batches):
+    def kernel(rb, qid, tid, q, t):
         import pyarrow as pa
 
         from frechetrange_spark.kernels.batch import etd_pairs_buffers
 
-        for rb in _kernel_calls(batches):
-            qid = rb.column("query_id").to_numpy(zero_copy_only=False)
-            tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
-            qpack, qsel = _curve_source(q_spec, rb, qid, 0)
-            tpack, tsel = _curve_source(t_spec, rb, tid, 0)
-            bq, bt = _xy(qpack), _xy(tpack)
-            fqx, oqx, fqy, oqy = bq
-            ftx, otx, fty, oty = bt
-            etd = etd_pairs_buffers(bq, bt, qsel, tsel)
-            lbs = np.maximum(
-                np.hypot(
-                    fqx[oqx[qsel]] - ftx[otx[tsel]],
-                    fqy[oqy[qsel]] - fty[oty[tsel]],
-                ),
-                np.hypot(
-                    fqx[oqx[qsel + 1] - 1] - ftx[otx[tsel + 1] - 1],
-                    fqy[oqy[qsel + 1] - 1] - fty[oty[tsel + 1] - 1],
-                ),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qid), pa.array(tid), pa.array(lbs), pa.array(etd)],
-                ["query_id", "traj_id", "lb", "etd"],
-            )
+        (qpack, qsel), (tpack, tsel) = q, t
+        bq, bt = _xy(qpack), _xy(tpack)
+        fqx, oqx, fqy, oqy = bq
+        ftx, otx, fty, oty = bt
+        etd = etd_pairs_buffers(bq, bt, qsel, tsel)
+        lbs = np.maximum(
+            np.hypot(
+                fqx[oqx[qsel]] - ftx[otx[tsel]],
+                fqy[oqy[qsel]] - fty[oty[tsel]],
+            ),
+            np.hypot(
+                fqx[oqx[qsel + 1] - 1] - ftx[otx[tsel + 1] - 1],
+                fqy[oqy[qsel + 1] - 1] - fty[oty[tsel + 1] - 1],
+            ),
+        )
+        return pa.RecordBatch.from_arrays(
+            [pa.array(qid), pa.array(tid), pa.array(lbs), pa.array(etd)],
+            ["query_id", "traj_id", "lb", "etd"],
+        )
 
-    return kernel
+    return _pair_kernel(kernel, (q_spec, t_spec))
 
 
 # Relative widening of a k-th smallest ETD radius wherever it is compared.
@@ -438,9 +431,8 @@ def etd_prune(curves: DataFrame, queries: DataFrame, candidates: DataFrame, k: i
 
 
 def _etd_survivors(pairs: DataFrame, k: int, sources: tuple) -> DataFrame:
-    n_slots = 2 * pairs.sparkSession.sparkContext.defaultParallelism
-    bounds = pairs.repartition(n_slots).mapInArrow(
-        _etd_map(*sources), schema="query_id long, traj_id long, lb double, etd double"
+    bounds = _pair_stage(
+        pairs, _etd_map(*sources), "query_id long, traj_id long, lb double, etd double"
     )
     return _etd_radius_prune(bounds, k)
 
@@ -466,12 +458,11 @@ def _decide_distance_map(q_spec, t_spec, rel_tol: float = 1e-6):
 
     1e-6 relative bisection tolerance = the reference's own kNN-style
     bisection (benchmark/test.py:96, eps=1E-6); ranks are stable well
-    above it and it saves ~10 of ~37 decide sweeps per pair. One kernel
-    call per ``range_query._kernel_calls`` group of a partition's Arrow
-    batches; per-pair results are independent of batch composition (see
-    ``kernels.batch.distance_pairs_buffers``)."""
+    above it and it saves ~10 of ~37 decide sweeps per pair. A
+    ``_pair_kernel`` map; per-pair results are independent of batch
+    composition (see ``kernels.batch.distance_pairs_buffers``)."""
 
-    def kernel(batches):
+    def kernel(rb, qid, tid, q, t):
         import pyarrow as pa
 
         from frechetrange_spark.kernels.batch import (
@@ -479,25 +470,19 @@ def _decide_distance_map(q_spec, t_spec, rel_tol: float = 1e-6):
             distance_pairs_buffers,
         )
 
-        for rb in _kernel_calls(batches):
-            qid = rb.column("query_id").to_numpy(zero_copy_only=False)
-            tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
-            qpack, qsel = _curve_source(q_spec, rb, qid, 0)
-            tpack, tsel = _curve_source(t_spec, rb, tid, 0)
-            bq, bt = _xy(qpack), _xy(tpack)
-            radius = rb.column("radius").to_numpy(zero_copy_only=False)
-            eps = np.nextafter(radius * _RADIUS_WIDEN, np.inf)
-            keep = decide_pairs_buffers(bq, bt, qsel, tsel, eps)
-            idx = np.nonzero(keep)[0]
-            dists = distance_pairs_buffers(
-                bq, bt, qsel[idx], tsel[idx], rel_tol=rel_tol
-            )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qid[idx]), pa.array(tid[idx]), pa.array(dists)],
-                ["query_id", "traj_id", "distance"],
-            )
+        (qpack, qsel), (tpack, tsel) = q, t
+        bq, bt = _xy(qpack), _xy(tpack)
+        radius = rb.column("radius").to_numpy(zero_copy_only=False)
+        eps = np.nextafter(radius * _RADIUS_WIDEN, np.inf)
+        keep = decide_pairs_buffers(bq, bt, qsel, tsel, eps)
+        idx = np.nonzero(keep)[0]
+        dists = distance_pairs_buffers(bq, bt, qsel[idx], tsel[idx], rel_tol=rel_tol)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(qid[idx]), pa.array(tid[idx]), pa.array(dists)],
+            ["query_id", "traj_id", "distance"],
+        )
 
-    return kernel
+    return _pair_kernel(kernel, (q_spec, t_spec))
 
 
 def knn_frechet(
@@ -530,13 +515,14 @@ def knn_frechet(
     plan runs on inline curve sources, with ``_pairs_with_arrays``
     attaching the arrays to each kernel's pair stream. Identical results
     either way (per-pair kernel outputs are batch-composition
-    independent)."""
-    # curves feed three plan branches (scalar features, ETD arrays, final
-    # arrays); eager localCheckpoint materializes the assembly lineage once
-    # and its blocks are GC-cleaned with the DataFrame — nothing left for
-    # the caller to unpersist in a long-lived session.
-    curves = curves.localCheckpoint()
-    queries = queries.localCheckpoint()
+    independent).
+
+    ``curves`` and ``queries`` feed several plan branches (scalar
+    features, the broadcast gate and packs, the ETD and final pair
+    streams), so callers own their materialization: pass a persisted,
+    checkpointed or file-scanned table. A scanned or persisted table keeps
+    its plan across calls, so its broadcast pack is collected once and
+    shared with range queries over the same table (_pack_broadcast)."""
     if mesh is not None:
         candidates = knn_candidates_grid(curves, queries, k, float(mesh))
     else:
@@ -549,10 +535,7 @@ def knn_frechet(
         return pair_ids
 
     survivors = _etd_survivors(attach(candidates), k, sources)
-    n_slots = 2 * curves.sparkSession.sparkContext.defaultParallelism
-    dists = attach(survivors).repartition(n_slots).mapInArrow(
-        _decide_distance_map(*sources), schema=_DIST_SCHEMA
-    )
+    dists = _pair_stage(attach(survivors), _decide_distance_map(*sources), _DIST_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(
         F.col("distance").asc(), F.col("traj_id").asc()
     )

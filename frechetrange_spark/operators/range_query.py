@@ -27,7 +27,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from frechetrange_spark.operators.simplifications import PORTAL_COLS
 from frechetrange_spark.operators.tiling import cell_coord, explode_neighbor_cells
+from frechetrange_spark.sources.pack_store import pack_columns
 
 _CORNERS = {
     "min_min": ("min_x", "min_y"),
@@ -367,43 +369,29 @@ def grid_candidates(
     return joined.filter(f2 & f1).withColumn("accept_f3", f3)
 
 
-def _pack_cols(simp_levels: int) -> tuple[list[str], list[str]]:
-    """(array columns, eps scalar columns) a curve pack carries."""
-    cols = ["xs", "ys"]
-    scal = []
-    for i in range(simp_levels):
-        cols += [f"s{i}_xs", f"s{i}_ys"]
-        scal.append(f"s{i}_eps")
-    return cols, scal
-
-
 def _pack_curves(df: DataFrame, simp_levels: int) -> dict:
     """Driver-side pack of a curve table for the broadcast-attach refine:
     every array column as (flat float64, offsets int64) buffers over the
     curves SORTED by traj_id, plus the per-curve simplification eps
-    scalars. Only called when the table passed the broadcast-size gate
-    (_est_broadcast_bytes <= autoBroadcastJoinThreshold), so the collect
-    is bounded by the same budget a broadcast hash join would use."""
-    cols, scal = _pack_cols(simp_levels)
-    pdf = (
-        df.select("traj_id", *cols, *scal).orderBy("traj_id").toPandas()
-    )
-    ids = pdf["traj_id"].to_numpy(dtype=np.int64)
+    scalars — taken from the collected Arrow table's list buffers, as the
+    pack store builds its blocks. Only called when the table passed the
+    broadcast-size gate (_est_broadcast_bytes <= autoBroadcastJoinThreshold),
+    so the collect is bounded by the same budget a broadcast hash join
+    would use."""
+    from frechetrange_spark.kernels.batch import _list_buffers
+
+    cols, scal = pack_columns(simp_levels=simp_levels)
+    tbl = df.select("traj_id", *cols, *scal).orderBy("traj_id").toArrow()
     packed_cols = {}
     for c in cols:
-        vals = pdf[c].to_numpy()
-        lens = np.fromiter((len(v) for v in vals), dtype=np.int64, count=len(vals))
-        off = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(lens)])
-        flat = (
-            np.concatenate(list(vals)).astype(np.float64, copy=False)
-            if len(vals)
-            else np.empty(0, dtype=np.float64)
-        )
-        packed_cols[c] = (flat, off)
+        flat, off = _list_buffers(tbl.column(c))
+        packed_cols[c] = (flat[off[0] : off[-1]], off - off[0])
     return {
-        "ids": ids,
+        "ids": tbl.column("traj_id").to_numpy().astype(np.int64, copy=False),
         "cols": packed_cols,
-        "scal": {c: pdf[c].to_numpy(dtype=np.float64) for c in scal},
+        "scal": {
+            c: tbl.column(c).to_numpy().astype(np.float64, copy=False) for c in scal
+        },
     }
 
 
@@ -415,9 +403,8 @@ def _pack_curves(df: DataFrame, simp_levels: int) -> dict:
 # accumulate broadcasts without bound.
 _PACK_CACHE: dict = {}
 # 8 entries: a working set of four concurrent query families, two packs
-# each (kNN's checkpoint-keyed packs are new users since r06 — with the
-# old cap of 4 they evicted the repeated range_query packs every suite
-# round, forcing a re-collect per query). Packs are ~5-15 MB broadcasts;
+# each (a query side and an index side; range and kNN calls over one
+# table share its index-side entry). Packs are ~5-15 MB broadcasts;
 # eviction unpersists executor copies.
 _PACK_CACHE_CAP = 8
 
@@ -444,7 +431,7 @@ def _pack_broadcast(df: DataFrame, simp_levels: int):
     pins a reference to its source DataFrame so the id(df) fallback key
     can never alias a garbage-collected plan (a recycled CPython id would
     otherwise serve a stale pack)."""
-    cols, scal = _pack_cols(simp_levels)
+    cols, scal = pack_columns(simp_levels=simp_levels)
     proj = df.select("traj_id", *cols, *scal)
     key = (_plan_key(proj), tuple(sorted(proj.inputFiles())), simp_levels)
     hit = _PACK_CACHE.pop(key, None)
@@ -511,7 +498,7 @@ def _pairs_with_arrays(
 
 def _inline_cols(prefix: str, simp_levels: int) -> list[str]:
     """The pair-row columns an ``("inline", prefix)`` source reads."""
-    cols, scal = _pack_cols(simp_levels)
+    cols, scal = pack_columns(simp_levels=simp_levels)
     return [prefix + c for c in cols + scal]
 
 
@@ -536,7 +523,7 @@ def _curve_source(spec, rb, ids: np.ndarray, simp_levels: int):
     kind, v = spec
     if kind == "inline":
         names = rb.schema.names
-        cols, scal = _pack_cols(simp_levels)
+        cols, scal = pack_columns(simp_levels=simp_levels)
         cols += [c for c in PORTAL_COLS if v + c in names]
         pack = {
             "ids": ids,
@@ -588,6 +575,36 @@ def _concat(group: list):
     if len(group) == 1:
         return group[0]
     return (pa.Table.from_batches(group).combine_chunks().to_batches() or group)[0]
+
+
+def _pair_kernel(kernel, sources: tuple, simp_levels: int = 0):
+    """The batches -> batches map of a pair stage: per kernel call (a
+    partition's Arrow batches merged by ``_kernel_calls``) it reads the
+    id columns, resolves both curve sources (``_curve_source``) and yields
+    ``kernel(rb, qid, tid, (qpack, qsel), (tpack, tsel))``. Every range,
+    CFDQ, brute-force and kNN kernel runs through it; the kernels' per-pair
+    answers do not depend on the grouping, so neither do the rows."""
+
+    def fn(batches):
+        for rb in _kernel_calls(batches):
+            qid = rb.column("query_id").to_numpy(zero_copy_only=False)
+            tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
+            q = _curve_source(sources[0], rb, qid, simp_levels)
+            t = _curve_source(sources[1], rb, tid, simp_levels)
+            yield kernel(rb, qid, tid, q, t)
+
+    return fn
+
+
+def _pair_stage(pairs: DataFrame, fn, schema: str) -> DataFrame:
+    """The one refine stage of every engine: a round-robin repartition of
+    the pair rows into 2 x defaultParallelism slots, then ``fn`` (a
+    ``_pair_kernel`` map) in ``mapInArrow``. The pair rows are small in
+    BYTES but heavy in per-row CPU (free-space DP), so AQE's byte-based
+    coalescing would funnel them into one task; an explicit
+    ``repartition(n)`` is exempt from it and balances the pair costs."""
+    n_slots = 2 * pairs.sparkSession.sparkContext.defaultParallelism
+    return pairs.repartition(n_slots).mapInArrow(fn, schema=schema)
 
 
 def _xy(pack: dict, level: str = "") -> tuple:
@@ -663,18 +680,21 @@ def _refine_map(
     stats: bool = False,
     sources: tuple = _INLINE,
 ):
-    """Arrow-native refine: the exact decider (K5) batched over every pair
-    of a kernel call — a partition's consecutive Arrow batches merged up
-    to ``CALL_BYTES`` (``_kernel_calls``) — with zero per-row Python
-    objects: the greedy walks read the list buffers directly, the other
-    stages gather them into padded tiles (see kernels.batch).
+    """Arrow-native refine (a ``_pair_kernel`` map): the exact decider
+    (K5) batched over every pair of a kernel call, with zero per-row
+    Python objects: the greedy walks read the list buffers directly, the
+    other stages gather them into padded tiles (see kernels.batch).
 
     ``greedy_accept``/``neg_reject`` wire the bb filter pack (F4/F5,
     reference order detail/bb/spatial_index.hpp:198-209) into the
     full-resolution stage; result sets are invariant (tested), only cost
     changes. ``stats`` switches the output to one row PER CANDIDATE with
     its funnel stage and verdict — (query_id, traj_id, stage, accepted) —
-    for funnel metrics; the default emits accepted pairs only.
+    for funnel metrics; the default emits accepted pairs only. ``mirror``
+    (the symmetric self-join) also emits (t, q) for every off-diagonal
+    accepted (q, t); in ``stats`` rows the mirrored duplicates carry stage
+    'mirror', so per-stage counts stay one row per candidate while
+    filter("accepted") still equals the full result set.
 
     With ``simp_levels > 0`` the bddm simplification funnel (F9,
     detail/bddm/spatial_hash.hpp:771-821) runs first: per level i, compare
@@ -701,7 +721,7 @@ def _refine_map(
     over-threshold 100-TB regime). Every source feeds the same funnel
     and decider, so stage taxonomy and results are source-independent."""
 
-    def fn(batches):
+    def kernel(rb, qid, tid, q, t):
         import pyarrow as pa
 
         from frechetrange_spark.kernels.batch import (
@@ -709,79 +729,51 @@ def _refine_map(
             decide_pairs_buffers,
         )
 
-        for rb in _kernel_calls(batches):
-            B = rb.num_rows
-            result = np.zeros(B, dtype=bool)
-            stage = np.full(B, "", dtype=object) if stats else None
-            all_qid = rb.column("query_id").to_numpy(zero_copy_only=False)
-            all_tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
-            qpack, qsel = _curve_source(sources[0], rb, all_qid, simp_levels)
-            tpack, tsel = _curve_source(sources[1], rb, all_tid, simp_levels)
-            und = _simp_funnel_pairs(
-                qpack, tpack, qsel, tsel, eps, simp_levels, result, stage
+        (qpack, qsel), (tpack, tsel) = q, t
+        result = np.zeros(rb.num_rows, dtype=bool)
+        stage = np.full(rb.num_rows, "", dtype=object) if stats else None
+        und = _simp_funnel_pairs(
+            qpack, tpack, qsel, tsel, eps, simp_levels, result, stage
+        )
+        if und.size:
+            # full-resolution fallback (ETD accept + optional F4/F5)
+            res, codes = decide_pairs_buffers(
+                _xy(qpack),
+                _xy(tpack),
+                qsel[und],
+                tsel[und],
+                eps,
+                greedy_accept=greedy_accept,
+                neg_reject=neg_reject,
+                rev_greedy_accept=rev_greedy_accept,
+                dfd_accept=dfd_accept,
+                return_stages=True,
             )
-            if und.size:
-                # full-resolution fallback (ETD accept + optional F4/F5)
-                res, codes = decide_pairs_buffers(
-                    _xy(qpack),
-                    _xy(tpack),
-                    qsel[und],
-                    tsel[und],
-                    eps,
-                    greedy_accept=greedy_accept,
-                    neg_reject=neg_reject,
-                    rev_greedy_accept=rev_greedy_accept,
-                    dfd_accept=dfd_accept,
-                    return_stages=True,
-                )
-                result[und] = res
-                if stats:
-                    stage[und] = [STAGE_NAMES[c] for c in codes]
+            result[und] = res
             if stats:
-                qid, tid, acc = all_qid, all_tid, result
-                stg = stage
-                if mirror:
-                    # mirrored duplicates carry stage='mirror' so per-stage
-                    # candidate counts stay one-row-per-candidate while
-                    # filter("accepted") still equals the full result set
-                    off = (qid != tid) & acc
-                    qid = np.concatenate([qid, tid[off]])
-                    tid = np.concatenate([tid, all_qid[off]])
-                    acc = np.concatenate([acc, acc[off]])
-                    stg = np.concatenate(
-                        [stg, np.full(int(off.sum()), "mirror", dtype=object)]
-                    )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(qid),
-                        pa.array(tid),
-                        pa.array(list(stg), type=pa.string()),
-                        pa.array(acc),
-                    ],
-                    ["query_id", "traj_id", "stage", "accepted"],
+                stage[und] = [STAGE_NAMES[c] for c in codes]
+        if not stats:
+            keep = np.nonzero(result)[0]
+            qid, tid, result = qid[keep], tid[keep], result[keep]
+        if mirror:
+            # Fréchet distance is symmetric: (t, q) matches when (q, t) does
+            off = (qid != tid) & result
+            qid, tid = np.concatenate([qid, tid[off]]), np.concatenate([tid, qid[off]])
+            result = np.concatenate([result, result[off]])
+            if stats:
+                stage = np.concatenate(
+                    [stage, np.full(int(off.sum()), "mirror", dtype=object)]
                 )
-                continue
-            idx = np.nonzero(result)[0]
-            qid = all_qid[idx]
-            tid = all_tid[idx]
-            if mirror:
-                # symmetric self-join: emit (t, q) for every off-diagonal
-                # (q, t) match — Fréchet distance is symmetric
-                off = qid != tid
-                qid, tid = (
-                    np.concatenate([qid, tid[off]]),
-                    np.concatenate([tid, qid[off]]),
-                )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qid), pa.array(tid)], ["query_id", "traj_id"]
-            )
+        out = {"query_id": qid, "traj_id": tid}
+        if stats:
+            out["stage"] = pa.array(list(stage), type=pa.string())
+            out["accepted"] = result
+        return pa.RecordBatch.from_pydict(out)
 
-    return fn
+    return _pair_kernel(kernel, sources, simp_levels)
+
 
 REFINE_STATS_SCHEMA = "query_id long, traj_id long, stage string, accepted boolean"
-
-
-PORTAL_COLS = ("portal_src", "portal_dst", "portal_dist")
 
 
 def _array_cols(df: DataFrame) -> list[str]:
@@ -1034,7 +1026,6 @@ def range_query_grid(
     if dfd_accept is None:
         dfd_accept = not funnel_stats
 
-    spark = index_df.sparkSession
     # funnel columns (Agarwal simplifications) are refined when the index
     # was enriched on BOTH sides
     simp_levels = 0
@@ -1086,12 +1077,8 @@ def range_query_grid(
         to_refine = to_refine.observe(
             observations["refine_input"], F.count(F.lit(1)).alias("n")
         )
-    # Round-robin repartition before the Arrow kernel: the refine input is
-    # small in BYTES but heavy in per-row CPU (free-space DP), so AQE's
-    # byte-based coalescing would funnel it into one task. Explicit
-    # repartition(n) is exempt from AQE coalescing and balances pair costs.
-    n_slots = 2 * spark.sparkContext.defaultParallelism
-    refined = to_refine.repartition(n_slots).mapInArrow(
+    refined = _pair_stage(
+        to_refine,
         _refine_map(
             eps,
             simp_levels,
@@ -1103,7 +1090,7 @@ def range_query_grid(
             stats=funnel_stats,
             sources=sources,
         ),
-        schema=REFINE_STATS_SCHEMA if funnel_stats else "query_id long, traj_id long",
+        REFINE_STATS_SCHEMA if funnel_stats else "query_id long, traj_id long",
     )
     result = accepted.unionAll(refined)
     if observations is not None and not funnel_stats:
@@ -1120,63 +1107,58 @@ def _cfdq_refine_map(eps: float, simp_levels: int = 0):
     runs the funnel before its full-resolution decide too,
     spatial_hash.hpp:771-856), then the CFDQ sparse decider (K6) with the
     dataset curve's stored portals (K9/O4, columns portal_src/dst/dist)
-    on the few funnel survivors. Curves and portals come from the pair
-    rows through inline curve sources (_curve_source), one kernel call per
-    ``_kernel_calls`` group of Arrow batches. CFDQ's sparse
-    interval walk is control-flow-heavy and stays scalar per pair, but it
-    sees only funnel MAYBEs instead of every candidate; the per-survivor
-    portals are passed as flat (srcs, dsts, dists) slices of the Arrow
-    buffers (the columns are written src-sorted, dst-sorted within src —
-    see enrich_with_portals/compile_portals) and the kernel finds each
-    row's group with np.searchsorted — zero per-pair Python object
-    churn."""
+    on the few funnel survivors (a ``_pair_kernel`` map over inline
+    curve sources: curves and portals come from the pair rows). CFDQ's
+    sparse interval walk is control-flow-heavy and stays scalar per pair,
+    but it sees only funnel MAYBEs instead of every candidate; the
+    per-survivor portals are passed as flat (srcs, dsts, dists) slices of
+    the Arrow buffers (the columns are written src-sorted, dst-sorted
+    within src — see enrich_with_portals/compile_portals) and the kernel
+    finds each row's group with np.searchsorted — zero per-pair Python
+    object churn."""
 
-    def fn(batches):
+    def kernel(rb, qid, tid, q, t):
         import pyarrow as pa
 
         from frechetrange_spark.kernels.batch import _curve
         from frechetrange_spark.kernels.cfdq import decide_frechet_cfdq
 
-        for rb in _kernel_calls(batches):
-            res = np.zeros(rb.num_rows, dtype=bool)
-            qid = rb.column("query_id").to_numpy(zero_copy_only=False)
-            tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
-            qpack, qsel = _curve_source(_INLINE[0], rb, qid, simp_levels)
-            tpack, tsel = _curve_source(_INLINE[1], rb, tid, simp_levels)
-            und = _simp_funnel_pairs(qpack, tpack, qsel, tsel, eps, simp_levels, res)
-            if und.size:
-                bq, bt = _xy(qpack), _xy(tpack)
-                (fps, ops), (fpd, opd), (fpw, opw) = (
-                    tpack["cols"][c] for c in PORTAL_COLS
-                )
-                fps = fps.astype(np.int64, copy=False)
-                fpd = fpd.astype(np.int64, copy=False)
-                for r in und:
-                    b = tsel[r]
-                    # the stored columns are src-sorted with dst ascending
-                    # inside each src group (compile_portals/O4), exactly
-                    # the kernel's flat interface: slice the Arrow buffers
-                    # and hand them over — zero per-pair Python objects
-                    portals = (
-                        fps[ops[b] : ops[b + 1]],
-                        fpd[opd[b] : opd[b + 1]],
-                        fpw[opw[b] : opw[b + 1]],
-                    )
-                    # portals attach to the dataset curve -> CFDQ's p side
-                    res[r] = decide_frechet_cfdq(
-                        _curve(bt, b),
-                        _curve(bq, qsel[r]),
-                        eps,
-                        base_query_delta=eps,
-                        portals=portals,
-                    )
-            idx = np.nonzero(res)[0]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qid[idx]), pa.array(tid[idx])],
-                ["query_id", "traj_id"],
+        (qpack, qsel), (tpack, tsel) = q, t
+        res = np.zeros(rb.num_rows, dtype=bool)
+        und = _simp_funnel_pairs(qpack, tpack, qsel, tsel, eps, simp_levels, res)
+        if und.size:
+            bq, bt = _xy(qpack), _xy(tpack)
+            (fps, ops), (fpd, opd), (fpw, opw) = (
+                tpack["cols"][c] for c in PORTAL_COLS
             )
+            fps = fps.astype(np.int64, copy=False)
+            fpd = fpd.astype(np.int64, copy=False)
+            for r in und:
+                b = tsel[r]
+                # the stored columns are src-sorted with dst ascending
+                # inside each src group (compile_portals/O4), exactly
+                # the kernel's flat interface: slice the Arrow buffers
+                # and hand them over — zero per-pair Python objects
+                portals = (
+                    fps[ops[b] : ops[b + 1]],
+                    fpd[opd[b] : opd[b + 1]],
+                    fpw[opw[b] : opw[b + 1]],
+                )
+                # portals attach to the dataset curve -> CFDQ's p side
+                res[r] = decide_frechet_cfdq(
+                    _curve(bt, b),
+                    _curve(bq, qsel[r]),
+                    eps,
+                    base_query_delta=eps,
+                    portals=portals,
+                )
+        idx = np.nonzero(res)[0]
+        return pa.RecordBatch.from_arrays(
+            [pa.array(qid[idx]), pa.array(tid[idx])],
+            ["query_id", "traj_id"],
+        )
 
-    return fn
+    return _pair_kernel(kernel, _INLINE, simp_levels)
 
 
 def range_query_cfdq(
@@ -1212,9 +1194,8 @@ def range_query_cfdq(
         *_inline_cols("", simp_levels),
         *PORTAL_COLS,
     )
-    n_slots = 2 * index_df.sparkSession.sparkContext.defaultParallelism
-    refined = to_refine.repartition(n_slots).mapInArrow(
-        _cfdq_refine_map(eps, simp_levels), schema="query_id long, traj_id long"
+    refined = _pair_stage(
+        to_refine, _cfdq_refine_map(eps, simp_levels), "query_id long, traj_id long"
     )
     return accepted.unionAll(refined)
 
@@ -1230,8 +1211,4 @@ def range_query_bruteforce(
     pairs = pairs.select(
         F.col("q_traj_id").alias("query_id"), "traj_id", "q_xs", "q_ys", "xs", "ys"
     )
-
-    n_slots = 2 * curves.sparkSession.sparkContext.defaultParallelism
-    return pairs.repartition(n_slots).mapInArrow(
-        _refine_map(eps), schema="query_id long, traj_id long"
-    )
+    return _pair_stage(pairs, _refine_map(eps), "query_id long, traj_id long")

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from frechetrange_spark.operators.range_query import _q, _refine_map
+from frechetrange_spark.operators.range_query import _pair_stage, _q, _refine_map
 from frechetrange_spark.operators.tiling import cell_coord, explode_neighbor_cells
 
 
@@ -78,8 +78,8 @@ def bb_range_query(
         "xs",
         "ys",
     )
-    n_slots = 2 * curves.sparkSession.sparkContext.defaultParallelism
-    return cand.repartition(n_slots).mapInArrow(
+    return _pair_stage(
+        cand,
         _refine_map(
             eps,
             greedy_accept=True,
@@ -88,5 +88,5 @@ def bb_range_query(
             rev_greedy_accept=True,
             dfd_accept=True,
         ),
-        schema="query_id long, traj_id long",
+        "query_id long, traj_id long",
     )

@@ -96,7 +96,7 @@ def enrich_queries_with_ratios(
     return queries.mapInArrow(fn, schema=out_schema)
 
 
-PORTAL_COLS = ["portal_src", "portal_dst", "portal_dist"]
+PORTAL_COLS = ("portal_src", "portal_dst", "portal_dist")
 
 
 def enrich_with_portals(enriched: DataFrame, levels: int | None = None) -> DataFrame:
@@ -168,7 +168,7 @@ def enrich_with_portals(enriched: DataFrame, levels: int | None = None) -> DataF
                 pa.array(dsts, type=pa.list_(pa.int64())),
                 pa.array(dists, type=pa.list_(pa.float64())),
             ]
-            names = list(rb.schema.names) + PORTAL_COLS
+            names = [*rb.schema.names, *PORTAL_COLS]
             yield pa.RecordBatch.from_arrays(arrays, names)
 
     return enriched.mapInArrow(fn, schema=out_schema)

@@ -46,16 +46,19 @@ from pyspark.sql import functions as F
 MANIFEST = "_manifest.json"
 
 
-def pack_columns(df_columns, simp_levels: int | None = None):
+def pack_columns(df_columns=None, simp_levels: int | None = None):
     """(list_cols, scalar_cols) packed for a curve table: xs/ys plus the
-    s{i}_xs/s{i}_ys arrays and s{i}_eps scalars for every stored
-    simplification level (or the first ``simp_levels`` levels)."""
+    s{i}_xs/s{i}_ys arrays and s{i}_eps scalars for every simplification
+    level stored in ``df_columns``, or for the first ``simp_levels``
+    levels (those ``df_columns`` holds, when both are given). The one
+    definition of a pack's columns, for the store's blocks and for the
+    broadcast and inline packs of operators/range_query."""
     cols, scal = ["xs", "ys"], []
-    i = 0
-    while f"s{i}_xs" in df_columns and (simp_levels is None or i < simp_levels):
+    for i in range(len(df_columns) if simp_levels is None else simp_levels):
+        if df_columns is not None and f"s{i}_xs" not in df_columns:
+            break
         cols += [f"s{i}_xs", f"s{i}_ys"]
         scal.append(f"s{i}_eps")
-        i += 1
     return cols, scal
 
 

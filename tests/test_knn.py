@@ -250,3 +250,33 @@ def test_ring_planner_driver_memory_bounded():
         tracemalloc.stop()
     assert qi.size >= 500 * (K + 1) // 3  # each query probes >= 1 ring
     assert peak < 40 * 2**20, f"ring planner peaked at {peak / 2**20:.0f} MB"
+
+
+def test_knn_shares_index_pack_with_range(spark, corpus, tmp_path, monkeypatch):
+    """Two kNN calls with different queries over one ``read_index`` scan
+    collect the index-side broadcast pack once, and a range query over
+    the same scan reuses it: kNN keys its packs by the caller's plan."""
+    from frechetrange_spark.operators import range_query as rq
+    from frechetrange_spark.sources.index_table import read_index, write_index
+
+    index_df, meta = rq.build_grid_index(corpus, 15.0, corner="min_min")
+    path = str(tmp_path / "idx")
+    write_index(index_df, path, meta)
+    idx, meta = read_index(spark, path)
+    n_index = idx.count()
+    collects = []
+    pack_curves = rq._pack_curves
+
+    def counting(df, simp_levels):
+        pack = pack_curves(df, simp_levels)
+        collects.append(pack["ids"].size)
+        return pack
+
+    monkeypatch.setattr(rq, "_pack_curves", counting)
+    rq.clear_pack_cache()
+    for mod in (150, 170):
+        queries = idx.filter(F.col("traj_id") % mod == 0)
+        assert knn_frechet(idx, queries, k=K, mesh=15.0).count() > 0
+    assert collects.count(n_index) == 1, collects
+    assert rq.range_query_grid(idx, queries, 15.0, meta).count() > 0
+    assert collects.count(n_index) == 1, collects

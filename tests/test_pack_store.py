@@ -213,3 +213,68 @@ def test_auto_attach_foreign_over_threshold_query_uses_shuffle(spark, enriched, 
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert got == want
     assert len(got) > 0
+
+
+def _pack_curves_pandas(df, simp_levels):
+    """The broadcast pack as collected through ``toPandas`` with a
+    per-curve length loop — the reference ``_pack_curves`` must match."""
+    cols, scal = ["xs", "ys"], []
+    for i in range(simp_levels):
+        cols += [f"s{i}_xs", f"s{i}_ys"]
+        scal.append(f"s{i}_eps")
+    pdf = df.select("traj_id", *cols, *scal).orderBy("traj_id").toPandas()
+    packed = {}
+    for c in cols:
+        vals = pdf[c].to_numpy()
+        lens = np.fromiter((len(v) for v in vals), dtype=np.int64, count=len(vals))
+        off = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(lens)])
+        flat = (
+            np.concatenate(list(vals)).astype(np.float64, copy=False)
+            if len(vals)
+            else np.empty(0, dtype=np.float64)
+        )
+        packed[c] = (flat, off)
+    return {
+        "ids": pdf["traj_id"].to_numpy(dtype=np.int64),
+        "cols": packed,
+        "scal": {c: pdf[c].to_numpy(dtype=np.float64) for c in scal},
+    }
+
+
+def test_pack_curves_matches_pandas_collect(spark):
+    """``_pack_curves`` (Arrow list buffers) equals the pandas-collected
+    pack array for array and dtype for dtype: two simplification levels
+    with their eps scalars, traj_ids out of row order, 1-vertex curves,
+    and an empty table."""
+    rng = np.random.default_rng(11)
+    schema = "traj_id long, xs array<double>, ys array<double>" + "".join(
+        f", s{i}_xs array<double>, s{i}_ys array<double>, s{i}_eps double"
+        for i in range(2)
+    )
+    rows = []
+    for tid in rng.permutation(np.arange(40) * 7 + 3):
+        n = int(rng.integers(1, 9)) if tid % 5 else 1
+        xs, ys = rng.normal(size=n).tolist(), rng.normal(size=n).tolist()
+        row = [int(tid), xs, ys]
+        for i in range(2):
+            k = max(1, n - i - 1)
+            row += [xs[:k], ys[:k], float(rng.uniform(0, 1))]
+        rows.append(tuple(row))
+    df = spark.createDataFrame(rows, schema).repartition(3)
+    assert any(len(r[1]) == 1 for r in rows)
+    for table in (df, df.limit(0)):
+        want = _pack_curves_pandas(table, 2)
+        got = _pack_curves(table, 2)
+        assert list(got) == list(want)
+        for a, b in [(got["ids"], want["ids"])] + [
+            (got["scal"][c], want["scal"][c]) for c in ("s0_eps", "s1_eps")
+        ]:
+            assert a.dtype == b.dtype
+            np.testing.assert_array_equal(a, b)
+        assert list(got["cols"]) == list(want["cols"])
+        for c, (flat, off) in want["cols"].items():
+            gflat, goff = got["cols"][c]
+            assert (gflat.dtype, goff.dtype) == (flat.dtype, off.dtype)
+            np.testing.assert_array_equal(gflat, flat)
+            np.testing.assert_array_equal(goff, off)
+    assert _pack_curves(df, 2)["ids"].size == 40
