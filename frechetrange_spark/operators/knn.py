@@ -522,7 +522,13 @@ def knn_frechet(
     streams), so callers own their materialization: pass a persisted,
     checkpointed or file-scanned table. A scanned or persisted table keeps
     its plan across calls, so its broadcast pack is collected once and
-    shared with range queries over the same table (_pack_broadcast)."""
+    shared with range queries over the same table (_pack_broadcast); the
+    payload estimate the broadcast gate scans for ``curves`` is kept in
+    that pack's cache entry, so later calls over the same table run no
+    payload job. Queries that are filters of ``curves`` (e.g.
+    ``curves.filter(F.col("traj_id").isin(ids))``) are a row subset of
+    it: no payload job and no pack of their own, their curves come from
+    the ``curves`` pack (range_query._sources)."""
     if mesh is not None:
         candidates = knn_candidates_grid(curves, queries, k, float(mesh))
     else:

@@ -374,14 +374,18 @@ def _pack_curves(df: DataFrame, simp_levels: int) -> dict:
     every array column as (flat float64, offsets int64) buffers over the
     curves SORTED by traj_id, plus the per-curve simplification eps
     scalars — taken from the collected Arrow table's list buffers, as the
-    pack store builds its blocks. Only called when the table passed the
-    broadcast-size gate (_est_broadcast_bytes <= autoBroadcastJoinThreshold),
-    so the collect is bounded by the same budget a broadcast hash join
-    would use."""
+    pack store builds its blocks. One collect job: the rows are sorted
+    on the driver (traj_ids are unique, so the order is total). Only
+    called when the table passed the broadcast-size gate
+    (_est_broadcast_bytes <= autoBroadcastJoinThreshold), so the collect
+    is bounded by the same budget a broadcast hash join would use."""
+    import pyarrow.compute as pc
+
     from frechetrange_spark.kernels.batch import _list_buffers
 
     cols, scal = pack_columns(simp_levels=simp_levels)
-    tbl = df.select("traj_id", *cols, *scal).orderBy("traj_id").toArrow()
+    tbl = df.select("traj_id", *cols, *scal).toArrow()
+    tbl = tbl.take(pc.sort_indices(tbl.column("traj_id")))
     packed_cols = {}
     for c in cols:
         flat, off = _list_buffers(tbl.column(c))
@@ -400,12 +404,14 @@ def _pack_curves(df: DataFrame, simp_levels: int) -> dict:
 # broadcast instead of re-collecting and re-broadcasting the pack per
 # range_query_grid call, and eviction unpersists executor copies so a
 # long-lived session issuing many broadcast-attach queries cannot
-# accumulate broadcasts without bound.
+# accumulate broadcasts without bound. An entry is [broadcast, source
+# DataFrame, payload estimate or None] (see _pack_broadcast).
 _PACK_CACHE: dict = {}
 # 8 entries: a working set of four concurrent query families, two packs
 # each (a query side and an index side; range and kNN calls over one
-# table share its index-side entry). Packs are ~5-15 MB broadcasts;
-# eviction unpersists executor copies.
+# table share its index-side entry, and so do queries that are a row
+# subset of it). Packs are ~5-15 MB broadcasts; eviction unpersists
+# executor copies.
 _PACK_CACHE_CAP = 8
 
 
@@ -416,7 +422,22 @@ def _plan_key(df: DataFrame):
         return id(df)
 
 
-def _pack_broadcast(df: DataFrame, simp_levels: int):
+def _pack_key(df: DataFrame, simp_levels: int) -> tuple:
+    """(key, projection): the _PACK_CACHE key of ``df``'s pack and the
+    projected plan it hashes (see _pack_broadcast)."""
+    cols, scal = pack_columns(simp_levels=simp_levels)
+    proj = df.select("traj_id", *cols, *scal)
+    return (_plan_key(proj), tuple(sorted(proj.inputFiles())), simp_levels), proj
+
+
+def _packed_payload(df: DataFrame, simp_levels: int) -> int | None:
+    """The payload estimate stored in ``df``'s cached pack entry, or None
+    (no entry, or an entry made without a scanned estimate)."""
+    hit = _PACK_CACHE.get(_pack_key(df, simp_levels)[0])
+    return None if hit is None else hit[2]
+
+
+def _pack_broadcast(df: DataFrame, simp_levels: int, payload_bytes: int | None = None):
     """sc.broadcast of _pack_curves(df), LRU-cached (see _PACK_CACHE).
 
     The cache key is the semantic hash of the PROJECTED plan (just the
@@ -430,19 +451,25 @@ def _pack_broadcast(df: DataFrame, simp_levels: int):
     holds, no Spark job — is what tells the two tables apart. Each entry
     pins a reference to its source DataFrame so the id(df) fallback key
     can never alias a garbage-collected plan (a recycled CPython id would
-    otherwise serve a stale pack)."""
-    cols, scal = pack_columns(simp_levels=simp_levels)
-    proj = df.select("traj_id", *cols, *scal)
-    key = (_plan_key(proj), tuple(sorted(proj.inputFiles())), simp_levels)
+    otherwise serve a stale pack).
+
+    ``payload_bytes``, when given, is an exact payload estimate scanned
+    from ``df`` (_payload_bytes_gated); the entry keeps it, under the
+    same plan and file key, so a later attach decision over the same
+    table reads it (_packed_payload) instead of scanning the table
+    again. It bounds the entry's pack from above: the pack holds at most
+    the array columns the estimate summed."""
+    key, proj = _pack_key(df, simp_levels)
     hit = _PACK_CACHE.pop(key, None)
-    if hit is not None:
-        _PACK_CACHE[key] = hit  # LRU refresh
-        return hit[0]
-    b = df.sparkSession.sparkContext.broadcast(_pack_curves(df, simp_levels))
-    _PACK_CACHE[key] = (b, proj)
+    if hit is None:
+        b = df.sparkSession.sparkContext.broadcast(_pack_curves(df, simp_levels))
+        hit = [b, proj, None]
+    _PACK_CACHE[key] = hit  # (re)inserted last: LRU order
+    if payload_bytes is not None:
+        hit[2] = payload_bytes
     while len(_PACK_CACHE) > _PACK_CACHE_CAP:
         _PACK_CACHE.pop(next(iter(_PACK_CACHE)))[0].unpersist(blocking=False)
-    return b
+    return hit[0]
 
 
 def clear_pack_cache(destroy: bool = False) -> None:
@@ -598,12 +625,15 @@ def _pair_kernel(kernel, sources: tuple, simp_levels: int = 0):
 
 def _pair_stage(pairs: DataFrame, fn, schema: str) -> DataFrame:
     """The one refine stage of every engine: a round-robin repartition of
-    the pair rows into 2 x defaultParallelism slots, then ``fn`` (a
+    the pair rows into defaultParallelism slots, then ``fn`` (a
     ``_pair_kernel`` map) in ``mapInArrow``. The pair rows are small in
     BYTES but heavy in per-row CPU (free-space DP), so AQE's byte-based
     coalescing would funnel them into one task; an explicit
-    ``repartition(n)`` is exempt from it and balances the pair costs."""
-    n_slots = 2 * pairs.sparkSession.sparkContext.defaultParallelism
+    ``repartition(n)`` is exempt from it and balances the pair costs.
+    One slot per core makes the stage one wave of tasks: a Python task
+    pays ~0.1-0.2 s before its map starts, so a second wave costs an
+    interactive op more than it balances (BENCH.md)."""
+    n_slots = pairs.sparkSession.sparkContext.defaultParallelism
     return pairs.repartition(n_slots).mapInArrow(fn, schema=schema)
 
 
@@ -847,6 +877,23 @@ def _broadcast_threshold(spark) -> int:
     return max(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold(), 0)
 
 
+def _row_subset(queries: DataFrame, index_df: DataFrame) -> bool:
+    """Whether ``queries`` is provably a row subset of ``index_df``: its
+    optimized plan is a chain of Filter nodes (none or more) over a plan
+    that ``sameResult``s the index's optimized plan — e.g.
+    ``read_index(...)[0].filter(F.col("traj_id").isin(ids))``. Planning
+    only, no Spark job; False whenever the JVM plans are not reachable."""
+    from py4j.protocol import Py4JError
+
+    try:
+        node = queries._jdf.queryExecution().optimizedPlan()
+        while node.nodeName() == "Filter":
+            node = node.child()
+        return bool(node.sameResult(index_df._jdf.queryExecution().optimizedPlan()))
+    except (AttributeError, Py4JError):
+        return False
+
+
 def _sources(
     index_df: DataFrame,
     queries: DataFrame,
@@ -858,7 +905,14 @@ def _sources(
     """The (query side, index side) curve-source specs (see _curve_source)
     of a refine plan — the one attach decision of range_query_grid and
     knn_frechet; ``attach`` is documented on range_query_grid. kNN passes
-    ``meta={}``: no build-time payload estimate, no pack store."""
+    ``meta={}`` (no build-time payload estimate, no pack store): its
+    index side's estimate is scanned once per table and then read from
+    the table's cached pack entry (_packed_payload).
+
+    Queries that are a row subset of the index (_row_subset) need no
+    payload scan and no pack of their own: their payload is at most the
+    index's, and the broadcast arm serves their curves from the index's
+    pack by id lookup."""
     spark = index_df.sparkSession
     thr = _broadcast_threshold(spark)
     # the index side's payload estimate is computed ONCE at build time and
@@ -866,22 +920,26 @@ def _sources(
     # array columns of a 100-TB table per query. A self-join's queries ARE
     # the indexed curves, so the same estimate serves the query side.
     d_bytes = meta.get("payload_bytes")
+    scanned = None  # an index estimate this call scanned, for the pack entry
+    subset = _row_subset(queries, index_df)
 
-    def fits(df: DataFrame) -> bool:
+    def query_fits() -> bool:
         if thr <= 0:
             return False
-        if symmetric and d_bytes is not None:
+        if d_bytes is not None and (symmetric or subset and d_bytes <= thr):
             return d_bytes <= thr
-        return _payload_bytes_gated(df, thr) <= thr
+        return _payload_bytes_gated(queries, thr) <= thr
 
     q_fits = None  # the query side's payload fits the threshold
     if attach == "auto":
         attach = "shuffle"
         if thr > 0:
             if d_bytes is None:
-                d_bytes = _payload_bytes_gated(index_df, thr)
+                d_bytes = _packed_payload(index_df, simp_levels)
+            if d_bytes is None:
+                d_bytes = scanned = _payload_bytes_gated(index_df, thr)
             if d_bytes <= thr or meta.get("pack_path"):
-                q_fits = fits(queries)
+                q_fits = query_fits()
             if d_bytes <= thr and q_fits:
                 attach = "broadcast"
             elif meta.get("pack_path") and (
@@ -895,10 +953,10 @@ def _sources(
         # broadcast packs are LRU-cached per table (_pack_broadcast):
         # repeated queries reuse one broadcast, eviction unpersists
         # executor copies
-        return (
-            ("bcast", _pack_broadcast(queries, simp_levels)),
-            ("bcast", _pack_broadcast(index_df, simp_levels)),
-        )
+        t_spec = ("bcast", _pack_broadcast(index_df, simp_levels, scanned))
+        if subset:
+            return t_spec, t_spec
+        return ("bcast", _pack_broadcast(queries, simp_levels)), t_spec
     if attach == "pack":
         pack_path = meta.get("pack_path")
         if not pack_path:
@@ -918,7 +976,7 @@ def _sources(
         # results (only ids absent from the store trip the loud
         # _lookup KeyError) — raise instead.
         if q_fits is None:
-            q_fits = fits(queries)
+            q_fits = query_fits()
         if q_fits:
             q_spec = ("bcast", _pack_broadcast(queries, simp_levels))
         elif symmetric:
@@ -1008,7 +1066,8 @@ def range_query_grid(
     - ``"auto"`` (default) — broadcast when BOTH sides' estimated array
       payload (build-time meta['payload_bytes'] for the index side —
       no per-query scan — with _est_broadcast_bytes/plan-stats gating
-      for the query side) fits spark.sql.autoBroadcastJoinThreshold;
+      for the query side, none for a query table that is a row subset
+      of the index) fits spark.sql.autoBroadcastJoinThreshold;
       else pack when the index carries a pack store and the pack arm can
       serve the query side (it fits the threshold, ``symmetric=True`` or
       ``meta['query_pack_path']``); else shuffle."""

@@ -1102,3 +1102,71 @@ class TestEqualTimeDistance:
         finally:
             tracemalloc.stop()
         assert peak < 2 * 1024 * 1024, f"peak {peak / 2**20:.1f} MiB"
+
+
+def _segment_dists(v, c):
+    """Distances from point ``v`` to every segment of the (n, 2) curve
+    ``c`` (n >= 2)."""
+    a, ab = c[:-1], np.diff(c, axis=0)
+    sq = (ab * ab).sum(axis=1)
+    t = ((v - a) * ab).sum(axis=1) / np.where(sq > 0, sq, 1.0)
+    d = a + np.clip(t, 0.0, 1.0)[:, None] * ab - v
+    return np.sqrt((d * d).sum(axis=1))
+
+
+def test_deciders_agree_at_critical_eps_on_corpus(spark):
+    """The batched decider (every filter on), the scalar free-space
+    decider (K5) and the bb divide-&-conquer decider (K4) agree on
+    corpus curve pairs at the critical values of the Fréchet distance —
+    the endpoint distances and the vertex-to-segment distances closest
+    to the pair's distance — and at those values times (1 +/- 1e-9).
+
+    The pairs are the corpus's nearest-endpoint neighbours, so the
+    probed values lie at the pair's distance. A critical value within
+    1e-9 relative of that distance is a tie: K5's answer flips inside
+    the +/-1e-9 window, and the answer AT the value is a rounding
+    choice. The batched decider runs K5's interval arithmetic and must
+    match it there too; K4 merges intervals with the reference's 1e-9
+    slack, so at a tie it is compared at the +/-1e-9 probes only."""
+    from frechetrange_spark.kernels.batch import decide_pairs_buffers
+    from frechetrange_spark.kernels.bb_decider import decide_frechet_bb
+    from frechetrange_spark.sources.trajectories import curves as load_curves
+    from tests.conftest import SF_SMALL
+
+    rows = load_curves(spark, SF_SMALL).select("traj_id", "xs", "ys").collect()
+    curves = [
+        np.column_stack([r["xs"], r["ys"]])
+        for r in sorted(rows, key=lambda r: r["traj_id"])
+    ]
+    starts = np.array([c[0] for c in curves])
+    ends = np.array([c[-1] for c in curves])
+    near = []
+    for i, c in enumerate(curves):
+        gap = np.hypot(*(starts - c[0]).T) + np.hypot(*(ends - c[-1]).T)
+        gap[i] = np.inf
+        near.append((gap.min(), i, int(gap.argmin())))
+    ps, qs, eps = [], [], []
+    for _, i, j in sorted(near)[:24]:
+        p, q = curves[i], curves[j]
+        d = frechet_distance(p, q)
+        ends_ = [np.hypot(*(p[0] - q[0])), np.hypot(*(p[-1] - q[-1]))]
+        crit = np.unique(
+            np.concatenate([_segment_dists(v, q) for v in p] + [_segment_dists(v, p) for v in q])
+        )
+        for c in set(ends_) | set(crit[np.argsort(np.abs(crit - d))[:5]].tolist()):
+            for e in (c * (1 - 1e-9), c, c * (1 + 1e-9)):
+                ps.append(p), qs.append(q), eps.append(e)
+    sel = np.arange(len(eps), dtype=np.int64)
+    batched = decide_pairs_buffers(
+        _curve_table(ps), _curve_table(qs), sel, sel, np.asarray(eps),
+        greedy_accept=True, neg_reject=True, rev_greedy_accept=True, dfd_accept=True,
+    )
+    k5 = np.array([decide_frechet(p, q, e) for p, q, e in zip(ps, qs, eps)])
+    k4 = np.array([decide_frechet_bb(p, q, e) for p, q, e in zip(ps, qs, eps)])
+    np.testing.assert_array_equal(batched, k5)
+    below, at, above = (k5[i::3] for i in range(3))
+    tie = np.repeat(below != above, 3)
+    tie[0::3] = tie[2::3] = False  # the +/-1e-9 probes are compared everywhere
+    np.testing.assert_array_equal(k4[~tie], k5[~tie])
+    assert np.any(below != above) and np.any(at) and not np.all(at)
+    assert len(eps) >= 500

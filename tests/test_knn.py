@@ -280,3 +280,42 @@ def test_knn_shares_index_pack_with_range(spark, corpus, tmp_path, monkeypatch):
     assert collects.count(n_index) == 1, collects
     assert rq.range_query_grid(idx, queries, 15.0, meta).count() > 0
     assert collects.count(n_index) == 1, collects
+
+
+def test_knn_scans_index_payload_once_per_file_set(spark, corpus, tmp_path, monkeypatch):
+    """kNN carries no build-time meta, so its attach gate scans the index
+    table's payload — once: two kNN calls with different row-subset
+    queries over one ``read_index`` scan run one payload job (the
+    estimate is kept in the index's cached pack entry) and none for the
+    queries. After a parquet file lands in the index's data dir the
+    re-read scan lists other files, and the next call scans again."""
+    import os
+
+    from frechetrange_spark.operators import range_query as rq
+    from frechetrange_spark.sources.index_table import read_index, write_index
+
+    index_df, meta = rq.build_grid_index(corpus, 15.0, corner="min_min")
+    path = str(tmp_path / "idx")
+    write_index(index_df, path, meta)
+    gates = []
+    gated = rq._payload_bytes_gated
+
+    def counting(df, thr):
+        gates.append(df.count())
+        return gated(df, thr)
+
+    monkeypatch.setattr(rq, "_payload_bytes_gated", counting)
+    rq.clear_pack_cache()
+    idx, _ = read_index(spark, path)
+    n_index = idx.count()
+    for mod in (150, 170):
+        queries = idx.filter(F.col("traj_id") % mod == 0)
+        assert knn_frechet(idx, queries, k=K, mesh=15.0).count() > 0
+    assert gates == [n_index]
+    idx.filter(F.col("traj_id") == 0).withColumn(
+        "traj_id", F.lit(10**6).cast("long")
+    ).select(*idx.columns).write.mode("append").parquet(os.path.join(path, "data"))
+    idx, _ = read_index(spark, path)
+    queries = idx.filter(F.col("traj_id") % 150 == 0)
+    assert knn_frechet(idx, queries, k=K, mesh=15.0).count() > 0
+    assert gates == [n_index, n_index + 1]

@@ -278,3 +278,35 @@ def test_pack_curves_matches_pandas_collect(spark):
             np.testing.assert_array_equal(gflat, flat)
             np.testing.assert_array_equal(goff, off)
     assert _pack_curves(df, 2)["ids"].size == 40
+
+
+def test_pack_curves_one_job_sorted_on_driver(spark, tmp_path):
+    """``_pack_curves`` of a multi-file parquet scan whose files hold the
+    traj_ids in descending order runs one Spark job and equals the
+    pack collected through a Spark ``orderBy`` and ``toPandas``."""
+    rng = np.random.default_rng(12)
+    schema = "traj_id long, xs array<double>, ys array<double>, s0_xs array<double>, s0_ys array<double>, s0_eps double"
+    rows = []
+    for tid in range(300, 0, -3):
+        n = int(rng.integers(1, 12))
+        xs, ys = rng.normal(size=n).tolist(), rng.normal(size=n).tolist()
+        rows.append((tid, xs, ys, xs[:1], ys[:1], float(rng.uniform())))
+    path = str(tmp_path / "curves")
+    spark.createDataFrame(rows, schema).coalesce(4).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) > 1
+    sc = spark.sparkContext
+    sc.setJobGroup("pack-curves-jobs", "pack")
+    try:
+        got = _pack_curves(df, 1)
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup("pack-curves-jobs")) == 1
+    want = _pack_curves_pandas(df, 1)
+    np.testing.assert_array_equal(got["ids"], np.arange(3, 301, 3))
+    np.testing.assert_array_equal(got["ids"], want["ids"])
+    np.testing.assert_array_equal(got["scal"]["s0_eps"], want["scal"]["s0_eps"])
+    assert list(got["cols"]) == list(want["cols"])
+    for c, (flat, off) in want["cols"].items():
+        np.testing.assert_array_equal(got["cols"][c][0], flat)
+        np.testing.assert_array_equal(got["cols"][c][1], off)

@@ -556,3 +556,118 @@ class TestKernelCalls:
         # a batch over the budget is a call of its own
         monkeypatch.setattr(rq, "CALL_BYTES", per // 2)
         assert calls() == [100] * 10
+
+
+def _count_packs_and_gates(monkeypatch):
+    """Wrap range_query's pack collect and payload gate: returns the list
+    of collected pack sizes and the list of gated tables' row counts."""
+    from frechetrange_spark.operators import range_query as rq
+
+    packs, gates = [], []
+    pack_curves, gated = rq._pack_curves, rq._payload_bytes_gated
+
+    def counting_pack(df, simp_levels):
+        pack = pack_curves(df, simp_levels)
+        packs.append(pack["ids"].size)
+        return pack
+
+    def counting_gate(df, thr):
+        gates.append(df.count())
+        return gated(df, thr)
+
+    monkeypatch.setattr(rq, "_pack_curves", counting_pack)
+    monkeypatch.setattr(rq, "_payload_bytes_gated", counting_gate)
+    rq.clear_pack_cache()
+    return packs, gates
+
+
+@pytest.fixture(scope="module")
+def stored_index(spark, corpus, tmp_path_factory):
+    """(scan, meta) of the corpus index written with write_index and read
+    back, as an interactive client reads it per op."""
+    from frechetrange_spark.sources.index_table import read_index, write_index
+
+    index_df, meta = build_grid_index(corpus, 15.0, corner="min_min")
+    path = str(tmp_path_factory.mktemp("stored") / "idx")
+    write_index(index_df, path, meta)
+    return read_index(spark, path)
+
+
+def _interior_reversed(df):
+    """``df`` with each curve's interior vertices reversed: the endpoints,
+    MBR and vertex set (so every stored feature column) stay valid, the
+    curves change."""
+
+    def col(c):
+        n = F.size(c)
+        return F.when(
+            n >= 3,
+            F.concat(F.slice(c, 1, 1), F.reverse(F.slice(c, F.lit(2), n - 2)), F.slice(c, -1, 1)),
+        ).otherwise(F.col(c))
+
+    return df.withColumn("xs", col("xs")).withColumn("ys", col("ys"))
+
+
+@pytest.mark.parametrize("shape", ["one_filter", "two_filters", "in_memory"])
+def test_row_subset_queries_share_index_pack(spark, corpus, stored_index, monkeypatch, shape):
+    """Queries that are filters over the index table (a ``read_index``
+    scan, or a persisted in-memory index) are a row subset of it: the
+    attach decision runs no payload job for them, no query pack is
+    collected (the index's pack serves both sides) and the rows equal
+    the brute-force decider's."""
+    from frechetrange_spark.operators import range_query as rq
+
+    if shape == "in_memory":
+        idx, meta = build_grid_index(corpus, 15.0, corner="min_min")
+        idx = idx.persist()
+    else:
+        idx, meta = stored_index
+    queries = idx.filter(F.col("traj_id") % 9 == 0)
+    if shape == "two_filters":
+        queries = queries.filter(F.col("n_points") > 20)
+    n_index = idx.count()
+    packs, gates = _count_packs_and_gates(monkeypatch)
+    q, t = rq._sources(idx, queries, meta, 0, False, "auto")
+    assert q == t and t[0] == "bcast"
+    got = _pairs(range_query_grid(idx, queries, 15.0, meta))
+    assert packs == [n_index] and gates == []
+    assert got == _pairs(range_query_bruteforce(idx, queries, 15.0))
+    assert len(got) > queries.count()  # more than the self-matches
+    if shape == "in_memory":
+        idx.unpersist()
+
+
+@pytest.mark.parametrize("shape", ["rewrite", "foreign_union", "join"])
+def test_non_subset_queries_get_own_gate_and_pack(spark, stored_index, monkeypatch, shape):
+    """Query tables that are not provably a row subset of the index get
+    their own payload gate and pack and the brute-force decider's rows:
+    a ``withColumn("xs", ...)`` rewrite of the index, a union with a
+    foreign table whose traj_ids are index ids with other curves, and a
+    join (a row subset, but not by plan shape)."""
+    idx, meta = stored_index
+    n_index = idx.count()
+    if shape == "rewrite":
+        queries = _interior_reversed(idx).filter(F.col("traj_id") % 9 == 0)
+    elif shape == "foreign_union":
+        foreign = _interior_reversed(idx).filter(F.col("traj_id") % 9 == 1)
+        queries = idx.filter(F.col("traj_id") % 9 == 0).unionByName(foreign)
+    else:
+        ids = spark.createDataFrame([(i,) for i in range(0, 600, 9)], "traj_id long")
+        queries = idx.join(ids, "traj_id")
+    n_queries = queries.count()
+    packs, gates = _count_packs_and_gates(monkeypatch)
+    got = _pairs(range_query_grid(idx, queries, 15.0, meta))
+    assert gates == [n_queries]
+    assert sorted(packs) == sorted([n_queries, n_index])
+    assert got == _pairs(range_query_bruteforce(idx, queries, 15.0))
+
+
+def test_pair_stage_runs_one_slot_per_core(spark, corpus):
+    """The pair stage repartitions into defaultParallelism slots: one
+    wave of tasks."""
+    from frechetrange_spark.operators.range_query import _pair_stage
+
+    pairs = corpus.select(F.col("traj_id").alias("query_id"), "traj_id")
+    out = _pair_stage(pairs, lambda batches: batches, "query_id long, traj_id long")
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert out.count() == corpus.count()
