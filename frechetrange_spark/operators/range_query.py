@@ -926,8 +926,12 @@ def _sources(
     def query_fits() -> bool:
         if thr <= 0:
             return False
-        if d_bytes is not None and (symmetric or subset and d_bytes <= thr):
+        if symmetric and d_bytes is not None:
             return d_bytes <= thr
+        # a row subset carries no more payload than the index; past the
+        # threshold its own scan decides (the pack arm's query side)
+        if subset and d_bytes is not None and d_bytes <= thr:
+            return True
         return _payload_bytes_gated(queries, thr) <= thr
 
     q_fits = None  # the query side's payload fits the threshold
