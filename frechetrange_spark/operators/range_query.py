@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from frechetrange_spark.operators.simplifications import PORTAL_COLS
 from frechetrange_spark.operators.tiling import cell_coord, explode_neighbor_cells
+from frechetrange_spark.session import keep_zip_directories
 from frechetrange_spark.sources.pack_store import pack_columns
 
 _CORNERS = {
@@ -211,6 +212,17 @@ def _salt_from_stats(
     return int(min(cap, max(2, round(ratio))))
 
 
+def home_cells(curves: DataFrame, mesh: float, corner: str) -> DataFrame:
+    """``curves`` plus the home-cell columns ``cell_x``/``cell_y``: the
+    mesh cell of each curve's ``corner`` MBR corner (grid.hpp:352-358).
+    The index rows of ``build_grid_index`` and of a streamed append
+    (``start_index_ingest``) both come from here."""
+    cx_col, cy_col = _CORNERS[corner]
+    return curves.withColumn(
+        "cell_x", cell_coord(F.col(cx_col), mesh)
+    ).withColumn("cell_y", cell_coord(F.col(cy_col), mesh))
+
+
 def build_grid_index(
     curves: DataFrame,
     mesh: float | None = None,
@@ -252,10 +264,7 @@ def build_grid_index(
         mesh = choose_mesh(curves, float(eps), mesh_candidates, corner)
     if corner is None:
         corner = choose_corner(curves, mesh)
-    cx_col, cy_col = _CORNERS[corner]
-    index_df = curves.withColumn(
-        "cell_x", cell_coord(F.col(cx_col), mesh)
-    ).withColumn("cell_y", cell_coord(F.col(cy_col), mesh))
+    index_df = home_cells(curves, mesh, corner)
     meta: dict = {
         "mesh": float(mesh),
         "corner": corner,
@@ -610,9 +619,13 @@ def _pair_kernel(kernel, sources: tuple, simp_levels: int = 0):
     id columns, resolves both curve sources (``_curve_source``) and yields
     ``kernel(rb, qid, tid, (qpack, qsel), (tpack, tsel))``. Every range,
     CFDQ, brute-force and kNN kernel runs through it; the kernels' per-pair
-    answers do not depend on the grouping, so neither do the rows."""
+    answers do not depend on the grouping, so neither do the rows. The map
+    first installs ``session.keep_zip_directories`` in its worker, so the
+    worker's later tasks skip the zip re-read even when
+    ``warm_python_workers`` did not run."""
 
     def fn(batches):
+        keep_zip_directories()
         for rb in _kernel_calls(batches):
             qid = rb.column("query_id").to_numpy(zero_copy_only=False)
             tid = rb.column("traj_id").to_numpy(zero_copy_only=False)
@@ -630,9 +643,13 @@ def _pair_stage(pairs: DataFrame, fn, schema: str) -> DataFrame:
     BYTES but heavy in per-row CPU (free-space DP), so AQE's byte-based
     coalescing would funnel them into one task; an explicit
     ``repartition(n)`` is exempt from it and balances the pair costs.
-    One slot per core makes the stage one wave of tasks: a Python task
-    pays ~0.1-0.2 s before its map starts, so a second wave costs an
-    interactive op more than it balances (BENCH.md)."""
+    One slot per core makes the stage one wave of tasks, since every task
+    has a fixed start cost that a second wave would pay again. Most of
+    that cost was PySpark's per-task ``importlib.invalidate_caches()``,
+    which re-read every zip archive on ``sys.path`` (~0.23 s per task on
+    CPython 3.11); ``session.keep_zip_directories`` removes it, and a
+    reused worker now starts its map ~0.1 s after submit, against
+    0.2-0.4 s before (verify skill §6, BENCH.md)."""
     n_slots = pairs.sparkSession.sparkContext.defaultParallelism
     return pairs.repartition(n_slots).mapInArrow(fn, schema=schema)
 

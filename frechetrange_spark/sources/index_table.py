@@ -19,6 +19,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from frechetrange_spark.operators.range_query import _CORNERS
 
@@ -49,7 +50,9 @@ def write_index(
     index_df: DataFrame, path: str, meta: dict, pack: bool = False
 ) -> None:
     """Write the grid index as a cell-clustered, bucket-sorted parquet
-    table plus a _meta.json (mesh, corner, salt, payload stats).
+    table plus a _meta.json (mesh, corner, salt, payload stats, and the
+    table's schema as Spark JSON under ``schema``, which ``read_index``
+    uses instead of inferring it).
 
     ``pack=True`` additionally writes the co-partitioned curve-pack
     store (sources/pack_store: traj_id range-partitioned, id-sorted npy
@@ -64,21 +67,31 @@ def write_index(
             index_df, pack_path, payload_bytes=meta.get("payload_bytes")
         )
         meta = {**meta, "pack_path": pack_path}
-    _o1_sorted(index_df, meta["corner"]).write.mode("overwrite").parquet(
-        os.path.join(path, "data")
-    )
+    table = _o1_sorted(index_df, meta["corner"])
+    table.write.mode("overwrite").parquet(os.path.join(path, "data"))
     tmp = os.path.join(path, "_meta.json.tmp")
     with open(tmp, "w") as f:
         # the whole meta dict: mesh + corner plus the data-driven salt
         # (choose_salt) and any future build-time statistics ride along
-        json.dump({"salt": None, **meta}, f)
+        json.dump({"salt": None, **meta, "schema": table.schema.jsonValue()}, f)
     os.replace(tmp, os.path.join(path, "_meta.json"))
 
 
 def read_index(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
+    """The index table and its meta, as ``write_index`` left them. The
+    table is read with the schema stored in ``_meta.json``, so the read
+    runs no Spark job (schema inference reads a parquet footer in one);
+    a ``_meta.json`` from before the schema was stored falls back to
+    inference. Spark reads every stored field as nullable, as inference
+    does, so the DataFrame's schema is the inferred one. The returned
+    meta has no ``schema`` key. Files appended to the data dir must carry
+    the stored columns (``start_index_ingest`` writes them in its own
+    order; parquet columns resolve by name)."""
     with open(os.path.join(path, "_meta.json")) as f:
         meta = json.load(f)
-    return spark.read.parquet(os.path.join(path, "data")), meta
+    schema = meta.pop("schema", None)
+    reader = spark.read if schema is None else spark.read.schema(StructType.fromJson(schema))
+    return reader.parquet(os.path.join(path, "data")), meta
 
 
 def compact_index(

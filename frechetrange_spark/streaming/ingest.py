@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from frechetrange_spark.operators.range_query import build_grid_index
+from frechetrange_spark.operators.range_query import home_cells
 from frechetrange_spark.sources.trajectories import assemble_curves, points_from_text
 
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -32,16 +32,19 @@ def start_index_ingest(
     """Stream document parquet files from ``input_dir`` and append their
     index rows to ``index_path``. Returns the StreamingQuery (caller
     awaits/ stops). Trigger availableNow: drains everything present, then
-    stops — the batch-job-shaped streaming used for backfills."""
+    stops — the batch-job-shaped streaming used for backfills.
+
+    A micro-batch gets the batch build's home-cell columns
+    (``range_query.home_cells``) and no statistics pass: the salt and
+    payload statistics of ``build_grid_index`` describe the WHOLE table,
+    not one micro-batch, and an append has no meta to put them in. A
+    one-file append runs 3 Spark jobs (8 with the statistics pass)."""
 
     def process_batch(batch_df, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         curves = assemble_curves(points_from_text(batch_df))
-        # auto_salt off: the skew statistic belongs to the WHOLE table,
-        # not one micro-batch — compute it query-side over the full index
-        idx, _ = build_grid_index(curves, mesh, corner=corner, auto_salt=False)
-        idx.write.mode("append").parquet(index_path)
+        home_cells(curves, mesh, corner).write.mode("append").parquet(index_path)
 
     stream = spark.readStream.schema(DOCS_SCHEMA).parquet(input_dir)
     return (

@@ -1,6 +1,7 @@
 """Persisted index table (sources/index_table): compaction crash
 recovery, and queries over an index that grew by appended files."""
 
+import json
 import os
 import shutil
 
@@ -97,3 +98,36 @@ def test_broadcast_pack_sees_appended_files(spark, indexed, tmp_path):
     after = query()
     assert after == before | {(q, new_id) for q, t in before if t == q0}
     assert (q0, new_id) in after
+
+
+def test_read_index_runs_no_job(spark, indexed, tmp_path):
+    """read_index takes the table's schema from _meta.json instead of
+    inferring it in a Spark job, and returns the inferred schema, the
+    rows and the meta as written. A _meta.json without the schema (an
+    index written before it was stored) still reads."""
+    index_df, meta = indexed
+    path = str(tmp_path / "idx")
+    write_index(index_df, path, meta)
+    data = os.path.join(path, "data")
+    sc = spark.sparkContext
+    sc.setJobGroup("read-index-jobs", "read_index")
+    try:
+        idx, m = read_index(spark, path)
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("read-index-jobs") == []
+    inferred = spark.read.parquet(data)
+    assert idx.schema == inferred.schema
+    assert idx.orderBy("traj_id").collect() == inferred.orderBy("traj_id").collect()
+    assert m == {"salt": None, **meta}
+
+    meta_file = os.path.join(path, "_meta.json")
+    with open(meta_file) as f:
+        stored = json.load(f)
+    del stored["schema"]
+    with open(meta_file, "w") as f:
+        json.dump(stored, f)
+    old, m_old = read_index(spark, path)
+    assert old.schema == inferred.schema
+    assert old.orderBy("traj_id").collect() == idx.orderBy("traj_id").collect()
+    assert m_old == m

@@ -537,3 +537,31 @@ def test_stateful_sessionizer_converges_to_batch(spark, tmp_path):
             assert np.allclose(av, bv, atol=1e-6), c
         else:
             assert (av == bv).all(), c
+
+
+def test_streamed_append_runs_no_statistics_collect(spark, tmp_path, monkeypatch):
+    """An append computes the home cells of its micro-batch and writes
+    them; it collects no per-cell statistics (the salt and payload
+    estimate of build_grid_index describe a whole table, and an append
+    has nowhere to keep them)."""
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    in_dir = str(tmp_path / "incoming")
+    docs.filter("doc_id % 4 = 0").coalesce(1).write.parquet(in_dir)
+    want = docs.filter("doc_id % 4 = 0").count()
+    frame = type(docs)
+    collect = frame.collect
+    calls = []
+
+    def counting(self):
+        calls.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(frame, "collect", counting)
+    index_path = str(tmp_path / "index")
+    q = start_index_ingest(
+        spark, in_dir, index_path, str(tmp_path / "ckpt"), mesh=15.0
+    )
+    q.awaitTermination(120)
+    assert calls == []
+    monkeypatch.undo()
+    assert spark.read.parquet(index_path).count() == want
